@@ -345,7 +345,8 @@ def main() -> None:
     # so every run re-executes the full plan
     timings: dict[str, float] = {}
     trend_timings: dict[str, float] = {}
-    for name in HEADLINE + TREND:
+    all_names = HEADLINE + TREND
+    for idx, name in enumerate(all_names):
         fn = QUERIES[name]
         try:
             best = None
@@ -364,6 +365,9 @@ def main() -> None:
                 n = df.count()
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
+            tgt = trend_timings if name in TREND else timings
+            tgt[name] = round(best, 3)
+            print(f"# {name}: {tgt[name]:.2f}s ({n} rows)", file=sys.stderr)
         except Exception as e:  # noqa: BLE001 — trend-only isolation
             # a TREND query failure must not cost the round its headline
             # artifact (the 19-query set is the series' stable compare);
@@ -376,13 +380,10 @@ def main() -> None:
                       file=sys.stderr)
                 continue
             raise
-        tgt = trend_timings if name in TREND else timings
-        tgt[name] = round(best, 3)
-        print(f"# {name}: {tgt[name]:.2f}s ({n} rows)", file=sys.stderr)
-        all_names = HEADLINE + TREND
-        _segment_probe(
-            name, all_names.index(name), name == all_names[-1]
-        )
+        finally:
+            # every slot gets its calibration reading, a failed one too:
+            # drift localization matters most when the run is anomalous
+            _segment_probe(name, idx, idx == len(all_names) - 1)
 
     load_end = os.getloadavg()
     # post-sweep anchor re-read: the PRE-sweep sample normalizes the

@@ -23,10 +23,16 @@ entries, so an outer query's caches are never dropped mid-flight by an
 inner call. ``unpersist`` on an already-released frame is a Spark no-op,
 so operators that additionally unpersist eagerly (connected_components'
 per-round discipline) can keep doing so.
+
+The module also owns the two memos that outlive a query: the session memo
+of bounded frames (:func:`memo_get` / :func:`memo_put`) and the memo of
+planner statistics (:func:`memo_stat`), with the input fingerprints both
+key on.
 """
 
 from __future__ import annotations
 
+import os
 import threading
 from contextlib import contextmanager
 
@@ -328,23 +334,155 @@ def clear_memo() -> int:
     return n
 
 
-def bounded_memo_get(memo: dict, key, compute, max_entries: int = 32):
-    """THE single FIFO-evict bounded scalar memo behind the planner
-    probes (`_FANOUT_MEMO`, `_DIM_PROBE_MEMO`, `_FPRINT_MEMO`): return
-    ``memo[key]``, computing and inserting it on a miss, evicting
-    insertion-order heads to stay under ``max_entries``. Values must be
-    plain scalars/strings — nothing here unpersists (frame-holding
-    memos belong to the session memo above). Three hand-rolled copies
-    of this loop needed three separate evict-bug fixes across rounds;
-    key construction stays at each call site, so consolidating cannot
-    change any memo's key semantics."""
-    if key in memo:
-        return memo[key]
+# --------------------------------------------------------------------------
+# Planner statistics: memoized scalars taken before dispatch.
+#
+# A statistic chooses a plan (broadcast or not, which kernel), never rows,
+# so a stale value can cost time but cannot change an answer. Values are
+# plain scalars or tuples of them: nothing here unpersists.
+# --------------------------------------------------------------------------
+
+STAT_MEMO_MAX = 32
+_STAT_MEMO: dict[tuple, object] = {}
+
+
+def _memoized(key: tuple, compute):
+    """``_STAT_MEMO[key]``, computing and inserting it on a miss; the
+    oldest entries go first once ``STAT_MEMO_MAX`` is reached."""
+    if key in _STAT_MEMO:
+        return _STAT_MEMO[key]
     val = compute()
-    while len(memo) >= max_entries:
-        memo.pop(next(iter(memo)))
-    memo[key] = val
+    while len(_STAT_MEMO) >= STAT_MEMO_MAX:
+        _STAT_MEMO.pop(next(iter(_STAT_MEMO)))
+    _STAT_MEMO[key] = val
     return val
+
+
+def memo_stat(name, df: DataFrame, sf_dir: str, compute):
+    """THE memo of planner statistics: return ``compute()`` for the
+    statistic ``name`` of ``df`` over the input directory ``sf_dir``,
+    running it once per key
+
+        (name, applicationId, sf_dir, guarded input fingerprint of
+         sf_dir, semanticHash of df's analyzed plan).
+
+    ``name`` carries the statistic's parameters (e.g.
+    ``("dim_rows", bound)``). The plan hash keeps two differently
+    filtered frames over one input apart; the fingerprint makes an
+    in-session rewrite of ANY table under ``sf_dir`` mint a new key, so
+    a grown input re-measures instead of riding a stale value."""
+    spark = df.sparkSession
+    key = (
+        name,
+        spark.sparkContext.applicationId,
+        sf_dir,
+        _fingerprint_guarded(sf_dir, spark),
+        df._jdf.queryExecution().analyzed().semanticHash(),
+    )
+    return _memoized(key, compute)
+
+
+def _hadoop_listing(spark, path: str) -> list[str]:
+    """``path:length:modificationTime`` for every file under ``path``,
+    recursively, via the session's Hadoop FileSystem — the same
+    rewrite-detection signal the local os.stat branch folds. Raises on
+    schemes with no FS implementation (callers degrade to ``nostat``);
+    testable against ``file:///`` directly."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    it = fs.listFiles(jpath, True)
+    entries = []
+    while it.hasNext():
+        st = it.next()
+        entries.append(f"{st.getPath()}:{st.getLen()}:{st.getModificationTime()}")
+    return entries
+
+
+def _local_path(path: str) -> str | None:
+    """``path`` as a local filesystem path, or None for a non-local URI.
+    Only a ``://`` URI counts as non-local (a bare local path with ``:``
+    inside a segment stays local); ``file://`` strips to its path."""
+    if "://" not in path:
+        return path
+    if not path.startswith("file://"):
+        return None
+    from urllib.parse import urlsplit
+
+    return urlsplit(path).path
+
+
+def _input_fingerprint(path: str, spark=None) -> str:
+    """Deep snapshot of an input path — sorted (path, size, mtime) of
+    every data file, md5-folded, so a consumer that REWRITES the dataset
+    at the same path gets a new value. Non-local schemes (s3a/hdfs/...)
+    never hit os.stat: with a ``spark`` handle they fold the Hadoop
+    FileSystem listing, which also detects a rewriter that keeps
+    part-file names (distcp -overwrite); else ``"nostat"`` (path-only
+    key)."""
+    import hashlib
+
+    h = hashlib.md5()
+    local = _local_path(path)
+    if local is None:
+        if spark is None:
+            return "nostat"
+        try:
+            entries = _hadoop_listing(spark, path)
+        except Exception:  # no FS impl / unreadable: degrade, don't fail the memo
+            return "nostat"
+        for e in sorted(entries):
+            h.update(e.encode() + b";")
+        return h.hexdigest()
+    try:
+        if os.path.isdir(local):
+            for root, dirs, files in os.walk(local):
+                dirs.sort()
+                for f in sorted(files):
+                    fp = os.path.join(root, f)
+                    st = os.stat(fp)
+                    h.update(
+                        f"{os.path.relpath(fp, local)}:{st.st_size}:"
+                        f"{st.st_mtime_ns};".encode()
+                    )
+        elif os.path.isfile(local):
+            st = os.stat(local)
+            h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+        else:
+            return "nostat"
+    except OSError:
+        return "nostat"
+    return h.hexdigest()
+
+
+def _fingerprint_guarded(sf_dir: str, spark) -> str:
+    """:func:`_input_fingerprint` of ``sf_dir`` behind a cheap guard, so
+    a memo HIT does not stat every data file of the whole input. The
+    guard stats every DIRECTORY under sf_dir plus sf_dir's top-level
+    files: creating, deleting, renaming or replacing an entry at ANY
+    depth bumps its parent directory's mtime (covering partition-scoped
+    overwrites inside table/date=x/), and the top-level file stats cover
+    single-file tables. Cost is O(#dirs), not O(#files). Residual miss:
+    an in-place truncate-rewrite of a NESTED file, which no
+    Spark/pandas/DuckDB table writer does. Non-local URIs pay the
+    listing-based deep fingerprint per call."""
+    local = _local_path(sf_dir)
+    if local is None:
+        return _input_fingerprint(sf_dir, spark)
+    try:
+        st = os.stat(local)
+        sig = [(".", st.st_mtime_ns, st.st_size)]
+        for root, dirs, files in os.walk(local):
+            for name in dirs + (files if root == local else []):
+                p = os.path.join(root, name)
+                st = os.stat(p)
+                sig.append((os.path.relpath(p, local), st.st_mtime_ns,
+                            st.st_size))
+    except OSError:
+        return _input_fingerprint(sf_dir, spark)
+    return _memoized(
+        ("input_fingerprint", sf_dir, tuple(sorted(sig))),
+        lambda: _input_fingerprint(sf_dir, spark),
+    )
 
 
 def release_caches() -> int:

@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 logger = logging.getLogger(__name__)
 
 from mapreduce_framework_simple_spark.ephemeral import (
-    bounded_memo_get,
+    _input_fingerprint,
+    memo_stat,
     release_local_checkpoint,
     scoped_broadcast,
     scoped_cache,
@@ -203,21 +204,22 @@ def ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     join fan-out (see :func:`_jaccard_join_fanout`); this entry point
     forces the prefix plan (equality-tested in test_similarity_dedup)."""
     sh = scoped_cache(shingle_id_sets(spark, sf_dir))
-    return _jaccard_prefix_pairs(sh).select(
+    return _jaccard_prefix_pairs(sh, sf_dir).select(
         "doc_a", "doc_b", F.round(F.col("jaccard_raw"), 6).alias("jaccard")
     )
 
 
-def _jaccard_prefix_pairs(sh: DataFrame) -> DataFrame:
-    """The prefix-filter kernel body over a CACHED (doc_id, sid) frame —
-    returns (doc_a, doc_b, jaccard_raw UNROUNDED), identical rows to
-    :func:`_jaccard_truth_pairs` (see :func:`ngram_jaccard_prefix` for
-    the algorithm and measured regimes). A frame already carrying the
-    per-doc shingle count as ``n`` (q36 bakes it into the shared cache —
-    see :func:`_with_doc_n`) skips this kernel's own count window."""
+def _jaccard_prefix_pairs(sh: DataFrame, sf_dir: str) -> DataFrame:
+    """The prefix-filter kernel body over a CACHED (doc_id, sid) frame
+    read from ``sf_dir`` — returns (doc_a, doc_b, jaccard_raw
+    UNROUNDED), identical rows to :func:`_jaccard_truth_pairs` (see
+    :func:`ngram_jaccard_prefix` for the algorithm and measured
+    regimes). A frame already carrying the per-doc shingle count as
+    ``__doc_n`` (q36 bakes it into the shared cache — see
+    :func:`_with_doc_n`) skips this kernel's own count window."""
     from pyspark.sql import Window
 
-    sh = _with_doc_n(sh)
+    sh = _doc_n_frame(sh)
     freq = sh.groupBy("sid").agg(F.count("*").alias("df"))
     # global rarest-first order; per-doc prefix positions (n: same value
     # after the freq join — one row per (doc_id, sid) either side)
@@ -298,10 +300,15 @@ def _jaccard_prefix_pairs(sh: DataFrame) -> DataFrame:
     # MB is fine); a corpus-scale doc count falls back to the planner's
     # shuffle join — the safe direction.
     packed = sh.groupBy("doc_id").agg(F.array_sort(F.collect_list("sid")).alias("sids"))
-    st = sh.agg(
-        F.count("*").alias("rows"), F.count_distinct("doc_id").alias("docs")
-    ).collect()[0]
-    if int(st["rows"]) * 8 + int(st["docs"]) * 64 <= PACKED_BROADCAST_BYTES_BOUND:
+
+    def size() -> tuple[int, int]:
+        st = sh.agg(
+            F.count("*").alias("rows"), F.count_distinct("doc_id").alias("docs")
+        ).collect()[0]
+        return int(st["rows"]), int(st["docs"])
+
+    rows, docs = memo_stat("packed_size", sh, sf_dir, size)
+    if rows * 8 + docs * 64 <= PACKED_BROADCAST_BYTES_BOUND:
         packed = F.broadcast(packed)
     inter = (
         cand.join(
@@ -353,8 +360,8 @@ JACCARD_FANOUT_DISPATCH = 35.0
 # sf0.1 (warm): ~0.65–0.8 s, ≈30–40 % of the naive kernel — fixed
 # per-job overhead dominates at bench scale (the unsampled aggregate
 # times the same there; the sample pays off where shuffle volume
-# dominates) — paid once per (session, input) via _FANOUT_MEMO, and
-# ~1.5–2 % of the 43–66 s kernels in the dup-heavy regime the dispatch
+# dominates) — paid once per (session, input) via ephemeral.memo_stat,
+# and ~1.5–2 % of the 43–66 s kernels in the dup-heavy regime the dispatch
 # exists for (docs/SCALE.md). Sampling by ROW —
 # not by sid — is what makes the probe skew-robust: a single ultra-hot
 # boilerplate shingle (df = 100k) lands ~df/8 rows in every sample, so
@@ -368,16 +375,8 @@ JACCARD_FANOUT_DISPATCH = 35.0
 # right call at that size.
 _FANOUT_SAMPLE_MOD = 8
 
-# (applicationId, sf_dir, input fingerprint) -> measured fan-out. The
-# statistic is a pure function of immutable parquet (same premise,
-# same key fields as the capped-band session memo), so composing queries
-# and repeat bench runs skip the probe entirely. Scalars only — nothing
-# to unpersist — bounded by FIFO eviction.
-_FANOUT_MEMO: dict[tuple, float] = {}
-_FANOUT_MEMO_MAX = 32
 
-
-def _jaccard_join_fanout(sh: DataFrame, memo_key: tuple | None = None) -> float:
+def _jaccard_join_fanout(sh: DataFrame) -> float:
     """Predicted output rows PER INPUT ROW of the naive sid self-join
     (Σ_s C(df_s, 2) / Σ_s df_s) — the skew statistic q36's kernel
     dispatch keys on. One map-side-combined aggregate over a 1/8
@@ -385,35 +384,28 @@ def _jaccard_join_fanout(sh: DataFrame, memo_key: tuple | None = None) -> float:
     ``_FANOUT_SAMPLE_MOD`` comment for the debiasing math and why row
     sampling — unlike sid sampling — cannot miss a hot shingle); the
     eager collect is a single scalar row, the same one-small-action
-    pattern as the LSH fan-out guard. Pass ``memo_key`` (session +
-    input fingerprint) to memoize the scalar across composing queries
-    and repeat runs."""
-    def compute() -> float:
-        p = 1.0 / _FANOUT_SAMPLE_MOD
-        row = (
-            sh.where(
-                F.pmod(F.xxhash64("sid", "doc_id"), F.lit(_FANOUT_SAMPLE_MOD)) == 0
-            )
-            .groupBy("sid")
-            .agg(F.count("*").alias("c"))
-            .agg(
-                F.sum(
-                    (F.col("c") * F.col("c") - (1.0 - p) * F.col("c")) / (p * p)
-                ).alias("sum_df2"),
-                (F.sum("c") / p).alias("sum_df"),
-            )
-            .select(
-                (
-                    (F.col("sum_df2") - F.col("sum_df")) / (2.0 * F.col("sum_df"))
-                ).alias("fanout")
-            )
-            .collect()[0]
+    pattern as the LSH fan-out guard."""
+    p = 1.0 / _FANOUT_SAMPLE_MOD
+    row = (
+        sh.where(
+            F.pmod(F.xxhash64("sid", "doc_id"), F.lit(_FANOUT_SAMPLE_MOD)) == 0
         )
-        return max(0.0, float(row["fanout"] or 0.0))
-
-    if memo_key is None:
-        return compute()
-    return bounded_memo_get(_FANOUT_MEMO, memo_key, compute, _FANOUT_MEMO_MAX)
+        .groupBy("sid")
+        .agg(F.count("*").alias("c"))
+        .agg(
+            F.sum(
+                (F.col("c") * F.col("c") - (1.0 - p) * F.col("c")) / (p * p)
+            ).alias("sum_df2"),
+            (F.sum("c") / p).alias("sum_df"),
+        )
+        .select(
+            (
+                (F.col("sum_df2") - F.col("sum_df")) / (2.0 * F.col("sum_df"))
+            ).alias("fanout")
+        )
+        .collect()[0]
+    )
+    return max(0.0, float(row["fanout"] or 0.0))
 
 
 @query(
@@ -441,7 +433,7 @@ def q36_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Kernel choice is a size-based planner `if`, mirroring q120's
     dispatch: the measured naive-self-join fan-out
     (:func:`_jaccard_join_fanout`, one aggregate over a 1/8 row-hash
-    sample, memoized per session+input) picks the naive sid self-join below
+    sample, memoized by ``ephemeral.memo_stat``) picks the naive sid self-join below
     ``JACCARD_FANOUT_DISPATCH`` — faster on ordinary corpora, where
     prefix bookkeeping outweighs the blow-up it prevents — and the
     PPJoin-style prefix kernel (:func:`_jaccard_prefix_pairs`) above it,
@@ -450,7 +442,7 @@ def q36_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     are equality-tested). q38's MinHash-LSH is the 100 TB path and this
     operator is its ground-truth verifier.
 
-    The shared cache carries the per-doc shingle count ``n`` (one
+    The shared cache carries the per-doc shingle count ``__doc_n`` (one
     window exchange at materialization — round 13): the truth kernel's
     length-ratio prefilter reads it on both join sides, its cnt
     aggregate and both prefix-kernel windows reuse the cache's
@@ -459,13 +451,10 @@ def q36_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-side broadcast-join attach (which LOST 2.06 → 3.47 —
     see _jaccard_truth_pairs)."""
     sh = scoped_cache(_with_doc_n(shingle_id_sets(spark, sf_dir)))
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _input_fingerprint(os.path.join(sf_dir, "documents.parquet"), spark),
-    )
-    if _jaccard_join_fanout(sh, memo_key) > JACCARD_FANOUT_DISPATCH:
-        pairs = _jaccard_prefix_pairs(sh)
+    fanout = memo_stat("jaccard_fanout", sh, sf_dir,
+                       lambda: _jaccard_join_fanout(sh))
+    if fanout > JACCARD_FANOUT_DISPATCH:
+        pairs = _jaccard_prefix_pairs(sh, sf_dir)
     else:
         pairs = _jaccard_truth_pairs(sh)
     return pairs.select(
@@ -496,16 +485,26 @@ def _jaccard_filter(inter: DataFrame, cnt: DataFrame) -> DataFrame:
 
 
 def _with_doc_n(sh: DataFrame) -> DataFrame:
-    """Attach the per-doc shingle count as column ``n`` unless the frame
-    already carries it. q36 computes it ONCE inside its shared cache
-    build (one hash(doc_id) window exchange paid at materialization);
-    ad-hoc callers handing a plain (doc_id, sid) frame get the same
-    column inline."""
-    if "n" in sh.columns:
+    """Attach the per-doc shingle count as column ``__doc_n`` unless the
+    frame already carries it. q36 computes it ONCE inside its shared
+    cache build (one hash(doc_id) window exchange paid at
+    materialization); ad-hoc callers handing a plain (doc_id, sid) frame
+    get the same column inline. The name is the kernels' own, so a
+    caller's column that happens to be called ``n`` is never taken for
+    the count."""
+    if "__doc_n" in sh.columns:
         return sh
     from pyspark.sql import Window
 
-    return sh.withColumn("n", F.count("*").over(Window.partitionBy("doc_id")))
+    return sh.withColumn(
+        "__doc_n", F.count("*").over(Window.partitionBy("doc_id"))
+    )
+
+
+def _doc_n_frame(sh: DataFrame) -> DataFrame:
+    """The kernels' input: (doc_id, sid, n) with ``n`` the per-doc
+    shingle count from :func:`_with_doc_n`; other columns are dropped."""
+    return _with_doc_n(sh).select("doc_id", "sid", F.col("__doc_n").alias("n"))
 
 
 def _jaccard_truth_pairs(sh: DataFrame) -> DataFrame:
@@ -531,7 +530,7 @@ def _jaccard_truth_pairs(sh: DataFrame) -> DataFrame:
     shared cache; attaching n via per-side broadcast joins instead was
     measured WORSE (2.06 vs 3.47 — the two extra build-side probes cost
     more than the row cut saves)."""
-    sh = _with_doc_n(sh)
+    sh = _doc_n_frame(sh)
     # cnt for the exact-union filter: one row per doc. Over q36's cache
     # the groupBy reuses the window's hash(doc_id) partitioning — no
     # exchange (min(n) ≡ the window count; every row of a doc carries
@@ -745,76 +744,6 @@ def lsh_candidate_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-
-
-def _hadoop_listing(spark: SparkSession, path: str) -> list[str]:
-    """``path:length:modificationTime`` for every file under ``path``,
-    recursively, via the session's Hadoop FileSystem — the same
-    rewrite-detection signal the local os.stat branch folds. Raises on
-    schemes with no FS implementation (callers degrade to ``nostat``);
-    testable against ``file:///`` directly."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(jpath, True)
-    entries = []
-    while it.hasNext():
-        st = it.next()
-        entries.append(f"{st.getPath()}:{st.getLen()}:{st.getModificationTime()}")
-    return entries
-
-
-def _input_fingerprint(path: str, spark: SparkSession | None = None) -> str:
-    """Cheap snapshot of an input path — sorted (path, size, mtime) of
-    every data file, md5-folded. Folding this into the session-memo key
-    means a consumer that REWRITES the dataset at the same path
-    mid-session gets a fresh memo entry instead of stale capped bands
-    (the memo's immutable-parquet premise, now enforced rather than
-    assumed). Only a ``://`` URI is treated as non-local (a bare local
-    path with ``:`` inside a segment still stats locally); ``file://``
-    strips to the local branch; other schemes (s3a/hdfs/...) never hit
-    os.stat — with a ``spark`` handle they fold (path, length,
-    modificationTime) from the Hadoop FileSystem listing, preserving
-    the same rewrite-detection signal as the local branch even when a
-    rewriter keeps part-file names (distcp -overwrite) — else fall back
-    to ``"nostat"`` (path-only key)."""
-    import hashlib
-
-    h = hashlib.md5()
-    if "://" in path:
-        scheme, _, rest = path.partition("://")
-        if scheme == "file":
-            from urllib.parse import urlsplit
-
-            path = urlsplit(f"{scheme}://{rest}").path
-        else:
-            if spark is None:
-                return "nostat"
-            try:
-                entries = _hadoop_listing(spark, path)
-            except Exception:  # no FS impl / unreadable: degrade, don't fail the memo
-                return "nostat"
-            for e in sorted(entries):
-                h.update(e.encode() + b";")
-            return h.hexdigest()
-    try:
-        if os.path.isdir(path):
-            for root, dirs, files in os.walk(path):
-                dirs.sort()
-                for f in sorted(files):
-                    fp = os.path.join(root, f)
-                    st = os.stat(fp)
-                    h.update(
-                        f"{os.path.relpath(fp, path)}:{st.st_size}:"
-                        f"{st.st_mtime_ns};".encode()
-                    )
-        elif os.path.isfile(path):
-            st = os.stat(path)
-            h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-        else:
-            return "nostat"
-    except OSError:
-        return "nostat"
-    return h.hexdigest()
 
 
 def capped_corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,12 +13,10 @@ shuffles are, and why the plan survives 1000 executors × 100 TB.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreduce_framework_simple_spark.ephemeral import bounded_memo_get
+from mapreduce_framework_simple_spark.ephemeral import memo_stat
 from mapreduce_framework_simple_spark.registry import query
 from mapreduce_framework_simple_spark.sources.io import load_table
 
@@ -68,97 +66,15 @@ def duck_cents_l(col: str) -> str:
 # cost, precisely: LocalLimit caps each scan partition at bound+1 rows
 # before a single-partition exchange of zero-column rows — bounded by
 # partitions × bound markers, not the table, but NOT free at 100 TB;
-# it is therefore memoized per (session, sf_dir, bound) below, so a
-# session pays it once per input, and staleness can only ever affect
-# join STRATEGY, never results. That bounded-cost rationale applies to
-# SCAN-BACKED dims only: over an agg-derived frame LocalLimit cannot
-# cap the aggregation below it, so the probe would execute the full
-# upstream agg per memo miss — such dims must derive their dispatch
-# from their own (cached) materialization instead, the way q105's
-# text._lm_table_stats does (optimization round 13, ADVICE r12).
+# it is therefore memoized (ephemeral.memo_stat), so a session pays it
+# once per input, and staleness can only ever affect join STRATEGY,
+# never results. That bounded-cost rationale applies to SCAN-BACKED
+# dims only: over an agg-derived frame LocalLimit cannot cap the
+# aggregation below it, so the probe would execute the full upstream
+# agg per memo miss — such dims must derive their dispatch from their
+# own (cached) materialization instead, the way q105's
+# text._lm_table_stats does.
 DIM_BROADCAST_ROW_BOUND = 1_000_000
-
-_DIM_PROBE_MEMO: dict[tuple, int] = {}
-_DIM_PROBE_MEMO_MAX = 32
-
-# (sf_dir, cheap signature) → deep fingerprint: the deep
-# _input_fingerprint walks and stats EVERY data file under sf_dir, which
-# a memo HIT must not pay per probe call (it grows with the file count
-# of the whole input). The guard stats every DIRECTORY under sf_dir
-# plus sf_dir's top-level files: creating, deleting, renaming or
-# replacing an entry at ANY depth bumps its immediate parent
-# directory's mtime (this covers partition-scoped overwrites that swap
-# files inside table/date=x/ without touching the table dir — the case
-# a one-level scan would miss), and the top-level file stats cover the
-# bare single-file-table layout. Cost is O(#dirs), not O(#files) —
-# parquet layouts are file-dominated. Residual miss (documented): an
-# in-place truncate-rewrite of a NESTED file that neither creates nor
-# replaces an entry — not a pattern any Spark/pandas/DuckDB table
-# writer produces (all write new files, then rename/replace). Non-local
-# URIs skip the guard and pay the (already listing-based) deep
-# fingerprint per call, as before.
-_FPRINT_MEMO: dict[tuple, str] = {}
-
-
-def _fingerprint_guarded(sf_dir: str, spark) -> str:
-    from mapreduce_framework_simple_spark.operators.dedup import (
-        _input_fingerprint,
-    )
-
-    if "://" in sf_dir and not sf_dir.startswith("file://"):
-        return _input_fingerprint(sf_dir, spark)
-    try:
-        local = sf_dir[len("file://"):] if sf_dir.startswith("file://") else sf_dir
-        sig = []
-        st = os.stat(local)
-        sig.append((".", st.st_mtime_ns, st.st_size))
-        for root, dirs, files in os.walk(local):
-            for d in dirs:
-                p = os.path.join(root, d)
-                st = os.stat(p)
-                sig.append((os.path.relpath(p, local), st.st_mtime_ns,
-                            st.st_size))
-            if root == local:
-                for fn in files:
-                    p = os.path.join(root, fn)
-                    st = os.stat(p)
-                    sig.append((os.path.relpath(p, local), st.st_mtime_ns,
-                                st.st_size))
-        shallow = tuple(sorted(sig))
-    except OSError:
-        return _input_fingerprint(sf_dir, spark)
-    return bounded_memo_get(
-        _FPRINT_MEMO,
-        (sf_dir, shallow),
-        lambda: _input_fingerprint(sf_dir, spark),
-        _DIM_PROBE_MEMO_MAX,
-    )
-
-
-def _dim_probe_count(p: DataFrame, sf_dir: str, bound: int) -> int:
-    """Memoized ``limit(bound+1).count()`` of a probe-dispatch dim. The
-    key includes the PLAN's semantic hash — the helper takes an
-    arbitrary frame, and keying only on (session, sf_dir, bound) would
-    hand a second caller probing a differently-filtered dim the cached
-    count of the first (a small stale count can force a broadcast on an
-    over-bound dim, the exact failure the bound prevents) — AND the
-    input fingerprint of ``sf_dir`` (dedup._input_fingerprint, the same
-    rewrite-detection signal the dedup memos key on): an in-session
-    overwrite of the parquet under ``sf_dir`` mints a new key, so a
-    grown dim re-probes instead of riding a stale under-bound count.
-    The fingerprint itself is shallow-stat-guarded
-    (:func:`_fingerprint_guarded`) so a memo HIT costs one stat per
-    top-level sf_dir entry, not a walk of every data file."""
-    key = (p.sparkSession.sparkContext.applicationId, sf_dir, bound,
-           _fingerprint_guarded(sf_dir, p.sparkSession),
-           p._jdf.queryExecution().analyzed().semanticHash())
-    return bounded_memo_get(
-        _DIM_PROBE_MEMO,
-        key,
-        lambda: p.limit(bound + 1).count(),
-        _DIM_PROBE_MEMO_MAX,
-    )
-
 
 
 # --------------------------------------------------------------------------
@@ -547,8 +463,10 @@ def q07_broadcast_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     it errs toward NOT broadcasting an over-bound dim)."""
     li = load_table(spark, "lineitem", sf_dir)
     p = load_table(spark, "part", sf_dir).where(F.col("p_size") <= 25)
-    n_dim = _dim_probe_count(p, sf_dir, DIM_BROADCAST_ROW_BOUND)
-    dim = F.broadcast(p) if n_dim <= DIM_BROADCAST_ROW_BOUND else p
+    bound = DIM_BROADCAST_ROW_BOUND
+    n_dim = memo_stat(("dim_rows", bound), p, sf_dir,
+                      lambda: p.limit(bound + 1).count())
+    dim = F.broadcast(p) if n_dim <= bound else p
     return (
         li.join(dim, li.l_partkey == p.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"))

@@ -224,18 +224,13 @@ def _stage_stream_source(spark: SparkSession, table: str, sf_dir: str,
     import tempfile
     import time
 
-    from mapreduce_framework_simple_spark.operators.dedup import (
-        _input_fingerprint,
-    )
+    from mapreduce_framework_simple_spark.ephemeral import _input_fingerprint
 
     src = os.path.join(sf_dir, f"{table}.parquet")
-    # THE shared stat-walk content fingerprint (dedup._input_fingerprint):
+    # THE shared deep content fingerprint (ephemeral._input_fingerprint):
     # recursive (relpath, size, mtime_ns) md5-fold — a rewrite inside a
     # partition subdir leaves the top-level entry unchanged, so a
-    # one-level listing would key the stale corpus as current. One
-    # definition with the dedup memo's rewrite detector; a second
-    # hand-rolled walk here had already drifted on hidden-file filtering
-    # and field order.
+    # one-level listing would key the stale corpus as current.
     sig = _input_fingerprint(src, spark)
     if sig == "nostat":
         # the fingerprint's degrade sentinel is a STABLE value: folding

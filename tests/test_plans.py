@@ -73,14 +73,20 @@ def test_q07_hint_dispatch_over_bound_equal(spark, sf_dir, monkeypatch):
     assert hinted.reset_index(drop=True).equals(unhinted.reset_index(drop=True))
 
 
-def test_dim_probe_recounts_after_rewrite(spark, tmp_path):
-    """_dim_probe_count keys on the input fingerprint (shared with the
-    dedup memos): an in-session overwrite of the parquet under sf_dir
-    must re-probe — a stale under-bound count would force a broadcast
-    hint onto a dim that has since grown past the bound."""
-    import pandas as pd
+def _dim_rows(df, sf_dir, bound):
+    """q07's memoized dim probe, exactly as q07 calls it."""
+    from mapreduce_framework_simple_spark.ephemeral import memo_stat
 
-    from mapreduce_framework_simple_spark.operators import relational as R
+    return memo_stat(("dim_rows", bound), df, sf_dir,
+                     lambda: df.limit(bound + 1).count())
+
+
+def test_dim_probe_recounts_after_rewrite(spark, tmp_path):
+    """memo_stat keys on the input fingerprint of sf_dir: an in-session
+    overwrite of the parquet under sf_dir must re-probe — a stale
+    under-bound count would force a broadcast hint onto a dim that has
+    since grown past the bound."""
+    import pandas as pd
 
     sf = tmp_path / "dimsf"
     sf.mkdir()
@@ -90,22 +96,21 @@ def test_dim_probe_recounts_after_rewrite(spark, tmp_path):
         pd.DataFrame({"p_partkey": list(range(n))}).to_parquet(path)
 
     write(3)
-    assert R._dim_probe_count(spark.read.parquet(str(path)), str(sf), 10) == 3
+    assert _dim_rows(spark.read.parquet(str(path)), str(sf), 10) == 3
     write(7)  # same path, grown dim, identical plan semantic hash
-    assert R._dim_probe_count(spark.read.parquet(str(path)), str(sf), 10) == 7
+    assert _dim_rows(spark.read.parquet(str(path)), str(sf), 10) == 7
 
 
 def test_dim_probe_fingerprint_guard_skips_deep_walk_on_hit(
     spark, tmp_path, monkeypatch
 ):
     """The deep _input_fingerprint (stats every data file under sf_dir)
-    must run only when the SHALLOW signature (one stat per top-level
-    entry) changes — a probe-memo hit costs O(#tables) stats, not a
-    walk of the whole input; a rewrite still re-fingerprints."""
+    must run only when the SHALLOW signature (one stat per directory)
+    changes — a probe-memo hit costs O(#dirs) stats, not a walk of the
+    whole input; a rewrite still re-fingerprints."""
     import pandas as pd
 
-    from mapreduce_framework_simple_spark.operators import dedup
-    from mapreduce_framework_simple_spark.operators import relational as R
+    from mapreduce_framework_simple_spark import ephemeral
 
     sf = tmp_path / "guardsf"
     sf.mkdir()
@@ -116,22 +121,22 @@ def test_dim_probe_fingerprint_guard_skips_deep_walk_on_hit(
 
     write(3)
     deep_calls = []
-    orig = dedup._input_fingerprint
+    orig = ephemeral._input_fingerprint
 
     def counting(p, s=None):
         deep_calls.append(p)
         return orig(p, s)
 
-    monkeypatch.setattr(dedup, "_input_fingerprint", counting)
+    monkeypatch.setattr(ephemeral, "_input_fingerprint", counting)
     df = spark.read.parquet(str(path))
-    assert R._dim_probe_count(df, str(sf), 10) == 3
+    assert _dim_rows(df, str(sf), 10) == 3
     n_first = len(deep_calls)
     assert n_first >= 1
     for _ in range(3):  # unchanged input: shallow guard, zero deep walks
-        assert R._dim_probe_count(df, str(sf), 10) == 3
+        assert _dim_rows(df, str(sf), 10) == 3
     assert len(deep_calls) == n_first
     write(7)  # rewrite: shallow signature changes → deep re-fingerprint
-    assert R._dim_probe_count(spark.read.parquet(str(path)), str(sf), 10) == 7
+    assert _dim_rows(spark.read.parquet(str(path)), str(sf), 10) == 7
     assert len(deep_calls) > n_first
 
 
@@ -144,8 +149,7 @@ def test_dim_probe_fingerprint_guard_sees_partition_rewrite(
     bumps its immediate parent dir's mtime at any depth)."""
     import pandas as pd
 
-    from mapreduce_framework_simple_spark.operators import dedup
-    from mapreduce_framework_simple_spark.operators import relational as R
+    from mapreduce_framework_simple_spark import ephemeral
 
     sf = tmp_path / "partsf"
     part_dir = sf / "part.parquet" / "date=1"
@@ -160,19 +164,43 @@ def test_dim_probe_fingerprint_guard_sees_partition_rewrite(
 
     write(3, "f1.parquet")
     deep_calls = []
-    orig = dedup._input_fingerprint
+    orig = ephemeral._input_fingerprint
 
     def counting(p, s=None):
         deep_calls.append(p)
         return orig(p, s)
 
-    monkeypatch.setattr(dedup, "_input_fingerprint", counting)
+    monkeypatch.setattr(ephemeral, "_input_fingerprint", counting)
     tbl = str(sf / "part.parquet")
-    assert R._dim_probe_count(spark.read.parquet(tbl), str(sf), 10) == 3
+    assert _dim_rows(spark.read.parquet(tbl), str(sf), 10) == 3
     n_first = len(deep_calls)
     write(7, "f2.parquet")  # partition-scoped rewrite, table dir untouched
-    assert R._dim_probe_count(spark.read.parquet(tbl), str(sf), 10) == 7
+    assert _dim_rows(spark.read.parquet(tbl), str(sf), 10) == 7
     assert len(deep_calls) > n_first
+
+
+def test_memo_stat_bounded_oldest_first(spark, tmp_path):
+    """memo_stat keeps at most STAT_MEMO_MAX entries and drops the
+    oldest first: the newest statistic still hits, the oldest is
+    measured again."""
+    from mapreduce_framework_simple_spark import ephemeral
+
+    df = spark.range(1)
+    calls = []
+
+    def stat(i):
+        return ephemeral.memo_stat(("bound_test", i), df, str(tmp_path),
+                                   lambda: calls.append(i) or i)
+
+    ephemeral._STAT_MEMO.clear()
+    n = ephemeral.STAT_MEMO_MAX + 1
+    for i in range(n):
+        assert stat(i) == i
+    assert len(ephemeral._STAT_MEMO) == ephemeral.STAT_MEMO_MAX
+    assert stat(n - 1) == n - 1
+    assert calls == list(range(n))
+    assert stat(0) == 0
+    assert calls == list(range(n)) + [0]
 
 
 def test_no_cartesian_in_star_join(spark, sf_dir):
@@ -511,7 +539,10 @@ def test_q105_byte_gate_over_bound_unhinted_equal(spark, sf_dir, monkeypatch):
     q07 rows the generic row bound was calibrated on). Force the
     over-byte-bound branch and assert the hint is gone from the
     analyzed plan while the answer is row-identical — the dispatch may
-    only ever change strategy, never results."""
+    only ever change strategy, never results. The over-bound run takes
+    the stats MISS path, which caches c_bg for the stats job: failing
+    the gate must drop that cache again."""
+    from mapreduce_framework_simple_spark import ephemeral
     from mapreduce_framework_simple_spark.operators import text as T
     from mapreduce_framework_simple_spark.operators.text import q105_bigram_lm
 
@@ -522,34 +553,62 @@ def test_q105_byte_gate_over_bound_unhinted_equal(spark, sf_dir, monkeypatch):
     assert "ResolvedHint" in analyzed(under), "under-bound branch lost its hint"
     hinted = under.toPandas().sort_values("doc_id")
     monkeypatch.setattr(T, "LM_BROADCAST_BYTES_BOUND", 0)
+    ephemeral._STAT_MEMO.clear()
+    n_handles0 = len(ephemeral._SCOPED)
     over = q105_bigram_lm(spark, sf_dir)
     assert "ResolvedHint" not in analyzed(over), "over-byte-bound kept the hint"
     unhinted = over.toPandas().sort_values("doc_id")
     assert hinted.reset_index(drop=True).equals(unhinted.reset_index(drop=True))
+    held = [
+        h for h in ephemeral._SCOPED[n_handles0:]
+        if "c_bg" in h.columns
+        and (h.storageLevel.useMemory or h.storageLevel.useDisk)
+    ]
+    assert held == [], "over-bound miss path left its c_bg cache registered"
+
+
+def test_q105_lm_stats_width_counts_bytes(spark):
+    """The LM byte gate sizes c_bg rows by the bigram's UTF-8 BYTES: a
+    CJK bigram is 3 bytes per character, so a character count would
+    understate the broadcast size about threefold."""
+    from mapreduce_framework_simple_spark.ephemeral import release_caches
+    from mapreduce_framework_simple_spark.operators.text import _lm_table_stats
+
+    bgs = ["日本 語学", "中文 字符"]
+    c_bg = spark.createDataFrame([(b, 1) for b in bgs], "bg string, c_bg long")
+    try:
+        n, w = _lm_table_stats(c_bg)
+    finally:
+        release_caches()
+    assert n == 2
+    assert w == sum(len(b.encode()) for b in bgs) / len(bgs)
+    assert w > sum(len(b) for b in bgs) / len(bgs)
 
 
 def test_q105_stats_memo_no_repeat_probe_and_miss_path_cache(spark, sf_dir):
-    """_lm_table_stats pays its stats job once per (session, input): the
+    """q105's LM stats job runs once per memo_stat key: the
     memo-MISS path scoped-caches c_bg (the stats aggregation doubles as
     the cache materialization the main query then reuses), and memo
     HITS neither recompute nor register another cache handle — the
     steady-state plan stays the round-12 ReusedExchange shape, which an
     unconditional cache was measured to regress (A/B 0.878 → 1.090 s)."""
     from mapreduce_framework_simple_spark import ephemeral
-    from mapreduce_framework_simple_spark.operators import text as T
     from mapreduce_framework_simple_spark.operators.text import q105_bigram_lm
+
+    def lm_stats_entries():
+        return [k for k in ephemeral._STAT_MEMO if k[0] == "lm_stats"]
 
     ephemeral.release_caches()
     spark.catalog.clearCache()
-    T._LM_STATS_MEMO.clear()
+    ephemeral._STAT_MEMO.clear()
     try:
         n_handles0 = len(ephemeral._SCOPED)
         q105_bigram_lm(spark, sf_dir).count()
-        assert len(T._LM_STATS_MEMO) == 1, "miss path must memoize the stats"
+        assert len(lm_stats_entries()) == 1, "miss path must memoize the stats"
         n_handles1 = len(ephemeral._SCOPED)
         assert n_handles1 > n_handles0, "miss path must scoped-cache c_bg"
         q105_bigram_lm(spark, sf_dir).count()
-        assert len(T._LM_STATS_MEMO) == 1, "hit path must not re-probe"
+        assert len(lm_stats_entries()) == 1, "hit path must not re-probe"
         # hit path registers only q105's own bg cache, no c_bg handle:
         # exactly as many new handles as the first call MINUS the
         # stats-path c_bg cache

@@ -72,7 +72,7 @@ def main() -> None:
         return ensure_replica(f"/tmp/mfss_jacc_x{n}", build)
 
     kernels = {
-        "naive": D._jaccard_truth_pairs,
+        "naive": lambda sh, d: D._jaccard_truth_pairs(sh),
         "prefix": D._jaccard_prefix_pairs,
     }
 
@@ -86,7 +86,7 @@ def main() -> None:
 
         def pipeline(kernel):
             sh = ephemeral.scoped_cache(D.shingle_id_sets(spark, d))
-            return kernel(sh)
+            return kernel(sh, d)
 
         # untimed warm-up of BOTH plan shapes at this regime
         for k in kernels.values():

@@ -10,14 +10,21 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # with pyspark/duckdb on it, and "python" may not exist on PATH at all
 # (python3-only boxes) or may resolve outside the venv
 PY = sys.executable
-steps = [
+STEPS = [
     ([PY, "-m", "pytest", "tests/", "-q"], REPO),
     ([PY, os.path.join(REPO, "tests", "drive_entry.py")], "/tmp"),
     ([PY, os.path.join(REPO, "bench.py")], "/tmp"),
 ]
-for cmd, cwd in steps:
-    print(f"==> {' '.join(cmd)} (cwd={cwd})", flush=True)
-    r = subprocess.run(cmd, cwd=cwd)
-    if r.returncode != 0:
-        sys.exit(r.returncode)
-print("ALL VALIDATION PASSED")
+
+
+def main() -> None:
+    for cmd, cwd in STEPS:
+        print(f"==> {' '.join(cmd)} (cwd={cwd})", flush=True)
+        r = subprocess.run(cmd, cwd=cwd)
+        if r.returncode != 0:
+            sys.exit(r.returncode)
+    print("ALL VALIDATION PASSED")
+
+
+if __name__ == "__main__":
+    main()
