@@ -96,23 +96,7 @@ def cache_scope():
         yield
     finally:
         stack.pop()
-        frames, bcasts = scope
-        while frames:
-            df = frames.pop()
-            try:
-                _release(df)
-            except Exception:
-                pass
-        # broadcasts registered inside the block drain with it too — a
-        # cache_scope consumer that never reaches a global
-        # release_caches() must not accumulate one torrent copy per
-        # kernel invocation
-        while bcasts:
-            bc = bcasts.pop()
-            try:
-                bc.unpersist(blocking=False)
-            except Exception:
-                pass
+        _drain(*scope)
 
 
 def scoped_cache(df: DataFrame) -> DataFrame:
@@ -496,18 +480,23 @@ def release_caches() -> int:
     consumer, so its caches are dead weight. Registrations inside an
     open :func:`cache_scope` live in that scope's own thread-local
     registry, not here — the scope releases them at exit."""
+    return _drain(_SCOPED, _SCOPED_BCAST)
+
+
+def _drain(frames: list, bcasts: list) -> int:
+    """Release every frame, then every broadcast, emptying both lists;
+    returns how many released without error (a stopped session has
+    nothing left to release)."""
     n = 0
-    while _SCOPED:
-        df = _SCOPED.pop()
+    while frames:
         try:
-            _release(df)
+            _release(frames.pop())
             n += 1
-        except Exception:  # session already stopped — nothing to release
+        except Exception:
             pass
-    while _SCOPED_BCAST:
-        bc = _SCOPED_BCAST.pop()
+    while bcasts:
         try:
-            bc.unpersist(blocking=False)
+            bcasts.pop().unpersist(blocking=False)
             n += 1
         except Exception:
             pass

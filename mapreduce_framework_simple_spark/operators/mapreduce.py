@@ -169,12 +169,13 @@ class MapReduceEngine:
                         elements: Iterable[Any],
                         mapper: Callable[[Iterable[Any]], Any],
                         reducer: Callable[[list[Any]], Any],
-                        num_partitions: int = 32) -> Any:
+                        num_partitions: int | None = None) -> Any:
         """Scale path: skip driver-side chunk materialization and let Spark
-        partition. For data that does not fit on the driver the caller
-        should instead express the job as DataFrame ops or ``mapInPandas``
-        (see operators.relational) — this surface exists for closure parity,
-        not as the 100 TB hot path.
+        partition (``num_partitions=None`` → ``sc.defaultParallelism``,
+        which follows the session's core count). For data that does not
+        fit on the driver the caller should instead express the job as
+        DataFrame ops or ``mapInPandas`` (see operators.relational) — this
+        surface exists for closure parity, not as the 100 TB hot path.
         """
         sc = self.spark.sparkContext
         # drop empty partitions before mapping: parallelize with more

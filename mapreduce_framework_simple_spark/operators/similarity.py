@@ -91,8 +91,7 @@ _SCAN_CHUNK_ELEMS = 16_777_216
 
 
 def _pairwise_cosine_scan(spark: SparkSession, sf_dir: str, ref_df,
-                          emit_top_k: int | None = None,
-                          ref_count: int | None = None):
+                          emit_top_k: int | None = None):
     """Vectorized query-vs-corpus cosine kernel. The reference (QUERY) set
     — never the corpus — is collected once on the driver and shipped via
     ``sc.broadcast``, so executors hold ONE torrent-distributed copy
@@ -118,17 +117,14 @@ def _pairwise_cosine_scan(spark: SparkSession, sf_dir: str, ref_df,
     """
     import numpy as np  # local: keeps the shipped closure self-contained
 
-    # bound check BEFORE collecting — toPandas() on an oversized set IS
-    # the driver OOM the bound exists to prevent; callers that already
-    # counted (q120's dispatch) pass ref_count to skip the extra scan
-    if ref_count is None:
-        ref_count = ref_df.limit(MAX_BROADCAST_QUERIES + 1).count()
-    if ref_count > MAX_BROADCAST_QUERIES:
+    # one bounded collect: an oversized set costs the driver at most
+    # bound + 1 rows before the refusal, never the whole set
+    ref = ref_df.limit(MAX_BROADCAST_QUERIES + 1).toPandas()
+    if len(ref) > MAX_BROADCAST_QUERIES:
         raise ValueError(
             f"query set exceeds {MAX_BROADCAST_QUERIES} vectors; "
             "use the block or LSH kernels for corpus-scale reference sets"
         )
-    ref = ref_df.toPandas()
     if len(ref) == 0:
         # empty reference set: no pairs (np.stack([]) would raise)
         spark_sess = ref_df.sparkSession
@@ -327,14 +323,16 @@ def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
     import numpy as np
 
     spark = df.sparkSession
-    if cents.limit(MAX_BROADCAST_QUERIES + 1).count() > MAX_BROADCAST_QUERIES:
+    cp = cents.select("cell_id", "c_emb").limit(
+        MAX_BROADCAST_QUERIES + 1
+    ).toPandas()
+    if len(cp) > MAX_BROADCAST_QUERIES:
         raise ValueError(
             f"centroid set exceeds {MAX_BROADCAST_QUERIES}; IVF sizing is "
             "K ≈ √N — rebuild with kmeans_centroid_frame, or for K past "
             "the broadcast bound use the two-level router "
             "(two_level_probes, docs/SCALE.md)"
         )
-    cp = cents.select("cell_id", "c_emb").toPandas()
     if len(cp) == 0:
         # Empty centroid frame (empty corpus ⇒ K ≈ √N = 0 centroids):
         # the nearest-of-zero-cells relation is empty. The replaced
@@ -1309,8 +1307,8 @@ def q96_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _auto_meta_centroids(spark: SparkSession, sf_dir: str,
                          cents: DataFrame) -> DataFrame | None:
     """Size-dispatch the two-level router on centroid count (the q07 /
-    q120 planner-``if`` pattern): probe the centroid frame with the same
-    ``limit(bound+1).count()`` probe :func:`_nearest_cells` refuses on.
+    q120 planner-``if`` pattern): a ``limit(bound+1).count()`` probe
+    against the bound :func:`_nearest_cells` refuses past.
     Within the broadcast bound → None (the flat path is correct and
     cheaper). Past it → auto-build the routing layer at the production
     sizing, ``kmeans_centroid_frame(k=⌈√K⌉)``, so a caller who hands
@@ -1779,7 +1777,7 @@ def q120_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_ref = ref.count()
     if n_ref <= MAX_BROADCAST_QUERIES:
         scored_raw = _pairwise_cosine_scan(
-            spark, sf_dir, ref, emit_top_k=KNN_K, ref_count=n_ref
+            spark, sf_dir, ref, emit_top_k=KNN_K
         )
     else:
         scored_raw = _block_topk_cosine(spark, sf_dir, KNN_K).withColumnRenamed(

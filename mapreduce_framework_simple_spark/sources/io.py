@@ -6,10 +6,13 @@ return value (Simple.pm:335-338). Our engine declares real columnar
 sources (SURVEY.md §2.3 "Scans/sources"): parquet for the test star
 schema, plus CSV/JSON readers and ``createDataFrame`` for in-memory parity.
 
-Schemas are declared explicitly (SURVEY.md §1.3: the engine replaces the
-reference's "trust the closure" contract with fail-fast StructType
-schemas). Explicit schemas also matter at scale: schema inference on a
-100 TB path is an extra full listing + footer read per query.
+Schemas are declared in ``SCHEMAS`` (SURVEY.md §1.3: the engine replaces
+the reference's "trust the closure" contract with fail-fast StructType
+schemas), but they are NOT forced at read time: :func:`load_table` reads
+with no schema, so every call pays one schema-inference job (a listing
+plus footer read; measured). The declared schemas are used by the stream
+readers and by :func:`validate_schema`. Reusing a resolved schema per
+path is ROADMAP item 2.
 """
 
 from __future__ import annotations

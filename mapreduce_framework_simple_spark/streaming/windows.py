@@ -15,7 +15,11 @@ parquet/warehouse writes.
 
 from __future__ import annotations
 
+import atexit
 import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -200,223 +204,72 @@ def q53_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Real Structured Streaming pipelines (verified batch-vs-stream in tests)
 # ---------------------------------------------------------------------------
 
-def _stage_stream_source(spark: SparkSession, table: str, sf_dir: str,
-                         n_files: int) -> str:
-    """Stage one testdata table into a scratch drop-zone directory for the
-    file streaming source (which requires a directory of immutable files),
-    ALWAYS rewriting through the batch loader so physical-format variance
-    (TIMESTAMP(NANOS)/NTZ columns the raw streaming reader would reject or
-    misread) is normalized to the declared stream schema — for single-file
-    AND directory sources alike.
+# (src, n_files) -> (deep input fingerprint of src, stage dir, data file sizes)
+_STAGES: dict[tuple[str, int], tuple[str, str, dict[str, int]]] = {}
 
-    Keyed by a CONTENT fingerprint (every constituent file's name, mtime,
-    size — the round driver regenerates testdata in place, and a path-only
-    key would stream the stale corpus), scoped per-user under the shared
-    temp dir. Concurrency-safe: the stage is written to a process-unique
-    temp directory and atomically renamed into place, so two processes
-    staging the same source cannot clobber a stage a third is already
-    reading; the loser of the rename discards its copy and uses the
-    winner's. ``n_files`` output files ⇒ ``n_files`` availableNow
-    microbatches at ``maxFilesPerTrigger=1``."""
-    import hashlib
-    import re
-    import shutil
-    import tempfile
-    import time
 
-    from mapreduce_framework_simple_spark.ephemeral import _input_fingerprint
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    # THE shared deep content fingerprint (ephemeral._input_fingerprint):
-    # recursive (relpath, size, mtime_ns) md5-fold — a rewrite inside a
-    # partition subdir leaves the top-level entry unchanged, so a
-    # one-level listing would key the stale corpus as current.
-    sig = _input_fingerprint(src, spark)
-    if sig == "nostat":
-        # the fingerprint's degrade sentinel is a STABLE value: folding
-        # it into the key would stop detecting corpus rewrites (a stale
-        # staged copy keys as current). For the memo that trade is fine;
-        # for staging it is not — a missing/unreadable source must fail
-        # here, as the replaced inline stat walk did.
-        raise FileNotFoundError(
-            f"stream source {src!r} is missing or unreadable: cannot "
-            "fingerprint it for the staging key"
-        )
-    key = hashlib.md5(f"{src}:{sig}".encode()).hexdigest()[:12]
-    uid = getattr(os, "getuid", lambda: 0)()
-    # (src, n_files)-scoped prefix: GC must only reap superseded stages
-    # of THIS source path AT THIS fan-out — a table staged from a
-    # DIFFERENT sf_dir may be mid-stream in a concurrent process (driver
-    # bench vs builder tests), and the SAME live source staged with a
-    # different n_files (e.g. n_files=4 vs 8) is a live peer too: its
-    # corpus is still current, only its microbatch layout differs, so
-    # reaping it would fail that stream mid-read with missing files.
-    # n_files therefore lives in the prefix (GC scope), not the content
-    # key — within one (src, n_files) scope, a differing key really does
-    # mean a superseded corpus.
-    srch = hashlib.md5(src.encode()).hexdigest()[:8]
-    stage_prefix = f"mfss_stream_{uid}_{table}_{srch}_n{n_files}_"
-    drop_zone = os.path.join(tempfile.gettempdir(), stage_prefix + key)
-    # GC superseded stages: every in-place regeneration of THIS source
-    # mints a new content key, and without cleanup each one orphans a
-    # full table copy in /tmp until the disk fills. A different-keyed
-    # same-source sibling stages a corpus that no longer exists on disk
-    # — any process still reading it is already consuming stale data, so
-    # removing it is the lesser harm. (.tmp.* dirs are skipped: they
-    # belong to a possibly-live peer's in-flight write; the rename-loser
-    # path removes its own.)
-    table_prefix = f"mfss_stream_{uid}_{table}_"
-    # legacy-format sweep matches ONLY the two layouts prior rounds
-    # actually wrote (pre-srchash `<table>_<key12>` and pre-n_files
-    # `<table>_<srch8>_<key12>`) — never "anything not current-format":
-    # a table whose name extends this one (e.g. 'events_v2' seen from
-    # 'events') starts with table_prefix but fails the current-format
-    # regex (its name tail occupies the srch slot), so a catch-all
-    # sweep would rmtree a LIVE peer stage mid-stream
-    legacy_fmt = re.compile(
-        re.escape(table_prefix) + r"(?:[0-9a-f]{8}_)?[0-9a-f]{12}$"
-    )
+def _reap_stages(exiting: bool = False) -> None:
+    """Remove each ``mfss_stage_<pid>_*`` directory whose process is dead
+    and, when ``exiting`` (the exit hook), this process's own."""
     for d in os.listdir(tempfile.gettempdir()):
-        if ".tmp." in d:
-            # in-flight write of a possibly-live peer — normally the
-            # writer's own BaseException handler removes it, but a
-            # SIGKILL/power-loss skips that handler and the partial
-            # table copy would otherwise leak forever (the disk-fill
-            # mode this sweep exists to prevent). The writer's pid rides
-            # in the dir name: reap only when that pid is provably dead.
-            if d.startswith(table_prefix):
-                try:
-                    os.kill(int(d.rsplit(".tmp.", 1)[-1]), 0)
-                except (ValueError, ProcessLookupError):
-                    shutil.rmtree(os.path.join(tempfile.gettempdir(), d),
-                                  ignore_errors=True)
-                except OSError:
-                    pass  # e.g. EPERM: pid alive under another uid
+        m = re.match(r"mfss_stage_(\d+)_", d)
+        if m is None:
             continue
-        if d == stage_prefix + key:
-            continue
-        if d.startswith(stage_prefix) or legacy_fmt.match(d):
+        pid = int(m.group(1))
+        dead = exiting  # this process's own stages go only at exit
+        if pid != os.getpid():
+            try:
+                os.kill(pid, 0)
+                dead = False
+            except OSError as e:  # EPERM: alive under another uid
+                dead = isinstance(e, ProcessLookupError)
+        if dead:
             shutil.rmtree(os.path.join(tempfile.gettempdir(), d),
                           ignore_errors=True)
-    # completeness probe: rejects a partially-written stage from a
-    # crashed prior run AND a stage /tmp aging has hollowed out. The
-    # stage carries a MANIFEST marker (_MFSS_STAGE_COMPLETE: one
-    # "name:size" line per data file, written after the tmp write
-    # returns, before the rename) and the probe verifies every listed
-    # file still exists at its recorded size — stronger than the old
-    # _SUCCESS-existence check on both axes: it is committer-conf-
-    # independent (mapreduce.fileoutputcommitter.marksuccessfuljobs=
-    # false — a common object-store tuning — suppresses _SUCCESS, which
-    # used to make every call read a COMPLETED stage as broken, rmtree
-    # it out from under a draining peer stream, and rewrite the table),
-    # and it detects aged-out DATA files even when the marker itself
-    # survived. A manifest-less stage with _SUCCESS (pre-manifest
-    # layout) keeps the legacy existence check.
-    def _complete(dz: str) -> bool:
-        manifest = os.path.join(dz, "_MFSS_STAGE_COMPLETE")
-        entries = None
-        for attempt in (0, 1):
-            try:
-                with open(manifest) as fh:
-                    entries = [ln.rstrip("\n") for ln in fh if ln.strip()]
-                break
-            except FileNotFoundError:
-                return os.path.exists(os.path.join(dz, "_SUCCESS"))
-            except OSError:
-                # A transient read failure on an EXISTING manifest
-                # (EACCES/locking flaps on shared /tmp; EINTR is NOT in
-                # this class — PEP 475 retries it inside open()) must
-                # not condemn the stage: False routes into the rmtree-
-                # and-restage branch, destroying a possibly-COMPLETE
-                # stage under any draining peer stream. Re-probe once
-                # after a beat; if the failure REPEATS while the
-                # manifest still exists, the stage cannot be proven
-                # incomplete — fail safe by raising (surface the /tmp
-                # fault loudly) rather than returning False into the
-                # destructive branch. False is reserved for PROVABLY
-                # incomplete stages (manifest absent / empty / sizes
-                # drifted). A manifest that vanished between attempts
-                # was removed by a peer: fall back to the legacy probe.
-                if attempt:
-                    if os.path.exists(manifest):
-                        raise RuntimeError(
-                            f"stage manifest {manifest!r} exists but "
-                            "failed to read twice: cannot prove the "
-                            "stage incomplete, refusing to restage "
-                            "over it (a draining peer stream may be "
-                            "reading it) — clear the /tmp fault and "
-                            "retry"
-                        )
-                    return os.path.exists(os.path.join(dz, "_SUCCESS"))
-                time.sleep(0.05)
-        if entries is None:  # unreachable; keeps the contract explicit
-            return False
-        if not entries:  # a real stage always has >= 1 data file
-            return False
-        for ent in entries:
-            name, _, size = ent.rpartition(":")
-            p = os.path.join(dz, name)
-            try:
-                if not name or os.path.getsize(p) != int(size):
-                    return False
-            except (OSError, ValueError):
-                return False
-        return True
 
-    if not _complete(drop_zone):
-        tmp = f"{drop_zone}.tmp.{os.getpid()}"
-        try:
-            load_table(spark, table, sf_dir).repartition(n_files).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            manifest = [
-                f"{f}:{os.path.getsize(os.path.join(tmp, f))}"
-                for f in sorted(os.listdir(tmp))
-                if not f.startswith(("_", "."))
-            ]
-            with open(os.path.join(tmp, "_MFSS_STAGE_COMPLETE"), "w") as fh:
-                fh.write("\n".join(manifest) + "\n")
-            try:
-                os.rename(tmp, drop_zone)
-            except OSError:
-                # Either a concurrent process won the rename, or a BROKEN
-                # stage (exists but no completion marker — e.g. /tmp aged
-                # out files inside it) is blocking the slot. Distinguish
-                # by re-probing: trusting "a winner exists" here
-                # would silently stream a truncated stage forever. The
-                # probe/remove/rename sequence is retried a few times —
-                # two processes repairing concurrently can interleave so
-                # one's remove races the other's rename; each retry
-                # re-probes, so a completed peer stage is adopted rather
-                # than deleted-and-raced again.
-                for _ in range(4):
-                    if _complete(drop_zone):
-                        shutil.rmtree(tmp, ignore_errors=True)
-                        break
-                    shutil.rmtree(drop_zone, ignore_errors=True)
-                    try:
-                        os.rename(tmp, drop_zone)
-                        break
-                    except OSError:
-                        continue
-                else:
-                    raise RuntimeError(
-                        f"could not stage {drop_zone}: repeated rename "
-                        "contention without a completed stage appearing"
-                    )
-        except BaseException:
-            # a failed write (or failed repair-rename) must not strand a
-            # table-sized partial copy under the shared temp dir
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    return drop_zone
+
+def _stage_stream_source(spark: SparkSession, table: str, sf_dir: str,
+                         n_files: int) -> str:
+    """Copy a table through :func:`load_table` into a directory of
+    ``n_files`` parquet files (the file stream source reads directories
+    only) private to this process and removed at its exit. A repeat call
+    returns it with no Spark job; a rewritten source gets a new stage, a
+    stage whose data files changed is rewritten in place."""
+    from mapreduce_framework_simple_spark.ephemeral import _input_fingerprint
+
+    def data_sizes(zone: str) -> dict[str, int]:
+        return {f: os.path.getsize(os.path.join(zone, f))
+                for f in os.listdir(zone) if not f.startswith(("_", "."))}
+
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    sig = _input_fingerprint(src, spark)
+    if sig == "nostat":  # a stable sentinel: it would hide every rewrite
+        raise FileNotFoundError(f"stream source {src!r} is missing or unreadable")
+    _reap_stages()
+    atexit.unregister(_reap_stages)  # keep exactly one exit hook
+    atexit.register(_reap_stages, True)
+    old = _STAGES.get((src, n_files))
+    if old is not None and old[0] == sig:
+        zone = old[1]
+        if os.path.isdir(zone) and data_sizes(zone) == old[2]:
+            return zone
+    else:
+        if old is not None:
+            shutil.rmtree(old[1], ignore_errors=True)
+        zone = tempfile.mkdtemp(
+            prefix=f"mfss_stage_{os.getpid()}_{table}_n{n_files}_")
+    load_table(spark, table, sf_dir).repartition(n_files).write.mode(
+        "overwrite").parquet(zone)
+    _STAGES[(src, n_files)] = (sig, zone, data_sizes(zone))
+    return zone
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (1 file per microbatch
-    in tests; at scale this is the same code over a Kafka/file drop-zone
-    source — only the ``format`` changes). See
-    :func:`_stage_stream_source` for the staging contract."""
+    """File-source stream over the events table, one file per microbatch.
+    The table is read from a copy private to this process
+    (:func:`_stage_stream_source`), so a checkpoint over this stream
+    resumes only in the process that opened it. A real drop-zone (a
+    directory or Kafka) is read in place; only the ``format`` changes."""
     drop_zone = _stage_stream_source(spark, "events", sf_dir, n_files=1)
     return (
         spark.readStream.schema(SCHEMAS["events"])
@@ -777,8 +630,9 @@ def read_documents_stream(spark: SparkSession, sf_dir: str,
                           n_files: int = 4) -> DataFrame:
     """File-source stream over the documents table, staged as ``n_files``
     parquet files so availableNow drains it in ``n_files`` microbatches —
-    the ingestion-side stand-in for a crawl drop-zone. See
-    :func:`_stage_stream_source` for the staging contract."""
+    the ingestion-side stand-in for a crawl drop-zone. Like
+    :func:`read_events_stream`, it reads a copy private to this process:
+    a checkpoint over it resumes only in that process."""
     drop_zone = _stage_stream_source(spark, "documents", sf_dir, n_files)
     return (
         spark.readStream.schema(SCHEMAS["documents"])

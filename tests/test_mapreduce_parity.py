@@ -181,10 +181,12 @@ def test_chunking_rejects_bad_args():
 
 
 def test_map_reduce_iter(spark):
-    res = MapReduceEngine(spark).map_reduce_iter(
-        range(1000), lambda part: sum(part), sum, num_partitions=16
-    )
-    assert res == sum(range(1000))
+    eng = MapReduceEngine(spark)
+    for n in (16, None):  # None: sc.defaultParallelism
+        res = eng.map_reduce_iter(
+            range(1000), lambda part: sum(part), sum, num_partitions=n
+        )
+        assert res == sum(range(1000))
 
 
 def test_mapper_failure_fails_fast(spark):
@@ -244,3 +246,87 @@ def test_map_reduce_iter_never_feeds_empty_chunks(spark):
         num_partitions=32,
     )
     assert all(isinstance(x, float) for x in out) and len(out) <= 5
+
+
+_RETRY_SCRIPT = r"""
+import json, sys
+sys.path.insert(0, REPO)
+from pyspark import TaskContext
+from mapreduce_framework_simple_spark.operators.mapreduce import MapReduceEngine
+from mapreduce_framework_simple_spark.session import get_session
+
+spark = get_session("retry-parity", master="local[2,2]", shuffle_partitions=2)
+eng = MapReduceEngine(spark)
+chunks = [list(range(i, i + 10)) for i in range(0, 40, 10)]
+
+
+def mapper(failing_attempts):
+    def run(chunk):
+        from pyspark import TaskContext
+        if 20 in chunk and TaskContext.get().attemptNumber() in failing_attempts:
+            raise RuntimeError("injected chunk failure")
+        return sum(x * x for x in chunk)
+    return run
+
+
+def doubler(failing_attempts):
+    def run(batches):
+        from pyspark import TaskContext
+        ctx = TaskContext.get()
+        if ctx.partitionId() == 1 and ctx.attemptNumber() in failing_attempts:
+            raise RuntimeError("injected partition failure")
+        for pdf in batches:
+            yield pdf.assign(y=pdf["id"] * 2)
+    return run
+
+
+def frame(failing_attempts):
+    df = spark.range(0, 400, numPartitions=4)
+    out = df.mapInPandas(doubler(failing_attempts), "id long, y long")
+    return sorted(tuple(r) for r in out.collect())
+
+
+def fails(thunk):
+    try:
+        thunk()
+    except Exception as e:
+        return "injected" in str(e)
+    return False
+
+
+print(json.dumps({
+    "mr_clean": eng.map_reduce(chunks, mapper(()), sorted, pre_chunked=True),
+    "mr_retried": eng.map_reduce(chunks, mapper((0,)), sorted, pre_chunked=True),
+    "mr_twice_fails": fails(lambda: eng.map_reduce(
+        chunks, mapper((0, 1)), sorted, pre_chunked=True)),
+    "mip_equal": frame(()) == frame((0,)),
+    "mip_twice_fails": fails(lambda: frame((0, 1))),
+}))
+"""
+
+
+def test_failed_chunk_is_retried_to_the_clean_result():
+    """≙ the reference's failover (Simple.pm:247-315): a chunk whose
+    first attempt fails is run again and the job returns exactly the
+    clean result, for a ``map_reduce`` mapper and a ``mapInPandas``
+    partition alike; a chunk that fails on both of its two allowed
+    attempts fails the job. Runs in a subprocess on ``local[2,2]``:
+    local mode reads ``spark.task.maxFailures`` only from the master
+    string, and the shared test session allows no retry."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", f"REPO = {repo!r}\n" + _RETRY_SCRIPT],
+        env=env, check=True, capture_output=True, text=True, timeout=600,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["mr_retried"] == got["mr_clean"]
+    assert len(got["mr_clean"]) == 4
+    assert got["mip_equal"], "a retried mapInPandas partition changed rows"
+    assert got["mr_twice_fails"], "a chunk failing both attempts must fail"
+    assert got["mip_twice_fails"], "a partition failing both attempts must fail"

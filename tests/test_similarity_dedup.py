@@ -1335,7 +1335,7 @@ def test_ivf_knn_audit_agrees_with_exact(spark, sf_dir, tmp_path):
     # exact predictions: q120's kernel + the SAME shared vote rule
     ref = em.select("vec_id", "embedding")
     scored = S._pairwise_cosine_scan(
-        spark, sf_dir, ref, emit_top_k=S.KNN_K, ref_count=n_corpus
+        spark, sf_dir, ref, emit_top_k=S.KNN_K
     ).select(
         "query_id", "neighbor_id", F.round(F.col("cos_sim_raw"), 6).alias("cos_sim")
     )

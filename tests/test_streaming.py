@@ -492,11 +492,9 @@ def test_clean_stale_batches_scoped_to_batch_dirs(spark, tmp_path):
 
 
 def test_stage_stream_source_repairs_broken_stage(spark, sf_dir):
-    """A stage directory that exists WITHOUT its _SUCCESS marker (e.g.
-    /tmp aged out files inside it) must be REPLACED on the next staging
-    call, not trusted: the old rename-failure handler assumed 'a
-    concurrent process won' and returned the truncated stage forever,
-    silently streaming missing rows."""
+    """A stage that lost a data file (and its _SUCCESS marker) is
+    rewritten IN PLACE by the next staging call, with every row back —
+    never returned truncated."""
     import os
 
     from mapreduce_framework_simple_spark.streaming.windows import (
@@ -520,204 +518,148 @@ def test_stage_stream_source_repairs_broken_stage(spark, sf_dir):
     assert spark.read.parquet(zone2).count() == n_good  # full data back
 
 
-def test_stage_completeness_is_manifest_verified(spark, sf_dir):
-    """The completeness probe verifies the MANIFEST (every data file at
-    its recorded size), not marker existence: (a) a stage whose marker
-    survived /tmp aging but lost a data file must be restaged — a
-    marker-existence probe would trust the truncated stage forever;
-    (b) a stage with a valid manifest but NO _SUCCESS (committer conf
-    mapreduce.fileoutputcommitter.marksuccessfuljobs=false) must be
-    TRUSTED — the old _SUCCESS-only probe rewrote such stages on every
-    call and could rmtree them out from under a draining peer."""
-    import os
+def _write_events(part_dir, values) -> None:
+    import pandas as pd
 
-    from mapreduce_framework_simple_spark.streaming.windows import (
-        _stage_stream_source,
-    )
-
-    zone = _stage_stream_source(spark, "events", sf_dir, n_files=1)
-    n_good = spark.read.parquet(zone).count()
-    manifest = os.path.join(zone, "_MFSS_STAGE_COMPLETE")
-    assert os.path.exists(manifest)
-
-    # (a) marker survives, a data file ages out → restage
-    parts = [f for f in os.listdir(zone) if f.endswith(".parquet")]
-    os.remove(os.path.join(zone, parts[0]))
-    assert os.path.exists(manifest)  # the marker alone still claims done
-    zone2 = _stage_stream_source(spark, "events", sf_dir, n_files=1)
-    assert zone2 == zone
-    assert spark.read.parquet(zone2).count() == n_good  # full data back
-
-    # (b) _SUCCESS suppressed, manifest valid → stage is trusted as-is
-    os.remove(os.path.join(zone, "_SUCCESS"))
-    mtime = os.path.getmtime(manifest)
-    zone3 = _stage_stream_source(spark, "events", sf_dir, n_files=1)
-    assert zone3 == zone
-    assert os.path.getmtime(manifest) == mtime  # no rewrite happened
-    assert spark.read.parquet(zone3).count() == n_good
-
-    # leave no _SUCCESS-less stage behind for later tests in this
-    # session (the stage key is shared per (src, n_files))
-    import shutil
-
-    shutil.rmtree(zone, ignore_errors=True)
-
-
-def test_stage_unreadable_existing_manifest_refuses_destruction(
-    spark, sf_dir
-):
-    """A manifest that EXISTS but cannot be read (persistent OSError —
-    e.g. an EACCES/locking flap on shared /tmp outlasting the 50 ms
-    re-probe) must NOT read as 'incomplete': that branch rmtrees the
-    stage and restages it, destroying a possibly-COMPLETE stage under
-    any draining peer stream. The probe must fail SAFE: raise loudly,
-    leave the stage untouched. (Simulated with a directory in the
-    manifest slot — open() on it raises IsADirectoryError, a persistent
-    OSError on an existing path, on every attempt.)"""
-    import os
-    import shutil
-
-    import pytest
-
-    from mapreduce_framework_simple_spark.streaming.windows import (
-        _stage_stream_source,
-    )
-
-    zone = _stage_stream_source(spark, "events", sf_dir, n_files=1)
-    manifest = os.path.join(zone, "_MFSS_STAGE_COMPLETE")
-    parts = sorted(
-        f for f in os.listdir(zone) if f.endswith(".parquet")
-    )
-    assert parts
-
-    os.remove(manifest)
-    os.mkdir(manifest)  # exists, but every open() raises OSError
-    try:
-        with pytest.raises(RuntimeError, match="refusing to restage"):
-            _stage_stream_source(spark, "events", sf_dir, n_files=1)
-        # the stage survived: no rmtree, every data file still present
-        assert sorted(
-            f for f in os.listdir(zone) if f.endswith(".parquet")
-        ) == parts
-    finally:
-        # leave a clean slate for later tests sharing this stage key
-        shutil.rmtree(zone, ignore_errors=True)
-    zone2 = _stage_stream_source(spark, "events", sf_dir, n_files=1)
-    assert zone2 == zone and os.path.isfile(manifest)
+    pd.DataFrame(
+        {"event_id": range(len(values)), "user_id": [1] * len(values),
+         "event_type": ["view"] * len(values),
+         "ts": pd.Timestamp("2024-01-01"), "value": values}
+    ).to_parquet(part_dir / "data.parquet")
 
 
 def test_stage_stream_source_gcs_superseded_and_keys_recursively(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
-    """Two contracts of the content key: (a) a rewrite INSIDE a
-    partition subdir (top-level names unchanged) must mint a NEW key —
-    a one-level listing would stream the stale corpus; (b) the
-    superseded stage must be GARBAGE-COLLECTED, not orphaned in /tmp
-    forever (one full table copy per testdata regeneration)."""
+    """Two contracts of the deep source fingerprint: (a) a rewrite INSIDE
+    a partition subdir (top-level names unchanged) must stage a NEW
+    directory holding the new rows — a one-level listing would stream
+    the stale corpus; (b) the superseded stage must be removed, not
+    orphaned in /tmp (one full table copy per testdata regeneration)."""
     import os
-
-    import pandas as pd
 
     from mapreduce_framework_simple_spark.streaming.windows import (
         _stage_stream_source,
     )
 
-    sf = tmp_path / "sf"
-    part = sf / "events.parquet" / "day=1"
+    part = tmp_path / "sf" / "events.parquet" / "day=1"
     part.mkdir(parents=True)
-
-    def write(values):
-        pd.DataFrame(
-            {"event_id": range(len(values)), "user_id": [1] * len(values),
-             "event_type": ["view"] * len(values),
-             "ts": pd.Timestamp("2024-01-01"), "value": values}
-        ).to_parquet(part / "data.parquet")
-
-    write([1.0, 2.0])
-    zone1 = _stage_stream_source(spark, "events", str(sf), n_files=1)
+    _write_events(part, [1.0, 2.0])
+    zone1 = _stage_stream_source(spark, "events", str(tmp_path / "sf"), 1)
     assert os.path.isdir(zone1)
-    write([1.0, 2.0, 3.0])  # rewrite nested file; top-level entry unchanged
-    zone2 = _stage_stream_source(spark, "events", str(sf), n_files=1)
-    assert zone2 != zone1, "nested rewrite did not change the content key"
+    _write_events(part, [1.0, 2.0, 3.0])  # nested rewrite
+    zone2 = _stage_stream_source(spark, "events", str(tmp_path / "sf"), 1)
+    assert zone2 != zone1, "nested rewrite did not restage"
     assert spark.read.parquet(zone2).count() == 3
-    assert not os.path.exists(zone1), "superseded stage was not GC'd"
+    assert not os.path.exists(zone1), "superseded stage was not removed"
 
 
 def test_stage_stream_source_nfiles_scopes_coexist(spark, sf_dir):
-    """The SAME live source staged at two fan-outs (n_files=1 vs 2 —
-    e.g. two concurrent processes streaming one table with different
-    microbatch layouts) must yield two COEXISTING stages: n_files lives
-    in the GC prefix, so staging one fan-out never rmtree's the other
-    peer's live drop-zone mid-stream. (Within one fan-out, a content
-    change still GCs the superseded sibling — previous test.)"""
+    """The SAME source staged at two fan-outs (n_files=1 vs 2) yields two
+    COEXISTING stages: restaging one never removes the other. Stage
+    directories of the older shared-/tmp layout (``mfss_stream_*``) are
+    neither read nor deleted."""
     import os
+    import shutil
+    import tempfile
 
     from mapreduce_framework_simple_spark.streaming.windows import (
         _stage_stream_source,
     )
 
-    import tempfile
-
-    z1 = _stage_stream_source(spark, "events", sf_dir, n_files=1)
-    z2 = _stage_stream_source(spark, "events", sf_dir, n_files=2)
-    assert z1 != z2
-    assert os.path.exists(os.path.join(z2, "_SUCCESS"))
-    # a legacy-format orphan (pre-n_files naming, written by code that no
-    # longer exists) must be swept by the next staging call
-    uid = getattr(os, "getuid", lambda: 0)()
-    legacy = os.path.join(
-        tempfile.gettempdir(), f"mfss_stream_{uid}_events_deadbeef_cafe0123abcd"
-    )
-    os.makedirs(legacy, exist_ok=True)
-    # a live stage of a PREFIX-EXTENSION table name ('events_v2' starts
-    # with 'events_') must survive the 'events' GC pass: it is neither
-    # current-format FOR THIS TABLE nor a known legacy layout — a
-    # catch-all "not current-format" sweep would rmtree it mid-stream
-    peer = os.path.join(
-        tempfile.gettempdir(),
-        f"mfss_stream_{uid}_events_v2_0123abcd_n1_0123456789ab",
-    )
-    os.makedirs(peer, exist_ok=True)
+    old_layout = tempfile.mkdtemp(prefix="mfss_stream_0_events_")
     try:
-        # restaging fan-out 1 (a GC pass) must leave fan-out 2's stage alive
+        z1 = _stage_stream_source(spark, "events", sf_dir, n_files=1)
+        z2 = _stage_stream_source(spark, "events", sf_dir, n_files=2)
+        assert z1 != z2
         assert _stage_stream_source(spark, "events", sf_dir, n_files=1) == z1
         assert os.path.exists(os.path.join(z1, "_SUCCESS"))
         assert os.path.exists(os.path.join(z2, "_SUCCESS")), \
-            "GC reaped a live different-n_files peer stage"
-        assert not os.path.exists(legacy), "legacy-format orphan not swept"
-        assert os.path.exists(peer), \
-            "GC reaped a live prefix-extension-table peer stage"
+            "restaging n_files=1 removed the n_files=2 stage"
+        assert len([f for f in os.listdir(z2) if f.endswith(".parquet")]) == 2
+        assert os.path.isdir(old_layout), "an old-layout directory was removed"
     finally:
-        import shutil
+        shutil.rmtree(old_layout, ignore_errors=True)
 
-        shutil.rmtree(peer, ignore_errors=True)
+
+def test_stage_stream_source_repeat_call_runs_no_job(spark, tmp_path):
+    """Two calls in one process return the same stage, and the second
+    runs no Spark job (a checkpointed restart in the same process reads
+    the very files it committed offsets for)."""
+    from mapreduce_framework_simple_spark.streaming.windows import (
+        _stage_stream_source,
+    )
+
+    part = tmp_path / "sf" / "events.parquet"
+    part.mkdir(parents=True)
+    _write_events(part, [1.0, 2.0])
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        zones = []
+        for group in ("stage-first", "stage-repeat"):
+            sc.setJobGroup(group, "staging job count")
+            zones.append(_stage_stream_source(spark, "events", str(tmp_path / "sf"), 1))
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert zones[0] == zones[1]
+    assert jobs[0] >= 1, "the first call must write the stage"
+    assert jobs[1] == 0, "the repeat call ran a Spark job"
 
 
 def test_stage_stream_source_reaps_dead_pid_tmp_dirs(spark, sf_dir):
-    """A .tmp.<pid> staging dir orphaned by a hard kill (SIGKILL skips
-    the writer's own cleanup handler) must be reaped by the next run's
-    sweep once its pid is dead — and a .tmp dir of a LIVE pid must be
-    left alone (a peer's in-flight write)."""
+    """A ``mfss_stage_<pid>_*`` directory left by a process that died
+    without its exit hook (SIGKILL) is removed by the next staging call;
+    one whose pid is alive is kept."""
     import os
+    import shutil
     import tempfile
 
     from mapreduce_framework_simple_spark.streaming.windows import (
         _stage_stream_source,
     )
 
-    uid = getattr(os, "getuid", lambda: 0)()
-    prefix = os.path.join(tempfile.gettempdir(), f"mfss_stream_{uid}_events_")
-    # 2**22+7 is far above any real pid_max on this box — provably dead
-    dead = prefix + f"deadbeef_n1_abcdef012345.tmp.{2**22 + 7}"
-    live = prefix + f"deadbeef_n1_abcdef012345.tmp.{os.getpid()}"
-    os.makedirs(dead, exist_ok=True)
-    os.makedirs(live, exist_ok=True)
+    # 2**22+7 is above the largest pid_max Linux allows: provably dead
+    dead = tempfile.mkdtemp(prefix=f"mfss_stage_{2**22 + 7}_events_n1_")
+    live = tempfile.mkdtemp(prefix=f"mfss_stage_{os.getppid()}_events_n1_")
     try:
         _stage_stream_source(spark, "events", sf_dir, n_files=1)
-        assert not os.path.exists(dead), "dead-pid tmp dir must be reaped"
-        assert os.path.exists(live), "live-pid tmp dir must survive"
+        assert not os.path.exists(dead), "dead-pid stage must be reaped"
+        assert os.path.exists(live), "live-pid stage must survive"
     finally:
-        import shutil
-
         shutil.rmtree(dead, ignore_errors=True)
         shutil.rmtree(live, ignore_errors=True)
+
+
+def test_stage_stream_source_removed_at_exit(sf_dir):
+    """A process that stages a stream and exits normally leaves no
+    ``mfss_stage_<its pid>_*`` directory behind."""
+    import glob
+    import json
+    import subprocess
+    import sys
+    import tempfile
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import json, os, sys
+sys.path.insert(0, {repo!r})
+from mapreduce_framework_simple_spark.session import get_session
+from mapreduce_framework_simple_spark.streaming.windows import read_events_stream
+spark = get_session("stage-exit", master="local[1]", shuffle_partitions=1)
+read_events_stream(spark, {sf_dir!r})
+print(json.dumps({{"pid": os.getpid(), "staged": len([
+    d for d in os.listdir({tempfile.gettempdir()!r})
+    if d.startswith(f"mfss_stage_{{os.getpid()}}_")])}}))
+"""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", script], env=env, check=True,
+                         capture_output=True, text=True, timeout=600)
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["staged"] == 1, "the subprocess did not stage"
+    left = glob.glob(os.path.join(tempfile.gettempdir(),
+                                  f"mfss_stage_{got['pid']}_*"))
+    assert left == [], f"stage outlived its process: {left}"

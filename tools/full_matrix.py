@@ -299,10 +299,10 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from mapreduce_framework_simple_spark.session import DEFAULT_CPUS
+
     spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
-        )
+        SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
         .appName("full-matrix")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -26,12 +26,16 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
+    from mapreduce_framework_simple_spark.session import DEFAULT_CPUS
+
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--out", default=os.path.join(REPO, "plans", "r12"))
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=DEFAULT_CPUS,
+                    help="local[N] thread count (default: $SPARK_GRAFT_CPUS "
+                    "or '*', all cores)")
     ap.add_argument("queries", nargs="*",
                     help="query names (default: bench HEADLINE + TREND)")
     args = ap.parse_args()

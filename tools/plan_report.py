@@ -28,7 +28,7 @@ def main() -> None:
     from mapreduce_framework_simple_spark.plans.explain import formatted_plan
 
     load_all()
-    spark = get_session("plan-report", master="local[8]")
+    spark = get_session("plan-report")
     spark.sparkContext.setLogLevel("ERROR")
 
     rows = []
