@@ -13,8 +13,13 @@ local[N] test runs:
   (Simple.pm:133-144).
 * Arrow on: every pandas_udf / mapInPandas crosses the JVM/Python
   boundary in columnar batches, not rows.
-* shuffle.partitions: a default for local; real clusters override via
-  spark-submit (AQE coalesces whatever is oversized anyway).
+* shuffle.partitions: an explicit ``shuffle_partitions=`` wins. Otherwise
+  a local master gets one shuffle partition per local core
+  (``defaultParallelism``), like the reference's one chunk per worker
+  (Simple.pm:49-145), unless spark-submit or spark-defaults set it; a
+  cluster master keeps the cluster's own setting. AQE cannot coalesce
+  the partitions of a cached frame, so a fixed count larger than the
+  cores runs idle tasks on every stage that reads one.
 """
 
 from __future__ import annotations
@@ -23,27 +28,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-def _env_shuffle_partitions() -> int:
-    """SPARK_GRAFT_SHUFFLE_PARTITIONS with the SAME >=1 validation the
-    explicit-argument path gets — the env path used to bypass it, so
-    a misread '0' silently configured zero shuffle partitions and a
-    non-integer crashed at import with a bare ValueError."""
-    raw = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    try:
-        n = int(raw)
-    except ValueError:
-        raise ValueError(
-            f"SPARK_GRAFT_SHUFFLE_PARTITIONS must be an integer >= 1, "
-            f"got {raw!r}"
-        ) from None
-    if n < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_SHUFFLE_PARTITIONS must be >= 1, got {n}"
-        )
-    return n
-
-
-DEFAULT_SHUFFLE_PARTITIONS = _env_shuffle_partitions()
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
 
@@ -51,14 +35,6 @@ def builder(app_name: str = "mapreduce-framework-simple-spark",
             master: str | None = None,
             shuffle_partitions: int | None = None) -> SparkSession.Builder:
     """Return a pre-tuned builder; callers may add/override configs."""
-    if shuffle_partitions is None:
-        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
-    elif shuffle_partitions < 1:
-        # `or DEFAULT` would silently coerce a caller's 0 (a misread env
-        # var, typically) to 32 — reject the invalid value instead
-        raise ValueError(
-            f"shuffle_partitions must be >= 1, got {shuffle_partitions}"
-        )
     b = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -68,7 +44,6 @@ def builder(app_name: str = "mapreduce-framework-simple-spark",
         # Arrow batch size balances Python-worker memory vs call overhead at
         # scale; 10k rows/batch keeps 64-dim float arrays ~5 MB per batch.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Dimension tables (region/nation/supplier at any SF; part/customer
         # at test SFs) must broadcast: 64 MB threshold instead of 10 MB.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -76,26 +51,25 @@ def builder(app_name: str = "mapreduce-framework-simple-spark",
         # 128 MB default, which is fine; do not shrink it locally either.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet has shipped as TIMESTAMP(NANOS) in some rounds
-        # (driver regenerates testdata; writer precision is not stable) —
-        # keep the legacy long mode armed so either encoding reads; set at
-        # session build so no read path ever has to mutate a live
-        # session's config (load_table still self-heals externally-built
-        # vanilla sessions, and normalizes MICROS/NTZ to UTC timestamps).
+        # events.parquet may be written as TIMESTAMP(NANOS), which Spark
+        # reads only in legacy long mode; set at build so no read path has
+        # to mutate a live session's config (load_table still arms it on
+        # externally built sessions).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    # master resolution, most-specific wins: explicit argument, then the
-    # SPARK_MASTER env var's VALUE (previously only its presence was
-    # checked — `SPARK_MASTER=local[4]` skipped the .master() call but
-    # never applied the value, so getOrCreate raised "A master URL must
-    # be set"), then spark-submit's --master, then the local default.
-    # spark-submit conveys its master through the pre-launched JVM
-    # gateway (never through this builder's options), so the probe is
-    # the gateway env marker PYSPARK_GATEWAY_PORT — when the Python
-    # driver was launched BY spark-submit, setting .master() here would
-    # silently rewrite a `--master yarn` cluster job to local[*].
+    if shuffle_partitions is not None:
+        if shuffle_partitions < 1:
+            raise ValueError(
+                f"shuffle_partitions must be >= 1, got {shuffle_partitions}"
+            )
+        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    # master, most specific first: the argument, the SPARK_MASTER env var,
+    # spark-submit's --master, then the local default. spark-submit passes
+    # its master through the JVM gateway it launched (PYSPARK_GATEWAY_PORT),
+    # never through this builder, so setting .master() here would rewrite
+    # a `--master yarn` job to local.
     env_master = os.environ.get("SPARK_MASTER")
     if master is not None:
         b = b.master(master)
@@ -109,7 +83,12 @@ def builder(app_name: str = "mapreduce-framework-simple-spark",
 def get_session(app_name: str = "mapreduce-framework-simple-spark",
                 master: str | None = None,
                 shuffle_partitions: int | None = None) -> SparkSession:
-    return builder(app_name, master, shuffle_partitions).getOrCreate()
+    spark = builder(app_name, master, shuffle_partitions).getOrCreate()
+    sc = spark.sparkContext
+    if (shuffle_partitions is None and sc.master.startswith("local")
+            and not sc.getConf().contains("spark.sql.shuffle.partitions")):
+        spark.conf.set("spark.sql.shuffle.partitions", str(sc.defaultParallelism))
+    return spark
 
 
 def stop_session() -> None:

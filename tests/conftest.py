@@ -27,7 +27,7 @@ def _require_corpus() -> None:
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session("mfss-tests", master="local[4]", shuffle_partitions=8)
+    s = get_session("mfss-tests", master="local[4]")
     yield s
     s.stop()
 

@@ -528,3 +528,41 @@ def test_builder_rejects_zero_shuffle_partitions():
 
     with pytest.raises(ValueError, match="shuffle_partitions"):
         builder(shuffle_partitions=0)
+
+
+def test_session_shuffle_partitions_follow_local_cores():
+    """A local session gets one shuffle partition per core; an explicit
+    ``shuffle_partitions=`` or a conf already on the SparkContext (as
+    spark-submit ``--conf`` sets it) wins; a cluster master gets no value
+    from the builder. Runs in a subprocess: the suite's session exists."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from mapreduce_framework_simple_spark.session import builder
+
+    cluster = builder(master="spark://h:7077")._options
+    assert "spark.sql.shuffle.partitions" not in cluster
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark import SparkConf, SparkContext
+from mapreduce_framework_simple_spark.session import get_session
+key = "spark.sql.shuffle.partitions"
+got = []
+for kw in ({{}}, {{"shuffle_partitions": 5}}):
+    s = get_session("shuffle-default", master="local[3]", **kw)
+    got.append(s.conf.get(key))
+    s.stop()
+SparkContext(conf=SparkConf().setMaster("local[3]").setAppName("pre").set(key, "6"))
+got.append(get_session("shuffle-default", master="local[3]").conf.get(key))
+print(json.dumps(got))
+"""
+    # the removed env knob must be inert, not validated
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+               SPARK_GRAFT_SHUFFLE_PARTITIONS="0")
+    out = subprocess.run([sys.executable, "-c", script], env=env, check=True,
+                         capture_output=True, text=True, timeout=600)
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == ["3", "5", "6"]

@@ -95,3 +95,50 @@ def test_curate_lsh_max_bucket_knob(spark, sf_dir, tmp_path):
     for k in ("n_total", "n_after_quality", "n_after_exact_dedup",
               "dropped_quality", "dropped_exact"):
         assert rep_cap1[k] == rep_default[k]
+
+
+def test_curate_malformed_documents(spark, sf_dir, tmp_path):
+    """A crawl with NULL, empty, whitespace-only and one-token texts plus
+    an exact-duplicate pair: ``curate`` completes, its counts telescope,
+    every blank or NULL document is a quality drop and none is written.
+    On a small input most shuffle partitions are empty, so this also runs
+    every stage over empty partitions."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = pq.read_table(os.path.join(sf_dir, "documents.parquet")).slice(0, 40)
+    rows = src.to_pylist()
+    blank_ids = {1000, 1001, 1002}
+    for doc_id, text in ((1000, None), (1001, ""), (1002, " \t\n "),
+                         (1003, "spark")):
+        rows.append(dict(rows[0], doc_id=doc_id, text=text,
+                         n_chars=len(text or "")))
+    rows.append(dict(rows[1], doc_id=1004))  # doc 1 passes the quality gate
+    corpus = tmp_path / "sf"
+    corpus.mkdir()
+    pq.write_table(pa.Table.from_pylist(rows, schema=src.schema),
+                   str(corpus / "documents.parquet"))
+
+    out = str(tmp_path / "curated")
+    rep = curate(spark, str(corpus), out)
+
+    assert rep["n_total"] == len(rows)
+    assert (rep["n_total"] >= rep["n_after_quality"] >= rep["n_after_exact_dedup"]
+            >= rep["n_after_neardup"] >= rep["n_curated"] > 0)
+    assert rep["n_total"] - rep["n_curated"] == (
+        rep["dropped_quality"] + rep["dropped_exact"]
+        + rep["dropped_neardup"] + rep["dropped_contaminated"])
+    assert rep["dropped_exact"] >= 1, "the duplicate pair must collapse"
+
+    from mapreduce_framework_simple_spark.operators.text import q98_gopher_rules
+
+    dropped = {r["doc_id"] for r in q98_gopher_rules(spark, str(corpus))
+               .where(~F.col("keep")).select("doc_id").collect()}
+    assert blank_ids <= dropped
+    assert rep["dropped_quality"] == len(dropped)
+    written = {r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()}
+    assert len(written) == rep["n_curated"]
+    assert not written & (blank_ids | {1003})
+    assert 1004 not in written, "exact dedup keeps the lower doc_id"

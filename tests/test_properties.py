@@ -197,18 +197,22 @@ def test_heavy_hitters_exact_under_adversarial_layouts(spark):
 
 
 def test_sequential_fold_queries_layout_independent(spark, sf_dir):
-    """The determinism stack's core claim: queries whose floats come from
-    SEQUENTIAL folds over sorted arrays (q105/q122/q123/q125) and from
-    exact-integer ratios (q121/q128) must hash identically under a
-    different shuffle-partition count — the partitioning must never leak
-    into the values."""
+    """The determinism stack's core claim: rows must not depend on the
+    shuffle-partition count. Queries whose floats come from SEQUENTIAL
+    folds over sorted arrays (q105/q122/q123/q125) and from exact-integer
+    ratios (q121/q128), and the corpus family whose stages read cached
+    shuffles (q30/q35/q36/q38/q40/q79/q89), must hash identically at 7
+    partitions as at the session's per-core default — the partitioning
+    must never leak into the rows or their values."""
     import __spark_entry__ as E
     from tests.oracle_harness import compare_frames, duck_connection
 
     names = [
         "q105_bigram_lm", "q121_trend_ols", "q122_token_entropy",
         "q123_naive_bayes_langid", "q125_decayed_engagement",
-        "q128_ab_welch_t",
+        "q128_ab_welch_t", "q30_word_count", "q35_dedup_exact",
+        "q36_ngram_jaccard", "q38_minhash_lsh_pairs", "q40_cosine_topk",
+        "q79_dedup_components", "q89_dedup_survivors",
     ]
     qs, oracles = E.queries(), E.oracle_sql()
     con = duck_connection(sf_dir)
