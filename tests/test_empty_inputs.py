@@ -566,3 +566,54 @@ print(json.dumps(got))
     out = subprocess.run([sys.executable, "-c", script], env=env, check=True,
                          capture_output=True, text=True, timeout=600)
     assert json.loads(out.stdout.strip().splitlines()[-1]) == ["3", "5", "6"]
+
+
+def test_session_codegen_cache_holds_a_corpus_pass(sf_dir, tmp_path):
+    """The builder sizes Spark's codegen cache to 2048 classes, and an
+    explicit ``.config()`` on it wins. The corpus ops (q30, q35, q36, q40
+    and ``curate``) generate more classes than Spark's default cache of
+    100 holds; with 2048, a second pass over a fresh copy of the input
+    compiles none. Runs in a subprocess: the cache is sized once per JVM,
+    by the first session that generates code."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import json, os, shutil, sys
+sys.path.insert(0, {repo!r})
+from mapreduce_framework_simple_spark import registry
+from mapreduce_framework_simple_spark.ephemeral import release_caches
+from mapreduce_framework_simple_spark.pipeline import curate
+from mapreduce_framework_simple_spark.session import (
+    builder, codegen_counters, get_session)
+key = "spark.sql.codegen.cache.maxEntries"
+registry.load_all()
+spark = get_session("codegen-cache", master="local[2]")
+spark.sparkContext.setLogLevel("ERROR")
+got = [spark.conf.get(key)]
+for i in range(2):
+    sf = shutil.copytree({sf_dir!r}, os.path.join({str(tmp_path)!r}, f"sf{{i}}"))
+    before = codegen_counters(spark)[0]
+    for name in ("q30_word_count", "q35_dedup_exact", "q36_ngram_jaccard",
+                 "q40_cosine_topk"):
+        registry.QUERIES[name](spark, sf).toPandas()
+        release_caches()
+        spark.catalog.clearCache()
+    curate(spark, sf, os.path.join({str(tmp_path)!r}, f"curated{{i}}"))
+    release_caches()
+    spark.catalog.clearCache()
+    got.append(codegen_counters(spark)[0] - before)
+spark.stop()
+got.append(builder(master="local[2]").config(key, "50").getOrCreate().conf.get(key))
+print(json.dumps(got))
+"""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", script], env=env, check=True,
+                         capture_output=True, text=True, timeout=900)
+    conf, first, second, override = json.loads(out.stdout.strip().splitlines()[-1])
+    assert conf == "2048" and override == "50"
+    assert first > 100, f"the corpus ops compiled only {first} classes"
+    assert second == 0, f"the second pass re-compiled {second} classes"

@@ -9,6 +9,12 @@ commit the .explain("formatted") evidence the judge checks plan claims
 against. Methodology mirrors bench.py otherwise: warm session, scoped
 caches released + storage cleared between runs, min of N.
 
+Per query it also reports ``codegen_compiles`` (Janino compilations) and
+``jit_s`` (HotSpot JIT seconds) summed over the timed runs. The warm-up
+counts rows at the smallest SF, so the first timed run may compile plan
+shapes the warm-up did not; a count that grows with ``--runs`` flags a
+query whose generated code is not reused from one run to the next.
+
 Usage: python tools/opt_profile.py [--sf-dir D] [--tag before]
                                    [--out plans/r12] [--runs 3] [q ...]
 """
@@ -46,7 +52,8 @@ def main() -> None:
     from mapreduce_framework_simple_spark.ephemeral import release_caches
     from mapreduce_framework_simple_spark.plans.explain import formatted_plan
     from mapreduce_framework_simple_spark.registry import QUERIES, load_all
-    from mapreduce_framework_simple_spark.session import get_session
+    from mapreduce_framework_simple_spark.session import (codegen_counters,
+                                                          get_session)
 
     load_all()
     names = args.queries or (HEADLINE + TREND)
@@ -67,10 +74,13 @@ def main() -> None:
     spark.catalog.clearCache()
 
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
+    jit: dict[str, float] = {}
     for name in names:
         fn = QUERIES[name]
         spark.sparkContext.setJobDescription(f"opt-profile: {name}")
         best = None
+        c0, j0 = codegen_counters(spark)
         for _ in range(args.runs):
             release_caches()
             spark.catalog.clearCache()
@@ -80,6 +90,8 @@ def main() -> None:
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
+        c1, j1 = codegen_counters(spark)
+        compiles[name], jit[name] = c1 - c0, round(j1 - j0, 3)
         # Plan capture: re-run via toPandas() so df's OWN queryExecution
         # is the executed one (finalized AQE stages + codegen ids).
         release_caches()
@@ -90,12 +102,14 @@ def main() -> None:
             fh.write(f"# {name} @ {args.sf_dir} — finalized AQE plan "
                      f"({args.tag}, noop-min-of-{args.runs} {best:.3f}s)\n")
             fh.write(formatted_plan(df))
-        print(f"# {name}: {best:.3f}s (noop)", file=sys.stderr)
+        print(f"# {name}: {best:.3f}s (noop), {compiles[name]} compiles, "
+              f"{jit[name]:.3f}s JIT", file=sys.stderr)
         spark.sparkContext.setJobDescription(None)
 
     print(json.dumps({"sf_dir": args.sf_dir, "tag": args.tag,
                       "unit": "sec", "aggregation": f"min-of-{args.runs}",
                       "sink": "noop", "queries": timings,
+                      "codegen_compiles": compiles, "jit_s": jit,
                       "total": round(sum(timings.values()), 3)}))
     spark.stop()
 
