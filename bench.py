@@ -1,496 +1,129 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Query sweep: time the headline queries on this machine's cores.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"q01_...": sec, ...}, "sf": 0.1}
+Each query is warmed up once at sf0.001, then timed as the minimum of
+``--runs`` noop writes at ``$SPARK_GRAFT_SF_DIR`` (default sf0.1) on
+``local[$SPARK_GRAFT_CPUS]`` (default: every core). A noop write computes
+every column, where ``count()`` would let the optimizer prune UDFs, joins
+and aggregates. Scoped caches and Spark's storage are cleared before every
+run. ``--plans DIR`` runs each query once more through ``toPandas()`` and
+writes its finalized AQE plan to ``DIR/<query>.txt``.
 
-The headline set spans every operator family (scan-agg, joins, windows,
-range join, text, dedup exact/LSH, similarity, streaming-batch, UDF) so a
-regression anywhere shows up here. Each query is fully materialized
-(count() the result) — timing includes the action, not just planning.
+Prints one JSON line: the total, the per-query minima, and each query's
+Janino compiles and JIT seconds over its timed runs. A compile count that
+grows with ``--runs`` flags generated code that is not reused. Exits
+nonzero if any query fails.
+
+Usage: python bench.py [--runs 3] [--plans DIR] [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import re
 import sys
 import time
 
-REPO = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, REPO)
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-# ---- environment calibration anchor (round 10) ----
-# Round 9's quiet-to-quiet comparison was uninterpretable: all 19
-# queries drifted +15–52% UNIFORMLY (including pure-JVM queries no code
-# touched) while the driver's run on the same tree read faster — the
-# judge adjudicated box-level drift, but nothing in the artifacts could
-# prove drift-vs-regression. This anchor is the proof: a FIXED,
-# dependency-free CPU workload timed immediately before the query sweep
-# and stamped into every bench artifact. SHA-256 over 256 MiB of a
-# constant block — stdlib-only, deterministic (digest pinned below so a
-# size/content edit fails loudly), and hashlib releases the GIL on
-# large buffers, so the 32-thread variant measures REAL multi-core
-# throughput without forking next to the live JVM.
-#
-# Cross-round reading: calibration_ratio_32t = calibration_32t_s /
-# calibration_ref_32t_s. Ratio ≈ 1 → the box matches the round-10
-# anchor state and raw headlines compare directly; ratio 1.5 → the box
-# is 1.5× slower and a +50% uniform headline drift is ENVIRONMENT, not
-# regression. *_normalized fields divide the raw totals by the 32t
-# ratio (the queries are 32-way parallel, so the multi-core figure is
-# the relevant denominator; the 1t figure diagnoses whether drift is
-# per-core speed vs core contention).
-CALIB_MB = 256
-CALIB_DIGEST = "e4df41e65555a12fcafa8ff3010e144dd14ab557a50e462ef528923214ad8f1f"
-# Anchor values: minima measured on this box, round 10, quiet launch.
-#
-# RE-PIN POLICY (round 11): these reference values are the DENOMINATOR
-# of every *_normalized figure ever stamped — silently changing them
-# would re-base the whole cross-round performance series without any
-# artifact showing it. They may therefore only be re-pinned in a commit
-# that (a) records the old refs, the new refs, and WHY (e.g. the anchor
-# box was replaced), (b) includes a same-tree bridging run stamping
-# BOTH ratios on one box state (old-ref ratio and new-ref ratio from
-# the same calibrate() sample) so the series can be spliced, and
-# (c) updates tests/test_properties.py::
-# test_bench_calibration_kernel_is_pinned, which pins these constants —
-# a quiet re-pin is impossible because the test fails until it is
-# edited in the same review-visible change.
-CALIB_REF_1T_S = 0.199
-CALIB_REF_32T_S = 0.316
-# The thread count is part of the PINNED workload definition — always
-# 32, NEVER $SPARK_GRAFT_CPUS: a run with CPUS=16 would otherwise stamp
-# a 16-thread time into calibration_32t_s and divide it by the
-# 32-thread reference, fabricating a ~2× "faster box" in every
-# normalized field.
-CALIB_THREADS = 32
-
-
-def _calib_kernel(mb: int = CALIB_MB) -> str:
-    import hashlib
-
-    block = b"\xa5" * (1 << 20)
-    h = hashlib.sha256()
-    for _ in range(mb):
-        h.update(block)
-    return h.hexdigest()
-
-
-def calibrate() -> tuple[float, float]:
-    """(seconds for ONE kernel, wall seconds for CALIB_THREADS
-    concurrent kernels). ~1.5 s total on the anchor box. BOTH figures
-    are min-of-2: a single-shot multi-thread run would let one
-    transient blip (cron tick, JVM GC from the live session) inside
-    its ~0.3 s window skew the ratio and every *_normalized field —
-    concurrent threads average contention across cores at one instant,
-    not across time."""
-    import threading
-
-    _calib_kernel(32)  # warm turbo/i-cache, untimed; result discarded
-    one_t = multi_t = None
-    for _ in range(2):
-        t0 = time.perf_counter()
-        dig = _calib_kernel()
-        dt = time.perf_counter() - t0
-        if dig != CALIB_DIGEST:
-            raise AssertionError(
-                "calibration kernel changed: digest mismatch — the "
-                "anchor is only comparable across rounds if the work "
-                "is bit-identical; re-pin CALIB_* together"
-            )
-        one_t = dt if one_t is None else min(one_t, dt)
-    for _ in range(2):
-        threads = [
-            threading.Thread(target=_calib_kernel)
-            for _ in range(CALIB_THREADS)
-        ]
-        t0 = time.perf_counter()
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join()
-        dt = time.perf_counter() - t0
-        multi_t = dt if multi_t is None else min(multi_t, dt)
-    return one_t, multi_t
-
-
-def calibrate_gated(
-    threshold: float = 1.15, budget_s: float = 300.0
-) -> tuple[float, float, float]:
-    """calibrate(), re-trying on a contended reading: returns
-    (one_t, multi_t, seconds_waited). The loadavg quiet-wait is a
-    COARSE filter that keeps missing sub-gate shadows by hundredths
-    (round 8: 5-min 2.42–2.50 vs gate 2.5; round 11 run 1: 5-min 1.96
-    vs gate 2.0 — pre-sweep ratio 2.17 while the box read "quiet").
-    The anchor itself is the authoritative signal: it measures the
-    exact quantity that inflates the queries (concurrent multi-core
-    throughput), so when the pre-sweep ratio exceeds the ~1.15 band
-    the verdict protocol treats as anchor-state, wait a beat and
-    re-measure rather than stamping a polluted denominator into every
-    *_normalized field. Bounded: after budget_s (default 300 s,
-    $SPARK_GRAFT_CALIB_WAIT_S) the last reading is returned anyway —
-    the honest ratio stays in the artifact, exactly like the
-    contended=true fallback."""
-    budget_s = float(os.environ.get("SPARK_GRAFT_CALIB_WAIT_S", budget_s))
-    waited = 0.0
-    one_t, multi_t = calibrate()
-    while multi_t / CALIB_REF_32T_S > threshold and waited < budget_s:
-        print(
-            f"# calibration contended: ratio_32t "
-            f"{multi_t / CALIB_REF_32T_S:.3f} > {threshold} "
-            f"({waited:.0f}/{budget_s:.0f}s waited), re-measuring",
-            file=sys.stderr,
-        )
-        step = min(30.0, budget_s - waited)
-        time.sleep(step)
-        waited += step
-        one_t, multi_t = calibrate()
-    return one_t, multi_t, waited
-
-
-# The round-1 headline set — kept stable forever so round-over-round
-# comparison is ONE field ("shared12_total"), not judge arithmetic.
-SHARED_12 = [
-    "q01_pricing_summary",    # scan + group agg
-    "q03_top_revenue",        # 3-way join + top-k
-    "q05_join_chain",         # 5-table star join
-    "q13_window_topk",        # window functions
-    "q27_range_join",         # range/theta self-join
-    "q30_word_count",         # text explode + agg
-    "q35_dedup_exact",        # exact dedup
-    "q36_ngram_jaccard",      # shingle-join near-dup (ground truth)
-    "q38_minhash_lsh_pairs",  # MinHash-LSH (scale path)
-    "q40_cosine_topk",        # similarity search
-    "q50_tumbling_window",    # event-time windows (batch twin)
-    "q61_prime_sum",          # pandas_udf compute-bound
-]
-
-# Headline queries: one per operator family, heaviest representative.
-HEADLINE = SHARED_12 + [
-    "q22_math_funcs",         # scalar math (r1 hash-fail class, fixed r2 —
-    "q26_case_null",          # kept headline so the fixes stay on record)
-    "q79_dedup_components",   # iterative (label propagation to fixpoint)
-    "q82_asof_join",          # temporal as-of join (union+window)
-    "q105_bigram_lm",         # corpus LM scoring (broadcast count tables)
+# One query per operator family, heaviest representative.
+HEADLINE = [
+    "q01_pricing_summary",       # scan + group agg
+    "q03_top_revenue",           # 3-way join + top-k
+    "q05_join_chain",            # 5-table star join
+    "q13_window_topk",           # window functions
+    "q22_math_funcs",            # scalar math
+    "q26_case_null",             # CASE / null handling
+    "q27_range_join",            # range/theta self-join
+    "q30_word_count",            # text explode + agg
+    "q35_dedup_exact",           # exact dedup
+    "q36_ngram_jaccard",         # shingle-join near-dup
+    "q38_minhash_lsh_pairs",     # MinHash-LSH
+    "q40_cosine_topk",           # similarity search
+    "q50_tumbling_window",       # event-time windows (batch twin)
+    "q61_prime_sum",             # pandas_udf, compute-bound
+    "q79_dedup_components",      # iterative label propagation
+    "q82_asof_join",             # temporal as-of join
+    "q105_bigram_lm",            # corpus LM scoring
     "q108_bloom_decontaminate",  # Bloom-prefiltered decontamination
-    "q110_heavy_hitters",     # Misra-Gries sketch + exact verify
-]
-
-# Trend-only set (round 12): the real-codec queries had zero bench
-# history — timed with the same min-of-3 protocol and stamped as
-# "trend_queries" so a future codec regression is visible round-over-
-# round, but EXCLUDED from value/shared12/normalized (the headline set
-# stays the stable 19 the whole series compares on).
-TREND = [
-    "q130_png_codec_roundtrip",  # PNG encode→meta→decode→resize→decode
-    "q131_wav_codec_features",   # WAV decode + RMS + 13 MFCCs
-    "q132_frame_extract",        # MFV1 demux → stride sample → decode
+    "q110_heavy_hitters",        # Misra-Gries sketch + exact verify
+    "q130_png_codec_roundtrip",  # PNG encode, decode, resize
+    "q131_wav_codec_features",   # WAV decode + MFCCs
+    "q132_frame_extract",        # MFV1 demux + frame decode
 ]
 
 
 def main() -> None:
     from mapreduce_framework_simple_spark.ephemeral import release_caches
-    from mapreduce_framework_simple_spark.session import get_session
+    from mapreduce_framework_simple_spark.plans.explain import formatted_plan
     from mapreduce_framework_simple_spark.registry import QUERIES, load_all
+    from mapreduce_framework_simple_spark.session import (codegen_counters,
+                                                          get_session)
+    from mapreduce_framework_simple_spark.sources.io import DEFAULT_SF_DIR
 
-    # True quietness signal: sampled BEFORE session creation and the
-    # 32-thread warm-up pass. loadavg_start (kept for round-over-round
-    # comparability) is stamped after warm-up, so its 1-min figure
-    # includes the bench's own ramp — reading it as external contention
-    # is exactly the round-4/5 adjudication confusion.
-    #
-    # WAIT for quiet, bounded: three consecutive driver rounds launched
-    # contended (r5–r7, loadavg 3–5.5), so the committed comparison kept
-    # being quiet-artifact vs contended-driver-run. A bounded poll
-    # (sleep 15 s, re-sample, give up after SPARK_GRAFT_QUIET_WAIT_S,
-    # default 300 s) makes the driver artifact itself the quotable
-    # number when the box frees up within the window; if it never does,
-    # proceed anyway — the honest contended=true flag stays the
-    # fallback, because refusing outright would leave the round with no
-    # BENCH artifact at all.
-    # The wait condition watches the 5-min average too: a 32-thread job
-    # that ENDED a minute ago leaves 1-min load < 2 while the box is
-    # still shedding its cache/IO shadow — measured round 8 as
-    # shared12 8.35/8.55 s at launch 1-min 0.24–0.84 but 5-min 1.4–3.6,
-    # vs 7.79 s cold. The contended FLAG stays keyed on the 1-min
-    # figure alone (the honest "external work is running NOW" signal).
-    # Both gates sit at 2.0: BENCH_r08 launched at 5-min 2.42–2.50 and
-    # the old 2.5 shadow trigger missed by hundredths, stamping
-    # contended=false on a run ~22% above the same tree's quiet figure.
-    # A decaying shadow clears within minutes by construction (the 5-min
-    # EWMA of an ended job), so when the base budget expires with ONLY
-    # the 5-min average elevated, the wait is extended once by a second
-    # BOUNDED budget rather than giving up into a known-inflated run.
-    quiet_wait_budget = float(os.environ.get("SPARK_GRAFT_QUIET_WAIT_S", "300"))
-    shadow_wait_extra = float(os.environ.get("SPARK_GRAFT_SHADOW_WAIT_S", "300"))
-    budget = quiet_wait_budget
-    extended = False
-    load_launch = os.getloadavg()
-    waited = 0.0
-    while (load_launch[0] > 2.0 or load_launch[1] > 2.0) and waited < budget:
-        step = min(15.0, budget - waited)
-        print(
-            f"# waiting for quiet: loadavg {load_launch[0]:.2f}/"
-            f"{load_launch[1]:.2f} (1/5-min; gate 2.0/2.0, "
-            f"{waited:.0f}/{budget:.0f}s waited)",
-            file=sys.stderr,
-        )
-        time.sleep(step)
-        waited += step
-        load_launch = os.getloadavg()
-        if (
-            not extended
-            and waited >= quiet_wait_budget
-            and load_launch[0] <= 2.0
-            and load_launch[1] > 2.0
-        ):
-            extended = True
-            budget = quiet_wait_budget + shadow_wait_extra
-            print(
-                f"# only the 5-min decay shadow remains "
-                f"({load_launch[1]:.2f}): extending quiet-wait once, "
-                f"bounded at {budget:.0f}s total",
-                file=sys.stderr,
-            )
-    if load_launch[0] > 2.0:
-        print(
-            f"# WARNING: contended launch (1-min loadavg {load_launch[0]:.2f}"
-            f" > 2 after {waited:.0f}s quiet-wait): timings will be "
-            "inflated; output carries contended=true",
-            file=sys.stderr,
-        )
-
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--plans", metavar="DIR",
+                    help="write each query's finalized AQE plan here")
+    ap.add_argument("queries", nargs="*", metavar="query",
+                    help="query names (default: the headline set)")
+    args = ap.parse_args()
     load_all()
-    spark = get_session("mfss-bench", master=f"local[{CPUS}]")
+    unknown = sorted(set(args.queries) - QUERIES.keys())
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+    if args.runs < 1:
+        ap.error(f"--runs must be >= 1, got {args.runs}")
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
+
+    warm = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+    warm = warm if os.path.isdir(warm) else DEFAULT_SF_DIR
+    spark = get_session("mfss-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm-up (untimed): run every headline query once at the smallest SF.
-    # This triggers whole-stage codegen compilation, parquet footer reads
-    # and Python-worker spawn for exactly the plan shapes being measured —
-    # i.e. the bench measures steady-state query time, as on a long-lived
-    # cluster, not single-session JIT cost.
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for name in HEADLINE + TREND:
-            try:
-                QUERIES[name](spark, warm_dir).count()
-            except Exception as e:  # warm-up must never fail the bench
-                print(f"# warmup {name} failed: {e}", file=sys.stderr)
-    spark.catalog.clearCache()  # warm-up caches must not serve sf0.1 data
+    def build(name: str, sf_dir: str):
+        release_caches()
+        spark.catalog.clearCache()
+        return QUERIES[name](spark, sf_dir)
 
-    # calibration anchor: timed AFTER warm-up, immediately before the
-    # sweep — it samples the box state the queries actually run under.
-    # GATED (round 11): a reading above the anchor band re-measures
-    # after a beat instead of stamping a polluted denominator — see
-    # calibrate_gated.
-    calib_1t, calib_32t, calib_waited = calibrate_gated()
-    print(
-        f"# calibration: 1t {calib_1t:.3f}s (ref {CALIB_REF_1T_S}), "
-        f"32t {calib_32t:.3f}s (ref {CALIB_REF_32T_S}), "
-        f"waited {calib_waited:.0f}s",
-        file=sys.stderr,
-    )
-
-    load_start = os.getloadavg()
-
-    # Per-SEGMENT calibration (round 13): the r12 sweep proved endpoint
-    # anchors can miss a mid-sweep host collapse entirely (pre-sweep
-    # ratio 1.12, post-sweep 2.28 — every query in between inflated
-    # with nothing in the artifact localizing WHEN). After each query a
-    # single-shot 1t kernel is timed (cheap, ~0.17 s, catches per-core
-    # steal spikes next to the query they contaminate), and every 6th
-    # query plus the last a single-shot 32t kernel (the figure that
-    # actually collapsed in r12; run sparsely because it costs ~0.3-1 s
-    # and saturates the box). Diagnostics only — single-shot readings
-    # jitter more than the min-of-2 anchors, so they localize drift
-    # rather than re-normalize anything. ADDITIONS to the artifact;
-    # every pre-existing field and the timing protocol are unchanged.
-    seg_1t: dict[str, float] = {}
-    seg_32t: dict[str, float] = {}
-
-    def _segment_probe(name: str, idx: int, last: bool) -> None:
-        import threading
-
+    def noop(name: str, sf_dir: str) -> float:
         t0 = time.perf_counter()
-        _calib_kernel()
-        seg_1t[name] = round(time.perf_counter() - t0, 3)
-        msg = f"# segment calibration after {name}: 1t {seg_1t[name]:.3f}s"
-        if idx % 6 == 5 or last:
-            threads = [
-                threading.Thread(target=_calib_kernel)
-                for _ in range(CALIB_THREADS)
-            ]
-            t0 = time.perf_counter()
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join()
-            seg_32t[name] = round(time.perf_counter() - t0, 3)
-            msg += (
-                f", 32t {seg_32t[name]:.3f}s "
-                f"(ratio {seg_32t[name] / CALIB_REF_32T_S:.2f})"
-            )
-        print(msg, file=sys.stderr)
+        build(name, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
 
-    # min of 3 runs per query: steady-state wall time (single runs on a
-    # shared local machine jitter ±20-30%; BENCH_r02's apparent regression
-    # was adjudicated as exactly this noise); caches cleared between runs
-    # so every run re-executes the full plan
     timings: dict[str, float] = {}
-    trend_timings: dict[str, float] = {}
-    all_names = HEADLINE + TREND
-    for idx, name in enumerate(all_names):
-        fn = QUERIES[name]
-        try:
-            best = None
-            for _ in range(3):
-                release_caches()  # drain the scoped-cache registry too —
-                # clearCache() frees storage but not the handle list.
-                # The SESSION MEMO (ephemeral.memo_*) is deliberately NOT
-                # cleared: a long-lived session is this bench's stated
-                # steady-state contract, the first timed run of a memoized
-                # query still pays the full build (clearCache drops the
-                # DATA; only the one-per-session guard audit is skipped on
-                # later runs), and the driver's own sweep runs warm too
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                df = fn(spark, SF_DIR)
-                n = df.count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            tgt = trend_timings if name in TREND else timings
-            tgt[name] = round(best, 3)
-            print(f"# {name}: {tgt[name]:.2f}s ({n} rows)", file=sys.stderr)
-        except Exception as e:  # noqa: BLE001 — trend-only isolation
-            # a TREND query failure must not cost the round its headline
-            # artifact (the 19-query set is the series' stable compare);
-            # stamp the failure visibly and keep sweeping. A HEADLINE
-            # failure still aborts: a partial headline total would be
-            # quoted as if comparable, which is worse than no artifact.
-            if name in TREND:
-                trend_timings[name] = None
-                print(f"# {name}: FAILED ({type(e).__name__}: {e})",
-                      file=sys.stderr)
-                continue
-            raise
-        finally:
-            # every slot gets its calibration reading, a failed one too:
-            # drift localization matters most when the run is anomalous
-            _segment_probe(name, idx, idx == len(all_names) - 1)
+    compiles: dict[str, int] = {}
+    jit: dict[str, float] = {}
+    for name in args.queries or HEADLINE:
+        noop(name, warm)
+        c0, j0 = codegen_counters(spark)
+        timings[name] = round(min(noop(name, DEFAULT_SF_DIR)
+                                  for _ in range(args.runs)), 3)
+        c1, j1 = codegen_counters(spark)
+        compiles[name], jit[name] = c1 - c0, round(j1 - j0, 3)
+        if args.plans:
+            # toPandas() executes df's own queryExecution, so the plan
+            # read back is the finalized one
+            df = build(name, DEFAULT_SF_DIR)
+            df.toPandas()
+            with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
+                fh.write(formatted_plan(df))
+        print(f"# {name}: {timings[name]:.3f}s, {compiles[name]} compiles, "
+              f"{jit[name]:.3f}s JIT", file=sys.stderr)
 
-    load_end = os.getloadavg()
-    # post-sweep anchor re-read: the PRE-sweep sample normalizes the
-    # totals, but a multi-minute sweep gives the environment time to
-    # shift underneath it (docs/calibration_r10.json shows the box
-    # ratio swinging 1.07-1.42 same-day) — without a second sample such
-    # a shift is silently baked into *_normalized as if it were code.
-    # Readers gate on calibration_ratio_drift: near 0 → the pre-sweep
-    # ratio held and the normalized totals are trustworthy; large →
-    # the environment moved MID-sweep and the normalized figures carry
-    # that movement (quote the raw numbers with a caveat instead).
-    post_1t, post_32t = calibrate()
-    ratio_32t = round(calib_32t / CALIB_REF_32T_S, 6)
-    # guarded: a path like .../sf0.1.bak matches '0.1.' and float() would
-    # raise AFTER the whole bench ran, losing the artifact line
-    m = re.search(r"sf([0-9.]+)", SF_DIR)
-    try:
-        sf = float(m.group(1)) if m else None
-    except ValueError:
-        sf = None
-    out = {
+    print(json.dumps({
         "metric": "headline_query_wall_time_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "queries": timings,
-        # trend-only codec timings (same min-of-3 protocol), NOT in
-        # value/shared12/normalized — see TREND above
-        "trend_queries": trend_timings,
-        "sf": sf,
-        # round-over-round comparator: the stable r1 subset as one number
-        "shared12_total": round(sum(timings[q] for q in SHARED_12), 3),
-        # noise context: 1/5/15-min load averages around the timed section
-        # (32-cpu box — loads well above ~4 mean external contention and
-        # per-query numbers should be read with BENCH noise caveats)
-        # pre-launch sample: the only field uncontaminated by the
-        # bench's own load — judge quietness by THIS one. contended=true
-        # (launch 1-min load > 2 on this 32-cpu box) means external work
-        # was already running: per-query minima are inflated and the
-        # headline must not be quoted without that caveat (refusing
-        # outright would leave the round with no BENCH artifact at all,
-        # so the flag is prominent rather than fatal).
-        "contended": load_launch[0] > 2.0,
-        # the decay-shadow indicator: true when the 5-min average was
-        # still over the wait gate at launch (budget expired) — the
-        # regime measured round 8 as ~7-22% inflated (8.35/8.55 s vs
-        # 7.79 s cold; BENCH_r08's 14.0 s vs 11.5 s quiet) even with a
-        # quiet 1-min figure. Gate 2.0 since round 9: the old 2.5
-        # trigger missed r08's 2.42–2.50 launch by hundredths and
-        # asserted clean on a shadowed run. `contended` keeps its
-        # 1-min-only meaning for round-over-round continuity; a
-        # headline with launch_shadow=true deserves the same caveat.
-        "launch_shadow": load_launch[1] > 2.0,
-        # seconds the bounded quiet-wait poll actually slept before
-        # launch (0.0 = box was already quiet)
-        "quiet_wait_s": round(waited, 1),
-        "loadavg_launch": [round(x, 2) for x in load_launch],
-        "loadavg_start": [round(x, 2) for x in load_start],
-        "loadavg_end": [round(x, 2) for x in load_end],
-        "runs_per_query": 3,
+        "sink": "noop",
         "aggregation": "min",
-        # environment calibration anchor (see CALIB_* above): fixed
-        # SHA-256 workload timed right before the sweep. ratio ≈ 1 →
-        # box matches the round-10 anchor; a uniform headline drift
-        # with ratio moving the same way is ENVIRONMENT, not code.
-        "calibration_1t_s": round(calib_1t, 3),
-        "calibration_32t_s": round(calib_32t, 3),
-        # seconds the calibration gate waited for an at-anchor reading
-        # before the sweep (0.0 = first reading was inside the band)
-        "calibration_wait_s": round(calib_waited, 1),
-        "calibration_ref_1t_s": CALIB_REF_1T_S,
-        "calibration_ref_32t_s": CALIB_REF_32T_S,
-        # the ratio is stamped at 6 dp and the *_normalized fields are
-        # computed FROM the stamped value, so a reader recomputing
-        # value/ratio from the artifact reproduces the stamped figures
-        # exactly (a 3-dp stamp next to full-precision normalization
-        # left a small reader-visible inconsistency)
-        "calibration_ratio_32t": ratio_32t,
-        # post-sweep re-read of the same anchor + drift vs the
-        # pre-sweep sample that normalizes the totals: |drift| small →
-        # the environment held through the sweep; large → *_normalized
-        # carries a mid-sweep environment shift and the raw figures
-        # should be quoted with that caveat
-        "calibration_post_1t_s": round(post_1t, 3),
-        "calibration_post_32t_s": round(post_32t, 3),
-        "calibration_ratio_32t_post": round(post_32t / CALIB_REF_32T_S, 6),
-        "calibration_ratio_drift": round(
-            (post_32t - calib_32t) / CALIB_REF_32T_S, 6
-        ),
-        # raw totals divided by the (pre-sweep) 32t ratio — the
-        # cross-round comparable figures (raw `value`/`shared12_total`
-        # stay the quotable same-box numbers). Pre-sweep stays the
-        # normalizer for series continuity with rounds <= 10; the post
-        # fields exist to VALIDATE it, not replace it.
-        "value_normalized": round(sum(timings.values()) / ratio_32t, 3),
-        "shared12_normalized": round(
-            sum(timings[q] for q in SHARED_12) / ratio_32t, 3
-        ),
-        # per-segment drift localization (round 13): single-shot 1t
-        # kernel after EVERY query, single-shot 32t after every 6th and
-        # the last — the r12 sweep's mid-run collapse was invisible to
-        # the endpoint anchors above. Diagnostics, not normalizers:
-        # readers use them to see WHICH queries ran on a degraded box;
-        # the pre-sweep min-of-2 anchor stays the series normalizer.
-        "calibration_1t_per_query": seg_1t,
-        "calibration_32t_checkpoints": seg_32t,
-    }
-    print(json.dumps(out))
+        "runs_per_query": args.runs,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "sf_dir": DEFAULT_SF_DIR,
+        "queries": timings,
+        "codegen_compiles": compiles,
+        "jit_s": jit,
+    }))
     spark.stop()
 
 

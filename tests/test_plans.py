@@ -536,7 +536,7 @@ def test_q36_truth_kernel_pair_exchange_eliminated(spark, sf_dir):
 def test_q105_byte_gate_over_bound_unhinted_equal(spark, sf_dir, monkeypatch):
     """q105's LM broadcast hint is dispatched by rows AND bytes (round
     13, ADVICE r12: c_bg rows are several times wider than the ~30 B
-    q07 rows the generic row bound was calibrated on). Force the
+    q07 rows the generic row bound was tuned on). Force the
     over-byte-bound branch and assert the hint is gone from the
     analyzed plan while the answer is row-identical — the dispatch may
     only ever change strategy, never results. The over-bound run takes

@@ -339,61 +339,6 @@ def test_money_aggregates_partition_order_independent(spark, sf_dir):
         con.close()  # a leaked native connection pins parquet handles
 
 
-def test_bench_calibration_kernel_is_pinned():
-    """The bench's cross-round environment anchor is only comparable if
-    the work is bit-identical every round — the pinned digest fails
-    loudly on any size/content edit, and calibrate() itself re-checks it
-    per run. (No timing asserted here: this pins WHAT is measured.)
-
-    The REFERENCE values are pinned too (not just >0): they are the
-    denominator of every *_normalized figure ever stamped, so a silent
-    re-pin would re-base the whole cross-round series. Re-pinning is
-    legal ONLY via the policy block next to CALIB_REF_* in bench.py
-    (record old+new refs and a same-tree bridging run) — and it must
-    edit these constants below, making the re-base review-visible."""
-    import bench
-
-    assert bench._calib_kernel(bench.CALIB_MB) == bench.CALIB_DIGEST
-    assert bench.CALIB_MB == 256
-    assert bench.CALIB_THREADS == 32
-    assert bench.CALIB_REF_1T_S == 0.199
-    assert bench.CALIB_REF_32T_S == 0.316
-
-
-def test_calibrate_gated_waits_out_contention_and_is_bounded(monkeypatch):
-    """The launch gate re-measures while the pre-sweep ratio sits above
-    the anchor band and stops the moment a reading comes back clean; on
-    a box that never quiets it must return the last HONEST reading
-    after the bounded budget, never spin forever and never fabricate a
-    clean ratio. (calibrate() is stubbed: this pins the gate's control
-    flow, not timings.)"""
-    import bench
-
-    readings = iter([
-        (0.2, bench.CALIB_REF_32T_S * 2.0),   # contended
-        (0.2, bench.CALIB_REF_32T_S * 1.5),   # still contended
-        (0.2, bench.CALIB_REF_32T_S * 1.01),  # clean -> stop here
-        (0.2, bench.CALIB_REF_32T_S * 9.9),   # must never be reached
-    ])
-    slept = []
-    monkeypatch.delenv("SPARK_GRAFT_CALIB_WAIT_S", raising=False)
-    monkeypatch.setattr(bench, "calibrate", lambda: next(readings))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: slept.append(s))
-    one_t, multi_t, waited = bench.calibrate_gated(budget_s=300.0)
-    assert multi_t == bench.CALIB_REF_32T_S * 1.01  # stopped on clean
-    assert waited == sum(slept) == 60.0  # two 30 s beats, accounted
-
-    # never-quiet box: budget bounds the wait, the contended reading is
-    # returned honestly (the caller stamps it; nothing is fabricated)
-    monkeypatch.setattr(
-        bench, "calibrate", lambda: (0.2, bench.CALIB_REF_32T_S * 3.0)
-    )
-    slept.clear()
-    one_t, multi_t, waited = bench.calibrate_gated(budget_s=90.0)
-    assert multi_t == bench.CALIB_REF_32T_S * 3.0
-    assert waited == sum(slept) == 90.0  # exact budget, incl. final 30 s
-
-
 def test_prime_kernel_both_paths_match_trial_division(spark):
     """q61's round-12 segmented-sieve kernel: the dense (contiguous-span)
     path and the sparse blocked-outer-mod fallback must both reproduce

@@ -7,10 +7,11 @@ map_reduce on 2 workers × "20 cores over" + 10 client forks.
 Engine strategy: Arrow-batched pandas_udf (the exact factory q61 ships —
 functions/udfs.py::prime_predicate_udf); each batch sieves the ~3,400
 primes below √max once, then segment-sieves its contiguous value span
-(~3 marking ops per candidate; round-12 optimization) — not trial
-division by every integer like the reference's mapper (Simple.pm:897-907),
-nor even per-candidate division by the base primes (the round-11 kernel,
-kept as the sparse-batch fallback).
+(~3 marking ops per candidate) — not trial division by every integer
+like the reference's mapper (Simple.pm:897-907).
+
+Runs on ``local[$SPARK_GRAFT_CPUS]`` (default: every core) and prints
+``prime_sum``, ``n_primes``, ``wall`` and ``cpus``.
 
 Usage: python tools/prime_bench.py
 """
@@ -21,9 +22,6 @@ import os
 import sys
 import time
 
-import numpy as np  # noqa: F401  (resolves postponed pandas_udf type hints)
-import pandas as pd  # noqa: F401
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
@@ -32,19 +30,13 @@ HI = 1_000_300_001  # exclusive → 300,000 candidates, ≙ the POD's range
 
 
 def main() -> None:
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
     from mapreduce_framework_simple_spark.session import get_session
 
     spark = get_session("prime-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # ONE kernel, literally: the same factory q61 ships (functions/udfs.py::
-    # prime_predicate_udf — segmented sieve with sparse blocked-outer-mod
-    # fallback, equality-tested against trial division in
-    # test_prime_kernel_both_paths_match_trial_division). The returned
+    # ONE kernel, literally: the same factory q61 ships. The returned
     # UDF's closure is self-contained, so executors never need the repo
     # on PYTHONPATH; only this driver-side import does.
     from mapreduce_framework_simple_spark.functions.udfs import (
@@ -55,17 +47,6 @@ def main() -> None:
 
     spark.range(1, 1000).withColumnRenamed("id", "n").where(is_prime(F.col("n"))).count()  # warm workers
 
-    # same pinned CPU anchor as bench.py, timed right before the
-    # measurement: cross-round prime-bench figures (1.6 s one round,
-    # 4.6-5.5 s the next, identical code) are only interpretable next
-    # to the box's concurrent multi-core throughput. Gated like the
-    # bench: a contended reading re-measures (bounded) rather than
-    # timing the workload under a transient the artifact then has to
-    # explain away.
-    import bench as _bench
-
-    calib_1t, calib_mt, _ = _bench.calibrate_gated()
-
     t0 = time.perf_counter()
     row = (
         spark.range(LO, HI)
@@ -75,14 +56,8 @@ def main() -> None:
         .collect()[0]
     )
     dt = time.perf_counter() - t0
-    # stamped at 6 dp and wall_normalized computed FROM the stamped
-    # value, so wall/ratio recomputed from this line reproduces it
-    ratio = round(calib_mt / _bench.CALIB_REF_32T_S, 6)
-    print(f"prime_sum={row['prime_sum']} n_primes={row['n_primes']} wall={dt:.2f}s "
-          f"(reference: ~60s serial, ~10s on ~40 remote cores) "
-          f"calibration_1t={calib_1t:.3f}s calibration_32t={calib_mt:.3f}s "
-          f"(refs {_bench.CALIB_REF_1T_S}/{_bench.CALIB_REF_32T_S}, "
-          f"ratio_32t={ratio:.6f}, wall_normalized={dt / ratio:.2f}s)")
+    print(f"prime_sum={row['prime_sum']} n_primes={row['n_primes']} "
+          f"wall={dt:.2f}s cpus={spark.sparkContext.defaultParallelism}")
 
 
 if __name__ == "__main__":
