@@ -27,10 +27,12 @@ reduce. Deliberate divergences, per SURVEY.md §7 risk list:
 
 from __future__ import annotations
 
+import pickle
 import random
 from collections.abc import Callable, Iterable, Sequence
 from typing import Any
 
+from pyspark import cloudpickle
 from pyspark.sql import SparkSession
 
 # Partitioning strategies ≙ reference create_assigned_data methods
@@ -48,6 +50,20 @@ CAPACITY_METHOD_ALIASES = (
     "element_server_workers", # Simple.pm: weight by configured workers
     "element_core_clock",     # Simple.pm: weight by cores × clock
 )
+
+
+# types that cloudpickle pickles to the same bytes as pickle
+_PLAIN_TYPES = frozenset((int, float, str, bytes, bool, type(None)))
+
+
+def _pickled_size(x: Any) -> int:
+    """Bytes of ``x`` as cloudpickle ships it. Plain values skip
+    cloudpickle's per-call Pickler; everything else goes through it, as
+    data may hold locally defined classes and closures (≙ the
+    reference's Storable+Deparse path, Simple.pm:173-178)."""
+    if type(x) in _PLAIN_TYPES:
+        return len(pickle.dumps(x, cloudpickle.DEFAULT_PROTOCOL))
+    return len(cloudpickle.dumps(x))
 
 
 def create_assigned_data(data: Sequence[Any], chunk_num: int = 8,
@@ -82,12 +98,7 @@ def create_assigned_data(data: Sequence[Any], chunk_num: int = 8,
     if method == "element_shuffle":
         random.Random(seed).shuffle(items)
     elif method == "volume_uniform":
-        # cloudpickle, not pickle: data may contain locally-defined classes
-        # and closures (≙ the reference's Storable+Deparse path,
-        # Simple.pm:173-178)
-        from pyspark import cloudpickle
-
-        items.sort(key=lambda x: len(cloudpickle.dumps(x)), reverse=True)
+        items.sort(key=_pickled_size, reverse=True)
     chunks: list[list[Any]] = [[] for _ in range(chunk_num)]
     for i, x in enumerate(items):
         chunks[i % chunk_num].append(x)

@@ -1459,10 +1459,11 @@ def _index_meta_centroids(spark: SparkSession,
 #
 # The bound is MEASURED, not reasoned (round 11; the earlier 10⁴ rested
 # on a plan-literal-cost argument that was directionally right but ~20×
-# high): tools/probe_crossover.py times both branches cold-for-cold
-# over a 10⁵-cell bucketed layout across distinct-cell counts —
-# committed as docs/probe_crossover_r11.json (a contended full sweep
-# plus a quiet at-anchor confirmation, calibration ratio 1.006). The
+# high): a probe timed both branches cold-for-cold over a 10⁵-cell
+# bucketed layout across distinct-cell counts. Its results are
+# docs/probe_crossover_r11.json (a contended full sweep plus a quiet
+# at-anchor confirmation, calibration ratio 1.006); the probe script
+# itself was deleted and lives on in git history. The
 # IN-list branch wins below ~300 cells (its only rival cost is the
 # semi branch's flat ~0.1–0.2 s DPP-subquery + broadcast overhead) and
 # LOSES from ~500 up, with a penalty that grows ~linearly in the

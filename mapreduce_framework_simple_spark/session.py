@@ -26,6 +26,13 @@ local[N] test runs:
   re-compiles them with Janino and re-JITs them. Spark sizes the cache
   once per JVM, so it applies only when this builder creates the JVM's
   first session (docs/KNOWN_LIMITS.md #8).
+* Python worker daemon ``worker_daemon`` on local masters only: PySpark
+  invalidates import caches on every task, and before CPython 3.13 that
+  re-reads ~28k zip entries of ``pyspark.zip`` and the jars per task
+  (about 0.2 CPU-s); the daemon skips archives that did not change.
+  ``spark.executorEnv.PYTHONPATH`` lets the workers import it wherever
+  the driver runs. A cluster master keeps ``pyspark.daemon``
+  (docs/KNOWN_LIMITS.md #8).
 """
 
 from __future__ import annotations
@@ -35,6 +42,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+# a string, not an import: importing the module patches zipimport
+_WORKER_DAEMON = "mapreduce_framework_simple_spark.worker_daemon"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def builder(app_name: str = "mapreduce-framework-simple-spark",
@@ -78,13 +88,16 @@ def builder(app_name: str = "mapreduce-framework-simple-spark",
     # its master through the JVM gateway it launched (PYSPARK_GATEWAY_PORT),
     # never through this builder, so setting .master() here would rewrite
     # a `--master yarn` job to local.
-    env_master = os.environ.get("SPARK_MASTER")
+    if master is None:
+        master = os.environ.get("SPARK_MASTER") or None
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = f"local[{DEFAULT_CPUS}]"
     if master is not None:
         b = b.master(master)
-    elif env_master:
-        b = b.master(env_master)
-    elif "PYSPARK_GATEWAY_PORT" not in os.environ:
-        b = b.master(f"local[{DEFAULT_CPUS}]")
+    if master is not None and master.startswith("local"):
+        # local workers can import the daemon from wherever the driver runs
+        b = (b.config("spark.python.daemon.module", _WORKER_DAEMON)
+             .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT))
     return b
 
 

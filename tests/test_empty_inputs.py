@@ -617,3 +617,118 @@ print(json.dumps(got))
     assert conf == "2048" and override == "50"
     assert first > 100, f"the corpus ops compiled only {first} classes"
     assert second == 0, f"the second pass re-compiled {second} classes"
+
+
+def test_session_python_workers_skip_unchanged_archives(tmp_path):
+    """A local session's Python workers come from the engine's worker
+    daemon: a task's ``importlib.invalidate_caches()`` no longer re-reads
+    the unchanged ``pyspark.zip`` and jar directories, while RDD and
+    pandas_udf tasks and ``addPyFile`` imports still work. The driver
+    runs in ``tmp_path`` and finds the repo only through ``sys.path``, so
+    the workers must get it from ``spark.executorEnv.PYTHONPATH``. A
+    cluster master gets neither conf, and a caller's ``.config()`` wins.
+    Runs in a subprocess: the suite's session exists."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import zipfile
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with zipfile.ZipFile(tmp_path / "shipped.zip", "w") as z:
+        z.writestr("shipped_mod.py", "VALUE = 41\n")
+    script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+import pandas as pd
+from pyspark.sql import functions as F
+from mapreduce_framework_simple_spark.session import builder, get_session
+daemon_key, path_key = "spark.python.daemon.module", "spark.executorEnv.PYTHONPATH"
+cluster = builder(master="spark://h:7077")._options
+override = builder().config(daemon_key, "pyspark.daemon")._options[daemon_key]
+spark = get_session("worker-daemon", master="local[2]")
+sc = spark.sparkContext
+conf = [sc.getConf().get(daemon_key), sc.getConf().get(path_key)]
+
+def invalidate_cpu_s(_):
+    import importlib, time
+    t = time.process_time()
+    importlib.invalidate_caches()
+    yield time.process_time() - t
+
+@F.pandas_udf("long")
+def plus_one(v: pd.Series) -> pd.Series:
+    return v + 1
+
+squares = sc.parallelize(range(16), 8).map(lambda x: x * x).collect()
+cpu = sc.parallelize(range(4), 4).mapPartitions(invalidate_cpu_s).collect()
+udf = [r[0] for r in spark.range(5).select(plus_one("id")).collect()]
+sc.addPyFile({str(tmp_path / "shipped.zip")!r})
+shipped = sc.parallelize([0], 1).map(lambda _: __import__("shipped_mod").VALUE + 1).collect()
+spark.stop()
+print(json.dumps({{"cluster": [k in cluster for k in (daemon_key, path_key)],
+                  "override": override, "conf": conf, "squares": squares,
+                  "cpu": cpu, "udf": udf, "shipped": shipped}}))
+"""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("PYTHONPATH", None)
+    out = subprocess.run([sys.executable, "-c", script], env=env, cwd=tmp_path,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["conf"] == ["mapreduce_framework_simple_spark.worker_daemon", repo]
+    assert got["squares"] == [x * x for x in range(16)]
+    assert max(got["cpu"]) < 0.02, f"invalidate_caches() cost {got['cpu']} CPU-s"
+    assert got["udf"] == [1, 2, 3, 4, 5]
+    assert got["shipped"] == [42]
+    assert got["cluster"] == [False, False]
+    assert got["override"] == "pyspark.daemon"
+
+
+def test_worker_daemon_rereads_only_changed_archives(tmp_path):
+    """The worker daemon's zipimport patch, without Spark: an unchanged
+    archive is not re-read on ``importlib.invalidate_caches()``, a
+    rewritten one is read once and its new module imports, and a deleted
+    one does not raise."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    arc = str(tmp_path / "mods.zip")
+    script = f"""
+import importlib, json, os, sys, zipfile, zipimport
+sys.path.insert(0, {repo!r})
+import mapreduce_framework_simple_spark.worker_daemon
+
+def write(names):
+    with zipfile.ZipFile({arc!r}, "w") as z:
+        for n in names:
+            z.writestr(n + ".py", f"NAME = {{n!r}}\\n")
+
+write(["mod_a"])
+sys.path.insert(0, {arc!r})
+import mod_a
+reads, read = [], zipimport._read_directory
+
+def counting(path):
+    reads.append(path)
+    return read(path)
+
+zipimport._read_directory = counting
+importlib.invalidate_caches()
+importlib.invalidate_caches()
+got = [reads.count({arc!r})]
+write(["mod_a", "mod_b"])
+importlib.invalidate_caches()
+import mod_b
+got += [reads.count({arc!r}), mod_b.NAME]
+os.remove({arc!r})
+importlib.invalidate_caches()
+print(json.dumps(got))
+"""
+    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                         text=True, timeout=120)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == [0, 1, "mod_b"]

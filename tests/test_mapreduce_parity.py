@@ -173,6 +173,27 @@ def test_chunking_volume_uniform_balances_bytes():
     assert max(sizes) - min(sizes) <= 1100  # each chunk gets exactly one big element
 
 
+def test_chunking_volume_uniform_sizes_like_cloudpickle():
+    """Plain values are sized without cloudpickle's Pickler; the chunks
+    are still exactly those that cloudpickle sizing of every element
+    gives, on a mix of plain values, containers, a locally defined
+    class's instance and a closure."""
+    from pyspark import cloudpickle
+
+    class Box:
+        def __init__(self, v):
+            self.v = v
+
+    data = [0, 7, -3, 2**70, -(10**40), 1.5, float("nan"), -0.0, True, False,
+            None, "", "abc", "é✓" * 50, b"", b"\x00" * 300, [1, [2, "x"]],
+            [], (1.0, None), {"k": b"v"}, Box(3), lambda x: x + 1]
+    n = 4
+    by_cloudpickle = sorted(data, key=lambda x: len(cloudpickle.dumps(x)),
+                            reverse=True)
+    expected = [by_cloudpickle[i::n] for i in range(n)]
+    assert create_assigned_data(data, n, method="volume_uniform") == expected
+
+
 def test_chunking_rejects_bad_args():
     with pytest.raises(ValueError):
         create_assigned_data([1], 0)
