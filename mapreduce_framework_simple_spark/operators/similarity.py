@@ -4,9 +4,7 @@ Four paths, per the north star — none of which materializes the corpus on
 the driver:
 
 * **Exact cosine top-k** (q40) — query set broadcast via ``sc.broadcast``
-  (bounded, documented), corpus streamed through ``mapInPandas``; all
-  math accumulates sequentially over dimensions, the DuckDB fold order,
-  so oracle comparison is bit-exact.
+  (bounded, documented), corpus streamed through ``mapInPandas``.
 * **IVF (inverted-file) ANN** (q41, rows-only + recall-tested) — the
   100 TB top-k path: partition vectors into Voronoi cells around
   centroids, probe the nearest few cells per query. Turns an O(N·Q) scan
@@ -17,6 +15,11 @@ the driver:
 * **Hyperplane-LSH near-dup** (q96) — the 100 TB near-dup path: banded
   sign-bit signatures, bucket candidate join, exact verify; the oracle
   replicates the full pipeline bit-exactly from shared inlined constants.
+
+Every Arrow kernel here takes its arithmetic from :func:`_cosine_core`,
+the one definition of the rules that keep them hash-exact against the
+DuckDB oracles: the sequential per-dimension fold, the zero-norm guard,
+HALF_UP micro-units and the margin top-k.
 """
 
 from __future__ import annotations
@@ -83,6 +86,88 @@ def _duck_norm(a: str) -> str:
     )
 
 
+def _cosine_core():
+    """The numpy arithmetic every vector kernel in this module shares,
+    as a namespace of NESTED functions: cloudpickle ships them by value
+    inside each kernel's closure, so executors never import this
+    package. Call it on the driver and close over the result; a kernel
+    body that named ``_cosine_core`` itself would pickle a module
+    reference.
+
+    * ``stack(col)`` — a column of vectors as a float64 (rows × dim)
+      matrix.
+    * ``norms(mat)`` / ``dots(a, b)`` / ``paired(a, b)`` — row norms,
+      the (len(a) × len(b)) dot matrix and the row-wise cosine of a[i]
+      with b[i]. Each accumulates SEQUENTIALLY over dimensions, the
+      addition order of DuckDB's ``list_reduce`` fold (``_duck_dot`` /
+      ``_duck_norm``), so results are bit-identical across engines, not
+      merely close. Why not the JVM higher-order-function fold: Spark
+      evaluates lambdas interpreted, ~50 boxed ops per element —
+      measured 21 s for 2M pairs, vs <1 s vectorized.
+    * Zero-norm guard: ``norms`` reports 1 for a zero vector, so its
+      cosine is exactly 0 (its dots are 0) — the iterative._assign
+      convention. Unguarded, 0/0 = NaN fails every top-k and threshold
+      comparison (the pair silently vanishes) and casts to an undefined
+      int64 in ``micro``.
+    * ``micro(sims)`` — 6-dp HALF_UP (``F.round``'s mode; ``np.round``
+      is half-even) as int64 micro-units, so ranking ties are exact and
+      ``ri / 1e6`` is the correctly rounded 6-dp double. The
+      ``floor(|x|·1e6 + 0.5)`` tie decision can disagree with
+      ``F.round``'s BigDecimal HALF_UP when ``|x|·1e6`` lands within one
+      ulp of a .5 tie, so this parity is corpus-pinned by the oracle
+      and path-equality tests, not universal.
+    * ``top_k(sims, qids, nids, k)`` — keep mask over a (query ×
+      neighbor) matrix: never a self pair; all candidates when ``k`` is
+      None or a query has ≤ k of them; otherwise each candidate whose
+      rounded score is within one 6-dp quantum of the query's k-th
+      rounded score. The margin makes the kept rows a superset of any
+      rounded-order top-k whichever rounding mode settles a tie, so
+      the union of per-batch or per-chunk survivors always contains
+      the global answer.
+
+    k-means assignment (``iterative._assign``) keeps its own BLAS
+    unit-vector matmul on purpose: it is different arithmetic, and
+    moving it onto this core would change the centroids."""
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    def stack(col):
+        return np.stack([np.asarray(v, dtype="float64") for v in col])
+
+    def norms(mat):
+        acc = np.zeros(len(mat))
+        for d in range(mat.shape[1]):
+            acc += mat[:, d] * mat[:, d]
+        return np.where(acc == 0, 1.0, np.sqrt(acc))
+
+    def dots(a, b):
+        acc = np.zeros((len(a), len(b)))
+        for d in range(a.shape[1]):
+            acc += a[:, d:d + 1] * b[:, d][None, :]
+        return acc
+
+    def paired(a, b):
+        acc = np.zeros(len(a))
+        for d in range(a.shape[1]):
+            acc += a[:, d] * b[:, d]
+        return acc / (norms(a) * norms(b))
+
+    def micro(sims):
+        return (np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5)).astype("int64")
+
+    def top_k(sims, qids, nids, k):
+        not_self = qids[:, None] != nids[None, :]
+        if k is None or sims.shape[1] <= k:
+            return not_self
+        r6 = np.where(not_self, np.round(sims, 6), -np.inf)
+        kth = -np.partition(-r6, k - 1, axis=1)[:, k - 1]
+        return (r6 >= kth[:, None] - 1e-6) & not_self
+
+    return SimpleNamespace(stack=stack, norms=norms, dots=dots,
+                           paired=paired, micro=micro, top_k=top_k)
+
+
 MAX_BROADCAST_QUERIES = 100_000  # documented bound: Q·dim·8B ≈ 50 MB at 64 dims
 # per-task float64 budget for the scan kernel's (batch × ref-chunk) score
 # matrix: 16M elements ≈ 134 MB — the same scale the block kernel's
@@ -90,33 +175,24 @@ MAX_BROADCAST_QUERIES = 100_000  # documented bound: Q·dim·8B ≈ 50 MB at 64 
 _SCAN_CHUNK_ELEMS = 16_777_216
 
 
-def _pairwise_cosine_scan(spark: SparkSession, sf_dir: str, ref_df,
+def _pairwise_cosine_scan(em: DataFrame, ref_df: DataFrame,
                           emit_top_k: int | None = None):
-    """Vectorized query-vs-corpus cosine kernel. The reference (QUERY) set
-    — never the corpus — is collected once on the driver and shipped via
+    """Vectorized query-vs-corpus cosine kernel over the corpus frame
+    ``em`` (vec_id, embedding). The reference (QUERY) set — never the
+    corpus — is collected once on the driver and shipped via
     ``sc.broadcast``, so executors hold ONE torrent-distributed copy
     instead of a per-task closure payload; the corpus only ever streams
     through ``mapInPandas`` Arrow batches. The query-set size is bounded
     (``MAX_BROADCAST_QUERIES``); corpus-sized reference sets must use the
     block self-join kernel (:func:`_block_pairs_cosine`) or the LSH path.
 
-    Why not the JVM higher-order-function fold: Spark evaluates lambda
-    functions interpreted (outside codegen), ~50 boxed ops per element —
-    measured 21 s for 2M pairs, vs <1 s for the same flops vectorized.
-
-    Cross-engine parity: dot products and norms accumulate SEQUENTIALLY
-    over dimensions (one vectorized FMA per dim), the exact addition
-    order of the DuckDB ``list_reduce`` fold — results are bit-identical,
-    not merely close.
-
-    Emits (query_id=ref id, neighbor_id=corpus id, cos_sim UNROUNDED);
-    per-batch top-k pruning when ``emit_top_k`` — pruned on the ROUNDED
-    score with a margin so the union of batch survivors provably contains
-    the global rounded-order top-k. (Threshold-style scans belong to the
-    block kernel, which carries the half-quantum prefilter.)
+    Emits (query_id=ref id, neighbor_id=corpus id, cos_sim UNROUNDED),
+    pruned per batch by the core's margin ``top_k`` when ``emit_top_k``
+    is set. (Threshold-style scans belong to the block kernel, which
+    carries the half-quantum prefilter.)
     """
-    import numpy as np  # local: keeps the shipped closure self-contained
-
+    spark = em.sparkSession
+    schema = "query_id long, neighbor_id long, cos_sim_raw double"
     # one bounded collect: an oversized set costs the driver at most
     # bound + 1 rows before the refusal, never the whole set
     ref = ref_df.limit(MAX_BROADCAST_QUERIES + 1).toPandas()
@@ -127,88 +203,51 @@ def _pairwise_cosine_scan(spark: SparkSession, sf_dir: str, ref_df,
         )
     if len(ref) == 0:
         # empty reference set: no pairs (np.stack([]) would raise)
-        spark_sess = ref_df.sparkSession
-        return spark_sess.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim_raw double"
-        )
+        return spark.createDataFrame([], schema)
+    core = _cosine_core()
     ref_ids_l = ref["vec_id"].to_numpy(dtype="int64")
-    ref_mat_l = np.stack([np.asarray(v, dtype="float64") for v in ref["embedding"]])
     # registered for the query-boundary release: unpersisted (executor
     # copies dropped, re-shippable) once the consumer has materialized,
     # instead of leaking one ~50 MB torrent copy per invocation
     bc = scoped_broadcast(
-        spark.sparkContext.broadcast((ref_ids_l, ref_mat_l))
+        spark.sparkContext.broadcast((ref_ids_l, core.stack(ref["embedding"])))
     )
-    top_k = emit_top_k
 
     def score(batches):
         import numpy as np
         import pandas as pd
 
         ref_ids, ref_mat = bc.value
-        dim = ref_mat.shape[1]
-        # ref norms: sequential fold order (0.0 + x0² + x1² + …).
-        # Zero-norm guard (the iterative._assign convention, pinned for
-        # every kernel in this module): cosine is undefined for a
-        # zero vector, and 0/0 = NaN would poison the top-k prune
-        # (NaN fails every comparison, so the pair silently vanishes)
-        # — dividing by 1 instead yields sim 0 exactly (dots are 0).
-        racc = np.zeros(len(ref_mat))
-        for d in range(dim):
-            racc += ref_mat[:, d] * ref_mat[:, d]
-        rnorm = np.sqrt(racc)
-        rnorm = np.where(rnorm == 0, 1.0, rnorm)
+        rnorm = core.norms(ref_mat)
         for pdf in batches:
             if len(pdf) == 0:  # np.stack on an empty batch would raise
                 continue
             ids = pdf["vec_id"].to_numpy(dtype="int64")
-            mat = np.stack([np.asarray(v, dtype="float64") for v in pdf["embedding"]])
-            nacc = np.zeros(len(mat))
-            for d in range(dim):  # sequential over dims == the SQL fold
-                nacc += mat[:, d] * mat[:, d]
-            bnorm = np.sqrt(nacc)
-            bnorm = np.where(bnorm == 0, 1.0, bnorm)
+            mat = core.stack(pdf["embedding"])
+            bnorm = core.norms(mat)
             out_q, out_n, out_c = [], [], []
-            # chunk the (batch × Q) score matrix over the REFERENCE axis:
-            # unchunked it is batch_rows × Q doubles — 8 GB per task at a
-            # 10k-row batch against the 100k-query bound, far past any
-            # executor budget (MAX_BROADCAST_QUERIES only sizes the 50 MB
-            # broadcast). ~134 MB per temporary, the block kernel's
-            # budget; per-pair dot products still fold dim-sequentially,
-            # and the top-k prune is per-reference-column, so chunking
-            # changes no emitted bit.
+            # chunk the (Q × batch) score matrix over the REFERENCE axis:
+            # unchunked it is 8 GB per task at a 10k-row batch against
+            # the 100k-query bound (MAX_BROADCAST_QUERIES only sizes the
+            # 50 MB broadcast); the top-k prune is per query row, so
+            # chunking changes no emitted bit
             step = max(1, _SCAN_CHUNK_ELEMS // max(1, len(mat)))
             for c0 in range(0, len(ref_mat), step):
                 rchunk = ref_mat[c0:c0 + step]
-                dots = np.zeros((len(mat), len(rchunk)))
-                for d in range(dim):
-                    dots += mat[:, d:d + 1] * rchunk[:, d][None, :]
-                sims = dots / (rnorm[c0:c0 + step][None, :] * bnorm[:, None])
-                for j in range(sims.shape[1]):
-                    col = sims[:, j]
-                    mask = ids != ref_ids[c0 + j]
-                    idx = np.nonzero(mask)[0]
-                    if top_k is not None and len(idx) > top_k:
-                        r6 = np.round(col[idx], 6)
-                        kth = -np.partition(-r6, top_k - 1)[top_k - 1]
-                        # keep everything within one rounding quantum of
-                        # the batch's k-th ROUNDED score: superset of any
-                        # rounded-order top-k regardless of HALF_UP/
-                        # half-even edge rows
-                        idx = idx[r6 >= kth - 1e-6]
-                    out_q.append(np.full(len(idx), ref_ids[c0 + j]))
-                    out_n.append(ids[idx])
-                    out_c.append(col[idx])
+                sims = core.dots(rchunk, mat) / (
+                    rnorm[c0:c0 + step][:, None] * bnorm[None, :])
+                qids = ref_ids[c0:c0 + step]
+                ii, jj = np.nonzero(core.top_k(sims, qids, ids, emit_top_k))
+                out_q.append(qids[ii])
+                out_n.append(ids[jj])
+                out_c.append(sims[ii, jj])
             yield pd.DataFrame({
-                "query_id": np.concatenate(out_q) if out_q else np.array([], dtype="int64"),
-                "neighbor_id": np.concatenate(out_n) if out_n else np.array([], dtype="int64"),
-                "cos_sim_raw": np.concatenate(out_c) if out_c else np.array([], dtype="float64"),
+                "query_id": np.concatenate(out_q),
+                "neighbor_id": np.concatenate(out_n),
+                "cos_sim_raw": np.concatenate(out_c),
             })
 
-    em = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-    return em.mapInPandas(
-        score, "query_id long, neighbor_id long, cos_sim_raw double"
-    )
+    return em.select("vec_id", "embedding").mapInPandas(score, schema)
 
 
 @query(
@@ -241,7 +280,7 @@ def q40_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     referee for q41's IVF path."""
     em = load_table(spark, "embeddings", sf_dir)
     q = em.where(F.col("vec_id") % QUERY_STRIDE == 0).select("vec_id", "embedding")
-    scored = _pairwise_cosine_scan(spark, sf_dir, q, emit_top_k=TOP_K).select(
+    scored = _pairwise_cosine_scan(em, q, emit_top_k=TOP_K).select(
         "query_id",
         "neighbor_id",
         F.round(F.col("cos_sim_raw"), 6).alias("cos_sim"),
@@ -310,18 +349,9 @@ def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
     set (K ≈ √N by the IVF sizing; guarded by the same
     ``MAX_BROADCAST_QUERIES`` bound) collects once and ships via one
     torrent ``sc.broadcast``; the corpus streams through ``mapInPandas``
-    Arrow batches. Replaces the earlier JVM higher-order-function fold,
-    which Spark evaluates interpreted — ~50 boxed ops per element, the
-    same ~20-50× constant the scan kernel's docstring measures — an
-    N·K cost on every index build.
-
-    Exact rule parity with the replaced expression pipeline: dot/norm
-    fold SEQUENTIALLY over dims, scores round to 6 dp HALF_UP
-    (``F.round``'s mode — NOT numpy's half-even default), ranking is
-    (rounded sim DESC, cell_id ASC); equality-tested against the
-    expression formulation on both centroid sources."""
-    import numpy as np
-
+    Arrow batches. Ranking is (HALF_UP micro-units DESC, cell_id ASC),
+    equality-tested against the JVM expression formulation on both
+    centroid sources."""
     spark = df.sparkSession
     cp = cents.select("cell_id", "c_emb").limit(
         MAX_BROADCAST_QUERIES + 1
@@ -335,70 +365,51 @@ def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
         )
     if len(cp) == 0:
         # Empty centroid frame (empty corpus ⇒ K ≈ √N = 0 centroids):
-        # the nearest-of-zero-cells relation is empty. The replaced
-        # join+window formulation returned empty here; without this
-        # guard np.stack([]) raises on the driver and, past that,
-        # best_c stays None in the worker. Schema matches the
+        # the nearest-of-zero-cells relation is empty. Without this
+        # guard np.stack([]) raises on the driver. Schema matches the
         # mapInPandas declaration below exactly.
         return df.select(
             F.col(id_col).cast("long").alias(id_col),
             emb_col,
             F.lit(None).cast("long").alias("cell_id"),
         ).limit(0)
+    core = _cosine_core()
     cell_ids_l = cp["cell_id"].to_numpy(dtype="int64")
-    cmat_l = np.stack([np.asarray(v, dtype="float64") for v in cp["c_emb"]])
-    bc = scoped_broadcast(spark.sparkContext.broadcast((cell_ids_l, cmat_l)))
-    n_keep = top_n
+    bc = scoped_broadcast(
+        spark.sparkContext.broadcast((cell_ids_l, core.stack(cp["c_emb"])))
+    )
 
     def nearest(batches):
         import numpy as np
         import pandas as pd
 
         cell_ids, cmat = bc.value
-        dim = cmat.shape[1]
-        cacc = np.zeros(len(cmat))
-        for d in range(dim):  # sequential over dims == the SQL fold
-            cacc += cmat[:, d] * cmat[:, d]
-        cnorm = np.sqrt(cacc)
-        # zero-norm guard (module convention, see _pairwise_cosine_scan):
-        # without it a zero vector's 0/0 = NaN flows into the int64 cast
-        # of the HALF_UP micro-unit ranking — undefined (INT64_MIN) —
-        # i.e. a garbage cell assignment; with it, sim is exactly 0
-        cnorm = np.where(cnorm == 0, 1.0, cnorm)
+        cnorm = core.norms(cmat)
         for pdf in batches:
             if len(pdf) == 0:  # np.stack on an empty batch would raise
                 continue
             ids = pdf[id_col].to_numpy(dtype="int64")
-            mat = np.stack([np.asarray(v, dtype="float64") for v in pdf[emb_col]])
-            nacc = np.zeros(len(mat))
-            for d in range(dim):
-                nacc += mat[:, d] * mat[:, d]
-            bnorm = np.sqrt(nacc)
-            bnorm = np.where(bnorm == 0, 1.0, bnorm)
-            best_r = best_c = None  # carried (rows × ≤n_keep) top lists
+            mat = core.stack(pdf[emb_col])
+            bnorm = core.norms(mat)
+            best_r = best_c = None  # carried (rows × ≤top_n) top lists
             step = max(1, _SCAN_CHUNK_ELEMS // max(1, len(mat)))
             for c0 in range(0, len(cmat), step):
-                cch = cmat[c0:c0 + step]
-                dots = np.zeros((len(mat), len(cch)))
-                for d in range(dim):
-                    dots += mat[:, d:d + 1] * cch[:, d][None, :]
-                sims = dots / (bnorm[:, None] * cnorm[c0:c0 + step][None, :])
-                # HALF_UP micro-units (F.round's mode; np.round is
-                # half-even), kept integer so ranking ties are exact
-                ri = (np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5)).astype("int64")
+                sims = core.dots(mat, cmat[c0:c0 + step]) / (
+                    bnorm[:, None] * cnorm[c0:c0 + step][None, :])
+                ri = core.micro(sims)
                 ci = np.broadcast_to(cell_ids[c0:c0 + step], ri.shape)
                 cand_r = ri if best_r is None else np.concatenate([best_r, ri], 1)
                 cand_c = ci if best_c is None else np.concatenate([best_c, ci], 1)
                 # per-row lexicographic (-sim, cell_id): stable sort by
                 # cell, then stable sort by -sim — ties land on the
-                # smaller cell, the window ordering of the old pipeline
+                # smaller cell
                 o1 = np.argsort(cand_c, axis=1, kind="stable")
                 r1 = np.take_along_axis(cand_r, o1, 1)
                 o2 = np.argsort(-r1, axis=1, kind="stable")
-                sel = np.take_along_axis(o1, o2, 1)[:, :n_keep]
+                sel = np.take_along_axis(o1, o2, 1)[:, :top_n]
                 best_r = np.take_along_axis(cand_r, sel, 1)
                 best_c = np.take_along_axis(cand_c, sel, 1)
-            k_out = best_c.shape[1]  # ≤ n_keep (fewer cells than probes)
+            k_out = best_c.shape[1]  # ≤ top_n (fewer cells than probes)
             yield pd.DataFrame({
                 id_col: np.repeat(ids, k_out),
                 emb_col: [v for v in pdf[emb_col] for _ in range(k_out)],
@@ -479,11 +490,11 @@ def two_level_probes(
     in the join is AQE's to split (the key is data-dependent, the same
     class as the LSH band join).
 
-    Scoring parity with ``_nearest_cells`` is exact — sequential-over-
-    dims accumulation, 6-dp HALF_UP integer micro-units, ties to the
-    smaller fine cell_id — so with ``route_n`` ≥ the meta-cell count
-    the output EQUALS the flat ``_ivf_probes`` row-for-row (tested);
-    at small ``route_n`` it is the approximate router (recall tested).
+    Fine scoring ranks by the core's micro-units with ties to the
+    smaller fine cell_id, as ``_nearest_cells`` does, so with
+    ``route_n`` ≥ the meta-cell count the output EQUALS the flat
+    ``_ivf_probes`` row-for-row (tested); at small ``route_n`` it is
+    the approximate router (recall tested).
     Both centroid frames come from :func:`kmeans_centroid_frame`
     (unchanged): K at the standard √N sizing, meta at k ≈ ⌈√K⌉."""
     if queries is None:
@@ -523,55 +534,20 @@ def two_level_probes(
     ).withColumnRenamed("cell_id", "meta_id")
     # (query, fine) pairs are unique: each fine centroid has exactly ONE
     # meta route, so no post-join dedup is needed before ranking
-    cand = q_routes.join(fine_routes, "meta_id").select(
-        "query_id", "q_emb", "fine_id", "f_emb"
-    )
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qm = np.stack([np.asarray(v, dtype="float64") for v in pdf["q_emb"]])
-            fm = np.stack([np.asarray(v, dtype="float64") for v in pdf["f_emb"]])
-            dots = np.zeros(len(qm))
-            qa = np.zeros(len(qm))
-            fa = np.zeros(len(fm))
-            for d in range(qm.shape[1]):  # sequential over dims == the
-                dots += qm[:, d] * fm[:, d]  # _nearest_cells fold order
-                qa += qm[:, d] * qm[:, d]
-                fa += fm[:, d] * fm[:, d]
-            qn = np.sqrt(qa)
-            fn = np.sqrt(fa)
-            # zero-norm guard (module convention): sim 0, never NaN→int64
-            sims = dots / (np.where(qn == 0, 1.0, qn) * np.where(fn == 0, 1.0, fn))
-            # HALF_UP micro-units, integer — _nearest_cells' exact rule
-            ri = (np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5)).astype("int64")
-            # positional arrays throughout: mixing indexed Series with
-            # the positional ri array would re-align rows if a batch
-            # ever arrived with a non-default index
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"].to_numpy(),
-                "fine_id": pdf["fine_id"].to_numpy(),
-                "ri": ri,
-            })
+    cand = q_routes.join(fine_routes, "meta_id")
 
     from pyspark.sql import Window
 
-    # scored rows are SKINNY (query_id, fine_id, ri — 24 B): the rank
-    # window's shuffle moves route_n·K/√K candidate rows PER QUERY, and
-    # on the assignment path the query frame is the whole corpus — at
-    # embedding width (~0.5 KB) that exchange would be ~20× the data it
-    # needs. q_emb re-attaches AFTER the top-keep_n cut via a join on
+    # the rank window's shuffle moves route_n·K/√K skinny candidate rows
+    # PER QUERY, and on the assignment path the query frame is the whole
+    # corpus, so q_emb re-attaches AFTER the top-keep_n cut via a join on
     # query_id (keep_n rows per query vs the query frame — the same
     # exchange class as the candidate join, on 1/route_n·√K the rows).
     # attach_emb=False skips that join AND its second read of the query
     # frame for consumers that only want the (query_id, cell_id) pairs
     # (q129's oracle surface) — the optimizer cannot prune an inner
     # join, so the skip has to be explicit.
-    scored = cand.mapInPandas(score, "query_id long, fine_id long, ri long")
+    scored = _paired_cosine_ri(cand, "query_id", "q_emb", "fine_id", "f_emb")
     w = Window.partitionBy("query_id").orderBy(F.desc("ri"), F.asc("fine_id"))
     kept = (
         scored.withColumn("rn", F.row_number().over(w))
@@ -610,6 +586,36 @@ def two_level_assignments(
     )
 
 
+def _paired_cosine_ri(pairs: DataFrame, a_id: str, a_emb: str,
+                      b_id: str, b_emb: str) -> DataFrame:
+    """(a_id, b_id, ri): the HALF_UP micro-unit cosine of each row's two
+    vectors, scored in Arrow batches on the core's ``paired`` — the
+    candidate scorer of the routed probe and of the IVF rank tail.
+    Output rows are SKINNY (24 B) so the rank window's shuffle never
+    carries embeddings."""
+    core = _cosine_core()
+
+    def score(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:  # np.stack on an empty batch would raise
+                continue
+            ri = core.micro(core.paired(core.stack(pdf[a_emb]), core.stack(pdf[b_emb])))
+            # positional arrays throughout: mixing indexed Series with
+            # the positional ri array would re-align rows if a batch
+            # ever arrived with a non-default index
+            yield pd.DataFrame({
+                a_id: pdf[a_id].to_numpy(),
+                b_id: pdf[b_id].to_numpy(),
+                "ri": ri,
+            })
+
+    return pairs.select(a_id, a_emb, b_id, b_emb).mapInPandas(
+        score, f"{a_id} long, {b_id} long, ri long"
+    )
+
+
 def _score_and_rank_candidates(cand: DataFrame, k: int = TOP_K) -> DataFrame:
     """Exact-cosine score + per-query top-k over (query_id, q_emb,
     vec_id, embedding) candidate rows — shared tail of both IVF paths.
@@ -618,57 +624,17 @@ def _score_and_rank_candidates(cand: DataFrame, k: int = TOP_K) -> DataFrame:
     TOP_K here would silently pre-truncate the kNN vote whenever
     KNN_K were retuned above it.
 
-    Scoring runs in the Arrow-batched row-pair kernel (the
-    ``two_level_probes.score`` shape), NOT the JVM higher-order fold the
-    module's docstrings measure at ~20-50× slower interpreted — this
-    tail scores the O(N^1.5) candidate sets of q41/the bucketed probe
-    and the CORPUS-sized candidate set of the kNN audit, exactly where
-    that constant matters. Parity is exact: sequential-over-dims
-    accumulation, 6-dp HALF_UP via integer micro-units (÷1e6 — 1e6 is
-    exactly representable, so the final division is correctly rounded;
-    the ``floor(|x|·1e6 + 0.5)`` tie decision itself can disagree with
-    ``F.round``'s BigDecimal HALF_UP when ``|x|·1e6`` lands within one
-    ulp of a .5 tie — the float multiply may round across the
-    boundary — so parity is CORPUS-PINNED, not universal: pinned by
-    the oracle-checked bucketed-probe matrix row and the path-equality
-    tests, which hash every value this corpus produces), zero-norm →
-    sim 0 (module convention)."""
+    Scoring runs in :func:`_paired_cosine_ri`, NOT the JVM higher-order
+    fold — this tail scores the O(N^1.5) candidate sets of q41/the
+    bucketed probe and the CORPUS-sized candidate set of the kNN audit.
+    ``ri / 1e6`` runs in the JVM: 1e6 is exactly representable, so the
+    IEEE division gives the correctly rounded 6-dp double."""
     pairs = cand.where(F.col("vec_id") != F.col("query_id")).select(
         "query_id", "q_emb", F.col("vec_id").alias("neighbor_id"), "embedding"
     )
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:  # np.stack on an empty batch would raise
-                continue
-            qm = np.stack([np.asarray(v, dtype="float64") for v in pdf["q_emb"]])
-            nm = np.stack([np.asarray(v, dtype="float64") for v in pdf["embedding"]])
-            dots = np.zeros(len(qm))
-            qa = np.zeros(len(qm))
-            na = np.zeros(len(nm))
-            for d in range(qm.shape[1]):  # sequential over dims == SQL fold
-                dots += qm[:, d] * nm[:, d]
-                qa += qm[:, d] * qm[:, d]
-                na += nm[:, d] * nm[:, d]
-            qn = np.sqrt(qa)
-            nn = np.sqrt(na)
-            sims = dots / (np.where(qn == 0, 1.0, qn) * np.where(nn == 0, 1.0, nn))
-            # HALF_UP micro-units (F.round's mode; np.round is half-even)
-            ri = (np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5)).astype("int64")
-            # positional arrays throughout (the two_level_probes rule):
-            # indexed Series would re-align against the positional ri
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"].to_numpy(),
-                "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                "cos_sim": ri / 1e6,
-            })
-
-    scored = pairs.mapInPandas(
-        score, "query_id long, neighbor_id long, cos_sim double"
-    )
+    scored = _paired_cosine_ri(
+        pairs, "query_id", "q_emb", "neighbor_id", "embedding"
+    ).select("query_id", "neighbor_id", (F.col("ri") / 1e6).alias("cos_sim"))
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -863,41 +829,29 @@ def _block_cogroup(spark: SparkSession, sf_dir: str):
 
 
 def _chunked_block_kernel(empty, emit, chunk_rows):
-    """One cogroup kernel body shared by both block kernels — norms and
-    chunked cross products live HERE only, so the cross-engine
-    "sequential over dims" parity rule cannot drift between them.
-    ``emit(parts, diagonal, lids, rids, cos)`` appends result
-    DataFrames per chunk; ``empty()`` supplies the mode's empty frame.
-    All three callables are NESTED functions (cloudpickle serializes
-    them by value), keeping the shipped closure self-contained — no
-    module-reference imports on executors.
+    """One cogroup kernel body shared by both block kernels, chunking
+    the core's cross products. ``emit(parts, diagonal, lids, rids, cos)``
+    appends result DataFrames per chunk; ``empty()`` supplies the mode's
+    empty frame. All three callables are NESTED functions (cloudpickle
+    serializes them by value), keeping the shipped closure
+    self-contained — no module-reference imports on executors.
 
     Chunking: temporaries stay ≤ CH² × 8 B regardless of block row
     counts, so a block-size miscalibration degrades to more chunks,
     never an executor OOM."""
+    core = _cosine_core()
 
     def kernel(l, r):
-        import numpy as np
         import pandas as pd
 
         if len(l) == 0 or len(r) == 0:
             return empty()
-        la = np.stack([np.asarray(v, dtype="float64") for v in l["embedding"]])
-        rb = np.stack([np.asarray(v, dtype="float64") for v in r["embedding"]])
+        la = core.stack(l["embedding"])
+        rb = core.stack(r["embedding"])
         lids = l["vec_id"].to_numpy(dtype="int64")
         rids = r["vec_id"].to_numpy(dtype="int64")
-        dim = la.shape[1]
-        lacc = np.zeros(len(la))
-        racc = np.zeros(len(rb))
-        for d in range(dim):  # sequential over dims == the SQL fold
-            lacc += la[:, d] * la[:, d]
-            racc += rb[:, d] * rb[:, d]
-        # zero-norm guard (module convention, see _pairwise_cosine_scan):
-        # unguarded, a zero vector's 0/0 = NaN fails every threshold
-        # compare and silently drops its pairs — divergent from the
-        # guarded kernels' sim = 0 convention
-        lnorm = np.where(lacc == 0, 1.0, np.sqrt(lacc))
-        rnorm = np.where(racc == 0, 1.0, np.sqrt(racc))
+        lnorm = core.norms(la)
+        rnorm = core.norms(rb)
         # diagonal groups hold the SAME block on both sides, so the cos
         # matrix covers every ordered pair within the block
         diagonal = l["ba"].iloc[0] == l["bb"].iloc[0]
@@ -907,10 +861,8 @@ def _chunked_block_kernel(empty, emit, chunk_rows):
             i1 = min(i0 + CH, len(la))
             for j0 in range(0, len(rb), CH):
                 j1 = min(j0 + CH, len(rb))
-                dots = np.zeros((i1 - i0, j1 - j0))
-                for d in range(dim):  # sequential over dims == the SQL fold
-                    dots += la[i0:i1, d:d + 1] * rb[j0:j1, d][None, :]
-                cos = dots / (lnorm[i0:i1, None] * rnorm[None, j0:j1])
+                cos = core.dots(la[i0:i1], rb[j0:j1]) / (
+                    lnorm[i0:i1, None] * rnorm[None, j0:j1])
                 emit(parts, diagonal, lids[i0:i1], rids[j0:j1], cos)
         return pd.concat(parts, ignore_index=True) if parts else empty()
 
@@ -922,11 +874,7 @@ def _block_pairs_cosine(spark: SparkSession, sf_dir: str,
     """Distributed exact all-pairs cosine ≥ threshold via the block
     self-join (see :func:`_block_cogroup` / :func:`_chunked_block_kernel`
     for the shared scaffolding). Emits UNORDERED pairs once each
-    (vec_a < vec_b).
-
-    Cross-engine parity: dots/norms accumulate sequentially over dims —
-    bit-identical to the DuckDB list_reduce fold (see
-    :func:`_pairwise_cosine_scan`). Threshold prefilter keeps raw ≥
+    (vec_a < vec_b). The threshold prefilter keeps raw ≥
     threshold − 5e-7 (half the 6-dp rounding quantum) so the caller's
     rounded cut decides, never the prefilter.
 
@@ -980,16 +928,14 @@ def _block_topk_cosine(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     IS the corpus and therefore cannot ship under
     ``MAX_BROADCAST_QUERIES`` (q120's self-kNN beyond the broadcast
     bound). Emits (query_id, neighbor_id, cos_raw) rows, pruned per chunk
-    to each query's rounded top-k with the same one-rounding-quantum
-    margin as :func:`_pairwise_cosine_scan`, so the union over chunks and
-    block pairs provably contains every query's global rounded-order
-    top-k; the caller's window does the final rank.
+    by the core's margin ``top_k``; the caller's window does the final
+    rank.
 
     Scale: same shuffle shape as :func:`_block_pairs_cosine` (N·(B+1)
     rows, B(B+1)/2 tasks, chunked O(CH²) temporaries); output is
     O(N · B · k · chunks-per-block) rows, never N²."""
     left, right = _block_cogroup(spark, sf_dir)
-    top_k = k  # closure LOCAL (module globals pickle by reference)
+    core = _cosine_core()
 
     def empty():
         import numpy as np
@@ -1006,17 +952,7 @@ def _block_topk_cosine(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         import pandas as pd
 
         def one_direction(qids, nids, mat):
-            # per-chunk rounded top-k with a one-quantum margin: superset
-            # of any global rounded-order top-k (see _pairwise_cosine_scan)
-            not_self = qids[:, None] != nids[None, :]
-            r6 = np.round(mat, 6)
-            r6 = np.where(not_self, r6, -np.inf)  # self never votes nor counts
-            if r6.shape[1] > top_k:
-                kth = -np.partition(-r6, top_k - 1, axis=1)[:, top_k - 1]
-            else:
-                kth = np.full(r6.shape[0], -np.inf)
-            keep = (r6 >= kth[:, None] - 1e-6) & not_self
-            ii, jj = np.nonzero(keep)
+            ii, jj = np.nonzero(core.top_k(mat, qids, nids, k))
             parts.append(pd.DataFrame({
                 "query_id": qids[ii],
                 "neighbor_id": nids[jj],
@@ -1152,13 +1088,14 @@ def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9,
     import pandas as pd
 
     bits_per_band = n_bits // n_bands
+    core = _cosine_core()
 
     def signatures(batches):
         H = np.random.RandomState(42).randn(64, n_bits)
         for pdf in batches:
             if len(pdf) == 0:  # np.stack on an empty batch would raise
                 continue
-            mat = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
+            mat = core.stack(pdf[vec_col])
             if mat.shape[1] != H.shape[0]:
                 # H is the FIXED seeded 64-row hyperplane matrix the SQL
                 # twin (_lsh_band_exprs_sql) inlines literal-for-literal;
@@ -1172,10 +1109,7 @@ def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9,
                     f"{mat.shape[1]}, but the seeded hyperplane matrix "
                     f"(and its inlined SQL twin) is fixed at {H.shape[0]}"
                 )
-            acc = np.zeros((len(mat), n_bits))
-            for d in range(mat.shape[1]):  # sequential over dims == SQL fold
-                acc += mat[:, d:d + 1] * H[d][None, :]
-            bits = acc > 0  # (n × n_bits), bit-identical to the oracle's
+            bits = core.dots(mat, H.T) > 0  # bit-identical to the oracle's
             # the id column is ALIASED to vec_id in the select feeding
             # mapInPandas, so index the batch by that name — pdf[id_col]
             # raised KeyError for any non-default id_col
@@ -1777,9 +1711,7 @@ def q120_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = em.select("vec_id", "embedding")
     n_ref = ref.count()
     if n_ref <= MAX_BROADCAST_QUERIES:
-        scored_raw = _pairwise_cosine_scan(
-            spark, sf_dir, ref, emit_top_k=KNN_K
-        )
+        scored_raw = _pairwise_cosine_scan(em, ref, emit_top_k=KNN_K)
     else:
         scored_raw = _block_topk_cosine(spark, sf_dir, KNN_K).withColumnRenamed(
             "cos_raw", "cos_sim_raw"

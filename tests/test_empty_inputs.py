@@ -160,6 +160,7 @@ def test_release_local_checkpoint_frees_blocks(spark):
     from mapreduce_framework_simple_spark import ephemeral
 
     jsc = spark.sparkContext._jsc.sc()
+    ephemeral.release_caches()  # clean slate: an earlier test's scoped caches
     base = jsc.getPersistentRDDs().size()
 
     ck = spark.range(100).localCheckpoint(eager=True)

@@ -287,7 +287,7 @@ def test_query_broadcast_bound_enforced(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(S, "MAX_BROADCAST_QUERIES", 10)
     em = S.load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     with _pytest.raises(ValueError, match="query set"):
-        S._pairwise_cosine_scan(spark, sf_dir, em, emit_top_k=5)
+        S._pairwise_cosine_scan(em, em, emit_top_k=5)
 
 
 CAP_FIRE_N_BOILER = 30
@@ -1335,7 +1335,7 @@ def test_ivf_knn_audit_agrees_with_exact(spark, sf_dir, tmp_path):
     # exact predictions: q120's kernel + the SAME shared vote rule
     ref = em.select("vec_id", "embedding")
     scored = S._pairwise_cosine_scan(
-        spark, sf_dir, ref, emit_top_k=S.KNN_K
+        em, ref, emit_top_k=S.KNN_K
     ).select(
         "query_id", "neighbor_id", F.round(F.col("cos_sim_raw"), 6).alias("cos_sim")
     )
@@ -1716,6 +1716,79 @@ def test_scoped_broadcast_released_at_boundary(spark):
     assert bc.value == [1, 2, 3]
 
 
+def test_cosine_core_ships_by_value(tmp_path):
+    """The kernels' shared arithmetic must unpickle and run where this
+    package cannot be imported — an executor of a session the engine
+    did not configure. A core function that cloudpickle serialized by
+    module reference would import the package on load (and fail
+    there)."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from mapreduce_framework_simple_spark.operators.similarity import _cosine_core
+
+    blob = tmp_path / "core.pkl"
+    blob.write_bytes(cloudpickle.dumps(_cosine_core()))
+    script = (
+        "import pickle, sys\n"
+        "import numpy as np\n"
+        f"core = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
+        "a = np.array([[0.0, 0.0, 0.0], [3.0, 0.0, 4.0]])\n"
+        "b = np.array([[1.0, 2.0, 2.0], [0.0, 3.0, 4.0]])\n"
+        "print(core.norms(a).tolist())\n"
+        "print(core.micro(core.paired(a, b)).tolist())\n"
+        "print('mapreduce_framework_simple_spark' in sys.modules)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        check=True, capture_output=True, text=True,
+    ).stdout.split()
+    # zero row: guarded norm 1, cosine exactly 0; (3,0,4)·(0,3,4) = 16/25
+    assert out == ["[1.0,", "5.0]", "[0,", "640000]", "False"]
+
+
+def test_cosine_core_top_k_matches_bruteforce():
+    """The core's vectorized margin top-k against the per-query rule it
+    encodes: drop self; keep every candidate when k is None or there
+    are ≤ k of them; otherwise keep rounded scores ≥ the k-th rounded
+    score − 1e-6. Scores sit on a 6-dp grid with sub-quantum jitter, so
+    rounded ties (and near-ties one quantum below the k-th) are forced;
+    the self id is present in some query rows and absent in others."""
+    import numpy as np
+
+    from mapreduce_framework_simple_spark.operators.similarity import _cosine_core
+
+    core = _cosine_core()
+    rng = np.random.RandomState(7)
+    checked = 0
+    for _ in range(40):
+        nq, nn = rng.randint(1, 6), rng.randint(1, 12)
+        sims = (0.5 + rng.randint(-3, 4, size=(nq, nn)) * 1e-6
+                + rng.uniform(-4e-7, 4e-7, size=(nq, nn)))
+        nids = rng.permutation(100)[:nn].astype("int64")
+        qids = np.where(rng.rand(nq) < 0.5, rng.choice(nids, nq),
+                        1000 + np.arange(nq)).astype("int64")
+        for k in (None, 1, 2, 3, nn - 1, nn, nn + 1):
+            if k is not None and k < 1:
+                continue
+            got = core.top_k(sims, qids, nids, k)
+            for i in range(nq):
+                cand = [j for j in range(nn) if nids[j] != qids[i]]
+                if k is None or len(cand) <= k:
+                    want = set(cand)
+                else:
+                    r6 = {j: np.round(sims[i, j], 6) for j in cand}
+                    kth = sorted(r6.values(), reverse=True)[k - 1]
+                    want = {j for j in cand if r6[j] >= kth - 1e-6}
+                assert set(np.nonzero(got[i])[0].tolist()) == want
+                checked += 1
+    assert checked > 500
+
+
 def test_zero_norm_vectors_score_zero_not_nan(spark, sf_dir):
     """Zero-norm embeddings pin cosine to 0 (the iterative._assign
     convention) in every kernel — without the guard, 0/0 = NaN fails
@@ -1731,7 +1804,9 @@ def test_zero_norm_vectors_score_zero_not_nan(spark, sf_dir):
     ref = spark.createDataFrame(
         [(10**9, zero), (10**9 + 1, one)], "vec_id long, embedding array<double>"
     )
-    out = S._pairwise_cosine_scan(spark, sf_dir, ref).toPandas()
+    out = S._pairwise_cosine_scan(
+        S.load_table(spark, "embeddings", sf_dir), ref
+    ).toPandas()
     zq = out[out["query_id"] == 10**9]
     assert len(zq) > 0 and (zq["cos_sim_raw"] == 0.0).all()
     assert out["cos_sim_raw"].notna().all()
