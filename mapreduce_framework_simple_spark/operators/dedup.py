@@ -85,12 +85,17 @@ DUCK_NORM = f"trim(regexp_replace(lower(text), '{_WS_CLASS}', ' ', 'g'))"
     """,
 )
 def q35_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup groups: hash normalized text, count copies, keep min id.
+    """Exact dedup groups of ``documents`` (:func:`exact_dup_groups`)."""
+    return exact_dup_groups(load_table(spark, "documents", sf_dir))
+
+
+def exact_dup_groups(docs: DataFrame) -> DataFrame:
+    """Exact dedup groups of a (doc_id, text) frame: hash normalized text,
+    count copies, keep min id.
 
     Scale: one shuffle keyed by a 128-bit hash (not the full text), so the
     exchange carries 16-byte keys; the keep-min policy is a plain min()
     aggregate, no window needed."""
-    docs = load_table(spark, "documents", sf_dir)
     return (
         docs.groupBy(F.md5(norm_expr()).alias("text_hash"))
         .agg(
@@ -1396,9 +1401,14 @@ def q91_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    rest = sh.where(F.col("doc_id") % 97 != 0)
+    return contamination(sh.where(F.col("doc_id") % 97 != 0), F.broadcast(probe))
+
+
+def contamination(sh: DataFrame, probe: DataFrame) -> DataFrame:
+    """Per-doc share of (doc_id, shingle) rows found in a (shingle, hit)
+    probe of distinct shingles; hint ``probe`` to force a broadcast."""
     return (
-        rest.join(F.broadcast(probe), "shingle", "left")
+        sh.join(probe, "shingle", "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_shingles"),

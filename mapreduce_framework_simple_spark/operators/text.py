@@ -526,6 +526,13 @@ GOPHER_TOP_WORD_DENOM = 5
     """,
 )
 def q98_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`gopher_flags` of ``documents``: doc id, statistics, keep."""
+    return gopher_flags(load_table(spark, "documents", sf_dir)).select(
+        "doc_id", "n_tokens", "sum_token_len", "stop_hits", "top_word_cnt", "keep"
+    )
+
+
+def gopher_flags(docs: DataFrame) -> DataFrame:
     """Gopher-style quality gate: mean-word-length bounds, minimum
     stopword evidence, and a top-word concentration cap combine into one
     boolean ``keep`` per document. Thresholds are integer-scaled
@@ -539,15 +546,15 @@ def q98_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Contract: ONE keep row per document, including empty/whitespace/NULL
     text (zero tokens ⇒ keep=false via the stopword floor) — the
     top-word side is a LEFT join, so zero-token docs are gated, never
-    silently dropped from both buckets."""
-    docs = load_table(spark, "documents", sf_dir)
+    silently dropped from both buckets. ``docs`` is any frame with
+    ``doc_id`` and ``text``; its columns pass through, ahead of the stats."""
     t = docs.select(
-        "doc_id",
+        "*",
         F.coalesce(tokens_expr(), F.array().cast("array<string>")).alias("toks"),
     )
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     base = t.select(
-        "doc_id",
+        *docs.columns,
         F.size("toks").cast("long").alias("n_tokens"),
         F.aggregate("toks", F.lit(0).cast("long"), lambda acc, x: acc + F.length(x))
         .alias("sum_token_len"),
@@ -572,7 +579,7 @@ def q98_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (GOPHER_TOP_WORD_DENOM * F.col("top_word_cnt") <= F.col("n_tokens"))
     )
     return j.select(
-        "doc_id", "n_tokens", "sum_token_len", "stop_hits",
+        *docs.columns, "n_tokens", "sum_token_len", "stop_hits",
         F.col("top_word_cnt").cast("long").alias("top_word_cnt"),
         keep.alias("keep"),
     )

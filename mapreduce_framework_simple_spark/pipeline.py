@@ -13,10 +13,12 @@ stage's input):
    above a shingle-containment threshold (q91);
 5. **curated write** — parquet of survivors + a one-row audit report.
 
-Every stage is the SAME operator the oracle suite hash-verifies
-individually; the composition test (tests/test_pipeline.py) asserts the
-audit invariants (stage counts telescope; survivors contain no exact-dup
-pair and no near-dup pair; no survivor exceeds the contamination cut).
+Each stage calls the function its query's oracle hash-verifies
+(``gopher_flags``, ``exact_dup_groups``, ``contamination``, …) on the
+one corpus frame ``curate`` reads and caches; the composition test
+(tests/test_pipeline.py) asserts the audit invariants (stage counts
+telescope; survivors contain no exact-dup pair and no near-dup pair; no
+survivor exceeds the contamination cut).
 
 Scale: stage order is the scale argument — the quality gate is a
 map-side filter that typically removes a large corpus fraction before
@@ -24,41 +26,33 @@ any shuffle; exact dedup is one 16-byte-key shuffle; the LSH stages run
 on the doubly-thinned corpus; the decontamination probe joins in
 AQE-planned (broadcast while small — a real benchmark probe is tiny —
 shuffled beyond; the in-repo stand-in is corpus-proportional, so it is
-never force-broadcast). Nothing here collects the corpus to the driver; the report is
-a handful of scalar aggregates.
+never force-broadcast). Nothing here collects the corpus to the driver;
+the report is a handful of scalar aggregates.
 """
 
 from __future__ import annotations
 
 from types import EllipsisType
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_simple_spark.operators.dedup import (
     band_signatures_from,
     connected_components,
+    contamination,
+    exact_dup_groups,
     lsh_candidate_pairs,
-    norm_expr,
     shingle_sets_from,
 )
 from mapreduce_framework_simple_spark.operators.text import (
-    q98_gopher_rules,
+    gopher_flags,
     shingles_expr,
     tokens_expr,
 )
 from mapreduce_framework_simple_spark.sources.io import load_table
 
 CONTAMINATION_MAX = 0.5  # drop docs with > 50% probe-shingle overlap
-
-
-def _lsh_pairs_from(docs: DataFrame,
-                    max_bucket_size: int | None | EllipsisType = ...) -> DataFrame:
-    """q38's banded candidate join over an arbitrary (doc_id, text) frame
-    — same candidate rule as the oracle-verified query (shared helper).
-    ``...`` keeps the module-default hot-bucket cap (call-time read)."""
-    return lsh_candidate_pairs(band_signatures_from(docs),
-                               max_bucket_size=max_bucket_size)
 
 
 def curate(spark: SparkSession, sf_dir: str, out_dir: str,
@@ -71,47 +65,41 @@ def curate(spark: SparkSession, sf_dir: str, out_dir: str,
     None disables the guard — ground-truth runs only). Exposed on the
     CLI as ``tools/curate.py --lsh-max-bucket N``.
 
-    Audit-count design: every stage's count is an aggregate over that
-    stage's ID-ONLY keep/drop frame (keep_ids, exact_keep, drop,
-    contaminated) — each a tiny cached id list whose materializing
-    action IS the stage's required computation — never an extra pass
-    over a corpus-sized frame. (An earlier design observed counts with
-    Observation metrics; those over-count whenever a cold cached frame
-    is recomputed by concurrent stages or executor loss — exactly the
-    multi-executor regime this pipeline targets. Id-frame counts are
-    recompute-proof.) ``n_curated`` is the READ-BACK count of the
-    written parquet — a metadata-only footer scan — so the report
-    describes what was durably persisted, not the plan. All internal
-    caches (including the LSH stage's band signatures) are released on
-    exit via ``cache_scope``. The near-dup stage's
-    :func:`connected_components` result is QUERY-SCOPED
-    (checkpoint-backed — see its docstring / KNOWN_LIMITS §17); this
-    pipeline satisfies the contract by materializing the drop list and
-    writing survivors before the scope exit frees the blocks."""
+    Audit-count design: no count is an extra pass over a corpus-sized
+    frame. ``n_total`` and ``n_after_quality`` come from one aggregate
+    over the flagged corpus, the action that fills its cache;
+    ``n_after_exact_dedup`` counts the cached exact-dup groups (one kept
+    id each); the near-dup and contamination counts are counts of cached
+    id-only drop lists. Never count with Observation metrics: they
+    over-count whenever a cached frame is recomputed (concurrent stages,
+    executor loss). ``n_curated`` is the READ-BACK count of the written
+    parquet — a metadata-only footer scan — so the report describes what
+    was durably persisted, not the plan. All internal caches (including
+    the LSH stage's band signatures) are released on exit via
+    ``cache_scope``. The near-dup stage's :func:`connected_components`
+    result is QUERY-SCOPED (checkpoint-backed — see its docstring /
+    KNOWN_LIMITS §17); this pipeline satisfies the contract by
+    materializing the drop list and writing survivors before the scope
+    exit frees the blocks."""
     from mapreduce_framework_simple_spark.ephemeral import cache_scope, scoped_cache
 
     with cache_scope():
-        docs = scoped_cache(load_table(spark, "documents", sf_dir))
-        n_total = docs.count()  # the one corpus-frame action; populates the
-        # cache every later stage (and the probe set) reuses
+        # the only cache of the whole corpus: later stages and the probe read it
+        docs = load_table(spark, "documents", sf_dir)
+        flagged = scoped_cache(gopher_flags(docs).select(*docs.columns, "keep"))
 
-        # 1. quality gate (q98's keep flag — the flag computation is the
-        #    corpus pass; the id list it yields is cached and counted,
-        #    then joined back id-to-id: one shuffle, no extra pass)
-        keep_ids = scoped_cache(
-            q98_gopher_rules(spark, sf_dir).where(F.col("keep")).select("doc_id")
-        )
-        n_gated = keep_ids.count()  # == |gated|: keep_ids ⊆ docs ids
-        gated = scoped_cache(docs.join(keep_ids, "doc_id"))
+        # 1. quality gate; sum() over zero rows is NULL
+        n_total, n_gated = flagged.agg(
+            F.count("*"), F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0))
+        ).first()
+        gated = flagged.where(F.col("keep")).select(*docs.columns)
 
         # 2. exact dedup: keep min doc_id per normalized-text hash
-        exact_keep = scoped_cache(
-            gated.groupBy(F.md5(norm_expr()).alias("h"))
-            .agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
+        groups = scoped_cache(exact_dup_groups(gated))
+        n_exact = groups.count()
+        exact = scoped_cache(
+            gated.join(groups.select(F.col("keep_doc_id").alias("doc_id")), "doc_id")
         )
-        n_exact = exact_keep.count()  # == |exact|: one id per kept group
-        exact = scoped_cache(gated.join(exact_keep, "doc_id"))
 
         # 3. near-dup collapse on the thinned corpus: LSH pairs →
         #    components → drop non-representatives. The drop list is
@@ -120,7 +108,8 @@ def curate(spark: SparkSession, sf_dir: str, out_dir: str,
         #    the strategy is planned from the frame's actual (cached /
         #    stage-boundary) size: broadcast while it is genuinely tiny,
         #    shuffled anti-join beyond (the q03/q05 policy).
-        pairs = _lsh_pairs_from(exact, lsh_max_bucket)
+        pairs = lsh_candidate_pairs(band_signatures_from(exact),
+                                    max_bucket_size=lsh_max_bucket)
         comp = connected_components(pairs)
         drop = scoped_cache(
             comp.where(F.col("doc_id") != F.col("component")).select("doc_id")
@@ -145,17 +134,14 @@ def curate(spark: SparkSession, sf_dir: str, out_dir: str,
         #    distinct would pay a second exchange+aggregate whose
         #    per-doc dedup the next .distinct() immediately discards.
         probe = (
-            docs.where(F.col("doc_id") % 97 == 0)
+            flagged.where(F.col("doc_id") % 97 == 0)
             .select(tokens_expr().alias("toks"))
             .select(F.explode(shingles_expr(F.col("toks"))).alias("shingle"))
             .distinct()
             .withColumn("hit", F.lit(1))
         )
-        sh_surv = shingle_sets_from(neardup_free)
         contaminated = scoped_cache(
-            sh_surv.join(probe, "shingle", "left")
-            .groupBy("doc_id")
-            .agg((F.count("hit") / F.count("*")).alias("contamination"))
+            contamination(shingle_sets_from(neardup_free), probe)
             .where(F.col("contamination") > CONTAMINATION_MAX)
             .select("doc_id")
         )
@@ -165,9 +151,8 @@ def curate(spark: SparkSession, sf_dir: str, out_dir: str,
         curated = neardup_free.join(contaminated, "doc_id", "left_anti")
         curated.write.mode("overwrite").parquet(out_dir)
 
-        n_curated = (
-            spark.read.parquet(out_dir).count()
-        )  # count what was durably written, not the plan (footer metadata scan)
+        # count what was durably written, not the plan (footer metadata scan)
+        n_curated = spark.read.parquet(out_dir).count()
         if n_curated != n_neardup - n_contaminated:
             raise RuntimeError(
                 f"curate: durable output has {n_curated} rows but the plan "

@@ -55,9 +55,12 @@ def test_curate_invariants(spark, sf_dir, tmp_path):
     assert dup_groups == 0
 
     # no LSH near-dup candidate pair survives among the curated docs
-    from mapreduce_framework_simple_spark.pipeline import _lsh_pairs_from
+    from mapreduce_framework_simple_spark.operators.dedup import (
+        band_signatures_from,
+        lsh_candidate_pairs,
+    )
 
-    assert _lsh_pairs_from(curated).count() == 0
+    assert lsh_candidate_pairs(band_signatures_from(curated)).count() == 0
 
     # no survivor exceeds the contamination cut
     from mapreduce_framework_simple_spark.operators.dedup import shingle_sets_from
@@ -142,3 +145,47 @@ def test_curate_malformed_documents(spark, sf_dir, tmp_path):
     assert len(written) == rep["n_curated"]
     assert not written & (blank_ids | {1003})
     assert 1004 not in written, "exact dedup keeps the lower doc_id"
+
+
+def test_curate_job_count(spark, sf_dir, tmp_path):
+    """A warm ``curate`` pass runs at most 39 Spark jobs: the quality
+    gate filters the one cached corpus frame (no second ``documents``
+    load, no keep-id join-back), ``n_total`` and ``n_after_quality``
+    share one aggregate, and exact dedup joins its kept ids back once.
+    Each job costs ~0.1-0.2 CPU-s of driver and JIT work whatever its
+    data, so a stage that grows a job shows here first."""
+    sc = spark.sparkContext
+    out = str(tmp_path / "curated")
+    curate(spark, sf_dir, out)  # cold: schema inference, codegen
+    sc.setJobGroup("curate-job-count", "warm curate")
+    try:
+        curate(spark, sf_dir, out)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup("curate-job-count"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs <= 39, f"curate ran {jobs} jobs"
+
+
+def test_curate_empty_documents(spark, sf_dir, tmp_path):
+    """A ``documents`` table with its schema and no rows: every count is
+    0 (the gate's sum over zero rows is NULL, not 0) and the written
+    corpus reads back with the documents columns and no rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    src = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    corpus = tmp_path / "sf"
+    corpus.mkdir()
+    pq.write_table(src.slice(0, 0), str(corpus / "documents.parquet"))
+
+    out = str(tmp_path / "curated")
+    rep = curate(spark, str(corpus), out)
+
+    assert rep == dict.fromkeys(rep, 0)
+    assert all(type(v) is int for v in rep.values())
+    written = spark.read.parquet(out)
+    assert written.columns == src.column_names
+    assert written.count() == 0

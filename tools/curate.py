@@ -21,13 +21,15 @@ sys.path.insert(0, REPO)
 
 
 def main(argv: list[str] | None = None) -> None:
+    from mapreduce_framework_simple_spark.sources.io import DEFAULT_SF_DIR
+
     ap = argparse.ArgumentParser(
         description="Run the end-to-end curation pipeline."
     )
     ap.add_argument(
         "sf_dir",
         nargs="?",
-        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+        default=DEFAULT_SF_DIR,
         help="input table directory (default: $SPARK_GRAFT_SF_DIR)",
     )
     ap.add_argument(

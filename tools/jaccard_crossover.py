@@ -45,7 +45,7 @@ def main() -> None:
     from mapreduce_framework_simple_spark import ephemeral
     from mapreduce_framework_simple_spark.operators import dedup as D
     from mapreduce_framework_simple_spark.session import get_session
-    from mapreduce_framework_simple_spark.sources.io import load_table
+    from mapreduce_framework_simple_spark.sources.io import DEFAULT_SF_DIR, load_table
 
     ap = argparse.ArgumentParser(
         description="measure the naive-vs-prefix jaccard kernel crossover"
@@ -54,17 +54,16 @@ def main() -> None:
                     help="replication factors to probe (default: 1 4 10)")
     factors = ap.parse_args().factors
     runs = int(os.environ.get("SPARK_GRAFT_CROSSOVER_RUNS", "2"))
-    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_session("jaccard-crossover")
     spark.sparkContext.setLogLevel("ERROR")
 
     def regime_dir(n: int) -> str:
         if n == 1:
-            return src
+            return DEFAULT_SF_DIR
 
         def build(dst: str) -> None:
             replicate_table(
-                load_table(spark, "documents", src), "doc_id", n
+                load_table(spark, "documents", DEFAULT_SF_DIR), "doc_id", n
             ).write.mode("overwrite").parquet(
                 os.path.join(dst, "documents.parquet")
             )
@@ -125,7 +124,7 @@ def main() -> None:
         "crossover_high": min(prefix_wins) if prefix_wins else None,
         "runs_per_point": runs,
         "aggregation": "min",
-        "base": src,
+        "base": DEFAULT_SF_DIR,
     }))
     spark.stop()
 

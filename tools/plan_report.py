@@ -17,9 +17,12 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
+    from mapreduce_framework_simple_spark.sources.io import DEFAULT_SF_DIR
+
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1",
-                    help="scale-factor parquet directory")
+    ap.add_argument("sf_dir", nargs="?", default=DEFAULT_SF_DIR,
+                    help="scale-factor parquet directory "
+                    "(default: $SPARK_GRAFT_SF_DIR)")
     sf_dir = ap.parse_args().sf_dir
     if not os.path.isdir(sf_dir):
         ap.error(f"not a directory: {sf_dir}")

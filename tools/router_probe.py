@@ -31,17 +31,15 @@ def main() -> None:
 
     from mapreduce_framework_simple_spark.operators import similarity as S
     from mapreduce_framework_simple_spark.session import get_session
-    from mapreduce_framework_simple_spark.sources.io import load_table
+    from mapreduce_framework_simple_spark.sources.io import DEFAULT_SF_DIR, load_table
 
     spark = get_session("router-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
     def build(dst: str) -> None:
-        replicate_table(load_table(spark, "embeddings", src), "vec_id", 100).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(dst, "embeddings.parquet"))
+        replicate_table(
+            load_table(spark, "embeddings", DEFAULT_SF_DIR), "vec_id", 100
+        ).write.mode("overwrite").parquet(os.path.join(dst, "embeddings.parquet"))
 
     dst = ensure_replica("/tmp/mfss_router_x100", build)
     emb_path = os.path.join(dst, "embeddings.parquet")
