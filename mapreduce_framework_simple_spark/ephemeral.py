@@ -27,7 +27,7 @@ per-round discipline) can keep doing so.
 The module also owns the two memos that outlive a query: the session memo
 of bounded frames (:func:`memo_get` / :func:`memo_put`) and the memo of
 planner statistics (:func:`memo_stat`), with the input fingerprints both
-key on.
+key on; and :func:`size_gate`, the one probe of every size dispatch.
 """
 
 from __future__ import annotations
@@ -37,6 +37,7 @@ import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 _SCOPED: list[DataFrame] = []
 
@@ -364,6 +365,20 @@ def memo_stat(name, df: DataFrame, sf_dir: str, compute):
         df._jdf.queryExecution().analyzed().semanticHash(),
     )
     return _memoized(key, compute)
+
+
+def size_gate(df: DataFrame, bound: int, *, collect: bool = False):
+    """THE size test of every bounded dispatch: ``(fits, value)``, where
+    ``fits`` is ``df`` having at most ``bound`` rows and ``value`` is,
+    when it fits, the exact row count — with ``collect``, the rows as a
+    pandas frame — else None. One Spark job (``limit(bound + 1)`` via
+    Arrow ``toPandas()``, one job fewer than ``limit().count()``); the
+    count mode fetches one constant boolean column."""
+    probe = df if collect else df.select(F.lit(True).alias("_"))
+    rows = probe.limit(bound + 1).toPandas()
+    if len(rows) > bound:
+        return False, None
+    return True, rows if collect else len(rows)
 
 
 def _hadoop_listing(spark, path: str) -> list[str]:

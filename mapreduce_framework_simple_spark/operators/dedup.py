@@ -38,6 +38,7 @@ from mapreduce_framework_simple_spark.ephemeral import (
     scoped_broadcast,
     scoped_cache,
     scoped_release,
+    size_gate,
 )
 from mapreduce_framework_simple_spark.operators.text import (
     DUCK_SHINGLES,
@@ -854,11 +855,8 @@ def incremental_lsh_candidates(
 ) -> DataFrame:
     """Near-dup candidates between a NEW document batch and an indexed
     corpus: compute band signatures for the batch only, broadcast them
-    (size-dispatched: batches under ``INCREMENTAL_BROADCAST_BANDS`` band
-    rows are hinted for a map-side hash join against the index scan;
-    corpus-scale backfill batches run unhinted so the planner/AQE pick
-    the strategy instead of an unconditional hint forcing an
-    over-threshold broadcast), and probe the persisted index on
+    when they are at most ``INCREMENTAL_BROADCAST_BANDS`` rows (larger
+    backfill batches run unhinted), and probe the persisted index on
     (band, band_sig). Returns (new_doc_id, corpus_doc_id) distinct
     pairs.
 
@@ -892,18 +890,11 @@ def incremental_lsh_candidates(
             "nb_n", F.count("*").over(Window.partitionBy("band", "band_sig"))
         )
     nb = scoped_cache(nb)
-    # q120-style size dispatch on the probe side: a routine ingest batch
-    # broadcasts (map-side hash join against the index scan), but an
-    # explicit hint is UNCONDITIONAL — AQE cannot demote it — so a
+    # an explicit hint is UNCONDITIONAL — AQE cannot demote it — so a
     # corpus-scale backfill batch would force an over-threshold broadcast
-    # build and kill the driver. Beyond the bound every batch-side join
-    # runs unhinted and the planner/AQE pick the strategy. The bounded
-    # count doubles as the batch signature materialization the probe
-    # join needs anyway (nb is cached).
-    small_batch = (
-        nb.limit(INCREMENTAL_BROADCAST_BANDS + 1).count()
-        <= INCREMENTAL_BROADCAST_BANDS
-    )
+    # build; beyond the bound every batch-side join runs unhinted. The
+    # gate's job also fills the nb cache the probe join reads.
+    small_batch, _ = size_gate(nb, INCREMENTAL_BROADCAST_BANDS)
     hint = F.broadcast if small_batch else (lambda df: df)
     try:
         idx = spark.read.parquet(index_path)
@@ -1093,11 +1084,10 @@ def q39_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Below this many candidate edges the component fixpoint runs as a
-# driver-side union-find over the Arrow-collected edge list instead of
-# iterated Spark jobs — the same bounded-side dispatch rationale as q120's
-# broadcast bound: 1M (a,b) long pairs is ~16 MB via toPandas, far under
-# any driver budget, while each DISTRIBUTED round costs 2 shuffles of
-# fixed job overhead that dwarfs microsecond union-find at this size.
+# driver-side union-find over the collected edge list instead of
+# iterated Spark jobs: 1M (a,b) long pairs is ~16 MB via toPandas, far
+# under any driver budget, while each DISTRIBUTED round costs 2 shuffles
+# of fixed job overhead that dwarfs microsecond union-find at this size.
 # LSH dedup graphs are tiny relative to the corpus (pairs ≈ near-dup
 # rate × N, and the hot-bucket cap bounds the blow-up), so at 100 TB a
 # typical run still dispatches small; a dup-heavy corpus beyond the
@@ -1149,12 +1139,11 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
        fails LOUDLY ("checkpoint block not found") rather than silently
        recomputing — chosen over pinning a node-sized frame per call.
 
-    Kernel choice is a size-based planner `if`, mirroring q120's
-    dispatch: a single ``limit(bound+1)`` Arrow collect both measures
-    the edge count and, when it fits, IS the input to an exact
+    Kernel choice is a size gate on ``driver_edge_bound`` edges whose
+    collected rows, when they fit, ARE the input to an exact
     driver-side union-find (:func:`_driver_union_find`) — one Spark
     action total instead of 2 shuffles per propagation round. Beyond
-    the bound the unchanged distributed loop runs: each round joins
+    the bound the distributed loop runs: each round joins
     current labels across edges and takes the elementwise min,
     terminating when a round changes no label (one count per round).
     Label count is monotone non-increasing, so rounds ≤ graph diameter
@@ -1167,16 +1156,15 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     2-3 rounds. Both kernels emit the identical (node, min-label)
     relation — equality-tested on the real LSH graph.
     """
-    # The probe pays the full edge plan regardless (limit short-circuits
-    # only the final stage; the shuffles below it run completely), so
-    # cache the pair frame FIRST: the under-bound path collects from it
-    # once, and the over-bound path's sym union reads the cached blocks
-    # instead of recomputing the expensive LSH-pair join twice more.
+    # The gate pays the full edge plan regardless (limit short-circuits
+    # only the final stage), so cache the pair frame FIRST: the
+    # over-bound path's sym union then reads the cached blocks instead
+    # of recomputing the LSH-pair join twice more.
     pairs = scoped_cache(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     )
-    probe = pairs.limit(driver_edge_bound + 1).toPandas()
-    if len(probe) <= driver_edge_bound:
+    fits, probe = size_gate(pairs, driver_edge_bound, collect=True)
+    if fits:
         labels = _driver_union_find(probe["a"].tolist(), probe["b"].tolist())
         from pyspark.sql import types as T
 
@@ -1627,9 +1615,9 @@ def q108_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: at 100 TB the join input shrinks from every (doc, shingle) row
     to contamination-rate × corpus, while the bitmap (m/8 bytes; ~4 MB for
     a 1M-shingle benchmark suite) broadcasts once per executor instead of
-    a per-task hashed relation. The one driver action (count of the probe
-    set) scans only the benchmark corpus — tiny by premise — to size m
-    deterministically."""
+    a per-task hashed relation. The one driver action, a size gate at
+    ``BLOOM_MAX_PROBE``, reads only the benchmark corpus — tiny by
+    premise — and its exact count sizes m deterministically."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -1638,18 +1626,15 @@ def q108_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = scoped_cache(sh.where(F.col("doc_id") % 97 == 0).select("sid").distinct())
     rest = sh.where(F.col("doc_id") % 97 != 0)
 
-    n_probe = probe.count()
     # The tiny-by-premise probe is ENFORCED, not assumed: the bitmap
-    # build collects the probe's bit positions and allocates m bool
-    # bytes driver-side, both linear in n_probe — sound for a benchmark
-    # suite (≤ millions of shingles, the premise every decontamination
-    # run satisfies), driver-OOM for a corpus-fraction probe like this
-    # query's %97 STAND-IN at 100 TB. Fail loudly with the remedy
-    # instead of dying in np.zeros.
-    if n_probe > BLOOM_MAX_PROBE:
+    # build is linear in n_probe on the driver — sound for a benchmark
+    # suite, driver-OOM for a corpus-fraction probe like this query's
+    # %97 STAND-IN at 100 TB. Fail loudly with the remedy instead.
+    fits, n_probe = size_gate(probe, BLOOM_MAX_PROBE)
+    if not fits:
         raise ValueError(
-            f"q108: probe set has {n_probe} distinct shingles, over the "
-            f"{BLOOM_MAX_PROBE} bound the driver-built bitmap supports — "
+            f"q108: probe set has more than {BLOOM_MAX_PROBE} distinct "
+            "shingles, the bound the driver-built bitmap supports — "
             "decontamination probes are external benchmark suites by "
             "premise; for corpus-scale probes use q91's join formulation"
         )

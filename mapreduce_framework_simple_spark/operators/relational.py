@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreduce_framework_simple_spark.ephemeral import memo_stat
+from mapreduce_framework_simple_spark.ephemeral import memo_stat, size_gate
 from mapreduce_framework_simple_spark.registry import query
 from mapreduce_framework_simple_spark.sources.io import load_table
 
@@ -57,24 +57,20 @@ def duck_cents_l(col: str) -> str:
     return f"CAST(round({col} * 100) AS BIGINT)"
 
 
-# q07's explicit-hint demo is size-dispatched (q120's planner-`if`
-# pattern): an `F.broadcast` hint is unconditional — Spark honors it at
-# any size — so the hint is attached only when a limit-bounded probe
-# count proves the filtered dim is under this row bound. Pruned q07
-# part rows are ~30 B (key + brand + size), so 1M rows ≈ 30 MB —
-# comfortably under the session's 64 MB broadcast threshold. Probe
-# cost, precisely: LocalLimit caps each scan partition at bound+1 rows
-# before a single-partition exchange of zero-column rows — bounded by
-# partitions × bound markers, not the table, but NOT free at 100 TB;
-# it is therefore memoized (ephemeral.memo_stat), so a session pays it
-# once per input, and staleness can only ever affect join STRATEGY,
-# never results. That bounded-cost rationale applies to SCAN-BACKED
-# dims only: over an agg-derived frame LocalLimit cannot cap the
-# aggregation below it, so the probe would execute the full upstream
-# agg per memo miss — such dims must derive their dispatch from their
-# own (cached) materialization instead, the way q105's
-# text._lm_table_stats does.
+# q07's broadcast hint is honored at any size once attached, so it is
+# attached only under this row bound. Pruned q07 part rows are ~30 B (key
+# + brand + size): 1M rows ≈ 30 MB, under the session's 64 MB broadcast
+# threshold. The gate is memoized per input (ephemeral.memo_stat); a
+# stale value can change the join strategy, never the rows. Only a
+# scan-backed dim gates cheaply: LocalLimit cannot cap an aggregation
+# below it, so an agg-derived dim takes its statistic from its own
+# cached materialization (text._lm_table_stats).
 DIM_BROADCAST_ROW_BOUND = 1_000_000
+
+
+def _dim_gate(p: DataFrame, sf_dir: str, bound: int):
+    """q07's :func:`size_gate` of the filtered dim ``p``, memoized."""
+    return memo_stat(("dim_rows", bound), p, sf_dir, lambda: size_gate(p, bound))
 
 
 # --------------------------------------------------------------------------
@@ -454,19 +450,14 @@ def q07_broadcast_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension joins at 100 TB (ships MBs to every executor instead of
     shuffling TBs of fact rows).
 
-    The hint is SIZE-DISPATCHED (q120's pattern): filtered `part` is
-    SF-proportional, and a hint is unconditional — Spark honors it at
-    any size — so it is attached only when a memoized limit-probe proves
-    the dim is under ``DIM_BROADCAST_ROW_BOUND``. Beyond the bound the
-    join is left unhinted, leaving the decision to the planner's size
-    estimate (conservatively the full file size for a filtered scan, so
-    it errs toward NOT broadcasting an over-bound dim)."""
+    Filtered `part` is SF-proportional, so the hint is attached only
+    under ``DIM_BROADCAST_ROW_BOUND`` rows. Beyond it the join is left
+    to the planner's size estimate (the full file size for a filtered
+    scan, so it errs toward NOT broadcasting an over-bound dim)."""
     li = load_table(spark, "lineitem", sf_dir)
     p = load_table(spark, "part", sf_dir).where(F.col("p_size") <= 25)
-    bound = DIM_BROADCAST_ROW_BOUND
-    n_dim = memo_stat(("dim_rows", bound), p, sf_dir,
-                      lambda: p.limit(bound + 1).count())
-    dim = F.broadcast(p) if n_dim <= bound else p
+    fits, _ = _dim_gate(p, sf_dir, DIM_BROADCAST_ROW_BOUND)
+    dim = F.broadcast(p) if fits else p
     return (
         li.join(dim, li.l_partkey == p.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"))

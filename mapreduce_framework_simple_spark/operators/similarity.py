@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from mapreduce_framework_simple_spark.ephemeral import (
     scoped_broadcast,
     scoped_cache,
+    size_gate,
 )
 from mapreduce_framework_simple_spark.registry import query
 from mapreduce_framework_simple_spark.sources.io import load_table
@@ -175,16 +176,14 @@ MAX_BROADCAST_QUERIES = 100_000  # documented bound: Q·dim·8B ≈ 50 MB at 64 
 _SCAN_CHUNK_ELEMS = 16_777_216
 
 
-def _pairwise_cosine_scan(em: DataFrame, ref_df: DataFrame,
-                          emit_top_k: int | None = None):
+def _pairwise_cosine_scan(em: DataFrame, ref, emit_top_k: int | None = None):
     """Vectorized query-vs-corpus cosine kernel over the corpus frame
-    ``em`` (vec_id, embedding). The reference (QUERY) set — never the
-    corpus — is collected once on the driver and shipped via
-    ``sc.broadcast``, so executors hold ONE torrent-distributed copy
-    instead of a per-task closure payload; the corpus only ever streams
-    through ``mapInPandas`` Arrow batches. The query-set size is bounded
-    (``MAX_BROADCAST_QUERIES``); corpus-sized reference sets must use the
-    block self-join kernel (:func:`_block_pairs_cosine`) or the LSH path.
+    ``em`` (vec_id, embedding). The reference (QUERY) set ``ref`` is the
+    pandas frame a caller's :func:`size_gate` at ``MAX_BROADCAST_QUERIES``
+    collected; it ships via ``sc.broadcast``, so executors hold ONE
+    torrent copy instead of a per-task closure payload, and the corpus
+    streams through ``mapInPandas`` Arrow batches. Corpus-sized reference
+    sets use the block kernel (:func:`_block_pairs_cosine`) or LSH.
 
     Emits (query_id=ref id, neighbor_id=corpus id, cos_sim UNROUNDED),
     pruned per batch by the core's margin ``top_k`` when ``emit_top_k``
@@ -193,14 +192,6 @@ def _pairwise_cosine_scan(em: DataFrame, ref_df: DataFrame,
     """
     spark = em.sparkSession
     schema = "query_id long, neighbor_id long, cos_sim_raw double"
-    # one bounded collect: an oversized set costs the driver at most
-    # bound + 1 rows before the refusal, never the whole set
-    ref = ref_df.limit(MAX_BROADCAST_QUERIES + 1).toPandas()
-    if len(ref) > MAX_BROADCAST_QUERIES:
-        raise ValueError(
-            f"query set exceeds {MAX_BROADCAST_QUERIES} vectors; "
-            "use the block or LSH kernels for corpus-scale reference sets"
-        )
     if len(ref) == 0:
         # empty reference set: no pairs (np.stack([]) would raise)
         return spark.createDataFrame([], schema)
@@ -280,7 +271,11 @@ def q40_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     referee for q41's IVF path."""
     em = load_table(spark, "embeddings", sf_dir)
     q = em.where(F.col("vec_id") % QUERY_STRIDE == 0).select("vec_id", "embedding")
-    scored = _pairwise_cosine_scan(em, q, emit_top_k=TOP_K).select(
+    fits, ref = size_gate(q, MAX_BROADCAST_QUERIES, collect=True)
+    if not fits:
+        raise ValueError(f"query set exceeds {MAX_BROADCAST_QUERIES} vectors; use "
+                         "the block or LSH kernels for corpus-scale sets")
+    scored = _pairwise_cosine_scan(em, ref, emit_top_k=TOP_K).select(
         "query_id",
         "neighbor_id",
         F.round(F.col("cos_sim_raw"), 6).alias("cos_sim"),
@@ -353,10 +348,9 @@ def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
     equality-tested against the JVM expression formulation on both
     centroid sources."""
     spark = df.sparkSession
-    cp = cents.select("cell_id", "c_emb").limit(
-        MAX_BROADCAST_QUERIES + 1
-    ).toPandas()
-    if len(cp) > MAX_BROADCAST_QUERIES:
+    fits, cp = size_gate(cents.select("cell_id", "c_emb"),
+                         MAX_BROADCAST_QUERIES, collect=True)
+    if not fits:
         raise ValueError(
             f"centroid set exceeds {MAX_BROADCAST_QUERIES}; IVF sizing is "
             "K ≈ √N — rebuild with kmeans_centroid_frame, or for K past "
@@ -1240,9 +1234,8 @@ def q96_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _auto_meta_centroids(spark: SparkSession, sf_dir: str,
                          cents: DataFrame) -> DataFrame | None:
-    """Size-dispatch the two-level router on centroid count (the q07 /
-    q120 planner-``if`` pattern): a ``limit(bound+1).count()`` probe
-    against the bound :func:`_nearest_cells` refuses past.
+    """Size-dispatch the two-level router on centroid count, gated at
+    the bound :func:`_nearest_cells` refuses past.
     Within the broadcast bound → None (the flat path is correct and
     cheaper). Past it → auto-build the routing layer at the production
     sizing, ``kmeans_centroid_frame(k=⌈√K⌉)``, so a caller who hands
@@ -1252,7 +1245,7 @@ def _auto_meta_centroids(spark: SparkSession, sf_dir: str,
     branch — K rows, linear in the centroid count, never the corpus."""
     import math
 
-    if cents.limit(MAX_BROADCAST_QUERIES + 1).count() <= MAX_BROADCAST_QUERIES:
+    if size_gate(cents, MAX_BROADCAST_QUERIES)[0]:
         return None
     return kmeans_centroid_frame(
         spark, sf_dir, k=math.ceil(math.sqrt(cents.count()))
@@ -1391,32 +1384,21 @@ def _index_meta_centroids(spark: SparkSession,
 # MAX_BROADCAST_QUERIES: cell ids ≈ sub-MB broadcast, never
 # corpus-sized.
 #
-# The bound is MEASURED, not reasoned (round 11; the earlier 10⁴ rested
-# on a plan-literal-cost argument that was directionally right but ~20×
-# high): a probe timed both branches cold-for-cold over a 10⁵-cell
-# bucketed layout across distinct-cell counts. Its results are
-# docs/probe_crossover_r11.json (a contended full sweep plus a quiet
-# at-anchor confirmation, calibration ratio 1.006); the probe script
-# itself was deleted and lives on in git history. The
-# IN-list branch wins below ~300 cells (its only rival cost is the
-# semi branch's flat ~0.1–0.2 s DPP-subquery + broadcast overhead) and
-# LOSES from ~500 up, with a penalty that grows ~linearly in the
-# literal count (0.83 s vs 0.59 s at 10³; 8.2 s vs 3.6 s at 10⁴;
-# 73 s vs 33 s at 10⁵): expression construction, planner
-# partition-pruning evaluation and plan serialization are all
-# per-literal. The costs are ASYMMETRIC around the measured [300, 500]
-# crossover bracket — picking too LOW costs at most the semi branch's
-# flat overhead once per probe; picking too HIGH costs an unbounded
-# linearly-growing planner stall — so the bound sits at 384, inside
-# the bracket and nearer its isin-wins edge, erring toward the
-# bounded-regret side. A second sweep at K=10⁴ total cells shows the
-# crossover is K-sensitive DOWNWARD (the semi branch's flat overhead
-# shrinks with index size while the IN-list penalty is roughly
-# K-independent), so 384's low-side regret stays ≤0.25 s at both
-# measured Ks — a K-aware bound buys nothing. Typical probe sets
-# (heavily overlapping query cells; 17–65 distinct cells at the test
-# SFs) stay on the IN-list branch; both branches remain equality- and
-# plan-tested either side of the bound.
+# The bound is MEASURED: both branches timed cold over a 10⁵-cell
+# bucketed layout across distinct-cell counts
+# (docs/probe_crossover_r11.json). The IN-list branch wins below ~300
+# cells (its only rival cost is the semi branch's flat ~0.1–0.2 s
+# DPP-subquery + broadcast overhead) and LOSES from ~500 up, with a
+# penalty that grows ~linearly in the literal count (0.83 s vs 0.59 s
+# at 10³; 8.2 s vs 3.6 s at 10⁴; 73 s vs 33 s at 10⁵): expression
+# construction, partition-pruning evaluation and plan serialization are
+# all per-literal. Too LOW a bound costs at most the semi branch's flat
+# overhead; too HIGH an unbounded planner stall — so the bound sits at
+# 384, inside the [300, 500] crossover and nearer its isin-wins edge. A
+# second sweep at K=10⁴ shows the crossover moves DOWN with K, so 384's
+# regret stays ≤0.25 s at both measured Ks. Typical probe sets (17–65
+# distinct cells at the test SFs) stay on the IN-list branch; both
+# branches are equality- and plan-tested either side of the bound.
 PROBE_ISIN_MAX_CELLS = 384
 
 
@@ -1430,8 +1412,8 @@ def ivf_probe_bucketed(spark: SparkSession, sf_dir: str, index_path: str) -> Dat
     ``isin`` IN-list while the distinct-cell list is planner-sized, a
     broadcast LEFT SEMI join on ``cell_id`` (dynamic partition pruning
     skips unprobed directories at runtime) past it — the dispatch and
-    the IN-list share one collect capped at bound+1 rows, so no driver
-    structure ever exceeds the bound.
+    the IN-list share one size gate, so no driver structure ever
+    exceeds the bound.
     The probe geometry comes from the centroids stored WITH the index
     (:func:`_index_centroids`). Tests assert result equality with the
     recompute formulation and the pruning shape of both branches. A
@@ -1446,19 +1428,13 @@ def ivf_probe_bucketed(spark: SparkSession, sf_dir: str, index_path: str) -> Dat
         if meta is not None
         else _ivf_probes(spark, sf_dir, centroids=cents)
     )
-    # probes is cached so the dispatch probe, the pruning side and the
+    # probes is cached so the size gate, the pruning side and the
     # candidate join share one computation of the centroid ranking
     cells = probes.select("cell_id").distinct()
     idx = spark.read.parquet(index_path)
-    # ONE bounded collect serves both the dispatch and the IN-list: a
-    # separate limit(bound+1).count() probe would re-run the distinct
-    # shuffle a second time for the below-bound collect, and bound+1
-    # single-int64 rows (a few KB at the measured 384 bound) is driver-safe
-    # either way
-    rows = cells.limit(PROBE_ISIN_MAX_CELLS + 1).collect()
-    if len(rows) <= PROBE_ISIN_MAX_CELLS:
-        probe_cells = sorted(r["cell_id"] for r in rows)
-        idx = idx.where(F.col("cell_id").isin(probe_cells))
+    fits, rows = size_gate(cells, PROBE_ISIN_MAX_CELLS, collect=True)
+    if fits:
+        idx = idx.where(F.col("cell_id").isin(sorted(rows["cell_id"].tolist())))
     else:
         # `cell_id >= 0` is the index CONTRACT (enforced at build by
         # write_ivf_index), restated here because Catalyst's dynamic
@@ -1692,8 +1668,8 @@ def q120_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding space separates its labels, run before trusting embeddings
     for curation. Complements q109 (centroid parametric twin).
 
-    Scale: kernel choice is a size-based planner `if` — under the
-    documented broadcast bound the corpus ships as the q40 kernel's
+    Scale: kernel choice is a size gate — under the documented
+    broadcast bound its collected rows ship as the q40 kernel's
     reference set (per-batch top-k pruning, self excluded in-kernel);
     beyond it the scan switches AUTOMATICALLY to the directed block
     self-join kernel (:func:`_block_topk_cosine` — same chunked
@@ -1701,16 +1677,16 @@ def q120_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized self-kNN never attempts a corpus broadcast. Both
     kernels emit margin-pruned supersets of the global rounded top-k;
     the one window shuffle carries O(N·k·blocks-or-batches) rows, not
-    N². The dispatch count() is one cheap scan-count action. Cosines
+    N². Cosines
     are rounded to 6 dp before ranking, so neighbor order cannot flip
     across engines. Exact self-kNN work stays quadratic by definition —
     the measured subquadratic audit for 100 TB use is
     :func:`ivf_knn_confusion` (same vote rule, IVF-probed candidates,
     agreement-tested against this query)."""
     em = load_table(spark, "embeddings", sf_dir)
-    ref = em.select("vec_id", "embedding")
-    n_ref = ref.count()
-    if n_ref <= MAX_BROADCAST_QUERIES:
+    fits, ref = size_gate(em.select("vec_id", "embedding"),
+                          MAX_BROADCAST_QUERIES, collect=True)
+    if fits:
         scored_raw = _pairwise_cosine_scan(em, ref, emit_top_k=KNN_K)
     else:
         scored_raw = _block_topk_cosine(spark, sf_dir, KNN_K).withColumnRenamed(

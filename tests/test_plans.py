@@ -74,11 +74,60 @@ def test_q07_hint_dispatch_over_bound_equal(spark, sf_dir, monkeypatch):
 
 
 def _dim_rows(df, sf_dir, bound):
-    """q07's memoized dim probe, exactly as q07 calls it."""
-    from mapreduce_framework_simple_spark.ephemeral import memo_stat
+    """The row count q07's memoized dim gate (the function q07 calls)
+    reports for ``df``."""
+    from mapreduce_framework_simple_spark.operators.relational import _dim_gate
 
-    return memo_stat(("dim_rows", bound), df, sf_dir,
-                     lambda: df.limit(bound + 1).count())
+    return _dim_gate(df, sf_dir, bound)[1]
+
+
+def test_size_gate_exact_bounded_one_job(spark, tmp_path, monkeypatch):
+    """``size_gate`` on a parquet scan, in both modes: exact at and below
+    the bound (empty frame and ``bound = 0`` included), no value past
+    it, at most ``bound + 1`` rows fetched, and one Spark job per call,
+    counted by job group."""
+    from mapreduce_framework_simple_spark.ephemeral import size_gate
+
+    frame_cls = type(spark.range(1))
+    fetched = []
+    to_pandas = frame_cls.toPandas
+
+    def spy(self):
+        pdf = to_pandas(self)
+        fetched.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(frame_cls, "toPandas", spy)
+    sc = spark.sparkContext
+
+    def gate(n, bound, collect):
+        path = str(tmp_path / f"n{n}")
+        spark.range(n).repartition(3).write.mode("ignore").parquet(path)
+        df = spark.read.parquet(path)
+        group = f"size-gate-{n}-{bound}-{collect}"
+        sc.setJobGroup(group, group)
+        try:
+            fetched.clear()
+            out = size_gate(df, bound, collect=collect)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert fetched and max(fetched) <= bound + 1, (n, bound, fetched)
+        assert jobs == 1, f"size_gate({n} rows, {bound}) ran {jobs} jobs"
+        return out
+
+    for collect in (False, True):
+        for n, bound in ((0, 0), (0, 5), (1, 0), (5, 5), (6, 5), (40, 5)):
+            fits, value = gate(n, bound, collect)
+            assert fits == (n <= bound), (n, bound, collect)
+            if not fits:
+                assert value is None
+            elif collect:
+                assert sorted(value["id"].tolist()) == list(range(n))
+            else:
+                assert value == n
 
 
 def test_dim_probe_recounts_after_rewrite(spark, tmp_path):
@@ -618,3 +667,26 @@ def test_q105_stats_memo_no_repeat_probe_and_miss_path_cache(spark, sf_dir):
     finally:
         ephemeral.release_caches()
         spark.catalog.clearCache()
+
+
+def test_no_hand_built_size_probe_outside_size_gate():
+    """Every size dispatch goes through ``ephemeral.size_gate``: no module
+    of the package but ephemeral.py builds its own ``.limit(<expr> + 1)``
+    probe, so the next dispatch has to call the gate."""
+    import pathlib
+    import re
+
+    import mapreduce_framework_simple_spark as pkg
+
+    probe = re.compile(r"\.limit\((?:[^()]|\([^()]*\))*\+\s*1\s*\)")
+    for sample in ("df.limit(bound + 1)", "x.limit(\n    MAX_Q + 1\n)",
+                   "df.limit(len(ids) + 1)"):
+        assert probe.search(sample), sample
+    root = pathlib.Path(pkg.__file__).parent
+    assert probe.search((root / "ephemeral.py").read_text())
+    offenders = [
+        str(path.relative_to(root))
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "ephemeral.py" and probe.search(path.read_text())
+    ]
+    assert not offenders, f"hand-built size probes in {offenders}"

@@ -277,17 +277,16 @@ def test_minhash_estimates_jaccard(spark, sf_dir):
 
 
 def test_query_broadcast_bound_enforced(spark, sf_dir, monkeypatch):
-    """The query-vs-corpus kernel must REFUSE corpus-scale reference sets
-    (the round-1 scale-killer was collecting the whole corpus onto the
-    driver); the bound is the documented contract."""
+    """q40's size gate must REFUSE a query set past the broadcast bound
+    instead of collecting it onto the driver for the scan kernel; the
+    bound is the documented contract."""
     import pytest as _pytest
 
     from mapreduce_framework_simple_spark.operators import similarity as S
 
     monkeypatch.setattr(S, "MAX_BROADCAST_QUERIES", 10)
-    em = S.load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     with _pytest.raises(ValueError, match="query set"):
-        S._pairwise_cosine_scan(em, em, emit_top_k=5)
+        S.q40_cosine_topk(spark, sf_dir)
 
 
 CAP_FIRE_N_BOILER = 30
@@ -574,6 +573,35 @@ def test_incremental_lsh_candidates_equal_batch_recompute(spark, sf_dir, tmp_pat
         elif b < cut <= a:
             want.add((a, b))
     assert got == want and len(want) > 0
+
+
+def test_incremental_bands_gate_over_bound_equal(spark, sf_dir, tmp_path,
+                                                 monkeypatch):
+    """Both sides of the batch-broadcast gate give the same pairs: at
+    ``INCREMENTAL_BROADCAST_BANDS = 0`` every batch-side join runs
+    unhinted (no hint left in the analyzed plan) and the
+    (new_doc_id, corpus_doc_id) pairs equal those at the default bound."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_framework_simple_spark.operators import dedup as D
+    from mapreduce_framework_simple_spark.sources.io import load_table
+
+    docs = load_table(spark, "documents", sf_dir)
+    idx_path = str(tmp_path / "lsh_index")
+    D.write_lsh_index(docs.where(F.col("doc_id") < 400), idx_path)
+    new = docs.where(F.col("doc_id") >= 400)
+
+    def run():
+        df = D.incremental_lsh_candidates(spark, new, idx_path)
+        plan = df._jdf.queryExecution().analyzed().toString()
+        pairs = {(r["new_doc_id"], r["corpus_doc_id"]) for r in df.collect()}
+        return "ResolvedHint" in plan, pairs
+
+    hinted, under = run()
+    monkeypatch.setattr(D, "INCREMENTAL_BROADCAST_BANDS", 0)
+    unhinted, over = run()
+    assert hinted and not unhinted
+    assert over == under and len(under) > 0
 
 
 def test_lsh_bucket_cap_bounds_boilerplate(spark, caplog):
@@ -1333,7 +1361,7 @@ def test_ivf_knn_audit_agrees_with_exact(spark, sf_dir, tmp_path):
     n_corpus = em.count()
 
     # exact predictions: q120's kernel + the SAME shared vote rule
-    ref = em.select("vec_id", "embedding")
+    ref = em.select("vec_id", "embedding").toPandas()
     scored = S._pairwise_cosine_scan(
         em, ref, emit_top_k=S.KNN_K
     ).select(
@@ -1805,7 +1833,7 @@ def test_zero_norm_vectors_score_zero_not_nan(spark, sf_dir):
         [(10**9, zero), (10**9 + 1, one)], "vec_id long, embedding array<double>"
     )
     out = S._pairwise_cosine_scan(
-        S.load_table(spark, "embeddings", sf_dir), ref
+        S.load_table(spark, "embeddings", sf_dir), ref.toPandas()
     ).toPandas()
     zq = out[out["query_id"] == 10**9]
     assert len(zq) > 0 and (zq["cos_sim_raw"] == 0.0).all()
