@@ -10,9 +10,11 @@ run. ``--plans DIR`` runs each query once more through ``toPandas()`` and
 writes its finalized AQE plan to ``DIR/<query>.txt``.
 
 Prints one JSON line: the total, the per-query minima, and each query's
-Janino compiles and JIT seconds over its timed runs. A compile count that
-grows with ``--runs`` flags generated code that is not reused. Exits
-nonzero if any query fails.
+Janino compiles, JIT seconds and Spark jobs over its timed runs. Jobs are
+counted by job group, in total and before the action (the eager probes
+and guards of plan construction). A compile count that grows with
+``--runs`` flags generated code that is not reused. Exits nonzero if any
+query fails.
 
 Usage: python bench.py [--runs 3] [--plans DIR] [query ...]
 """
@@ -20,6 +22,7 @@ Usage: python bench.py [--runs 3] [--plans DIR] [query ...]
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import os
 import sys
@@ -79,28 +82,43 @@ def main() -> None:
     warm = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
     warm = warm if os.path.isdir(warm) else DEFAULT_SF_DIR
     spark = get_session("mfss-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    groups = itertools.count()
 
     def build(name: str, sf_dir: str):
         release_caches()
         spark.catalog.clearCache()
         return QUERIES[name](spark, sf_dir)
 
-    def noop(name: str, sf_dir: str) -> float:
+    def noop(name: str, sf_dir: str) -> tuple[float, str]:
+        group = f"bench-{next(groups)}"
         t0 = time.perf_counter()
-        build(name, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        sc.setJobGroup(f"{group}-build", name)
+        df = build(name, sf_dir)
+        sc.setJobGroup(f"{group}-action", name)
+        df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0, group
+
+    def n_jobs(group: str) -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     timings: dict[str, float] = {}
     compiles: dict[str, int] = {}
     jit: dict[str, float] = {}
+    jobs: dict[str, int] = {}
+    jobs_before: dict[str, int] = {}
     for name in args.queries or HEADLINE:
         noop(name, warm)
         c0, j0 = codegen_counters(spark)
-        timings[name] = round(min(noop(name, DEFAULT_SF_DIR)
-                                  for _ in range(args.runs)), 3)
+        runs = [noop(name, DEFAULT_SF_DIR) for _ in range(args.runs)]
         c1, j1 = codegen_counters(spark)
+        timings[name] = round(min(t for t, _ in runs), 3)
         compiles[name], jit[name] = c1 - c0, round(j1 - j0, 3)
+        jobs_before[name] = sum(n_jobs(f"{g}-build") for _, g in runs)
+        jobs[name] = jobs_before[name] + sum(n_jobs(f"{g}-action")
+                                             for _, g in runs)
         if args.plans:
             # toPandas() executes df's own queryExecution, so the plan
             # read back is the finalized one
@@ -109,7 +127,8 @@ def main() -> None:
             with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
                 fh.write(formatted_plan(df))
         print(f"# {name}: {timings[name]:.3f}s, {compiles[name]} compiles, "
-              f"{jit[name]:.3f}s JIT", file=sys.stderr)
+              f"{jit[name]:.3f}s JIT, {jobs[name]} jobs "
+              f"({jobs_before[name]} before the action)", file=sys.stderr)
 
     print(json.dumps({
         "metric": "headline_query_wall_time_total",
@@ -123,6 +142,8 @@ def main() -> None:
         "queries": timings,
         "codegen_compiles": compiles,
         "jit_s": jit,
+        "jobs": jobs,
+        "jobs_before_action": jobs_before,
     }))
     spark.stop()
 

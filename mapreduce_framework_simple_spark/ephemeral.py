@@ -24,10 +24,10 @@ inner call. ``unpersist`` on an already-released frame is a Spark no-op,
 so operators that additionally unpersist eagerly (connected_components'
 per-round discipline) can keep doing so.
 
-The module also owns the two memos that outlive a query: the session memo
-of bounded frames (:func:`memo_get` / :func:`memo_put`) and the memo of
-planner statistics (:func:`memo_stat`), with the input fingerprints both
-key on; and :func:`size_gate`, the one probe of every size dispatch.
+The module also owns the one memo that outlives a query
+(:func:`memo_stat`, planner statistics and the capped corpus bands) with
+the input fingerprint it keys on, and :func:`size_gate`, the one probe of
+every size dispatch.
 """
 
 from __future__ import annotations
@@ -42,17 +42,12 @@ from pyspark.sql import functions as F
 _SCOPED: list[DataFrame] = []
 
 # Per-thread stack of active cache_scope registries. Scopes are
-# THREAD-LOCAL because they run on more threads than the global
+# thread-local because they run on more threads than the global
 # registry's single-threaded contract covers: a streaming foreachBatch
 # callback (its own driver thread per stream) wraps each microbatch in
-# cache_scope while the main thread keeps running queries. With
-# index-marks into the GLOBAL lists (the pre-round-9 design), a stream
-# scope's exit popped every registration above its mark — including the
-# main thread's, thrashing a concurrent query's live caches — and a
-# concurrent release_caches() voided the marks entirely. A scope now
-# owns its own registry: it releases exactly what ITS thread registered
-# inside the block, and a global drain on another thread cannot touch
-# (or be confused by) scope-internal registrations.
+# cache_scope while the main thread keeps running queries. Each scope
+# owns its registry, so it releases exactly what its thread registered
+# inside the block, and a drain on another thread cannot touch it.
 _TLS = threading.local()
 
 
@@ -177,185 +172,70 @@ def _release(df: DataFrame) -> None:
 
 
 # --------------------------------------------------------------------------
-# Session memo: bounded frames that SURVIVE release_caches().
-#
-# Scoped caches die at the next query boundary because they are intra-query
-# intermediates. A few frames are worth keeping for the WHOLE session: the
-# capped corpus band-signature frame is rebuilt — including its eager
-# drop-count guard action — by every query composing q38 (q79, q89, q107,
-# q126), five times over in the driver's 125-query sweep, even though the
-# inputs are immutable parquet. Memo entries are bounded by construction
-# (bands: 4 rows/doc ≈ 224 B/doc — ~0.02 % of the text it derives from, a
-# couple dozen GB across a cluster at 100 TB corpus scale) and there is at
-# most ONE entry per (session, sf_dir, kind), so memo storage cannot grow
-# with query count. Same single-threaded contract as the scoped registry.
+# The memo: values that outlive a query, keyed on what they derive from.
 # --------------------------------------------------------------------------
 
-# key -> (application_id, frame, held caches); insertion order is LRU order.
-# Hygiene bounds (ADVICE r4): entries from stopped SparkContexts are evicted
-# on the next put, and the registry is LRU-capped so many distinct
-# (sf_dir, cap) keys (test suites, multi-sf drivers) cannot pin unbounded
-# executor storage within one session.
-_MEMO: dict[tuple, tuple[str, DataFrame, list[DataFrame]]] = {}
-MEMO_MAX_ENTRIES = 8
+# Most values are planner scalars. A frame value pins executor storage
+# (the capped corpus bands, ~224 B/doc), one per (session, sf_dir, plan):
+# the bound caps how many inputs' frames a long session can pin.
+MEMO_MAX = 32
+# key -> (value, cached frames the value holds); dict order is LRU order
+_MEMO: dict[tuple, tuple[object, list[DataFrame]]] = {}
 
 
 def _evict(key: tuple) -> None:
-    ent = _MEMO.pop(key, None)
-    if ent is None:
-        return
-    for h in ent[2]:
+    """Forget ``key``'s entry and unpersist the frames it holds."""
+    for h in _MEMO.pop(key)[1]:
         try:
             h.unpersist(blocking=False)
-        except Exception:
+        except Exception:  # a stopped session has nothing left to release
             pass
 
 
-def memo_get(key: tuple) -> DataFrame | None:
-    """Return the memoized frame for ``key`` (None if absent), re-arming
-    the cache registration of its held frames first: an intervening
-    ``spark.catalog.clearCache()`` (bench hygiene) unpersists the DATA
-    and deregisters the plan, so without re-arming every later use would
-    recompute uncached. Re-caching an uncached plan is a registration
-    only — the data repopulates lazily at the next action. A hit moves
-    the entry to most-recently-used position."""
-    ent = _MEMO.get(key)
+def _memoized(key: tuple, compute):
+    """``key``'s value, computing and inserting it on a miss. A hit
+    becomes the most recently used entry and re-caches its frames if a
+    ``spark.catalog.clearCache()`` dropped them (a registration only:
+    the data fills again at the next action). Past ``MEMO_MAX`` entries
+    the least recently used goes first."""
+    ent = _MEMO.pop(key, None)
     if ent is None:
-        return None
-    app_id, df, holds = ent
-    # liveness check BEFORE the re-arm loop: the stale-context sweep runs
-    # only in memo_put, and an entry with EMPTY holds (the API permits
-    # them; only the in-tree caller happens to embed app ids in its keys)
-    # would skip the loop entirely and hand back a frame bound to a
-    # stopped JVM session — the caller would crash at its first action
-    # instead of getting the documented miss
-    try:
-        sc = df.sparkSession.sparkContext
-        alive = sc.applicationId == app_id and not sc._jsc.sc().isStopped()
-    except Exception:
-        alive = False
-    if not alive:
-        _evict(key)  # holds' blocks died with the context; unpersist is
-        return None  # a swallowed no-op there, the pop is what matters
-    for h in holds:
-        try:
+        val = compute()
+        items = val if isinstance(val, tuple) else (val,)
+        ent = (val, [v for v in items
+                     if isinstance(v, DataFrame) and v.is_cached])
+    else:
+        for h in ent[1]:
             lvl = h.storageLevel
             if not (lvl.useMemory or lvl.useDisk):
                 h.cache()
-        except Exception:
-            # stale/failing entry: EVICT (unpersists every hold,
-            # including ones this loop already re-armed — a bare pop
-            # would leave those as untracked CacheManager registrations
-            # pinned until a global clearCache), then miss
-            _evict(key)
-            return None
-    _MEMO.pop(key)
-    _MEMO[key] = (app_id, df, holds)  # re-insert at MRU position
-    return df
-
-
-def memo_put(key: tuple, df: DataFrame, holds: list[DataFrame]) -> DataFrame:
-    """Register ``df`` under ``key``; ``holds`` are the cached frames the
-    plan depends on (kept so eviction / :func:`clear_memo` can unpersist
-    them). Put-time hygiene: entries whose SparkContext differs from
-    ``df``'s are evicted (their executor blocks died with the old
-    context; only the registry entry lingers), then the registry is
-    LRU-capped at ``MEMO_MAX_ENTRIES``."""
-    try:
-        app_id = df.sparkSession.sparkContext.applicationId
-    except Exception:
-        # the frame's context is already gone: memoizing it is useless
-        # (every get would fail re-arm), and running the cross-app sweep
-        # with an "<unknown>" id would evict EVERY live entry — skip both
-        return df
-    for k in [k for k, ent in _MEMO.items() if ent[0] != app_id]:
-        _evict(k)
-    # A re-put over a live key must unpersist the old entry's holds first
-    # (a plain overwrite would orphan them as permanently-pinned executor
-    # blocks) — and popping also restores correct MRU insertion order.
-    _evict(key)
-    _MEMO[key] = (app_id, df, holds)
-    while len(_MEMO) > MEMO_MAX_ENTRIES:
-        _evict(next(iter(_MEMO)))  # head of insertion order = LRU
-    return df
-
-
-def evict_stale_inputs(prefix: tuple, fingerprint, fp_pos: int) -> int:
-    """Evict entries whose key starts with ``prefix`` but whose
-    ``key[fp_pos]`` input fingerprint differs from ``fingerprint``.
-
-    Required for correctness, not just storage hygiene: Spark's
-    CacheManager matches by LOGICAL PLAN, and a same-path rebuild plans
-    the identical scan — with the stale entry's frames still registered,
-    the rebuilt plan would silently read the OLD cached data. Dropping
-    the stale entry's caches first makes the rebuild actually re-scan."""
-    n = 0
-    for k in [
-        k
-        for k in _MEMO
-        if k[: len(prefix)] == prefix
-        # a prefix-matching key too short to CARRY a fingerprint slot is
-        # malformed for this family — treat it as stale (evict) rather
-        # than raising IndexError out of the caller's query
-        and (len(k) <= fp_pos or k[fp_pos] != fingerprint)
-    ]:
-        _evict(k)
-        n += 1
-    return n
-
-
-def clear_memo() -> int:
-    """Unpersist and forget every memoized frame (session teardown, or a
-    consumer that wants strictly-cold executions)."""
-    n = 0
-    for _app, df, holds in _MEMO.values():
-        for h in holds:
-            try:
-                h.unpersist(blocking=False)
-                n += 1
-            except Exception:
-                pass
-    _MEMO.clear()
-    return n
-
-
-# --------------------------------------------------------------------------
-# Planner statistics: memoized scalars taken before dispatch.
-#
-# A statistic chooses a plan (broadcast or not, which kernel), never rows,
-# so a stale value can cost time but cannot change an answer. Values are
-# plain scalars or tuples of them: nothing here unpersists.
-# --------------------------------------------------------------------------
-
-STAT_MEMO_MAX = 32
-_STAT_MEMO: dict[tuple, object] = {}
-
-
-def _memoized(key: tuple, compute):
-    """``_STAT_MEMO[key]``, computing and inserting it on a miss; the
-    oldest entries go first once ``STAT_MEMO_MAX`` is reached."""
-    if key in _STAT_MEMO:
-        return _STAT_MEMO[key]
-    val = compute()
-    while len(_STAT_MEMO) >= STAT_MEMO_MAX:
-        _STAT_MEMO.pop(next(iter(_STAT_MEMO)))
-    _STAT_MEMO[key] = val
-    return val
+    _MEMO[key] = ent
+    while len(_MEMO) > MEMO_MAX:
+        _evict(next(iter(_MEMO)))
+    return ent[0]
 
 
 def memo_stat(name, df: DataFrame, sf_dir: str, compute):
-    """THE memo of planner statistics: return ``compute()`` for the
-    statistic ``name`` of ``df`` over the input directory ``sf_dir``,
-    running it once per key
+    """THE memo: ``compute()`` for the value ``name`` of ``df`` over the
+    input directory ``sf_dir``, run once per key
 
         (name, applicationId, sf_dir, guarded input fingerprint of
          sf_dir, semanticHash of df's analyzed plan).
 
-    ``name`` carries the statistic's parameters (e.g.
-    ``("dim_rows", bound)``). The plan hash keeps two differently
-    filtered frames over one input apart; the fingerprint makes an
-    in-session rewrite of ANY table under ``sf_dir`` mint a new key, so
-    a grown input re-measures instead of riding a stale value."""
+    ``name`` carries the value's parameters (``("dim_rows", bound)``).
+    The plan hash keeps two differently filtered frames over one input
+    apart; the fingerprint makes a rewrite of any table under ``sf_dir``
+    mint a new key, so a grown input is measured again; the application
+    id keeps another session's entries from hitting.
+
+    Most values are planner statistics, which choose a plan, never rows:
+    a stale one costs time but cannot change an answer. A value may also
+    be a cached frame, or a tuple holding some; the entry then holds
+    them. Eviction unpersists them and a hit re-arms them. A miss first
+    evicts every frame-holding entry over the same session, ``sf_dir``
+    and plan: Spark's CacheManager matches cached data by logical plan,
+    so a rebuild after a same-path rewrite would otherwise read the
+    superseded entry's rows."""
     spark = df.sparkSession
     key = (
         name,
@@ -364,7 +244,20 @@ def memo_stat(name, df: DataFrame, sf_dir: str, compute):
         _fingerprint_guarded(sf_dir, spark),
         df._jdf.queryExecution().analyzed().semanticHash(),
     )
+    if key not in _MEMO:
+        for k in [k for k, (_, held) in _MEMO.items()
+                  if held and k[1:3] == key[1:3] and k[4] == key[4]]:
+            _evict(k)
     return _memoized(key, compute)
+
+
+def clear_memo() -> int:
+    """Forget every memo entry, unpersisting the frames they hold, for
+    strictly cold runs or session teardown; returns how many there were."""
+    n = len(_MEMO)
+    while _MEMO:
+        _evict(next(iter(_MEMO)))
+    return n
 
 
 def size_gate(df: DataFrame, bound: int, *, collect: bool = False):

@@ -48,7 +48,7 @@ from mapreduce_framework_simple_spark.operators.text import (
     tokens_expr,
 )
 from mapreduce_framework_simple_spark.registry import query
-from mapreduce_framework_simple_spark.sources.io import load_table
+from mapreduce_framework_simple_spark.sources.io import SCHEMAS, load_table
 
 # Normalization shared by exact-dedup: collapse whitespace runs, trim, lower.
 # (Python-API regexp_replace, NOT F.expr — Spark SQL string literals treat
@@ -677,7 +677,7 @@ def _drop_oversized_buckets(
     no-oversized-bucket case returns ``bands`` untouched — zero plan
     change, just the one small aggregate job over the cache.
     ``cache_fn`` overrides how the oversized list is cached (default:
-    query-scoped; the session memo passes its own holder)."""
+    query-scoped; a memo entry passes its own holder)."""
     oversized = (cache_fn or scoped_cache)(
         bands.groupBy("band", "band_sig")
         .agg(F.count("*").alias("bucket_n"))
@@ -754,71 +754,42 @@ def lsh_candidate_pairs(
 
 def capped_corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus's band-signature frame with the hot-bucket guard
-    applied — MEMOIZED per (session, sf_dir) in the session memo
-    (``ephemeral.memo_get``/``memo_put``), which survives the per-query
-    ``release_caches()``: the inputs are immutable parquet and the cap
-    decision is a pure function of them, so q38 and every query
-    composing it share one signature materialization and one eager
-    drop-count aggregate per session instead of one per query (the
-    round-3 bench drift on the q38 family). The drop count is still
-    logged, once, at memo-build time — a capped result never looks
-    complete. Bounded: 4 rows/doc of (id, band, 44-byte band_sig),
-    ~0.02 % of the corpus text."""
-    from mapreduce_framework_simple_spark import ephemeral
-
-    # applicationId, not id(spark): a stopped session's Python object id
-    # can be reused by a NEW session after GC, which would hand back a
-    # dead entry; the app id is unique per session launch. The cap value
-    # is part of the key, so a consumer that changes LSH_MAX_BUCKET
-    # mid-session can never receive a frame capped at the old threshold;
-    # the input fingerprint is part of the key, so a same-path dataset
-    # REWRITE mid-session can never serve stale bands.
+    applied, held in the engine memo (``ephemeral.memo_stat``), which
+    outlives the per-query ``release_caches()``: q38 and every query
+    built on it share one signature pass and one eager drop-count
+    aggregate per session and input instead of one per query (35–42
+    Spark jobs per sweep of the six LSH-family queries). The drop count
+    is logged once, when the entry is built. The entry's name carries
+    the deep fingerprint of ``documents.parquet`` and the cap, so a
+    same-path rewrite or a changed ``LSH_MAX_BUCKET`` builds afresh.
+    Bounded: 4 rows/doc of (id, band, 44-byte band_sig), ~0.02 % of the
+    corpus text."""
     docs_path = os.path.join(sf_dir, "documents.parquet")
-    fp = _input_fingerprint(docs_path, spark)
-    key = (
-        "capped_corpus_bands",
-        spark.sparkContext.applicationId,
-        sf_dir,
-        fp,
-        LSH_MAX_BUCKET,
-    )
-    hit = ephemeral.memo_get(key)
-    if hit is not None:
-        return hit
-    # same-path entries under a DIFFERENT fingerprint are stale — and
-    # worse than wasted storage: the CacheManager matches by logical
-    # plan, so with their frames still registered a rebuild would
-    # silently serve the OLD cached data. Evict them, then drop the
-    # (possibly stale) shared file-status cache for the path so the new
-    # scan re-lists the rewritten files.
-    if ephemeral.evict_stale_inputs(key[:3], fp, fp_pos=3):
+
+    def build():
+        held: list[DataFrame] = []
+
+        def hold(df: DataFrame) -> DataFrame:
+            held.append(df.cache())
+            return held[-1]
+
         try:
-            spark.catalog.refreshByPath(docs_path)
-        except Exception:
-            pass
-    holds: list[DataFrame] = []
-
-    def hold(df: DataFrame) -> DataFrame:
-        df = df.cache()
-        holds.append(df)
-        return df
-
-    try:
-        bands = hold(band_signatures_from(load_table(spark, "documents", sf_dir)))
-        capped = _drop_oversized_buckets(
-            bands, LSH_MAX_BUCKET, "capped_corpus_bands", cache_fn=hold
-        )
-    except BaseException:
-        # a failed build (e.g. the guard's eager count dies on executor
-        # loss) must not leak cached frames that no registry tracks —
-        # release what hold() pinned, then surface the error
-        for h in holds:
-            try:
+            bands = hold(band_signatures_from(load_table(spark, "documents", sf_dir)))
+            return (_drop_oversized_buckets(bands, LSH_MAX_BUCKET,
+                                            "capped_corpus_bands", cache_fn=hold),
+                    *held)
+        except BaseException:
+            # a failed build leaves no pinned frame that nothing tracks
+            for h in held:
                 h.unpersist(blocking=False)
-            except Exception:
-                pass
-        raise
-    return ephemeral.memo_put(key, capped, holds)
+            raise
+
+    # the declared-schema scan keys the entry without the schema
+    # inference job load_table pays, so a hit runs no Spark job
+    scan = spark.read.schema(SCHEMAS["documents"]).parquet(docs_path)
+    name = ("capped_corpus_bands", _input_fingerprint(docs_path, spark),
+            LSH_MAX_BUCKET)
+    return memo_stat(name, scan, sf_dir, build)[0]
 
 
 def write_lsh_index(docs: DataFrame, path: str) -> None:
@@ -1023,11 +994,10 @@ def q38_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     for true near-dups — no quadratic term anywhere. This is the declared
     100 TB near-dedup strategy; q36 validates its recall.
 
-    The capped band frame comes from the session memo
-    (:func:`capped_corpus_bands`), so the five queries composing this
-    one (q79, q89, q107, q126 and q38 itself) pay the signature pass and
-    the guard's eager drop-count aggregate ONCE per session per sf_dir,
-    not once per composing query."""
+    The capped band frame comes from the memo
+    (:func:`capped_corpus_bands`), so q38 and the queries built on it
+    (q79, q89, q107, q112, q126) pay the signature pass and the guard's
+    eager drop-count aggregate once per session and input."""
     return lsh_candidate_pairs(capped_corpus_bands(spark, sf_dir),
                                max_bucket_size=None)
 
@@ -1932,9 +1902,7 @@ def q112_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    pairs = lsh_candidate_pairs(
-        capped_corpus_bands(spark, sf_dir), max_bucket_size=None
-    )
+    pairs = q38_minhash_lsh_pairs(spark, sf_dir)
     fa = anchors.select(F.col("doc_id").alias("doc_a"), F.lit(1).alias("in_a"))
     fb = anchors.select(F.col("doc_id").alias("doc_b"), F.lit(1).alias("in_b"))
     cand = (

@@ -334,20 +334,14 @@ def _stride_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
-                   cents: DataFrame, top_n: int) -> DataFrame:
-    """Vectorized top-``top_n`` centroid cells per vector — the shared
-    kernel under :func:`ivf_assignments` (top_n=1) and
-    :func:`_ivf_probes` (top_n=N_PROBE).
-
-    Same shape as :func:`_pairwise_cosine_scan`: the BOUNDED centroid
-    set (K ≈ √N by the IVF sizing; guarded by the same
-    ``MAX_BROADCAST_QUERIES`` bound) collects once and ships via one
-    torrent ``sc.broadcast``; the corpus streams through ``mapInPandas``
-    Arrow batches. Ranking is (HALF_UP micro-units DESC, cell_id ASC),
-    equality-tested against the JVM expression formulation on both
-    centroid sources."""
-    spark = df.sparkSession
+def _gated_centroids(cents):
+    """The (cell_id, c_emb) centroid set as the pandas frame
+    :func:`_nearest_cells` broadcasts: one :func:`size_gate` collect at
+    ``MAX_BROADCAST_QUERIES`` (K ≈ √N by the IVF sizing), or ``cents``
+    itself when it is already that collected frame, so a caller that
+    assigns and probes over one centroid set collects it once."""
+    if not isinstance(cents, DataFrame):
+        return cents
     fits, cp = size_gate(cents.select("cell_id", "c_emb"),
                          MAX_BROADCAST_QUERIES, collect=True)
     if not fits:
@@ -357,6 +351,23 @@ def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
             "the broadcast bound use the two-level router "
             "(two_level_probes, docs/SCALE.md)"
         )
+    return cp
+
+
+def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
+                   cents, top_n: int) -> DataFrame:
+    """Vectorized top-``top_n`` centroid cells per vector — the shared
+    kernel under :func:`ivf_assignments` (top_n=1) and
+    :func:`_ivf_probes` (top_n=N_PROBE).
+
+    Same shape as :func:`_pairwise_cosine_scan`: the bounded centroid
+    set ``cents`` (a frame, or :func:`_gated_centroids`' collected set)
+    ships via one torrent ``sc.broadcast``; the corpus streams through
+    ``mapInPandas`` Arrow batches. Ranking is (HALF_UP micro-units DESC,
+    cell_id ASC), equality-tested against the JVM expression formulation
+    on both centroid sources."""
+    spark = df.sparkSession
+    cp = _gated_centroids(cents)
     if len(cp) == 0:
         # Empty centroid frame (empty corpus ⇒ K ≈ √N = 0 centroids):
         # the nearest-of-zero-cells relation is empty. Without this
@@ -417,10 +428,11 @@ def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
 
 
 def ivf_assignments(spark: SparkSession, sf_dir: str,
-                    centroids: DataFrame | None = None) -> DataFrame:
+                    centroids=None) -> DataFrame:
     """Assign every vector to its nearest centroid cell (IVF build side).
 
-    ``centroids`` is any (cell_id, c_emb) frame — production passes
+    ``centroids`` is any (cell_id, c_emb) frame, or its
+    :func:`_gated_centroids` collect — production passes
     :func:`kmeans_centroid_frame` (K ≈ √N); None falls back to the
     deterministic stride sample. Assignment is argmax cosine over the
     broadcast centroid set on the vectorized :func:`_nearest_cells`
@@ -432,7 +444,7 @@ def ivf_assignments(spark: SparkSession, sf_dir: str,
 
 def _ivf_probes(
     spark: SparkSession, sf_dir: str, queries: DataFrame | None = None,
-    centroids: DataFrame | None = None
+    centroids=None
 ) -> DataFrame:
     """(query_id, q_emb, cell_id): the top-N_PROBE cells per query —
     shared by q41, the bucketed-index probe, and the leave-one-out kNN
@@ -645,12 +657,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str,
     centroids, K ≈ √N) and the oracle-stable stride default share one
     probe/score/rank path. Recall vs exact q40 is tested for BOTH
     centroid sources."""
-    # resolve the default ONCE and cache it: assignment and probe
-    # selection each bound-probe + collect their centroid frame, so
-    # leaving the default to resolve inside each call re-ran the stride
-    # scan and re-broadcast an identical frame twice per query
-    cents = centroids if centroids is not None else scoped_cache(
-        _stride_centroids(spark, sf_dir)
+    # one gated collect serves both assignment and probe selection
+    cents = _gated_centroids(
+        centroids if centroids is not None else _stride_centroids(spark, sf_dir)
     )
     assigned = ivf_assignments(spark, sf_dir, centroids=cents)
     cand = _ivf_probes(spark, sf_dir, centroids=cents).join(assigned, "cell_id")

@@ -17,13 +17,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def assert_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = formatted_plan(df)
-    missing = [n for n in needles if n not in plan]
-    if missing:
-        raise AssertionError(f"plan is missing {missing}\n--- plan ---\n{plan}")
-
-
 def has_pushed_filters(df: DataFrame) -> bool:
     """True when at least one scan reports non-empty PushedFilters."""
     plan = formatted_plan(df)

@@ -12,7 +12,8 @@ BENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_bench_sweeps_queries_through_noop_sink(sf_dir, tmp_path):
     """Two queries on ``local[2]``: one JSON line with a positive noop
-    time for exactly those queries, a finalized AQE plan for each, and an
+    time and positive job counts (in total and before the action) for
+    exactly those queries, a finalized AQE plan for each, and an
     argparse error for a name the registry does not know."""
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="2",
                SPARK_GRAFT_DRIVER_MEM="1g")
@@ -26,6 +27,10 @@ def test_bench_sweeps_queries_through_noop_sink(sf_dir, tmp_path):
     assert got["sink"] == "noop" and got["cpus"] == 2
     assert sorted(got["queries"]) == names
     assert all(t > 0 for t in got["queries"].values())
+    for field in ("jobs", "jobs_before_action"):
+        assert sorted(got[field]) == names
+        assert got[field]["q01_pricing_summary"] > 0
+    assert all(got["jobs"][n] >= got["jobs_before_action"][n] for n in names)
     for name in names:
         assert "isFinalPlan=true" in (tmp_path / f"{name}.txt").read_text()
 

@@ -229,7 +229,7 @@ def test_dim_probe_fingerprint_guard_sees_partition_rewrite(
 
 
 def test_memo_stat_bounded_oldest_first(spark, tmp_path):
-    """memo_stat keeps at most STAT_MEMO_MAX entries and drops the
+    """memo_stat keeps at most MEMO_MAX entries and drops the
     oldest first: the newest statistic still hits, the oldest is
     measured again."""
     from mapreduce_framework_simple_spark import ephemeral
@@ -241,11 +241,11 @@ def test_memo_stat_bounded_oldest_first(spark, tmp_path):
         return ephemeral.memo_stat(("bound_test", i), df, str(tmp_path),
                                    lambda: calls.append(i) or i)
 
-    ephemeral._STAT_MEMO.clear()
-    n = ephemeral.STAT_MEMO_MAX + 1
+    ephemeral.clear_memo()
+    n = ephemeral.MEMO_MAX + 1
     for i in range(n):
         assert stat(i) == i
-    assert len(ephemeral._STAT_MEMO) == ephemeral.STAT_MEMO_MAX
+    assert len(ephemeral._MEMO) == ephemeral.MEMO_MAX
     assert stat(n - 1) == n - 1
     assert calls == list(range(n))
     assert stat(0) == 0
@@ -602,7 +602,7 @@ def test_q105_byte_gate_over_bound_unhinted_equal(spark, sf_dir, monkeypatch):
     assert "ResolvedHint" in analyzed(under), "under-bound branch lost its hint"
     hinted = under.toPandas().sort_values("doc_id")
     monkeypatch.setattr(T, "LM_BROADCAST_BYTES_BOUND", 0)
-    ephemeral._STAT_MEMO.clear()
+    ephemeral.clear_memo()
     n_handles0 = len(ephemeral._SCOPED)
     over = q105_bigram_lm(spark, sf_dir)
     assert "ResolvedHint" not in analyzed(over), "over-byte-bound kept the hint"
@@ -645,11 +645,11 @@ def test_q105_stats_memo_no_repeat_probe_and_miss_path_cache(spark, sf_dir):
     from mapreduce_framework_simple_spark.operators.text import q105_bigram_lm
 
     def lm_stats_entries():
-        return [k for k in ephemeral._STAT_MEMO if k[0] == "lm_stats"]
+        return [k for k in ephemeral._MEMO if k[0] == "lm_stats"]
 
     ephemeral.release_caches()
     spark.catalog.clearCache()
-    ephemeral._STAT_MEMO.clear()
+    ephemeral.clear_memo()
     try:
         n_handles0 = len(ephemeral._SCOPED)
         q105_bigram_lm(spark, sf_dir).count()

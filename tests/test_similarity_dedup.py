@@ -862,10 +862,12 @@ def test_capped_corpus_bands_memoized_across_queries(spark, sf_dir):
 
 
 def test_memo_rebuilds_after_dataset_rewrite(spark, tmp_path):
-    """The memo key folds in an input-files fingerprint, so a consumer
-    that REWRITES the dataset at the same path mid-session gets a fresh
-    build reflecting the new files — never stale capped bands (the
-    immutable-parquet premise, enforced rather than assumed)."""
+    """A consumer that REWRITES the corpus at the same path mid-session
+    gets a fresh build reflecting the new files, never stale capped
+    bands: the memo entry's name folds in the deep fingerprint of
+    documents.parquet, and the miss first evicts the superseded entry,
+    releasing its cached frames (the CacheManager matches cached data by
+    logical plan, so the rebuilt scan would otherwise read them)."""
     import pandas as pd
 
     from mapreduce_framework_simple_spark import ephemeral
@@ -885,16 +887,103 @@ def test_memo_rebuilds_after_dataset_rewrite(spark, tmp_path):
             ]
         ).to_parquet(sf / "documents.parquet")
 
+    def bands_entries():
+        return {k: held for k, (_, held) in ephemeral._MEMO.items()
+                if isinstance(k[0], tuple) and k[0][0] == "capped_corpus_bands"
+                and k[2] == str(sf)}
+
     try:
         write(3)
         first = D.capped_corpus_bands(spark, str(sf))
         assert first.count() == 3 * 4  # 4 bands per doc
+        (old_key, old_held), = bands_entries().items()
+        assert old_held and all(h.is_cached for h in old_held)
         write(5)  # same path, new corpus
         second = D.capped_corpus_bands(spark, str(sf))
         assert second is not first  # fingerprint changed → rebuilt
         assert second.count() == 5 * 4
+        assert old_key not in bands_entries()
+        assert len(bands_entries()) == 1
+        assert not any(h.is_cached for h in old_held)  # superseded, released
     finally:
         ephemeral.clear_memo()
+
+
+def test_memo_bound_lru_releases_frames_and_keys_on_application(
+    spark, tmp_path
+):
+    """The one memo holds at most MEMO_MAX entries and evicts the least
+    recently used first; eviction unpersists the cached frames an entry
+    holds; and an entry recorded under another application id never
+    hits, so a later session cannot be served a dead session's value."""
+    from mapreduce_framework_simple_spark import ephemeral as E
+
+    frames: dict[int, object] = {}
+
+    def put(i):
+        def build():
+            frames[i] = spark.range(i + 1).cache()
+            return frames[i]
+
+        # a distinct plan per entry: frame entries over one plan
+        # supersede each other
+        return E.memo_stat(("bound_frames", i), spark.range(i + 1),
+                           str(tmp_path), build)
+
+    def present(i):
+        return any(k[0] == ("bound_frames", i) for k in E._MEMO)
+
+    E.clear_memo()
+    try:
+        n = E.MEMO_MAX + 1
+        for i in range(n):
+            assert put(i) is frames[i]
+        assert len(E._MEMO) == E.MEMO_MAX
+        gone = [i for i in range(n) if not present(i)]
+        assert gone and gone == list(range(len(gone)))  # oldest first
+        assert all(not frames[i].is_cached for i in gone)
+        assert all(frames[i].is_cached for i in range(len(gone), n))
+        # a hit makes an entry the most recently used: the next
+        # insertion evicts the entry after it instead
+        oldest = len(gone)
+        assert put(oldest) is frames[oldest]
+        put(n)
+        assert present(oldest) and not present(oldest + 1)
+        # the same entry recorded under another application misses
+        key = next(k for k in E._MEMO if k[0] == ("bound_frames", oldest))
+        E._MEMO[(key[0], "app-of-another-session") + key[2:]] = E._MEMO.pop(key)
+        held = frames[oldest]
+        assert put(oldest) is not held
+    finally:
+        E.clear_memo()
+
+
+def test_q79_reuses_capped_bands_after_q38(spark, sf_dir):
+    """Once q38 has run in a session, q79 takes the capped band frame
+    from the memo and runs at most 3 Spark jobs before its action.
+    Without the hit it runs 6 (bands and hot-bucket guard rebuilt per
+    call) or 10 (q38 on lsh_candidate_pairs' own guard)."""
+    from mapreduce_framework_simple_spark import ephemeral as E
+    from mapreduce_framework_simple_spark.operators.dedup import (
+        q38_minhash_lsh_pairs,
+        q79_dedup_components,
+    )
+
+    sc = spark.sparkContext
+    E.clear_memo()
+    q38_minhash_lsh_pairs(spark, sf_dir).write.format("noop").mode(
+        "overwrite").save()
+    E.release_caches()
+    sc.setJobGroup("q79-after-q38", "q79 on a memo hit")
+    try:
+        q79_dedup_components(spark, sf_dir)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup("q79-after-q38"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        E.release_caches()
+    assert jobs <= 3, f"q79 ran {jobs} jobs before its action"
 
 
 def test_fingerprint_remote_scheme_never_stats(spark, sf_dir):
@@ -938,114 +1027,6 @@ def test_fingerprint_hadoop_listing_happy_path(spark, tmp_path):
     assert sum(int(e.rsplit(":", 2)[1]) for e in first) > 0
     pd.DataFrame({"x": list(range(50))}).to_parquet(d)  # rewrite, same path
     assert sorted(E._hadoop_listing(spark, f"file://{d}")) != sorted(first)
-
-
-def test_memo_lru_cap_and_stale_app_eviction(spark):
-    """The session memo is bounded: (a) inserting more than
-    MEMO_MAX_ENTRIES distinct keys evicts the least-recently-used entry
-    and unpersists its held frames; (b) entries recorded under a
-    different (stopped) SparkContext are evicted on the next put."""
-    from mapreduce_framework_simple_spark import ephemeral
-
-    ephemeral.clear_memo()
-    try:
-        # (b) a lingering entry from a dead context
-        ghost = spark.range(1).cache()
-        ephemeral._MEMO[("ghost",)] = ("app-of-a-stopped-context", ghost, [ghost])
-
-        frames = []
-        for i in range(ephemeral.MEMO_MAX_ENTRIES + 2):
-            h = spark.range(i + 1).cache()
-            h.count()
-            frames.append(h)
-            ephemeral.memo_put(("lru", i), h, [h])
-        assert ("ghost",) not in ephemeral._MEMO  # stale-app evicted
-        assert len(ephemeral._MEMO) == ephemeral.MEMO_MAX_ENTRIES
-        # the two oldest LRU keys are gone and their caches released
-        assert ("lru", 0) not in ephemeral._MEMO
-        assert ("lru", 1) not in ephemeral._MEMO
-        lvl = frames[0].storageLevel
-        assert not (lvl.useMemory or lvl.useDisk)
-        # a memo_get refreshes recency: the oldest surviving key outlives
-        # the next insertion after being touched
-        oldest = ("lru", 2)
-        assert ephemeral.memo_get(oldest) is not None
-        extra = spark.range(99).cache()
-        frames.append(extra)
-        ephemeral.memo_put(("lru", 99), extra, [extra])
-        assert oldest in ephemeral._MEMO
-        assert ("lru", 3) not in ephemeral._MEMO  # evicted instead
-    finally:
-        ephemeral.clear_memo()
-        for h in frames + [ghost]:
-            try:
-                h.unpersist(blocking=False)
-            except Exception:
-                pass
-
-
-def test_memo_get_misses_on_foreign_context_even_with_empty_holds(spark):
-    """memo_get must validate the entry's stored application id itself:
-    an entry with EMPTY holds skips the re-arm loop entirely, so without
-    the liveness check a frame bound to a stopped/foreign context would
-    be served as a hit and crash the caller at its first action instead
-    of producing the documented miss."""
-    from mapreduce_framework_simple_spark import ephemeral
-
-    ephemeral.clear_memo()
-    df = spark.range(3)
-    try:
-        # stored app id differs from the frame's live context → stale
-        ephemeral._MEMO[("foreign",)] = ("app-of-another-context", df, [])
-        assert ephemeral.memo_get(("foreign",)) is None
-        assert ("foreign",) not in ephemeral._MEMO  # evicted, not left
-        # sanity: a LIVE entry with empty holds still hits
-        ephemeral.memo_put(("live",), df, [])
-        assert ephemeral.memo_get(("live",)) is df
-    finally:
-        ephemeral.clear_memo()
-
-
-def test_evict_stale_inputs_tolerates_short_keys(spark):
-    """A prefix-matching key too short to carry the fingerprint slot is
-    malformed for the family — it must be evicted as stale, not raise
-    IndexError out of the caller's query."""
-    from mapreduce_framework_simple_spark import ephemeral
-
-    ephemeral.clear_memo()
-    df = spark.range(2)
-    try:
-        ephemeral.memo_put(("bands", "x"), df, [])          # short key
-        ephemeral.memo_put(("bands", "x", "fp1", 4), df, [])  # well-formed
-        n = ephemeral.evict_stale_inputs(("bands", "x"), "fp1", fp_pos=2)
-        assert n == 1  # the short key, evicted without raising
-        assert ("bands", "x") not in ephemeral._MEMO
-        assert ("bands", "x", "fp1", 4) in ephemeral._MEMO  # fp matches
-    finally:
-        ephemeral.clear_memo()
-
-
-def test_memo_reput_evicts_old_holds(spark):
-    """memo_put over an already-present key must unpersist the OLD
-    entry's held caches first: a plain overwrite would orphan them as
-    permanently-pinned executor blocks that neither LRU eviction nor
-    clear_memo can ever reach (they'd have no registry reference)."""
-    from mapreduce_framework_simple_spark import ephemeral
-
-    ephemeral.clear_memo()
-    old_h = spark.range(5).cache()
-    new_h = spark.range(6).cache()
-    try:
-        old_h.count()
-        ephemeral.memo_put(("reput",), old_h, [old_h])
-        ephemeral.memo_put(("reput",), new_h, [new_h])
-        lvl = old_h.storageLevel
-        assert not (lvl.useMemory or lvl.useDisk)  # old holds released
-        assert ephemeral.memo_get(("reput",)) is new_h
-    finally:
-        ephemeral.clear_memo()
-        for h in (old_h, new_h):
-            h.unpersist(blocking=False)
 
 
 def test_lsh_cap_default_reads_global_at_call_time(spark, monkeypatch):
@@ -1190,12 +1171,12 @@ def test_q36_fanout_memoized_per_session_and_input(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(D, "_jaccard_prefix_pairs", spy)
     D.q36_ngram_jaccard(spark, sf_dir).count()
     keys = [
-        k for k in E._STAT_MEMO
+        k for k in E._MEMO
         if k[0] == "jaccard_fanout" and k[1] == spark.sparkContext.applicationId
         and k[2] == sf_dir
     ]
     assert calls == [] and len(keys) == 1  # measured + stored
-    monkeypatch.setitem(E._STAT_MEMO, keys[0], 1e9)
+    monkeypatch.setitem(E._MEMO, keys[0], (1e9, []))
     D.q36_ngram_jaccard(spark, sf_dir).count()
     assert calls == ["prefix"]  # memo hit drove the dispatch
 
@@ -2007,7 +1988,7 @@ def test_prefix_packed_sizing_job_runs_once(spark, tmp_path):
 
     sc = spark.sparkContext
     sh = spark.createDataFrame(list(_KERNEL_ROWS), "doc_id long, sid long")
-    E._STAT_MEMO.clear()
+    E.clear_memo()
     sc.setJobGroup("packed-sizing-test", "packed sizing memo")
     try:
         D._jaccard_prefix_pairs(sh, str(tmp_path))  # plan only: no action
