@@ -436,17 +436,17 @@ def q36_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     identified by their 60-bit md5-derived integer id — see
     shingle_id_expr for why that is oracle-safe).
 
-    Kernel choice is a size-based planner `if`, mirroring q120's
-    dispatch: the measured naive-self-join fan-out
-    (:func:`_jaccard_join_fanout`, one aggregate over a 1/8 row-hash
-    sample, memoized by ``ephemeral.memo_stat``) picks the naive sid self-join below
-    ``JACCARD_FANOUT_DISPATCH`` — faster on ordinary corpora, where
-    prefix bookkeeping outweighs the blow-up it prevents — and the
-    PPJoin-style prefix kernel (:func:`_jaccard_prefix_pairs`) above it,
-    where frequency skew would make the naive join quadratic (crossover
-    measured cold-for-cold in tools/jaccard_crossover.py; the kernels
-    are equality-tested). q38's MinHash-LSH is the 100 TB path and this
-    operator is its ground-truth verifier.
+    Kernel choice is a size-based planner `if`: the measured
+    naive-self-join fan-out (:func:`_jaccard_join_fanout`, one aggregate
+    over a 1/8 row-hash sample, memoized by ``ephemeral.memo_stat``)
+    picks the naive sid self-join below ``JACCARD_FANOUT_DISPATCH`` —
+    faster on ordinary corpora, where prefix bookkeeping outweighs the
+    blow-up it prevents — and the PPJoin-style prefix kernel
+    (:func:`_jaccard_prefix_pairs`) above it, where frequency skew would
+    make the naive join quadratic (crossover measured cold-for-cold in
+    tools/jaccard_crossover.py; the kernels are equality-tested). q38's
+    MinHash-LSH is the 100 TB path and this operator is its ground-truth
+    verifier.
 
     The shared cache carries the per-doc shingle count ``__doc_n`` (one
     window exchange at materialization — round 13): the truth kernel's

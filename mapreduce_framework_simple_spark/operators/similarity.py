@@ -118,13 +118,12 @@ def _cosine_core():
       ulp of a .5 tie, so this parity is corpus-pinned by the oracle
       and path-equality tests, not universal.
     * ``top_k(sims, qids, nids, k)`` — keep mask over a (query ×
-      neighbor) matrix: never a self pair; all candidates when ``k`` is
-      None or a query has ≤ k of them; otherwise each candidate whose
-      rounded score is within one 6-dp quantum of the query's k-th
-      rounded score. The margin makes the kept rows a superset of any
-      rounded-order top-k whichever rounding mode settles a tie, so
-      the union of per-batch or per-chunk survivors always contains
-      the global answer.
+      neighbor) matrix: never a self pair; all candidates when a query
+      has ≤ k of them; otherwise each candidate whose rounded score is
+      within one 6-dp quantum of the query's k-th rounded score. The
+      margin makes the kept rows a superset of any rounded-order top-k
+      whichever rounding mode settles a tie, so the union of per-batch
+      or per-chunk survivors always contains the global answer.
 
     k-means assignment (``iterative._assign``) keeps its own BLAS
     unit-vector matmul on purpose: it is different arithmetic, and
@@ -159,7 +158,7 @@ def _cosine_core():
 
     def top_k(sims, qids, nids, k):
         not_self = qids[:, None] != nids[None, :]
-        if k is None or sims.shape[1] <= k:
+        if sims.shape[1] <= k:
             return not_self
         r6 = np.where(not_self, np.round(sims, 6), -np.inf)
         kth = -np.partition(-r6, k - 1, axis=1)[:, k - 1]
@@ -176,19 +175,18 @@ MAX_BROADCAST_QUERIES = 100_000  # documented bound: Q·dim·8B ≈ 50 MB at 64 
 _SCAN_CHUNK_ELEMS = 16_777_216
 
 
-def _pairwise_cosine_scan(em: DataFrame, ref, emit_top_k: int | None = None):
-    """Vectorized query-vs-corpus cosine kernel over the corpus frame
-    ``em`` (vec_id, embedding). The reference (QUERY) set ``ref`` is the
-    pandas frame a caller's :func:`size_gate` at ``MAX_BROADCAST_QUERIES``
-    collected; it ships via ``sc.broadcast``, so executors hold ONE
-    torrent copy instead of a per-task closure payload, and the corpus
-    streams through ``mapInPandas`` Arrow batches. Corpus-sized reference
-    sets use the block kernel (:func:`_block_pairs_cosine`) or LSH.
+def _pairwise_cosine_scan(em: DataFrame, ref, k: int):
+    """Vectorized query-vs-corpus cosine top-k kernel over the corpus
+    frame ``em`` (vec_id, embedding). The reference (QUERY) set ``ref``
+    is the pandas frame q40's :func:`size_gate` at
+    ``MAX_BROADCAST_QUERIES`` collected; it ships via ``sc.broadcast``,
+    so executors hold ONE torrent copy instead of a per-task closure
+    payload, and the corpus streams through ``mapInPandas`` Arrow
+    batches. Corpus-sized reference sets use the block kernels
+    (:func:`_block_topk_cosine`, :func:`_block_pairs_cosine`) or LSH.
 
     Emits (query_id=ref id, neighbor_id=corpus id, cos_sim UNROUNDED),
-    pruned per batch by the core's margin ``top_k`` when ``emit_top_k``
-    is set. (Threshold-style scans belong to the block kernel, which
-    carries the half-quantum prefilter.)
+    pruned per batch by the core's margin ``top_k`` at ``k``.
     """
     spark = em.sparkSession
     schema = "query_id long, neighbor_id long, cos_sim_raw double"
@@ -228,7 +226,7 @@ def _pairwise_cosine_scan(em: DataFrame, ref, emit_top_k: int | None = None):
                 sims = core.dots(rchunk, mat) / (
                     rnorm[c0:c0 + step][:, None] * bnorm[None, :])
                 qids = ref_ids[c0:c0 + step]
-                ii, jj = np.nonzero(core.top_k(sims, qids, ids, emit_top_k))
+                ii, jj = np.nonzero(core.top_k(sims, qids, ids, k))
                 out_q.append(qids[ii])
                 out_n.append(ids[jj])
                 out_c.append(sims[ii, jj])
@@ -275,7 +273,7 @@ def q40_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not fits:
         raise ValueError(f"query set exceeds {MAX_BROADCAST_QUERIES} vectors; use "
                          "the block or LSH kernels for corpus-scale sets")
-    scored = _pairwise_cosine_scan(em, ref, emit_top_k=TOP_K).select(
+    scored = _pairwise_cosine_scan(em, ref, TOP_K).select(
         "query_id",
         "neighbor_id",
         F.round(F.col("cos_sim_raw"), 6).alias("cos_sim"),
@@ -673,7 +671,7 @@ def ann_two_level_topk(spark: SparkSession, sf_dir: str,
     the K > MAX_BROADCAST_QUERIES regime: index assignment via
     :func:`two_level_assignments`, probe selection via
     :func:`two_level_probes`, exact-cosine rank via the same
-    :func:`_score_and_rank_candidates` tail as q41/q120, so the scoring
+    :func:`_score_and_rank_candidates` tail as q41, so the scoring
     rule cannot drift between the flat and routed paths. Recall vs the
     exact q40 is tested on the stride layers."""
     assigned = two_level_assignments(spark, sf_dir, centroids, meta_centroids)
@@ -927,12 +925,10 @@ def _block_pairs_cosine(spark: SparkSession, sf_dir: str,
 
 def _block_topk_cosine(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """Directed per-query top-k over the exact all-pairs cosine, on the
-    block self-join kernel — the corpus-scale fallback when the query set
-    IS the corpus and therefore cannot ship under
-    ``MAX_BROADCAST_QUERIES`` (q120's self-kNN beyond the broadcast
-    bound). Emits (query_id, neighbor_id, cos_raw) rows, pruned per chunk
-    by the core's margin ``top_k``; the caller's window does the final
-    rank.
+    block self-join kernel — q120's self-kNN, where the query set IS the
+    corpus and so never ships to the driver. Emits (query_id,
+    neighbor_id, cos_raw) rows, pruned per chunk by the core's margin
+    ``top_k``; the caller's window does the final rank.
 
     Scale: same shuffle shape as :func:`_block_pairs_cosine` (N·(B+1)
     rows, B(B+1)/2 tasks, chunked O(CH²) temporaries); output is
@@ -1383,53 +1379,20 @@ def _index_meta_centroids(spark: SparkSession,
         return None
 
 
-# Scan-pruning dispatch bound for ivf_probe_bucketed: up to this many
-# DISTINCT probed cells the scan predicate is a driver-collected
-# `isin` IN-list (planner-evaluated partition pruning — the cheapest
-# read when the deduplicated list stays planner-sized). Past the bound
-# the probe frame stays DISTRIBUTED and a broadcast semi-join on
-# cell_id prunes the bucketed scan instead (dynamic partition pruning
-# does the file skipping) — the join side is the same bound class as
-# MAX_BROADCAST_QUERIES: cell ids ≈ sub-MB broadcast, never
-# corpus-sized.
-#
-# The bound is MEASURED: both branches timed cold over a 10⁵-cell
-# bucketed layout across distinct-cell counts
-# (docs/probe_crossover_r11.json). The IN-list branch wins below ~300
-# cells (its only rival cost is the semi branch's flat ~0.1–0.2 s
-# DPP-subquery + broadcast overhead) and LOSES from ~500 up, with a
-# penalty that grows ~linearly in the literal count (0.83 s vs 0.59 s
-# at 10³; 8.2 s vs 3.6 s at 10⁴; 73 s vs 33 s at 10⁵): expression
-# construction, partition-pruning evaluation and plan serialization are
-# all per-literal. Too LOW a bound costs at most the semi branch's flat
-# overhead; too HIGH an unbounded planner stall — so the bound sits at
-# 384, inside the [300, 500] crossover and nearer its isin-wins edge. A
-# second sweep at K=10⁴ shows the crossover moves DOWN with K, so 384's
-# regret stays ≤0.25 s at both measured Ks. Typical probe sets (17–65
-# distinct cells at the test SFs) stay on the IN-list branch; both
-# branches are equality- and plan-tested either side of the bound.
-PROBE_ISIN_MAX_CELLS = 384
-
-
 def ivf_probe_bucketed(spark: SparkSession, sf_dir: str, index_path: str) -> DataFrame:
     """Approximate top-k against the bucketed IVF index — q41's answer,
-    but the candidate read is PARTITION-PRUNED: the probed cell ids
-    (a few ints per query, from the tiny query×centroid ranking —
-    bounded by Q·N_PROBE and by K, never corpus-sized) prune the index
-    scan so only probed directories are read. HOW they prune is a
-    measured-size dispatch (``PROBE_ISIN_MAX_CELLS``): a driver-collected
-    ``isin`` IN-list while the distinct-cell list is planner-sized, a
-    broadcast LEFT SEMI join on ``cell_id`` (dynamic partition pruning
-    skips unprobed directories at runtime) past it — the dispatch and
-    the IN-list share one size gate, so no driver structure ever
-    exceeds the bound.
-    The probe geometry comes from the centroids stored WITH the index
-    (:func:`_index_centroids`). Tests assert result equality with the
-    recompute formulation and the pruning shape of both branches. A
-    two-level index (built with ``meta_centroids=``) is detected by its
-    ``_meta_centroids`` sidecar and probed with the ROUTED selection —
-    read geometry always matches build geometry, routing layer
-    included."""
+    but the candidate read is PARTITION-PRUNED: a broadcast LEFT SEMI
+    join on the probed cell ids (a few ints per query, from the tiny
+    query×centroid ranking — bounded by Q·N_PROBE and by K, never
+    corpus-sized) prunes the index scan, and dynamic partition pruning
+    skips unprobed directories at runtime. No driver structure holds
+    the probe set. The probe geometry comes from the centroids stored
+    WITH the index (:func:`_index_centroids`). Tests assert result
+    equality with q41, equality with DPP disabled, and the pruning
+    shape of the plan. A two-level index (built with
+    ``meta_centroids=``) is detected by its ``_meta_centroids`` sidecar
+    and probed with the ROUTED selection — read geometry always matches
+    build geometry, routing layer included."""
     cents = _index_centroids(spark, index_path)
     meta = _index_meta_centroids(spark, index_path)
     probes = scoped_cache(
@@ -1437,29 +1400,19 @@ def ivf_probe_bucketed(spark: SparkSession, sf_dir: str, index_path: str) -> Dat
         if meta is not None
         else _ivf_probes(spark, sf_dir, centroids=cents)
     )
-    # probes is cached so the size gate, the pruning side and the
-    # candidate join share one computation of the centroid ranking
-    cells = probes.select("cell_id").distinct()
-    idx = spark.read.parquet(index_path)
-    fits, rows = size_gate(cells, PROBE_ISIN_MAX_CELLS, collect=True)
-    if fits:
-        idx = idx.where(F.col("cell_id").isin(sorted(rows["cell_id"].tolist())))
-    else:
-        # `cell_id >= 0` is the index CONTRACT (enforced at build by
-        # write_ivf_index), restated here because Catalyst's dynamic
-        # partition pruning only inserts its runtime subquery when the
-        # filtering side carries a likely-selective predicate
-        # (PartitionPruning.hasPartitionPruningFilter) — the probe
-        # side's real selectivity (Q·N_PROBE of K cells) hides inside
-        # the cached plan. With it, the bucketed scan's PartitionFilters
-        # gain dynamicpruningexpression(cell_id IN <subquery>) reusing
-        # the semi-join's broadcast: file skipping at runtime, no
-        # driver-sized structure anywhere.
-        idx = idx.join(
-            F.broadcast(cells.where(F.col("cell_id") >= 0)),
-            "cell_id",
-            "left_semi",
-        )
+    # probes is cached so the pruning side and the candidate join share
+    # one computation of the centroid ranking.
+    # `cell_id >= 0` is the index CONTRACT (enforced at build by
+    # write_ivf_index), restated here because Catalyst's dynamic
+    # partition pruning only inserts its runtime subquery when the
+    # filtering side carries a likely-selective predicate
+    # (PartitionPruning.hasPartitionPruningFilter) — the probe side's
+    # real selectivity (Q·N_PROBE of K cells) hides inside the cached
+    # plan. With it, the bucketed scan's PartitionFilters gain
+    # dynamicpruningexpression(cell_id IN <subquery>) reusing the
+    # semi-join's broadcast.
+    cells = probes.select("cell_id").distinct().where(F.col("cell_id") >= 0)
+    idx = spark.read.parquet(index_path).join(F.broadcast(cells), "cell_id", "left_semi")
     # the probes cache stays live for the returned (lazy) plan: it is
     # Q·N_PROBE rows — bounded driver-of-the-query state, one small DF
     return _score_and_rank_candidates(probes.join(idx, "cell_id"))
@@ -1677,34 +1630,22 @@ def q120_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding space separates its labels, run before trusting embeddings
     for curation. Complements q109 (centroid parametric twin).
 
-    Scale: kernel choice is a size gate — under the documented
-    broadcast bound its collected rows ship as the q40 kernel's
-    reference set (per-batch top-k pruning, self excluded in-kernel);
-    beyond it the scan switches AUTOMATICALLY to the directed block
-    self-join kernel (:func:`_block_topk_cosine` — same chunked
-    distributed shape as q42, per-chunk top-k pruning), so a
-    corpus-sized self-kNN never attempts a corpus broadcast. Both
-    kernels emit margin-pruned supersets of the global rounded top-k;
-    the one window shuffle carries O(N·k·blocks-or-batches) rows, not
-    N². Cosines
-    are rounded to 6 dp before ranking, so neighbor order cannot flip
-    across engines. Exact self-kNN work stays quadratic by definition —
-    the measured subquadratic audit for 100 TB use is
-    :func:`ivf_knn_confusion` (same vote rule, IVF-probed candidates,
-    agreement-tested against this query)."""
+    Scale: one kernel at every size, the directed block self-join
+    (:func:`_block_topk_cosine` — same chunked distributed shape as
+    q42, per-chunk margin top-k pruning, self excluded in-kernel); the
+    corpus never reaches the driver. The kernel emits a margin-pruned
+    superset of the global rounded top-k, so the one window shuffle
+    carries O(N·k·blocks) rows, not N². Cosines are rounded to 6 dp
+    before ranking, so neighbor order cannot flip across engines. Exact
+    self-kNN work stays quadratic by definition — the measured
+    subquadratic audit for 100 TB use is :func:`ivf_knn_confusion`
+    (same vote rule, IVF-probed candidates, agreement-tested against
+    this query)."""
     em = load_table(spark, "embeddings", sf_dir)
-    fits, ref = size_gate(em.select("vec_id", "embedding"),
-                          MAX_BROADCAST_QUERIES, collect=True)
-    if fits:
-        scored_raw = _pairwise_cosine_scan(em, ref, emit_top_k=KNN_K)
-    else:
-        scored_raw = _block_topk_cosine(spark, sf_dir, KNN_K).withColumnRenamed(
-            "cos_raw", "cos_sim_raw"
-        )
-    scored = scored_raw.select(
+    scored = _block_topk_cosine(spark, sf_dir, KNN_K).select(
         "query_id",
         "neighbor_id",
-        F.round(F.col("cos_sim_raw"), 6).alias("cos_sim"),
+        F.round(F.col("cos_raw"), 6).alias("cos_sim"),
     )
     from pyspark.sql import Window
 

@@ -375,31 +375,32 @@ def test_lsh_quality_full_referee_matches_oracle(spark, sf_dir):
     assert int(sdf["n_truth"].iloc[0]) > 0
 
 
-def test_q120_routes_to_block_kernel_beyond_bound(spark, sf_dir, monkeypatch):
-    """The SURVEY-promised planner `if`: a corpus-sized reference set must
-    dispatch q120 to the distributed block top-k kernel — no broadcast
-    kernel call, identical confusion matrix."""
-    from mapreduce_framework_simple_spark.operators import similarity as S
+def test_q120_and_bucketed_probe_gate_nothing(spark, sf_dir, tmp_path, monkeypatch):
+    """q120 runs one kernel at every size and the bucketed IVF probe one
+    pruning mechanism, so neither takes a size gate of its own: q120
+    calls no ``size_gate`` at all (its plan is the cogrouped block
+    self-join), and the probe's only gate is the centroid refusal bound
+    inside ``_gated_centroids``."""
+    import sys
 
-    def canon(pdf):
-        return pdf.sort_values(["label", "pred_label"]).reset_index(drop=True)
-
-    baseline = canon(S.q120_knn_accuracy(spark, sf_dir).toPandas())
-
-    monkeypatch.setattr(S, "MAX_BROADCAST_QUERIES", 10)
-
-    def forbid(*a, **k):
-        raise AssertionError("broadcast kernel must not run beyond the bound")
-
-    monkeypatch.setattr(S, "_pairwise_cosine_scan", forbid)
-    routed_df = S.q120_knn_accuracy(spark, sf_dir)
+    import mapreduce_framework_simple_spark.operators.similarity as S
     from mapreduce_framework_simple_spark.plans.explain import formatted_plan
 
-    # the routed plan is the distributed cogrouped block kernel — the
-    # corpus appears only in scans/joins/FlatMapCoGroupsInPandas
-    assert "FlatMapCoGroupsInPandas" in formatted_plan(routed_df)
-    routed = canon(routed_df.toPandas())
-    assert routed.equals(baseline) and len(routed) > 0
+    path = str(tmp_path / "ivf_gate_idx")
+    S.write_ivf_index(spark, sf_dir, path)
+    calls = []
+    real = S.size_gate
+
+    def spy(df, bound, **kw):
+        calls.append(sys._getframe(1).f_code.co_name)
+        return real(df, bound, **kw)
+
+    monkeypatch.setattr(S, "size_gate", spy)
+    q120 = S.q120_knn_accuracy(spark, sf_dir)
+    assert calls == []
+    assert "FlatMapCoGroupsInPandas" in formatted_plan(q120)
+    S.ivf_probe_bucketed(spark, sf_dir, path)
+    assert calls and set(calls) == {"_gated_centroids"}, calls
 
 
 def test_q42_plan_is_distributed_cogroup(spark, sf_dir):
@@ -488,45 +489,34 @@ def test_ivf_bucketed_probe_prunes_partitions(spark, sf_dir, tmp_path):
     assert g[["query_id", "neighbor_id", "rnk"]].equals(e[["query_id", "neighbor_id", "rnk"]])
 
 
-def test_ivf_probe_isin_to_join_dispatch(spark, sf_dir, tmp_path, monkeypatch):
-    """Past PROBE_ISIN_MAX_CELLS distinct probed cells the bucketed
-    probe must stop collecting a driver IN-list (a 10⁵-literal
-    predicate bloats the plan and per-file evaluation — docs/SCALE.md)
-    and prune the bucketed scan with a broadcast LEFT SEMI join on
-    cell_id, letting dynamic partition pruning skip unprobed
-    directories at runtime. Below the bound the plan keeps the IN-list
-    partition filter and no pruning join. Results identical either
-    way — only the pruning mechanism dispatches."""
+def test_ivf_probe_prunes_with_semi_join_dpp(spark, sf_dir, tmp_path):
+    """The bucketed probe prunes the index scan with a broadcast LEFT
+    SEMI join on cell_id, and dynamic partition pruning skips unprobed
+    directories at runtime: no driver IN-list of probed cells (a
+    10⁵-literal predicate bloats the plan and per-file evaluation —
+    docs/SCALE.md). Rows equal q41's."""
     import mapreduce_framework_simple_spark.operators.similarity as S
     from mapreduce_framework_simple_spark.plans.explain import formatted_plan
 
-    path = str(tmp_path / "ivf_dispatch_idx")
+    path = str(tmp_path / "ivf_semi_idx")
     S.write_ivf_index(spark, sf_dir, path)
     cols = ["query_id", "neighbor_id", "rnk"]
 
-    below = S.ivf_probe_bucketed(spark, sf_dir, path)
-    below_plan = formatted_plan(below)
-    pf = below_plan.split("PartitionFilters", 1)[1][:300]
-    # literal IN-list pruning (Catalyst renders large lists as INSET)
-    assert "cell_id" in pf and ("INSET" in pf or " IN " in pf)
-    assert "LeftSemi" not in below_plan      # no join-based pruning below bound
-    b = below.toPandas().sort_values(cols).reset_index(drop=True)
-
-    monkeypatch.setattr(S, "PROBE_ISIN_MAX_CELLS", 1)
-    past = S.ivf_probe_bucketed(spark, sf_dir, path)
-    past_plan = formatted_plan(past)
-    assert "LeftSemi" in past_plan  # distributed pruning join on cell_id
-    # the collect is gated behind the bound: no IN-list literal survives
-    pf_past = past_plan.split("PartitionFilters", 1)[1][:300]
-    assert "INSET" not in pf_past and " IN (" not in pf_past
+    got = S.ivf_probe_bucketed(spark, sf_dir, path)
+    plan = formatted_plan(got)
+    assert "LeftSemi" in plan  # distributed pruning join on cell_id
+    # no IN-list literal (Catalyst renders large lists as INSET)
+    pf = plan.split("PartitionFilters", 1)[1][:300]
+    assert "INSET" not in pf and " IN (" not in pf
     # DPP: the bucketed scan's partition filter is the runtime subquery
-    assert "dynamicpruning" in past_plan.lower()
-    p = past.toPandas().sort_values(cols).reset_index(drop=True)
-    assert p[cols].equals(b[cols])
+    assert "dynamicpruning" in plan.lower()
+    b = got.toPandas().sort_values(cols).reset_index(drop=True)
+    e = S.q41_ann_ivf(spark, sf_dir).toPandas().sort_values(cols).reset_index(drop=True)
+    assert b[cols].equals(e[cols])
 
-    # DPP is a PERFORMANCE layer for the join branch, never a
-    # correctness dependency: with the optimizer rule disabled the
-    # semi-join alone must still produce the identical answer
+    # DPP is a PERFORMANCE layer, never a correctness dependency: with
+    # the optimizer rule disabled the semi-join alone must still produce
+    # the identical answer
     dpp_key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
     old = spark.conf.get(dpp_key)
     spark.conf.set(dpp_key, "false")
@@ -1342,11 +1332,8 @@ def test_ivf_knn_audit_agrees_with_exact(spark, sf_dir, tmp_path):
     n_corpus = em.count()
 
     # exact predictions: q120's kernel + the SAME shared vote rule
-    ref = em.select("vec_id", "embedding").toPandas()
-    scored = S._pairwise_cosine_scan(
-        em, ref, emit_top_k=S.KNN_K
-    ).select(
-        "query_id", "neighbor_id", F.round(F.col("cos_sim_raw"), 6).alias("cos_sim")
+    scored = S._block_topk_cosine(spark, sf_dir, S.KNN_K).select(
+        "query_id", "neighbor_id", F.round(F.col("cos_raw"), 6).alias("cos_sim")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     top = scored.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= S.KNN_K)
@@ -1762,8 +1749,8 @@ def test_cosine_core_ships_by_value(tmp_path):
 
 def test_cosine_core_top_k_matches_bruteforce():
     """The core's vectorized margin top-k against the per-query rule it
-    encodes: drop self; keep every candidate when k is None or there
-    are ≤ k of them; otherwise keep rounded scores ≥ the k-th rounded
+    encodes: drop self; keep every candidate when there are ≤ k of
+    them; otherwise keep rounded scores ≥ the k-th rounded
     score − 1e-6. Scores sit on a 6-dp grid with sub-quantum jitter, so
     rounded ties (and near-ties one quantum below the k-th) are forced;
     the self id is present in some query rows and absent in others."""
@@ -1781,13 +1768,13 @@ def test_cosine_core_top_k_matches_bruteforce():
         nids = rng.permutation(100)[:nn].astype("int64")
         qids = np.where(rng.rand(nq) < 0.5, rng.choice(nids, nq),
                         1000 + np.arange(nq)).astype("int64")
-        for k in (None, 1, 2, 3, nn - 1, nn, nn + 1):
-            if k is not None and k < 1:
+        for k in (1, 2, 3, nn - 1, nn, nn + 1):
+            if k < 1:
                 continue
             got = core.top_k(sims, qids, nids, k)
             for i in range(nq):
                 cand = [j for j in range(nn) if nids[j] != qids[i]]
-                if k is None or len(cand) <= k:
+                if len(cand) <= k:
                     want = set(cand)
                 else:
                     r6 = {j: np.round(sims[i, j], 6) for j in cand}
@@ -1814,7 +1801,7 @@ def test_zero_norm_vectors_score_zero_not_nan(spark, sf_dir):
         [(10**9, zero), (10**9 + 1, one)], "vec_id long, embedding array<double>"
     )
     out = S._pairwise_cosine_scan(
-        S.load_table(spark, "embeddings", sf_dir), ref.toPandas()
+        S.load_table(spark, "embeddings", sf_dir), ref.toPandas(), S.TOP_K
     ).toPandas()
     zq = out[out["query_id"] == 10**9]
     assert len(zq) > 0 and (zq["cos_sim_raw"] == 0.0).all()
