@@ -875,25 +875,7 @@ def incremental_lsh_candidates(
         # correct probe result against an empty corpus is no candidates.
         # Anything else (typo'd path, corrupted parts, IO/permission
         # errors) must FAIL, not silently admit the batch as dup-free.
-        # Match the STRUCTURED error class (getCondition on Spark 4,
-        # getErrorClass before), falling back to the message text only
-        # when no class is available.
-        cond = None
-        for attr in ("getCondition", "getErrorClass"):
-            getter = getattr(e, attr, None)
-            if getter is not None:
-                try:
-                    cond = getter()
-                except Exception:
-                    cond = None
-                if cond:
-                    break
-        is_empty_index = (
-            cond == "UNABLE_TO_INFER_SCHEMA"
-            if cond
-            else "Unable to infer schema" in str(e)
-        )
-        if is_empty_index:
+        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
             return spark.createDataFrame(
                 [], "new_doc_id long, corpus_doc_id long"
             )
@@ -1115,7 +1097,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     action total instead of 2 shuffles per propagation round. Beyond
     the bound the distributed loop runs: each round joins
     current labels across edges and takes the elementwise min,
-    terminating when a round changes no label (one count per round).
+    terminating when a round changes no label (one count per round,
+    the action that also writes the round's lazy checkpoint).
     Label count is monotone non-increasing, so rounds ≤ graph diameter
     ≤ max_iter for any real dedup graph (components are tiny cliques).
 
@@ -1174,10 +1157,10 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         # localCheckpoint, not cache: each round's plan references the
         # previous round's join, so without lineage truncation the
         # logical plan grows per iteration and Catalyst re-optimization
-        # OOMs the driver by ~10 rounds on long-diameter graphs (same
-        # trade as pagerank's loop, iterative.py:197 — blocks are
-        # unreplicated executor storage; an executor loss restarts the
-        # call).
+        # OOMs the driver by ~10 rounds on long-diameter graphs (the
+        # same trade as pagerank's loop — blocks are unreplicated
+        # executor storage; an executor loss restarts the call). Lazy,
+        # so the changed-count below is the action that writes it.
         merged = (
             labels.join(neighbor_min, labels.node == F.col("node2"), "left")
             .select(
@@ -1187,7 +1170,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
                     "label"
                 ),
             )
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         changed = merged.where(F.col("label") != F.col("old_label")).count()
         # the previous round's frame is dead weight from here — release

@@ -213,11 +213,17 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     distributes every node's rank over its out-edges and re-aggregates,
     with the damping teleport term.
 
-    Spark-first shape: out-degrees computed once and cached; one round =
-    one equi-join (rank ⋈ edges) + one partial-aggregated shuffle keyed
-    by dst. Superseded rank caches are unpersisted every round (the
-    connected-components discipline). Returns (ranks, per-round L1
-    deltas — monotonically shrinking for any graph).
+    Spark-first shape, the same round as ``dedup.connected_components``:
+    out-degrees ride on the distinct edge list from the start (a window
+    count; one cached ``(src, dst, out_deg)`` frame). One round = one
+    equi-join (rank ⋈ edges) + one partial-aggregated shuffle keyed by
+    dst, merged into a lazily checkpointed frame that carries
+    ``old_rank`` beside ``rank``. The round's L1-delta aggregate over
+    that frame is its one action: it materializes the checkpoint and
+    yields the delta, with no new-vs-old join. The superseded checkpoint
+    is released every round, so storage stays O(1) frames. Returns
+    (ranks, per-round L1 deltas — monotonically shrinking for any
+    graph).
 
     Scale: state is one (node, rank) row per node; per-round cost is one
     shuffle of the edge list — the same shape GraphX/Pregel executes.
@@ -231,77 +237,68 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
        (collect / write) within the same query scope; consuming it later
        fails LOUDLY ("checkpoint block not found") rather than silently
        recomputing — chosen over pinning a node-sized frame per call."""
+    from pyspark.sql import Window
+
     from mapreduce_framework_simple_spark.ephemeral import scoped_cache
 
     # scoped_cache, not bare .cache(): an exception mid-loop (executor
     # OOM, retry exhaustion in the delta collect) would skip the explicit
-    # unpersists below and pin all four frames for the session — the
-    # scoped registry frees them at the next query boundary regardless
-    e = scoped_cache(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    )
-    nodes = scoped_cache(
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
+    # unpersists below and pin both frames for the session — the scoped
+    # registry frees them at the next query boundary regardless
+    ed = scoped_cache(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
+        .withColumn("out_deg", F.count("*").over(Window.partitionBy("src")))
     )
-    deg = scoped_cache(e.groupBy("src").agg(F.count("*").alias("out_deg")))
-    ranks = scoped_cache(nodes.withColumn("rank", F.lit(1.0)))
+    ranks = scoped_cache(
+        ed.select(F.col("src").alias("node"))
+        .unionAll(ed.select(F.col("dst").alias("node")))
+        .distinct()
+        .withColumn("rank", F.lit(1.0))
+    )
+    cached = ranks  # the handle actually holding each round's blocks
     deltas: list[float] = []
     for _ in range(n_iter):
-        contribs = (
-            ranks.join(deg, ranks.node == deg.src, "inner")
-            .join(e, "src")
-            .select(F.col("dst").alias("node2"), (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy("node2")
-            .agg(F.sum("c").alias("in_mass"))
+        in_mass = (
+            ranks.join(ed, ranks.node == ed.src)
+            .groupBy(F.col("dst").alias("node2"))
+            .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("in_mass"))
         )
-        new_ranks = (
-            ranks.join(contribs, ranks.node == F.col("node2"), "left")
+        # localCheckpoint, not cache: each round's plan references the
+        # previous round's joins, so without truncation the logical plan
+        # doubles per iteration and the driver OOMs just PRINTING it by
+        # ~8 rounds. Lazy, so the delta aggregate below is the action
+        # that writes it. (Blocks are unreplicated executor storage: an
+        # executor loss restarts the pagerank call — the trade MLlib
+        # makes with periodic checkpointing.)
+        merged = (
+            ranks.join(in_mass, ranks.node == F.col("node2"), "left")
             .select(
                 "node",
+                F.col("rank").alias("old_rank"),
                 (
                     F.lit(1.0 - damping)
                     + F.lit(damping) * F.coalesce(F.col("in_mass"), F.lit(0.0))
                 ).alias("rank"),
             )
-            # localCheckpoint, not cache: each round's plan references the
-            # previous round's JOINS, so without truncation the logical
-            # plan doubles per iteration and the driver OOMs just PRINTING
-            # it by ~8 rounds. Truncation keeps plans O(1) per round.
-            # (Blocks are unreplicated executor storage: an executor loss
-            # restarts the pagerank call — acceptable for an iterative
-            # driver loop, same trade MLlib makes with periodic
-            # checkpointing.)
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-        delta = (
-            new_ranks.alias("n")
-            .join(ranks.alias("o"), "node")
-            .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("d"))
-            .collect()[0]["d"]
-        )
+        delta = merged.agg(F.sum(F.abs(F.col("rank") - F.col("old_rank")))).first()[0]
         # empty graph: sum over zero rows is NULL — treat as converged
         deltas.append(float(delta) if delta is not None else 0.0)
-        # frees the round-1 CACHE via unpersist; later rounds' frames are
-        # localCheckpoints whose blocks the CacheManager does NOT track
-        # (unpersist() no-ops on them) — release_local_checkpoint frees
-        # the superseded internal-RDD blocks deterministically instead of
-        # waiting for a JVM GC to let the ContextCleaner catch up, so
-        # storage stays O(1) frames rather than O(rounds)
-        if not release_local_checkpoint(ranks):
-            ranks.unpersist()
-        ranks = new_ranks
-    e.unpersist()
-    nodes.unpersist()
-    deg.unpersist()
-    # the returned frame is a materialized checkpoint — register it for
-    # the (localCheckpoint-aware) query-boundary release so its blocks
-    # cannot outlive the query that built them. LIFETIME CONTRACT: the
-    # frame is QUERY-SCOPED — a checkpoint cannot recompute once its
-    # blocks are released, so act on it before the next release_caches()
-    # boundary (the queries() protocol's materialize-then-release order)
-    scoped_release(ranks)
+        # round 1 frees the seed CACHE via unpersist; later rounds free
+        # the superseded checkpoint through `cached`, the handle whose
+        # plan is the LogicalRDD — release_local_checkpoint declines a
+        # projection of it, and unpersist() no-ops on a checkpoint
+        if not release_local_checkpoint(cached):
+            cached.unpersist()
+        cached = merged
+        ranks = merged.select("node", "rank")
+    ed.unpersist()
+    # LIFETIME CONTRACT: the returned frame is QUERY-SCOPED — a
+    # checkpoint cannot recompute once the query-boundary release frees
+    # its blocks, so act on it before the next release_caches()
+    scoped_release(cached)
     return ranks, deltas
 
 

@@ -456,34 +456,6 @@ def stream_enrich_static(
     return events.join(F.broadcast(dim), on, how)
 
 
-def _cents_accumulator():
-    """Build THE batch accumulator for the stateful user-totals pair —
-    one (pdf, cnt, nval, cents) -> (cnt, nval, cents) step applying the
-    module's exact-cents discipline: HALF_UP (away from zero) like
-    Spark's F.round in the batch twin — pandas .round() is half-even and
-    would disagree on exactly-representable ties (e.g. 20.625*100 ==
-    2062.5); NULL values contribute 0 AND are counted separately (F.sum
-    skips nulls but returns NULL for an ALL-null group, so the emit
-    sites key on nval; a bare astype would raise on NaN and kill the
-    stream). ONE definition consumed by both stateful operators
-    (applyInPandasWithState and transformWithStateInPandas) so their
-    promised batch≡stream equality cannot drift apart on the rounding
-    rule. Returned as a NESTED function: the stateful closures capture
-    it by value (cloudpickle ships module-level functions by reference,
-    which breaks executors running outside the repo — the module's
-    self-containment rule)."""
-
-    def acc(pdf, cnt: int, nval: int, cents: int):
-        import numpy as np
-
-        c = pdf["value"].to_numpy(dtype="float64") * 100.0
-        nn = ~np.isnan(c)
-        c = np.where(nn, np.sign(c) * np.floor(np.abs(c) + 0.5), 0.0)
-        return cnt + int(len(pdf)), nval + int(nn.sum()), cents + int(c.sum())
-
-    return acc
-
-
 def stream_stateful_user_totals(events: DataFrame) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per-user
     running (count, sum) held in explicit GroupState and emitted every
@@ -501,14 +473,22 @@ def stream_stateful_user_totals(events: DataFrame) -> DataFrame:
     order, converted to dollars once on emit."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    _acc = _cents_accumulator()  # shared HALF_UP cents rule — see factory
-
     def update(key, pdfs, state):
+        import numpy as np
         import pandas as pd
 
         cnt, nval, cents = state.get if state.exists else (0, 0, 0)
         for pdf in pdfs:
-            cnt, nval, cents = _acc(pdf, cnt, nval, cents)
+            # HALF_UP (away from zero) like Spark's F.round in the batch
+            # twin — pandas .round() is half-even and would disagree on
+            # exactly-representable ties (e.g. 20.625*100 == 2062.5);
+            # NULL values contribute 0 AND are counted separately (F.sum
+            # returns NULL for an ALL-null group, so the emit keys on
+            # nval; a bare astype would raise on NaN and kill the stream)
+            c = pdf["value"].to_numpy(dtype="float64") * 100.0
+            nn = ~np.isnan(c)
+            c = np.where(nn, np.sign(c) * np.floor(np.abs(c) + 0.5), 0.0)
+            cnt, nval, cents = cnt + len(pdf), nval + int(nn.sum()), cents + int(c.sum())
         state.update((cnt, nval, cents))
         yield pd.DataFrame(
             {"user_id": [key[0]], "total_events": [cnt],
@@ -565,64 +545,6 @@ def stream_dedup(events: DataFrame, keys: list[str] | None = None,
     that makes exact dedup feasible on an unbounded stream."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         keys or ["event_id"]
-    )
-
-
-def stream_tws_user_totals(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum) on transformWithStateInPandas —
-    Spark 4's successor to applyInPandasWithState (same semantics as
-    stream_stateful_user_totals, new API): typed ValueState handles,
-    explicit processor lifecycle (init/handleInputRows/close), timer
-    support, and a RocksDB-backed state store.
-
-    Scale: identical state footprint to the GroupState version (one
-    (long, long) integer-cents pair per user — the exact-cents
-    discipline, see stream_stateful_user_totals — partitioned by key);
-    RocksDB keeps
-    hot state off-heap and incremental-checkpoints to the stream's
-    checkpoint location — the state backend built for billions of keys.
-
-    The processor class is defined inside this function deliberately:
-    module-level classes cloudpickle by *reference* and fail to import
-    on executors whose working directory is not the repo (the driver
-    contract runs from an arbitrary cwd)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _acc = _cents_accumulator()  # shared HALF_UP cents rule — see factory
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "count long, n_vals long, total_cents long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            cnt, nval, cents = (
-                self._totals.get() if self._totals.exists() else (0, 0, 0)
-            )
-            for pdf in rows:
-                cnt, nval, cents = _acc(pdf, cnt, nval, cents)
-            self._totals.update((cnt, nval, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "total_events": [cnt],
-                 "total_value": pd.array(
-                     [cents / 100.0 if nval else None], dtype="Float64"
-                 )}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, total_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -1,7 +1,8 @@
 """Drive the driver contract exactly as the verify harness would:
 vanilla SparkSession (none of the engine's tuned configs), sf0.01,
 import __spark_entry__, run entry() + every queries() entry, compare
-each against oracle_sql() via DuckDB.
+each against oracle_sql() via DuckDB, and run each rows-only query's
+bounded check from tools/full_matrix.py.
 """
 import sys, time, os
 
@@ -41,10 +42,15 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 # the engine is automatically visible to the oracles in this sim too
 from oracle_harness import compare_frames, duck_connection
 
+sys.path.insert(0, os.path.join(REPO, "tools"))
+from full_matrix import BOUNDED_CHECKS, ORACLE_FRAMES_TO_KEEP
+
 con = duck_connection(SF)
 
 fails = []
 rows_only = []
+n_bound_ok = 0
+oracle_frames = {}
 for name in sorted(qs):
     t0 = time.time()
     try:
@@ -56,7 +62,19 @@ for name in sorted(qs):
     dt = time.time() - t0
     if name not in oracles:
         rows_only.append(name)
-        print(f"  {name}: rows-only, {len(sdf)} rows, {dt:.1f}s")
+        checker = BOUNDED_CHECKS.get(name)
+        if checker is None:
+            passed, detail = False, "no bounded check in tools/full_matrix.py"
+        else:
+            try:
+                _, passed, detail = checker(sdf, con, oracles, oracle_frames)
+            except Exception as ex:  # a crashed check fails one query
+                passed, detail = False, f"CHECK ERROR: {ex}"
+        n_bound_ok += bool(passed)
+        if not passed:
+            fails.append((name, f"BOUND FAIL: {detail}"))
+        status = "bound OK" if passed else "BOUND FAIL"
+        print(f"  {name}: rows-only, {status} ({detail}), {len(sdf)} rows, {dt:.1f}s")
         continue
     try:
         ddf = con.execute(oracles[name]).fetchdf()
@@ -64,6 +82,8 @@ for name in sorted(qs):
         fails.append((name, f"DUCK ERROR: {ex}"))
         print(f"  {name}: DUCK ERROR {str(ex)[:120]}")
         continue
+    if name in ORACLE_FRAMES_TO_KEEP:
+        oracle_frames[name] = ddf
     try:
         problems = compare_frames(sdf, ddf)
     except Exception as ex:  # a compare crash records one query's failure,
@@ -74,10 +94,11 @@ for name in sorted(qs):
     print(f"  {name}: {status} ({len(sdf)} rows, {dt:.1f}s)")
 
 n_checked = len(qs) - len(rows_only)
+n_bound_fail = len(rows_only) - n_bound_ok
 print(
-    f"\n{'='*60}\n{n_checked - len(fails)}/{n_checked} oracle-checked "
-    f"queries verified, {len(rows_only)} rows-only (no oracle), "
-    f"{len(fails)} failures"
+    f"\n{'='*60}\n{n_checked - len(fails) + n_bound_fail}/{n_checked} "
+    f"oracle-checked queries verified, {n_bound_ok}/{len(rows_only)} "
+    f"rows-only bounded checks passed, {len(fails)} failures"
 )
 for n, p in fails:
     print(f"FAIL {n}: {str(p)[:300]}")

@@ -214,6 +214,35 @@ def test_components_distributed_loop_storage_hygiene(spark):
     assert jsc.getPersistentRDDs().size() == base
 
 
+def test_pagerank_storage_hygiene(spark):
+    """PageRank holds O(1) frames, not O(rounds): each round releases
+    the superseded checkpoint through the handle whose plan is the
+    LogicalRDD (release_local_checkpoint declines a projection of it,
+    and unpersist() no-ops on a checkpoint, so releasing the projection
+    would leak one checkpoint per round). Two rounds and six leave the
+    same count, at most the final checkpoint, and the query-boundary
+    release returns the session to its baseline."""
+    from mapreduce_framework_simple_spark import ephemeral
+    from mapreduce_framework_simple_spark.operators.iterative import pagerank
+
+    ephemeral.release_caches()
+    jsc = spark.sparkContext._jsc.sc()
+    base = jsc.getPersistentRDDs().size()
+
+    edges = spark.createDataFrame(
+        [(0, i) for i in range(1, 9)] + [(i, 0) for i in range(1, 9)],
+        "src long, dst long",
+    )
+    held = []
+    for n_iter in (2, 6):
+        ranks, deltas = pagerank(edges, n_iter=n_iter)
+        assert ranks.count() == 9 and len(deltas) == n_iter
+        held.append(jsc.getPersistentRDDs().size())
+        ephemeral.release_caches()
+        assert jsc.getPersistentRDDs().size() == base
+    assert held[0] == held[1] <= base + 1, held
+
+
 def test_queries_wrapper_releases_previous_caches(spark, sf_dir):
     """__spark_entry__.queries() wraps every callable to release the
     PREVIOUS query's scoped caches at call time — the property that

@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
-from mapreduce_framework_simple_spark.operators.iterative import K, kmeans, q68_kmeans
+from mapreduce_framework_simple_spark.operators.iterative import (
+    K,
+    kmeans,
+    q104_pagerank,
+    q68_kmeans,
+)
 
 
 def test_kmeans_converges_and_is_deterministic(spark, sf_dir):
@@ -49,6 +54,26 @@ def test_q104_pagerank_deterministic(spark, sf_dir):
     b = q104_pagerank(spark, sf_dir).toPandas()
     assert 1 <= len(a) <= 10  # top-10 cap; small SFs have <10 suppliers
     assert a.equals(b), "fixpoint must be run-to-run deterministic"
+
+
+def test_q104_job_count(spark, sf_dir):
+    """q104 runs at most 59 Spark jobs: out-degrees ride on the cached
+    edge list from the start, and each round's one action is the L1-delta
+    aggregate that writes the round's lazy checkpoint — no delta join,
+    no per-round out-degree join, no eager checkpoint job. The rest are
+    the AQE stage jobs of each round's two joins and its groupBy. Each
+    job costs ~0.1-0.2 CPU-s whatever its data, so a round that grows a
+    job shows here first."""
+    sc = spark.sparkContext
+    sc.setJobGroup("q104-job-count", "q104")
+    try:
+        q104_pagerank(spark, sf_dir).toPandas()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup("q104-job-count"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs <= 59, f"q104 ran {jobs} jobs"
 
 
 def test_fixpoint_result_is_query_scoped_and_fails_loudly(spark):

@@ -1215,6 +1215,35 @@ def test_components_driver_kernel_equals_distributed(spark, sf_dir):
     )
 
 
+def test_components_distributed_round_is_one_action(spark):
+    """Each distributed propagation round's changed-count is the job that
+    writes the round's lazy checkpoint, so a round pays no separate
+    checkpoint job. The planted graph's 12-node chain takes 11 rounds;
+    the whole distributed call (gate, seed and the AQE stage jobs of
+    each round's join and groupBy included) runs at most 71 jobs, where
+    one more job per round would make 82."""
+    from mapreduce_framework_simple_spark.operators.dedup import (
+        connected_components,
+    )
+
+    chain = [(i + 1, i) for i in range(11, 0, -1)]
+    clique = [(a, b) for a in (100, 101, 102) for b in (103, 104)]
+    planted = spark.createDataFrame(
+        chain + clique + [(500, 501)], ["doc_a", "doc_b"]
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("components-round-jobs", "distributed components")
+    try:
+        got = connected_components(planted, driver_edge_bound=0).collect()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup("components-round-jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r.doc_id: r.component for r in got}[12] == 1
+    assert jobs <= 71, f"distributed components ran {jobs} jobs"
+
+
 def test_components_kernels_match_bfs_referee_on_random_graphs(spark):
     """Both dispatched components kernels vs an independent pure-Python
     BFS referee on seeded random multigraphs (sparse, giant-component,

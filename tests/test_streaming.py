@@ -334,53 +334,6 @@ def test_foreach_batch_checkpoint_idempotent(spark, sf_dir, tmp_path):
     )
 
 
-def test_transform_with_state_equals_batch(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4 stateful API): final per-user
-    totals equal the batch answer, same contract as the GroupState
-    version. Needs the RocksDB state store provider, and protobuf for
-    the state-server protocol (absent in this container — skipped, see
-    docs/KNOWN_LIMITS.md; the GroupState twin above runs everywhere)."""
-    pytest.importorskip("google.protobuf")
-    from mapreduce_framework_simple_spark.streaming.windows import (
-        stream_tws_user_totals,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = stream_tws_user_totals(read_events_stream(spark, sf_dir))
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("t_tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = spark.sql(
-            "SELECT user_id, max(total_events) AS total_events, "
-            "max(total_value) AS total_value FROM t_tws GROUP BY user_id"
-        ).toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    want = (
-        load_table(spark, "events", sf_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("total_events"), F.sum("value").alias("total_value"))
-        .toPandas()
-    )
-    g = got.set_index("user_id").sort_index()
-    w = want.set_index("user_id").sort_index()
-    assert (g["total_events"] == w["total_events"]).all()
-    assert (abs(g["total_value"] - w["total_value"]) < 1e-6).all()
-
-
 def test_stream_enrich_anomalies_equals_batch(spark, sf_dir):
     """Stream-static broadcast enrichment: the batch-computed p99 cut
     table applied to the live event stream must flag exactly the events
