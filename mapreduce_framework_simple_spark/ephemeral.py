@@ -145,8 +145,8 @@ def release_local_checkpoint(df: DataFrame) -> bool:
     — nondeterministic, periodic fallback every 30 min), so a fixpoint
     loop that supersedes one checkpoint per round can hold many rounds'
     worth of node-sized block sets at once. Best-effort: returns True
-    when blocks were released, False when the plan is not a LogicalRDD
-    (callers fall back to ``unpersist()``/GC)."""
+    when blocks were released, False when the plan is not a LogicalRDD;
+    :func:`release_frame` pairs it with ``unpersist()``."""
     try:
         jplan = df._jdf.queryExecution().analyzed()
         if jplan.getClass().getSimpleName() != "LogicalRDD":
@@ -157,10 +157,12 @@ def release_local_checkpoint(df: DataFrame) -> bool:
         return False
 
 
-def _release(df: DataFrame) -> None:
-    """Free a scoped frame whichever way it was materialized: BOTH the
-    CacheManager entry (scoped_cache) and any localCheckpoint blocks
-    (scoped_release). Unconditionally doing both is what makes the
+def release_frame(df: DataFrame) -> None:
+    """Free a frame whichever way it was materialized: BOTH the
+    CacheManager entry (``cache()``/scoped_cache) and any
+    localCheckpoint blocks — the query-boundary release of every scoped
+    frame, and the fixpoint loops' release of each superseded round.
+    Unconditionally doing both is what makes the
     routing safe: a scoped_cache'd frame whose analyzed plan root
     happens to be LogicalRDD (e.g. a cached bare createDataFrame result)
     would otherwise take the checkpoint branch only and leave its
@@ -398,7 +400,7 @@ def _drain(frames: list, bcasts: list) -> int:
     n = 0
     while frames:
         try:
-            _release(frames.pop())
+            release_frame(frames.pop())
             n += 1
         except Exception:
             pass

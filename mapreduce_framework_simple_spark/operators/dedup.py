@@ -34,7 +34,7 @@ logger = logging.getLogger(__name__)
 from mapreduce_framework_simple_spark.ephemeral import (
     _input_fingerprint,
     memo_stat,
-    release_local_checkpoint,
+    release_frame,
     scoped_broadcast,
     scoped_cache,
     scoped_release,
@@ -1174,15 +1174,11 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         )
         changed = merged.where(F.col("label") != F.col("old_label")).count()
         # the previous round's frame is dead weight from here — release
-        # it NOW (round 1: frees the seed CACHE via unpersist; later
-        # rounds: release_local_checkpoint frees the superseded
-        # checkpoint's internal-RDD blocks directly — a plain
-        # unpersist() is a CacheManager call that NO-OPS on a
-        # localCheckpoint, which would leave storage growing with
-        # iteration count until a JVM GC lets the ContextCleaner catch
-        # up), so live state stays O(1) frames on any graph
-        if not release_local_checkpoint(cached):
-            cached.unpersist()
+        # it NOW (round 1: the seed cache; later rounds: the superseded
+        # checkpoint's internal-RDD blocks, which a plain unpersist()
+        # would leave until a JVM GC lets the ContextCleaner catch up),
+        # so live state stays O(1) frames on any graph
+        release_frame(cached)
         cached = merged
         labels = merged.select("node", "label")
         if changed == 0:

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_simple_spark.ephemeral import (
-    release_local_checkpoint,
+    release_frame,
     scoped_release,
 )
 from mapreduce_framework_simple_spark.registry import query
@@ -77,30 +77,24 @@ def _assign(df: DataFrame, centroids) -> DataFrame:
 
 
 def kmeans(spark: SparkSession, sf_dir: str, k: int | None = K,
-           n_iter: int = N_ITER) -> tuple[DataFrame, list[float], list[list[float]], "object"]:
+           n_iter: int = N_ITER) -> tuple[list[float], list[list[float]], "object"]:
     """Lloyd's k-means (cosine flavor) with deterministic seeding (every
     (N/k)-th vector). ``k=None`` means ⌈√N⌉ — the IVF sizing — computed
     here from the count this function needs anyway, so callers don't pay
-    a second corpus scan just to size k. Returns (final assignments
-    DataFrame, per-iteration mean-similarity trace — monotone
-    non-decreasing up to fp noise, the final centroid list — K × dim
-    floats, driver-sized; the IVF index builder consumes these as its
-    cell centroids — and the final iteration's per-cluster stats pandas
-    frame (cluster, mean_sim, n_members): the loop computes it anyway
-    for the trace, and q68 reads its answer from it instead of paying a
-    second full assignment pass + shuffle over the corpus).
+    a second corpus scan just to size k. Returns (per-iteration
+    mean-similarity trace — monotone non-decreasing up to fp noise, the
+    final centroid list — K × dim floats, driver-sized; the IVF index
+    builder consumes these as its cell centroids — and the final
+    iteration's per-cluster stats pandas frame (cluster, mean_sim,
+    n_members): the loop computes it anyway for the trace, and q68 reads
+    its answer from it instead of paying a second full assignment pass
+    + shuffle over the corpus).
 
-    .. note:: standard Lloyd's trailing-M-step contract: the returned
-       ASSIGNMENTS (and the stats frame / trace tail) come from the
-       final E-step, computed against the PREVIOUS centroids; the
-       returned CENTROIDS include one further M-step update. The pair
-       is therefore NOT argmax-consistent — a boundary vector's
-       ``cluster`` may not be its nearest returned centroid. Consumers
-       needing labels consistent with the returned centroids must
-       re-assign against them (exactly what the IVF builder does via
-       ``ivf_assignments``, which is why it consumes only the centroid
-       list) — the same shape as MLlib's KMeansModel, where labels come
-       from a fresh ``predict`` against the final centers."""
+    .. note:: the stats (and the trace tail) come from the final
+       E-step, against the PREVIOUS centroids; the returned centroids
+       include one further M-step update. Labels consistent with the
+       returned centroids come from re-assigning against them, as the
+       IVF builder does (``similarity.ivf_assignments``)."""
     import math
 
     from mapreduce_framework_simple_spark.ephemeral import scoped_cache
@@ -110,7 +104,7 @@ def kmeans(spark: SparkSession, sf_dir: str, k: int | None = K,
     )
     n = em.count()
     if n == 0:
-        # empty-input contract: empty assignments, empty trace — not a
+        # empty-input contract: empty trace, centroids and stats — not a
         # numpy AxisError from zero seeds
         import pandas as pd
 
@@ -119,11 +113,10 @@ def kmeans(spark: SparkSession, sf_dir: str, k: int | None = K,
              "mean_sim": pd.Series(dtype="float64"),
              "n_members": pd.Series(dtype="int64")}
         )
-        return _assign(em, [[0.0]]).limit(0), [], [], empty_stats
+        return [], [], empty_stats
     if n_iter < 1:
-        # the return contract is (assigned DataFrame, trace, centroids,
-        # stats) — zero iterations has no assignment to return; fail
-        # loudly instead of UnboundLocalError deep in the tail
+        # zero iterations has no stats to return; fail loudly instead of
+        # UnboundLocalError deep in the tail
         raise ValueError(f"kmeans: n_iter must be >= 1, got {n_iter}")
     if k is None:
         # ⌈√n⌉ exactly (isqrt(n-1)+1 for n ≥ 1) — the documented IVF
@@ -154,11 +147,9 @@ def kmeans(spark: SparkSession, sf_dir: str, k: int | None = K,
         )
     centroids = [list(map(float, s)) for s in seeds]
     trace: list[float] = []
-    assigned = None
     for _ in range(n_iter):
-        assigned = _assign(em, centroids)
         agg = (
-            assigned.groupBy("cluster")
+            _assign(em, centroids).groupBy("cluster")
             .agg(
                 *[
                     F.avg(F.element_at(F.col("embedding"), i + 1).cast("double")).alias(f"c{i}")
@@ -177,10 +168,8 @@ def kmeans(spark: SparkSession, sf_dir: str, k: int | None = K,
                 float(row[f"c{i}"]) for i in range(len(centroids[0]))
             ]
         centroids = new_centroids
-    # no unpersist here: the returned frame is lazy over em — the scoped
-    # cache is released at the next query boundary (ephemeral protocol),
-    # after the caller has materialized the result
-    return assigned, trace, centroids, agg[["cluster", "mean_sim", "n_members"]]
+    em.unpersist()  # nothing returned is lazy over it
+    return trace, centroids, agg[["cluster", "mean_sim", "n_members"]]
 
 
 @query("q68_kmeans")  # rows-only: iterative, not SQL-expressible (SURVEY §2.3)
@@ -188,10 +177,10 @@ def q68_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means cluster sizes + cohesion after 5 iterations (deterministic
     seeding ⇒ deterministic output; the oracle-less rows-only check is
     backed by the convergence test in tests/test_iterative.py)."""
-    _, _, _, stats = kmeans(spark, sf_dir)
+    _, _, stats = kmeans(spark, sf_dir)
     # the loop's final per-cluster aggregate IS this query's answer —
-    # re-aggregating `assigned` would pay one more full corpus
-    # assignment pass plus a shuffle for numbers already on the driver
+    # re-aggregating a fresh assignment would pay one more full corpus
+    # pass plus a shuffle for numbers already on the driver
     rows = [
         (int(r.cluster), int(r.n_members), float(round(r.mean_sim, 6)))
         for r in stats.itertuples()
@@ -286,12 +275,10 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         delta = merged.agg(F.sum(F.abs(F.col("rank") - F.col("old_rank")))).first()[0]
         # empty graph: sum over zero rows is NULL — treat as converged
         deltas.append(float(delta) if delta is not None else 0.0)
-        # round 1 frees the seed CACHE via unpersist; later rounds free
-        # the superseded checkpoint through `cached`, the handle whose
-        # plan is the LogicalRDD — release_local_checkpoint declines a
-        # projection of it, and unpersist() no-ops on a checkpoint
-        if not release_local_checkpoint(cached):
-            cached.unpersist()
+        # round 1 frees the seed cache; later rounds free the superseded
+        # checkpoint through `cached`, the handle whose plan is the
+        # LogicalRDD — a projection of it would free nothing
+        release_frame(cached)
         cached = merged
         ranks = merged.select("node", "rank")
     ed.unpersist()

@@ -288,24 +288,32 @@ def q40_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 N_CELLS_STRIDE = 31  # vec_id % 31 == 0 → deterministic centroid "training" set
+META_STRIDE = 155  # 31 × 5: stride meta layer = every 5th stride centroid
 # 6 probes of ~17 cells ≈ 35% of the corpus per query. The synthetic
 # embeddings are weakly clustered (max pairwise cos ≈ 0.55), so recall is
 # governed mostly by probe coverage; real embedding corpora cluster far
 # tighter and would hit >0.9 recall at this probe fraction.
 N_PROBE = 6
+# meta cells routed per vector by the two-level router. Recall governor
+# of the router layer the same way N_PROBE governs the fine layer: a
+# fine cell is reachable only through its single meta route, so
+# route_n = 1 risks losing a near-boundary fine cell; 4 of ~√K meta
+# cells keeps the routed candidate pool ≈ 4·√K fine centroids — still ≪ K.
+META_ROUTE_PROBES = 4
 
 
 def kmeans_centroid_frame(spark: SparkSession, sf_dir: str,
                           k: int | None = None) -> DataFrame:
     """(cell_id, c_emb) IVF centroids from the seeded Lloyd's k-means
     (:func:`mapreduce_framework_simple_spark.operators.iterative.kmeans`)
-    — THE production centroid source for the IVF index. ``k`` defaults
+    — THE production centroid source for the IVF index, for both the
+    fine layer and the router's meta layer. ``k`` defaults
     to ⌈√N⌉, the standard IVF sizing under which both the probe-selection
     term (N·K cosines) and the candidate join (N·n_probe·N/K) are
     O(N^1.5·n_probe), and the centroid table stays √N rows (~10⁵ at
     10¹⁰ vectors — comfortably broadcastable). The deterministic stride
-    sample (:func:`_stride_centroids`) remains only as the oracle-stable
-    default of the q41/q120 query surface.
+    layers (:func:`_stride`) remain only as the oracle-stable default of
+    the q41/q129 query surface.
 
     Scale: k-means itself is n_iter distributed passes (see
     iterative.py); the returned frame is K × dim doubles created from
@@ -315,20 +323,24 @@ def kmeans_centroid_frame(spark: SparkSession, sf_dir: str,
     sizing scan here."""
     from mapreduce_framework_simple_spark.operators.iterative import kmeans
 
-    _, _, cents, _ = kmeans(spark, sf_dir, k=k)
+    _, cents, _ = kmeans(spark, sf_dir, k=k)
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
     return spark.createDataFrame(rows, "cell_id long, c_emb array<double>")
 
 
-def _stride_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deterministic stride stand-in centroid set (vec_id % 31 == 0)
-    — kept for oracle/test determinism (k-means assignment can flip on
-    1-ULP partial-aggregation differences across partitionings); at
-    K = N/31 it does NOT have the O(N^1.5) IVF sizing — production
-    indexes pass :func:`kmeans_centroid_frame` instead."""
-    em = load_table(spark, "embeddings", sf_dir)
-    return em.where(F.col("vec_id") % N_CELLS_STRIDE == 0).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("c_emb")
+def _stride(em: DataFrame, stride: int, id_col: str = "cell_id",
+            emb_col: str = "c_emb") -> DataFrame:
+    """Every ``stride``-th vector of the corpus frame ``em`` as an
+    (id_col, emb_col) frame — the deterministic layers of the oracle
+    surface: ``N_CELLS_STRIDE`` the centroids, ``META_STRIDE`` the meta
+    layer (every 5th centroid), ``QUERY_STRIDE`` with (query_id, q_emb)
+    the query subset. Kept for oracle/test determinism (k-means
+    assignment can flip on 1-ULP partial-aggregation differences across
+    partitionings); at K = N/31 the stride centroids do NOT have the
+    O(N^1.5) IVF sizing — production indexes pass
+    :func:`kmeans_centroid_frame` instead."""
+    return em.where(F.col("vec_id") % stride == 0).select(
+        F.col("vec_id").alias(id_col), F.col("embedding").alias(emb_col)
     )
 
 
@@ -346,17 +358,17 @@ def _gated_centroids(cents):
         raise ValueError(
             f"centroid set exceeds {MAX_BROADCAST_QUERIES}; IVF sizing is "
             "K ≈ √N — rebuild with kmeans_centroid_frame, or for K past "
-            "the broadcast bound use the two-level router "
-            "(two_level_probes, docs/SCALE.md)"
+            "the broadcast bound pass a meta layer to route through the "
+            "two-level router (meta_centroids=, docs/SCALE.md)"
         )
     return cp
 
 
 def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
                    cents, top_n: int) -> DataFrame:
-    """Vectorized top-``top_n`` centroid cells per vector — the shared
-    kernel under :func:`ivf_assignments` (top_n=1) and
-    :func:`_ivf_probes` (top_n=N_PROBE).
+    """Vectorized top-``top_n`` centroid cells per vector — the flat
+    kernel of :func:`ivf_cells`, and the routing hop inside
+    :func:`_routed_cells`.
 
     Same shape as :func:`_pairwise_cosine_scan`: the bounded centroid
     set ``cents`` (a frame, or :func:`_gated_centroids`' collected set)
@@ -425,93 +437,34 @@ def _nearest_cells(df: DataFrame, id_col: str, emb_col: str,
     )
 
 
-def ivf_assignments(spark: SparkSession, sf_dir: str,
-                    centroids=None) -> DataFrame:
-    """Assign every vector to its nearest centroid cell (IVF build side).
-
-    ``centroids`` is any (cell_id, c_emb) frame, or its
-    :func:`_gated_centroids` collect — production passes
-    :func:`kmeans_centroid_frame` (K ≈ √N); None falls back to the
-    deterministic stride sample. Assignment is argmax cosine over the
-    broadcast centroid set on the vectorized :func:`_nearest_cells`
-    kernel (6-dp HALF_UP rounding, ties to the smaller cell_id)."""
-    em = load_table(spark, "embeddings", sf_dir)
-    cents = centroids if centroids is not None else _stride_centroids(spark, sf_dir)
-    return _nearest_cells(em, "vec_id", "embedding", cents, top_n=1)
-
-
-def _ivf_probes(
-    spark: SparkSession, sf_dir: str, queries: DataFrame | None = None,
-    centroids=None
-) -> DataFrame:
-    """(query_id, q_emb, cell_id): the top-N_PROBE cells per query —
-    shared by q41, the bucketed-index probe, and the leave-one-out kNN
-    audit so the probe rule cannot drift between paths. ``queries``
-    overrides the default deterministic stride subset with any
-    (query_id, q_emb) frame (the audit passes the whole corpus);
-    ``centroids`` must be the SAME frame the index/assignments were
-    built with (the bucketed paths read it back from the index, so the
-    two cannot drift)."""
-    em = load_table(spark, "embeddings", sf_dir)
-    cents = centroids if centroids is not None else _stride_centroids(spark, sf_dir)
-    q = queries if queries is not None else em.where(
-        F.col("vec_id") % QUERY_STRIDE == 0
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
-    return _nearest_cells(q, "query_id", "q_emb", cents, top_n=N_PROBE)
-
-
-# meta cells routed per query in the two-level probe. Recall governor of
-# the router layer the same way N_PROBE governs the fine layer: a fine
-# cell is reachable only through its single meta route, so route_n = 1
-# risks losing a near-boundary fine cell; 4 of ~√K meta cells keeps the
-# routed candidate pool ≈ 4·√K fine centroids — still ≪ K.
-META_ROUTE_PROBES = 4
-
-
-def two_level_probes(
-    spark: SparkSession, sf_dir: str, centroids: DataFrame,
-    meta_centroids: DataFrame, queries: DataFrame | None = None,
-    route_n: int = META_ROUTE_PROBES, keep_n: int = N_PROBE,
-    attach_emb: bool = True,
-) -> DataFrame:
-    """(query_id, q_emb, cell_id): :func:`_ivf_probes`' exact contract
-    for the K > MAX_BROADCAST_QUERIES regime — the two-level
-    (coarse-router) probe selection of docs/SCALE.md §"Two-level IVF
-    routing for K beyond the broadcast bound". ``attach_emb=False``
-    returns the skinny (query_id, cell_id) frame instead, skipping the
-    q_emb re-attach join and its second read of the query frame.
+def _routed_cells(df: DataFrame, id_col: str, emb_col: str,
+                  centroids: DataFrame, meta_centroids: DataFrame,
+                  top_n: int, route_n: int = META_ROUTE_PROBES) -> DataFrame:
+    """Skinny (id_col, cell_id): :func:`_nearest_cells`' top-``top_n``
+    cells for the K > MAX_BROADCAST_QUERIES regime — the two-level
+    (coarse-router) selection of docs/SCALE.md §"Two-level IVF routing
+    for K beyond the broadcast bound". q129 is its oracle-checked
+    surface; :func:`ivf_cells` re-attaches the vectors for every other
+    consumer.
 
     :func:`_nearest_cells` broadcasts its whole centroid set, so flat
-    probe selection caps at K = 100k centroids — N ≈ 10^10 vectors
-    under K ≈ √N. Beyond that, only √K ≈ N^(1/4) META-centroids are
-    ever broadcast (~10^5 meta cells not before N ≈ 10^20): the K fine
-    centroids route to their nearest meta cell once per index build
-    (``_nearest_cells`` over the fine-centroid FRAME — K rows stream
-    through Arrow batches, √K broadcast), queries route to their top-
-    ``route_n`` meta cells the same way, and fine scoring happens in a
-    meta-cell-keyed DISTRIBUTED join + Arrow-batched exact cosine —
-    no K-sized driver or broadcast structure anywhere. Meta-cell skew
-    in the join is AQE's to split (the key is data-dependent, the same
-    class as the LSH band join).
+    selection caps at K = 100k centroids — N ≈ 10^10 vectors under
+    K ≈ √N. Beyond that, only √K ≈ N^(1/4) META-centroids are ever
+    broadcast (~10^5 meta cells not before N ≈ 10^20): the K fine
+    centroids route to their nearest meta cell (``_nearest_cells`` over
+    the fine-centroid FRAME — K rows stream through Arrow batches, √K
+    broadcast), each row of ``df`` routes to its top-``route_n`` meta
+    cells the same way, and fine scoring happens in a meta-cell-keyed
+    DISTRIBUTED join + Arrow-batched exact cosine — no K-sized driver or
+    broadcast structure anywhere. Meta-cell skew in the join is AQE's to
+    split (the key is data-dependent, the same class as the LSH band
+    join).
 
     Fine scoring ranks by the core's micro-units with ties to the
     smaller fine cell_id, as ``_nearest_cells`` does, so with
-    ``route_n`` ≥ the meta-cell count the output EQUALS the flat
-    ``_ivf_probes`` row-for-row (tested); at small ``route_n`` it is
-    the approximate router (recall tested).
-    Both centroid frames come from :func:`kmeans_centroid_frame`
-    (unchanged): K at the standard √N sizing, meta at k ≈ ⌈√K⌉."""
-    if queries is None:
-        # only the default stride subset needs the corpus table; callers
-        # supplying every frame explicitly (router_probe's replica runs,
-        # synthetic tests) must not require <sf_dir>/embeddings.parquet
-        # to exist — spark.read lists the path eagerly
-        em = load_table(spark, "embeddings", sf_dir)
-        q = em.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-        )
-    else:
-        q = queries
+    ``route_n`` ≥ the meta-cell count the output EQUALS the flat kernel
+    row-for-row (tested for probes and assignments); at small
+    ``route_n`` it is the approximate router (recall tested)."""
     fine = centroids.select(
         F.col("cell_id").alias("fine_id"), F.col("c_emb").alias("f_emb")
     )
@@ -520,81 +473,96 @@ def two_level_probes(
     fine_routes = scoped_cache(_nearest_cells(
         fine, "fine_id", "f_emb", meta_centroids, top_n=1
     ).withColumnRenamed("cell_id", "meta_id"))
-    # queries route against NON-EMPTY metas only (metas that won ≥1 fine
-    # centroid): a meta cell can be nearest to a query without being any
-    # fine centroid's single route target, and a query whose route_n
-    # picks were ALL such empty cells would silently get zero candidates
-    # — on the assignment side, a silently dropped vector. Filtering
-    # empty metas (FAISS probes non-empty lists the same way) guarantees
-    # every query ≥1 candidate, never changes the full-route result
-    # (empty metas contribute nothing), and can only improve recall at
-    # fixed route_n.
+    # rows route against NON-EMPTY metas only (metas that won ≥1 fine
+    # centroid): a meta cell can be nearest to a vector without being
+    # any fine centroid's single route target, and a vector whose
+    # route_n picks were ALL such empty cells would silently get zero
+    # candidates — on the assignment side, a silently dropped vector.
+    # Filtering empty metas (FAISS probes non-empty lists the same way)
+    # guarantees every row ≥1 candidate, never changes the full-route
+    # result (empty metas contribute nothing), and can only improve
+    # recall at fixed route_n.
     live_meta = meta_centroids.join(
         fine_routes.select(F.col("meta_id").alias("cell_id")).distinct(),
         "cell_id", "left_semi",
     )
-    q_routes = _nearest_cells(
-        q, "query_id", "q_emb", live_meta, top_n=route_n
+    routes = _nearest_cells(
+        df, id_col, emb_col, live_meta, top_n=route_n
     ).withColumnRenamed("cell_id", "meta_id")
-    # (query, fine) pairs are unique: each fine centroid has exactly ONE
+    # (row, fine) pairs are unique: each fine centroid has exactly ONE
     # meta route, so no post-join dedup is needed before ranking
-    cand = q_routes.join(fine_routes, "meta_id")
+    cand = routes.join(fine_routes, "meta_id")
 
     from pyspark.sql import Window
 
     # the rank window's shuffle moves route_n·K/√K skinny candidate rows
-    # PER QUERY, and on the assignment path the query frame is the whole
-    # corpus, so q_emb re-attaches AFTER the top-keep_n cut via a join on
-    # query_id (keep_n rows per query vs the query frame — the same
-    # exchange class as the candidate join, on 1/route_n·√K the rows).
-    # attach_emb=False skips that join AND its second read of the query
-    # frame for consumers that only want the (query_id, cell_id) pairs
-    # (q129's oracle surface) — the optimizer cannot prune an inner
-    # join, so the skip has to be explicit.
-    scored = _paired_cosine_ri(cand, "query_id", "q_emb", "fine_id", "f_emb")
-    w = Window.partitionBy("query_id").orderBy(F.desc("ri"), F.asc("fine_id"))
-    kept = (
+    # PER ROW of df — on the assignment path the whole corpus — so the
+    # output stays skinny and the embeddings ride only in the scorer
+    scored = _paired_cosine_ri(cand, id_col, emb_col, "fine_id", "f_emb")
+    w = Window.partitionBy(id_col).orderBy(F.desc("ri"), F.asc("fine_id"))
+    return (
         scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= keep_n)
-        .select("query_id", F.col("fine_id").alias("cell_id"))
+        .where(F.col("rn") <= top_n)
+        .select(id_col, F.col("fine_id").alias("cell_id"))
     )
-    if not attach_emb:
-        return kept
-    return kept.join(q, "query_id").select("query_id", "q_emb", "cell_id")
 
 
-def two_level_assignments(
-    spark: SparkSession, sf_dir: str, centroids: DataFrame,
-    meta_centroids: DataFrame, route_n: int = META_ROUTE_PROBES,
-) -> DataFrame:
-    """Two-level twin of :func:`ivf_assignments` — the index-BUILD side
-    of the K > MAX_BROADCAST_QUERIES regime (the probe side is
-    :func:`two_level_probes`; together they bound every broadcast at
-    √K for any N). Each corpus vector routes to its ``route_n`` nearest
-    meta cells and takes the argmax-cosine fine cell among the fine
-    centroids routed there — ``two_level_probes`` with the corpus as
-    the query frame and keep_n=1, so the scoring/tie rules cannot
-    drift from the probe path. route_n > 1 keeps a near-meta-boundary
-    vector's true argmax fine cell reachable (with route_n = the
-    meta-cell count the output EQUALS ivf_assignments — tested)."""
-    em = load_table(spark, "embeddings", sf_dir).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+def ivf_cells(df: DataFrame, id_col: str, emb_col: str, centroids,
+              meta_centroids: DataFrame | None = None, *, top_n: int,
+              route_n: int = META_ROUTE_PROBES) -> DataFrame:
+    """(id_col, emb_col, cell_id): the top-``top_n`` IVF cells of every
+    row of ``df`` — THE flat-versus-routed dispatch every IVF path
+    takes, so assignment and probe selection cannot pick different
+    geometry. ``meta_centroids=None`` runs the flat :func:`_nearest_cells`
+    (``centroids`` a frame or its :func:`_gated_centroids` collect,
+    refused past ``MAX_BROADCAST_QUERIES``); a meta layer runs the
+    routed :func:`_routed_cells` over the ``centroids`` frame and
+    re-attaches the vectors after the top-``top_n`` cut, on a join by
+    id (``top_n`` rows per id — the rank shuffle itself stays skinny)."""
+    if meta_centroids is None:
+        return _nearest_cells(df, id_col, emb_col, centroids, top_n)
+    kept = _routed_cells(df, id_col, emb_col, centroids, meta_centroids,
+                         top_n, route_n)
+    return kept.join(df.select(id_col, emb_col), id_col).select(
+        id_col, emb_col, "cell_id"
     )
-    return two_level_probes(
-        spark, sf_dir, centroids, meta_centroids,
-        queries=em, route_n=route_n, keep_n=1,
-    ).select(
-        F.col("query_id").alias("vec_id"),
-        F.col("q_emb").alias("embedding"),
-        "cell_id",
-    )
+
+
+def ivf_assignments(em: DataFrame, centroids,
+                    meta_centroids: DataFrame | None = None) -> DataFrame:
+    """(vec_id, embedding, cell_id): every vector of the corpus frame
+    ``em`` assigned to its nearest centroid cell (IVF build side) —
+    :func:`ivf_cells` at top_n=1, argmax cosine with 6-dp HALF_UP
+    rounding and ties to the smaller cell_id. ``centroids`` is any
+    (cell_id, c_emb) frame or its :func:`_gated_centroids` collect —
+    production passes :func:`kmeans_centroid_frame` (K ≈ √N); a meta
+    layer routes the assignment past the broadcast bound."""
+    return ivf_cells(em, "vec_id", "embedding", centroids, meta_centroids,
+                     top_n=1)
+
+
+def _ivf_probes(em: DataFrame, centroids,
+                meta_centroids: DataFrame | None = None,
+                queries: DataFrame | None = None) -> DataFrame:
+    """(query_id, q_emb, cell_id): the top-N_PROBE cells per query —
+    shared by q41, the bucketed-index probe, and the leave-one-out kNN
+    audit so the probe rule cannot drift between paths. ``queries``
+    overrides the default deterministic stride subset of ``em`` with any
+    (query_id, q_emb) frame (the audit passes the whole corpus);
+    ``centroids`` and ``meta_centroids`` must be the SAME layers the
+    index/assignments were built with (the bucketed paths read them back
+    from the index, so the two cannot drift)."""
+    q = queries if queries is not None else _stride(
+        em, QUERY_STRIDE, "query_id", "q_emb")
+    return ivf_cells(q, "query_id", "q_emb", centroids, meta_centroids,
+                     top_n=N_PROBE)
 
 
 def _paired_cosine_ri(pairs: DataFrame, a_id: str, a_emb: str,
                       b_id: str, b_emb: str) -> DataFrame:
     """(a_id, b_id, ri): the HALF_UP micro-unit cosine of each row's two
     vectors, scored in Arrow batches on the core's ``paired`` — the
-    candidate scorer of the routed probe and of the IVF rank tail.
+    candidate scorer of the routed selection and of the IVF rank tail.
     Output rows are SKINNY (24 B) so the rank window's shuffle never
     carries embeddings."""
     core = _cosine_core()
@@ -622,7 +590,7 @@ def _paired_cosine_ri(pairs: DataFrame, a_id: str, a_emb: str,
 
 def _score_and_rank_candidates(cand: DataFrame, k: int = TOP_K) -> DataFrame:
     """Exact-cosine score + per-query top-k over (query_id, q_emb,
-    vec_id, embedding) candidate rows — shared tail of both IVF paths.
+    vec_id, embedding) candidate rows — shared tail of every IVF path.
     ``k`` is explicit because consumers truncate at DIFFERENT depths
     (TOP_K for the q41 surface, KNN_K for the vote audit): a fixed
     TOP_K here would silently pre-truncate the kNN vote whenever
@@ -649,35 +617,21 @@ def _score_and_rank_candidates(cand: DataFrame, k: int = TOP_K) -> DataFrame:
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str,
-                 centroids: DataFrame | None = None) -> DataFrame:
+                 centroids: DataFrame | None = None,
+                 meta_centroids: DataFrame | None = None) -> DataFrame:
     """IVF approximate top-k for the deterministic query subset against
-    any centroid set — q41's body, parameterized so production (k-means
-    centroids, K ≈ √N) and the oracle-stable stride default share one
-    probe/score/rank path. Recall vs exact q40 is tested for BOTH
-    centroid sources."""
-    # one gated collect serves both assignment and probe selection
-    cents = _gated_centroids(
-        centroids if centroids is not None else _stride_centroids(spark, sf_dir)
-    )
-    assigned = ivf_assignments(spark, sf_dir, centroids=cents)
-    cand = _ivf_probes(spark, sf_dir, centroids=cents).join(assigned, "cell_id")
-    return _score_and_rank_candidates(cand)
-
-
-def ann_two_level_topk(spark: SparkSession, sf_dir: str,
-                       centroids: DataFrame,
-                       meta_centroids: DataFrame) -> DataFrame:
-    """IVF ANN with BOTH sides routed — :func:`ann_ivf_topk`'s twin for
-    the K > MAX_BROADCAST_QUERIES regime: index assignment via
-    :func:`two_level_assignments`, probe selection via
-    :func:`two_level_probes`, exact-cosine rank via the same
-    :func:`_score_and_rank_candidates` tail as q41, so the scoring
-    rule cannot drift between the flat and routed paths. Recall vs the
-    exact q40 is tested on the stride layers."""
-    assigned = two_level_assignments(spark, sf_dir, centroids, meta_centroids)
-    cand = two_level_probes(
-        spark, sf_dir, centroids, meta_centroids
-    ).join(assigned, "cell_id")
+    any centroid layers — q41's body, parameterized so production
+    (k-means centroids, K ≈ √N; a k-means meta layer past the broadcast
+    bound) and the oracle-stable stride default share one
+    assign/probe/score/rank path. Reads the corpus once. Recall vs exact
+    q40 is tested for both centroid sources and for the routed layers."""
+    em = load_table(spark, "embeddings", sf_dir)
+    cents = centroids if centroids is not None else _stride(em, N_CELLS_STRIDE)
+    if meta_centroids is None:
+        # flat: one gated collect serves both assignment and probes
+        cents = _gated_centroids(cents)
+    assigned = ivf_assignments(em, cents, meta_centroids)
+    cand = _ivf_probes(em, cents, meta_centroids).join(assigned, "cell_id")
     return _score_and_rank_candidates(cand)
 
 
@@ -697,22 +651,6 @@ def q41_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_ivf_topk(spark, sf_dir)
 
 
-META_STRIDE = 155  # 31 × 5: stride meta layer = every 5th stride centroid
-
-
-def _stride_meta_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stride META layer for the two-level router's
-    ORACLE surface (vec_id % 155 == 0 — every 5th stride centroid), the
-    same oracle-stability role :func:`_stride_centroids` plays for q41:
-    k-means metas can flip on 1-ULP partial-agg differences, a stride
-    subset cannot. Production passes :func:`kmeans_centroid_frame`
-    (k=⌈√K⌉) for both layers."""
-    em = load_table(spark, "embeddings", sf_dir)
-    return em.where(F.col("vec_id") % META_STRIDE == 0).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("c_emb")
-    )
-
-
 def _duck_route(out_id: str, src: str, src_id: str, src_emb: str,
                 keep: int, metas: str = "meta") -> str:
     """One routing hop as DuckDB SQL — top-``keep`` meta cells per
@@ -721,7 +659,7 @@ def _duck_route(out_id: str, src: str, src_id: str, src_emb: str,
     the fold helpers are the q40-validated sequential-reduce forms).
     ``metas`` names the meta relation: fine centroids route against ALL
     metas, queries against the LIVE (non-empty) subset — mirroring
-    two_level_probes' live-meta filter exactly."""
+    _routed_cells' live-meta filter exactly."""
     cos = (f"round({_duck_dot(src_emb, 'm.m_emb')} / "
            f"({_duck_norm(src_emb)} * {_duck_norm('m.m_emb')}), 6)")
     return f"""
@@ -773,21 +711,22 @@ def _duck_route(out_id: str, src: str, src_id: str, src_emb: str,
 def q129_two_level_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level routed IVF probe selection on fully deterministic
     stride layers (fine = every 31st vector, meta = every 155th) — the
-    oracle-checked surface of :func:`two_level_probes`, whose k-means
+    oracle-checked surface of :func:`_routed_cells`, whose k-means
     production configuration is rows-only for the same ULP reason as
     q41. Every hop (fine→meta route, query→meta routes, fine scoring
     within routed cells, top-N_PROBE rank) is replicated in SQL with
     the q40-validated sequential-fold cosine and HALF_UP rounding.
+    Reads the corpus once, and calls the routed core directly: the
+    answer is the (query_id, cell_id) pairs, so no vector re-attach.
 
     Scale: this is the K > 100k regime's plan shape — broadcasts
     bounded at the meta layer (√K), fine scoring a meta-keyed
     distributed join (docs/SCALE.md §two-level routing; measured past
     the flat ceiling in tools/router_probe.py)."""
-    return two_level_probes(
-        spark, sf_dir,
-        centroids=_stride_centroids(spark, sf_dir),
-        meta_centroids=_stride_meta_centroids(spark, sf_dir),
-        attach_emb=False,  # q129 wants the pairs; skip the re-attach join
+    em = load_table(spark, "embeddings", sf_dir)
+    return _routed_cells(
+        _stride(em, QUERY_STRIDE, "query_id", "q_emb"), "query_id", "q_emb",
+        _stride(em, N_CELLS_STRIDE), _stride(em, META_STRIDE), N_PROBE,
     )
 
 
@@ -802,8 +741,7 @@ def _block_cogroup(spark: SparkSession, sf_dir: str):
     into B blocks; returns the (left, right) frames keyed by the
     B(B+1)/2 unordered block pairs, ready to cogroup. NOTHING is
     materialized on the driver — both sides stream through the shuffle,
-    so the plan survives a corpus that would OOM a collect (the round-1
-    kernel's failure mode)."""
+    so the plan survives a corpus that would OOM a collect."""
     em = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     em = em.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(N_BLOCKS)).cast("int"))
     block_pairs = spark.createDataFrame(
@@ -987,8 +925,7 @@ def _block_topk_cosine(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 def q42_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine high-similarity pairs (cos ≥ 0.45), exact — on the
     DISTRIBUTED block self-join kernel: no driver-side materialization of
-    the corpus anywhere in the plan (the round-1 version collected the
-    whole table into every task closure).
+    the corpus anywhere in the plan.
 
     (Threshold is data-driven: the synthetic embeddings max out near
     cos ≈ 0.55 pairwise, so a production-style 0.98 dedup cut would
@@ -1237,26 +1174,6 @@ def q96_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cell_id so a probe is a partition-pruned read, not a filter").
 # ---------------------------------------------------------------------------
 
-def _auto_meta_centroids(spark: SparkSession, sf_dir: str,
-                         cents: DataFrame) -> DataFrame | None:
-    """Size-dispatch the two-level router on centroid count, gated at
-    the bound :func:`_nearest_cells` refuses past.
-    Within the broadcast bound → None (the flat path is correct and
-    cheaper). Past it → auto-build the routing layer at the production
-    sizing, ``kmeans_centroid_frame(k=⌈√K⌉)``, so a caller who hands
-    ``write_ivf_index`` a K > MAX_BROADCAST_QUERIES frame gets the
-    router the repo ships instead of the flat probe's loud refusal.
-    The full ``cents.count()`` for sizing runs only in the over-bound
-    branch — K rows, linear in the centroid count, never the corpus."""
-    import math
-
-    if size_gate(cents, MAX_BROADCAST_QUERIES)[0]:
-        return None
-    return kmeans_centroid_frame(
-        spark, sf_dir, k=math.ceil(math.sqrt(cents.count()))
-    )
-
-
 def write_ivf_index(spark: SparkSession, sf_dir: str, path: str,
                     centroids: DataFrame | None = None,
                     meta_centroids: DataFrame | None = None) -> None:
@@ -1291,51 +1208,54 @@ def write_ivf_index(spark: SparkSession, sf_dir: str, path: str,
     mode, not just slow. One extra corpus shuffle is the right trade
     for a write-once index.
 
-    ``meta_centroids`` (K > MAX_BROADCAST_QUERIES regime) switches the
-    assignment to the two-level router (:func:`two_level_assignments`)
-    and persists the meta layer under ``<path>/_meta_centroids`` — the
-    probe path (:func:`ivf_probe_bucketed`) detects the sidecar and
-    routes its probe selection the same way, so build and probe
-    geometry (including the routing layer) cannot drift. When the
-    caller passes NO meta layer but the centroid frame exceeds the
-    flat broadcast bound, the meta layer is AUTO-BUILT
-    (:func:`_auto_meta_centroids`, k = ⌈√K⌉) — the over-bound regime
-    routes instead of hitting :func:`_nearest_cells`' refusal."""
-    # cached: the centroid frame has three consumers per build (the
-    # auto-dispatch probe, the assignment kernel's own bounded probe +
-    # collect/route, the _centroids sidecar write) — K rows, linear in
-    # the centroid count, never the corpus; without the cache a
-    # corpus-derived frame re-scans its source for each
+    ``meta_centroids`` (K > MAX_BROADCAST_QUERIES regime) routes the
+    assignment through :func:`ivf_cells`' two-level branch and persists
+    the meta layer under ``<path>/_meta_centroids``; every probe path
+    reads both layers back, so build and probe geometry (routing layer
+    included) cannot drift. Without one, the build's single
+    :func:`size_gate` collect of the centroid set decides: within
+    ``MAX_BROADCAST_QUERIES`` its rows are the flat broadcast; past it
+    the meta layer is AUTO-BUILT at the production sizing,
+    ``kmeans_centroid_frame(k=⌈√K⌉)``, and the build routes instead of
+    hitting :func:`_nearest_cells`' refusal."""
+    import math
+
+    em = load_table(spark, "embeddings", sf_dir)
+    # cached: the centroid frame has up to three consumers per build (the
+    # size gate, the routed assignment, the _centroids sidecar write) —
+    # K rows, linear in the centroid count, never the corpus; without
+    # the cache a corpus-derived frame re-scans its source for each
     cents = scoped_cache(
-        centroids if centroids is not None else _stride_centroids(spark, sf_dir)
+        centroids if centroids is not None else _stride(em, N_CELLS_STRIDE)
     )
     # Index contract: cell ids are NON-NEGATIVE. Both in-tree centroid
     # sources satisfy it by construction (kmeans enumerates 0..K-1, the
     # stride stand-in reuses non-negative vec_ids); enforcing it here —
     # one tiny action on the cached K-row frame of a write-once build —
-    # is what lets ivf_probe_bucketed's past-bound branch state
-    # `cell_id >= 0` as the selective predicate Catalyst's dynamic
-    # partition pruning requires, without ever silently dropping a cell.
+    # is what lets ivf_probe_bucketed state `cell_id >= 0` as the
+    # selective predicate Catalyst's dynamic partition pruning
+    # requires, without ever silently dropping a cell.
     bad = F.col("cell_id").isNull() | (F.col("cell_id") < 0)
     if cents.where(bad).limit(1).count() > 0:
         # NULL is as fatal as negative: NULL rows land in the
-        # __HIVE_DEFAULT_PARTITION__ directory, and NEITHER probe branch
-        # can select them (NULL isin [...] is never true; NULL >= 0
-        # filters out) — every vector in that cell would silently vanish
-        # from candidate sets
+        # __HIVE_DEFAULT_PARTITION__ directory, which the probe can
+        # never select (NULL >= 0 filters out) — every vector in that
+        # cell would silently vanish from candidate sets
         raise ValueError(
             "centroid frame carries NULL or negative cell_id values; the "
             "IVF index contract requires non-negative cell ids (probe-"
             "side partition pruning states cell_id >= 0)"
         )
+    fine = cents
     if meta_centroids is None:
-        meta_centroids = _auto_meta_centroids(spark, sf_dir, cents)
-    assigned = (
-        two_level_assignments(spark, sf_dir, cents, meta_centroids)
-        if meta_centroids is not None
-        else ivf_assignments(spark, sf_dir, centroids=cents)
-    )
-    assigned.repartition(
+        fits, fine = size_gate(cents.select("cell_id", "c_emb"),
+                               MAX_BROADCAST_QUERIES, collect=True)
+        if not fits:
+            fine = cents
+            meta_centroids = kmeans_centroid_frame(
+                spark, sf_dir, k=math.ceil(math.sqrt(cents.count()))
+            )
+    ivf_assignments(em, fine, meta_centroids).repartition(
         "cell_id"
     ).write.partitionBy("cell_id").mode("overwrite").parquet(path)
     cents.write.mode("overwrite").parquet(path + "/_centroids")
@@ -1345,38 +1265,35 @@ def write_ivf_index(spark: SparkSession, sf_dir: str, path: str,
         )
 
 
-def _index_centroids(spark: SparkSession, index_path: str) -> DataFrame:
-    """The centroid frame persisted with a bucketed IVF index. A missing
-    sidecar means the build died between the index write and the sidecar
-    write (or a pre-sidecar legacy layout): raise rather than guess — a
-    probe against assumed geometry returns wrong neighbors silently."""
-    try:
-        return spark.read.parquet(index_path + "/_centroids")
-    except AnalysisException:
+def _index_centroids(spark: SparkSession, index_path: str):
+    """(centroids, meta layer or None): the layers persisted with a
+    bucketed IVF index, as :func:`ivf_cells` takes them.
+
+    A missing ``_centroids`` sidecar means the build died between the
+    index write and the sidecar write (or a pre-sidecar legacy layout):
+    raise rather than guess — a probe against assumed geometry returns
+    wrong neighbors silently. A missing ``_meta_centroids`` is a VALID
+    state (flat indexes carry no meta layer). A routed build that died
+    between the two sidecar writes reads back as flat — which probes
+    the routed corpus with flat selection: the same candidate cells
+    ranked over ALL fine centroids instead of the routed subset,
+    equal-or-better recall, never wrong geometry — and past the
+    broadcast bound the flat probe refuses loudly anyway."""
+    def read(name):
+        try:
+            return spark.read.parquet(f"{index_path}/{name}")
+        except AnalysisException:
+            return None
+
+    cents = read("_centroids")
+    if cents is None:
         raise ValueError(
             f"IVF index at {index_path!r} has no _centroids sidecar: the "
             "index write did not complete (or predates sidecar layouts). "
             "Rebuild it with write_ivf_index — probing with assumed "
             "centroid geometry would silently return wrong neighbors."
         )
-
-
-def _index_meta_centroids(spark: SparkSession,
-                          index_path: str) -> DataFrame | None:
-    """The routing (meta) layer persisted with a two-level index, or
-    None for a flat index. UNLIKE :func:`_index_centroids`, absence is
-    a VALID state (flat indexes carry no meta layer). A routed build
-    that died between the `_centroids` and `_meta_centroids` writes
-    surfaces here as flat — which probes the routed corpus with FLAT
-    selection: same candidate cells ranked over ALL fine centroids
-    instead of the routed subset, equal-or-better recall, never wrong
-    geometry — so fail-open is safe here where it was not for the fine
-    centroids (and it fails loudly anyway past the broadcast bound,
-    where a flat probe of a >100k-centroid frame refuses)."""
-    try:
-        return spark.read.parquet(index_path + "/_meta_centroids")
-    except AnalysisException:
-        return None
+    return cents, read("_meta_centroids")
 
 
 def ivf_probe_bucketed(spark: SparkSession, sf_dir: str, index_path: str) -> DataFrame:
@@ -1386,22 +1303,14 @@ def ivf_probe_bucketed(spark: SparkSession, sf_dir: str, index_path: str) -> Dat
     query×centroid ranking — bounded by Q·N_PROBE and by K, never
     corpus-sized) prunes the index scan, and dynamic partition pruning
     skips unprobed directories at runtime. No driver structure holds
-    the probe set. The probe geometry comes from the centroids stored
-    WITH the index (:func:`_index_centroids`). Tests assert result
-    equality with q41, equality with DPP disabled, and the pruning
-    shape of the plan. A two-level index (built with
-    ``meta_centroids=``) is detected by its ``_meta_centroids`` sidecar
-    and probed with the ROUTED selection — read geometry always matches
-    build geometry, routing layer included."""
-    cents = _index_centroids(spark, index_path)
-    meta = _index_meta_centroids(spark, index_path)
-    probes = scoped_cache(
-        two_level_probes(spark, sf_dir, cents, meta)
-        if meta is not None
-        else _ivf_probes(spark, sf_dir, centroids=cents)
-    )
-    # probes is cached so the pruning side and the candidate join share
-    # one computation of the centroid ranking.
+    the probe set. The probe geometry — routing layer included — comes
+    from the layers stored WITH the index (:func:`_index_centroids`).
+    Tests assert result equality with q41, equality with DPP disabled,
+    and the pruning shape of the plan."""
+    em = load_table(spark, "embeddings", sf_dir)
+    # cached so the pruning side and the candidate join share one
+    # computation of the centroid ranking
+    probes = scoped_cache(_ivf_probes(em, *_index_centroids(spark, index_path)))
     # `cell_id >= 0` is the index CONTRACT (enforced at build by
     # write_ivf_index), restated here because Catalyst's dynamic
     # partition pruning only inserts its runtime subquery when the
@@ -1523,23 +1432,21 @@ def _knn_vote_predictions(top: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def ivf_knn_predictions(
-    spark: SparkSession, sf_dir: str, index_path: str
-) -> DataFrame:
+def ivf_knn_predictions(em: DataFrame, index_path: str) -> DataFrame:
     """(query_id, pred_label) leave-one-out kNN predictions for EVERY
-    corpus vector, on the bucketed IVF index: each vector probes its
-    N_PROBE nearest cells and votes over its KNN_K nearest neighbors
-    within them — exact cosine there, q120's rounding and vote rule
-    (:func:`_knn_vote_predictions`). Probe geometry comes from the
-    centroids stored with the index. A vector whose probed cells hold
-    no other vectors yields no prediction row — the confusion wrapper
-    surfaces those as NULL pred_label rather than dropping them."""
-    em = load_table(spark, "embeddings", sf_dir)
+    vector of the corpus frame ``em``, on the bucketed IVF index: each
+    vector probes its N_PROBE nearest cells and votes over its KNN_K
+    nearest neighbors within them — exact cosine there, q120's rounding
+    and vote rule (:func:`_knn_vote_predictions`). Probe geometry —
+    routing layer included — comes from the layers stored with the
+    index. A vector whose probed cells hold no other vectors yields no
+    prediction row — the confusion wrapper surfaces those as NULL
+    pred_label rather than dropping them."""
+    spark = em.sparkSession
     all_q = em.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    cents = _index_centroids(spark, index_path)
-    probes = _ivf_probes(spark, sf_dir, queries=all_q, centroids=cents)
+    probes = _ivf_probes(em, *_index_centroids(spark, index_path), queries=all_q)
     idx = spark.read.parquet(index_path)
     # rank explicitly at KNN_K depth — the default TOP_K truncation
     # would silently clip the vote set if KNN_K were ever raised past it
@@ -1560,6 +1467,8 @@ def ivf_knn_confusion(
     (label, pred_label, n) confusion schema. Vectors whose probed cells
     hold no other vectors appear with NULL pred_label (truth-side left
     join) instead of vanishing — every corpus vector is accounted for.
+    Flat and routed indexes alike: the probe takes the index's own
+    layers.
 
     Scale — stated precisely, since the query side here IS the corpus:
     with K centroids, probe selection costs N·K cosines against a
@@ -1578,12 +1487,10 @@ def ivf_knn_confusion(
     centroid sources at sf0.001 (weakly-clustered synthetic embeddings;
     agreement is governed by probe coverage exactly like q41's recall ≥
     0.6 — real embedding corpora cluster far tighter)."""
-    pred = ivf_knn_predictions(spark, sf_dir, index_path)
-    truth = load_table(spark, "embeddings", sf_dir).select(
-        F.col("vec_id").alias("query_id"), "label"
-    )
+    em = load_table(spark, "embeddings", sf_dir)
+    truth = em.select(F.col("vec_id").alias("query_id"), "label")
     return (
-        truth.join(pred, "query_id", "left")
+        truth.join(ivf_knn_predictions(em, index_path), "query_id", "left")
         .groupBy("label", "pred_label")
         .agg(F.count("*").alias("n"))
     )

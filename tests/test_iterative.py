@@ -20,11 +20,13 @@ def test_kmeans_converges_and_is_deterministic(spark, sf_dir):
     n_vecs = em.count()
     dim = len(em.select("embedding").first()[0])
 
-    assigned, trace, centroids, stats = kmeans(spark, sf_dir)
+    trace, centroids, stats = kmeans(spark, sf_dir)
     # objective (mean cosine to assigned centroid) must improve overall
     assert trace[-1] >= trace[0] - 1e-9, f"objective regressed: {trace}"
     # final centroids come back driver-sized: K vectors of the data dim
     assert len(centroids) == K and len(centroids[0]) == dim
+    # the final E-step's stats partition the corpus
+    assert stats.n_members.sum() == n_vecs and len(stats) <= K
     # deterministic: same seeding, same result
     df = q68_kmeans(spark, sf_dir).toPandas()
     df2 = q68_kmeans(spark, sf_dir).toPandas()

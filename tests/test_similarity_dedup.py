@@ -45,7 +45,7 @@ def test_nearest_cells_kernel_matches_expression_pipeline(spark, sf_dir):
             .select("vec_id", "cell_id")
         )
 
-    for cents in (S._stride_centroids(spark, sf_dir),
+    for cents in (S._stride(em, S.N_CELLS_STRIDE),
                   S.kmeans_centroid_frame(spark, sf_dir)):
         for top_n in (1, S.N_PROBE):
             got = sorted(
@@ -73,38 +73,117 @@ def test_ivf_recall_against_exact(spark, sf_dir):
     assert set(approx.query_id) == set(exact.query_id)
 
 
+def _jobs_before_and_total(spark, group, build):
+    """(jobs before the action, jobs in total) of ``build()`` followed by
+    a ``toPandas()`` of its frame, counted by job group."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sc.setJobGroup(group, group)
+    try:
+        df = build()
+        bus.waitUntilEmpty()
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        df.toPandas()
+        bus.waitUntilEmpty()
+        total = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return before, total
+
+
+def test_ivf_query_job_counts(spark, sf_dir):
+    """q41 and q129 read the corpus once and pass the frame to every
+    layer: q41 runs its one read and its one centroid collect before the
+    action (≤ 2 / ≤ 5 jobs in total), q129 its one read and the routed
+    core's gate collects (≤ 6 / ≤ 9). Each extra read or collect costs
+    a ~0.1-0.2 CPU-s job whatever its data, so a regression shows here
+    first."""
+    from mapreduce_framework_simple_spark.operators.similarity import (
+        q129_two_level_probe,
+    )
+
+    for name, fn, bound in (
+        ("q41", q41_ann_ivf, (2, 5)),
+        ("q129", q129_two_level_probe, (6, 9)),
+    ):
+        got = _jobs_before_and_total(
+            spark, f"{name}-job-count", lambda: fn(spark, sf_dir))
+        assert got[0] <= bound[0] and got[1] <= bound[1], (
+            f"{name} ran {got[0]} jobs before its action, {got[1]} in total")
+
+
+def test_ivf_entry_points_read_embeddings_once(spark, sf_dir, tmp_path,
+                                               monkeypatch):
+    """Every IVF entry point loads ``embeddings`` exactly once and
+    passes that frame down to the stride layers, the query subset and
+    the corpus side; each extra load_table pays one schema-inference
+    job."""
+    import mapreduce_framework_simple_spark.operators.similarity as S
+
+    reads = []
+    real = S.load_table
+
+    def spy(spark_, name, sf_dir_):
+        reads.append(name)
+        return real(spark_, name, sf_dir_)
+
+    monkeypatch.setattr(S, "load_table", spy)
+    path = str(tmp_path / "ivf_one_read_idx")
+    em = real(spark, "embeddings", sf_dir)
+    entry_points = {
+        "q41": lambda: S.q41_ann_ivf(spark, sf_dir),
+        "q129": lambda: S.q129_two_level_probe(spark, sf_dir),
+        "ann_ivf_topk (routed)": lambda: S.ann_ivf_topk(
+            spark, sf_dir, meta_centroids=S._stride(em, S.META_STRIDE)),
+        "write_ivf_index": lambda: S.write_ivf_index(spark, sf_dir, path),
+        "ivf_probe_bucketed": lambda: S.ivf_probe_bucketed(spark, sf_dir, path),
+        "ivf_knn_confusion": lambda: S.ivf_knn_confusion(spark, sf_dir, path),
+    }
+    for name, call in entry_points.items():
+        reads.clear()
+        call()
+        assert reads == ["embeddings"], f"{name} loaded {reads}"
+
+
 def test_two_level_probes_full_route_equals_flat(spark, sf_dir):
-    """two_level_probes with route_n ≥ the meta-cell count routes every
-    query to every meta cell — the candidate pool is then ALL K fine
-    cells, so the output must equal the flat _ivf_probes row-for-row
-    (same sequential-dim scoring, same HALF_UP micro-units, same
-    smaller-cell tie rule). This pins the router's kernel parity; the
-    recall test below covers the approximate small-route_n regime."""
+    """The routed branch of ivf_cells with route_n ≥ the meta-cell count
+    routes every query to every meta cell — the candidate pool is then
+    ALL K fine cells, so the output must equal the flat _ivf_probes
+    row-for-row, vectors included (same sequential-dim scoring, same
+    HALF_UP micro-units, same smaller-cell tie rule). This pins the
+    router's kernel parity; the recall test below covers the approximate
+    small-route_n regime."""
     from mapreduce_framework_simple_spark.operators import similarity as S
 
-    cents = S._stride_centroids(spark, sf_dir)
+    em = S.load_table(spark, "embeddings", sf_dir)
+    cents = S._stride(em, S.N_CELLS_STRIDE)
     meta = S.kmeans_centroid_frame(spark, sf_dir, k=5)
-    flat = sorted(map(tuple, S._ivf_probes(spark, sf_dir, centroids=cents)
-                      .select("query_id", "cell_id").collect()))
-    routed = sorted(map(tuple, S.two_level_probes(
-        spark, sf_dir, centroids=cents, meta_centroids=meta, route_n=5
-    ).select("query_id", "cell_id").collect()))
+    q = S._stride(em, S.QUERY_STRIDE, "query_id", "q_emb")
+
+    def rows(df):
+        return sorted((r.query_id, r.cell_id, tuple(r.q_emb)) for r in df.collect())
+
+    flat = rows(S._ivf_probes(em, cents))
+    routed = rows(S.ivf_cells(q, "query_id", "q_emb", cents, meta,
+                              top_n=S.N_PROBE, route_n=5))
     assert len(flat) > 0
     assert routed == flat
 
 
 def test_two_level_assignments_full_route_equals_flat(spark, sf_dir):
-    """The index-build twin: with route_n = meta-cell count every fine
-    cell is reachable, so two_level_assignments must reproduce
+    """The index-build side: with route_n = meta-cell count every fine
+    cell is reachable, so the routed assignment must reproduce the flat
     ivf_assignments (argmax cell per vector) exactly."""
     from mapreduce_framework_simple_spark.operators import similarity as S
 
-    cents = S._stride_centroids(spark, sf_dir)
+    em = S.load_table(spark, "embeddings", sf_dir)
+    cents = S._stride(em, S.N_CELLS_STRIDE)
     meta = S.kmeans_centroid_frame(spark, sf_dir, k=5)
-    flat = sorted(map(tuple, S.ivf_assignments(spark, sf_dir, centroids=cents)
+    flat = sorted(map(tuple, S.ivf_assignments(em, cents)
                       .select("vec_id", "cell_id").collect()))
-    routed = sorted(map(tuple, S.two_level_assignments(
-        spark, sf_dir, centroids=cents, meta_centroids=meta, route_n=5
+    routed = sorted(map(tuple, S.ivf_cells(
+        em, "vec_id", "embedding", cents, meta, top_n=1, route_n=5
     ).select("vec_id", "cell_id").collect()))
     assert len(flat) > 0
     assert routed == flat
@@ -117,12 +196,11 @@ def test_two_level_assignments_router_agreement(spark, sf_dir):
     every vector exactly once."""
     from mapreduce_framework_simple_spark.operators import similarity as S
 
-    cents = S._stride_centroids(spark, sf_dir)
+    em = S.load_table(spark, "embeddings", sf_dir)
+    cents = S._stride(em, S.N_CELLS_STRIDE)
     meta = S.kmeans_centroid_frame(spark, sf_dir, k=5)
-    flat = S.ivf_assignments(spark, sf_dir, centroids=cents).toPandas()
-    routed = S.two_level_assignments(
-        spark, sf_dir, centroids=cents, meta_centroids=meta
-    ).toPandas()
+    flat = S.ivf_assignments(em, cents).toPandas()
+    routed = S.ivf_assignments(em, cents, meta).toPandas()
     assert len(routed) == len(flat)
     assert routed.vec_id.is_unique
     merged = flat.merge(routed, on="vec_id", suffixes=("_f", "_r"))
@@ -137,11 +215,10 @@ def test_two_level_ann_recall_against_exact(spark, sf_dir):
     sf0.001 — full-route regime there, so the paths coincide)."""
     from mapreduce_framework_simple_spark.operators import similarity as S
 
+    em = S.load_table(spark, "embeddings", sf_dir)
     exact = q40_cosine_topk(spark, sf_dir).toPandas()
-    routed = S.ann_two_level_topk(
-        spark, sf_dir,
-        S._stride_centroids(spark, sf_dir),
-        S._stride_meta_centroids(spark, sf_dir),
+    routed = S.ann_ivf_topk(
+        spark, sf_dir, meta_centroids=S._stride(em, S.META_STRIDE)
     ).toPandas()
     e = set(zip(exact.query_id, exact.neighbor_id))
     r = set(zip(routed.query_id, routed.neighbor_id))
@@ -150,7 +227,7 @@ def test_two_level_ann_recall_against_exact(spark, sf_dir):
     assert set(routed.query_id) == set(exact.query_id)
 
 
-def test_two_level_probes_skips_empty_metas(spark, sf_dir):
+def test_two_level_probes_skips_empty_metas(spark):
     """A meta cell no fine centroid routed to is EMPTY; a query whose
     route_n picks land only on empty metas would silently get zero
     candidates (a silently dropped vector on the assignment side).
@@ -168,9 +245,8 @@ def test_two_level_probes_skips_empty_metas(spark, sf_dir):
     q = spark.createDataFrame(
         [(7, [0.1, 1.0])], "query_id long, q_emb array<double>"
     )
-    out = S.two_level_probes(
-        spark, sf_dir, centroids=fine, meta_centroids=meta,
-        queries=q, route_n=1,
+    out = S.ivf_cells(
+        q, "query_id", "q_emb", fine, meta, top_n=S.N_PROBE, route_n=1,
     ).toPandas()
     assert sorted(out.cell_id) == [1, 2], (
         f"query dropped or mis-routed: {out.to_dict('records')}"
@@ -184,12 +260,11 @@ def test_two_level_probes_router_recall(spark, sf_dir):
     coverage, not bugs), and emit ≤ N_PROBE cells for every query."""
     from mapreduce_framework_simple_spark.operators import similarity as S
 
-    cents = S._stride_centroids(spark, sf_dir)
+    em = S.load_table(spark, "embeddings", sf_dir)
+    cents = S._stride(em, S.N_CELLS_STRIDE)
     meta = S.kmeans_centroid_frame(spark, sf_dir, k=5)
-    flat = S._ivf_probes(spark, sf_dir, centroids=cents).toPandas()
-    routed = S.two_level_probes(
-        spark, sf_dir, centroids=cents, meta_centroids=meta
-    ).toPandas()
+    flat = S._ivf_probes(em, cents).toPandas()
+    routed = S._ivf_probes(em, cents, meta).toPandas()
     f = set(zip(flat.query_id, flat.cell_id))
     r = set(zip(routed.query_id, routed.cell_id))
     recall = len(f & r) / len(f)
@@ -1385,7 +1460,7 @@ def test_ivf_knn_audit_agrees_with_exact(spark, sf_dir, tmp_path):
         assert conf["n"].sum() == n_corpus  # every vector accounted for
 
         p_ivf = (
-            S.ivf_knn_predictions(spark, sf_dir, path)
+            S.ivf_knn_predictions(em, path)
             .toPandas()
             .set_index("query_id")["pred_label"]
         )
@@ -1435,8 +1510,8 @@ def test_kmeans_ivf_index_roundtrips_centroids(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ivf_kmeans_idx")
     S.write_ivf_index(spark, sf_dir, path, centroids=cents)
 
-    stored = S._index_centroids(spark, path)
-    assert stored is not None and stored.count() == cents.count()
+    stored, stored_meta = S._index_centroids(spark, path)
+    assert stored.count() == cents.count() and stored_meta is None
     # the underscore dir is skipped by the main index read
     idx_cols = set(spark.read.parquet(path).columns)
     assert idx_cols == {"vec_id", "embedding", "cell_id"}
@@ -1465,13 +1540,14 @@ def test_two_level_ivf_index_roundtrip(spark, sf_dir, tmp_path):
     import mapreduce_framework_simple_spark.operators.similarity as S
     from mapreduce_framework_simple_spark.plans.explain import formatted_plan
 
-    cents = S._stride_centroids(spark, sf_dir)
-    meta = S._stride_meta_centroids(spark, sf_dir)
+    em = S.load_table(spark, "embeddings", sf_dir)
+    cents = S._stride(em, S.N_CELLS_STRIDE)
+    meta = S._stride(em, S.META_STRIDE)
     path = str(tmp_path / "ivf_routed_idx")
     S.write_ivf_index(spark, sf_dir, path, centroids=cents,
                       meta_centroids=meta)
 
-    stored_meta = S._index_meta_centroids(spark, path)
+    _, stored_meta = S._index_centroids(spark, path)
     assert stored_meta is not None and stored_meta.count() == meta.count()
     # the underscore dirs stay invisible to the main index scan
     assert set(spark.read.parquet(path).columns) == {
@@ -1483,7 +1559,7 @@ def test_two_level_ivf_index_roundtrip(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan
     g = got.toPandas().sort_values(["query_id", "rnk"]).reset_index(drop=True)
     e = (
-        S.ann_two_level_topk(spark, sf_dir, cents, meta)
+        S.ann_ivf_topk(spark, sf_dir, cents, meta)
         .toPandas()
         .sort_values(["query_id", "rnk"])
         .reset_index(drop=True)
@@ -1493,7 +1569,7 @@ def test_two_level_ivf_index_roundtrip(spark, sf_dir, tmp_path):
     # a FLAT index keeps probing flat (no meta sidecar → None)
     flat_path = str(tmp_path / "ivf_flat_idx")
     S.write_ivf_index(spark, sf_dir, flat_path, centroids=cents)
-    assert S._index_meta_centroids(spark, flat_path) is None
+    assert S._index_centroids(spark, flat_path)[1] is None
 
 
 def test_write_ivf_index_auto_routes_past_bound(spark, sf_dir, tmp_path,
@@ -1503,20 +1579,22 @@ def test_write_ivf_index_auto_routes_past_bound(spark, sf_dir, tmp_path,
     (k = ⌈√K⌉ via kmeans_centroid_frame) and route, instead of
     surfacing _nearest_cells' refusal — tools/router_probe.py's K=150k
     regime shrunk to test size by lowering MAX_BROADCAST_QUERIES (the
-    dispatch probe and the flat refusal read the same module constant).
-    The probe path must then return exactly the routed recompute built
-    from the PERSISTED layers (build/probe geometry cannot drift)."""
+    build's size gate and the flat refusal read the same module
+    constant). Every reader of the index must then take the persisted
+    routing layer: the bucketed probe returns exactly the routed
+    recompute from the PERSISTED layers, and so does the kNN audit,
+    which accounts for every vector (build/probe geometry cannot
+    drift)."""
     import math
 
     import pytest
     from pyspark.sql import functions as F
 
     import mapreduce_framework_simple_spark.operators.similarity as S
-    from mapreduce_framework_simple_spark.sources.io import load_table
 
     # fine "centroids": deterministic 3/4 corpus subset — router_probe's
     # fixture recipe; the point is the COUNT past the bound, not quality
-    em = load_table(spark, "embeddings", sf_dir)
+    em = S.load_table(spark, "embeddings", sf_dir)
     fine = em.where(F.pmod(F.col("vec_id"), F.lit(4)) != 0).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("c_emb")
     )
@@ -1525,26 +1603,50 @@ def test_write_ivf_index_auto_routes_past_bound(spark, sf_dir, tmp_path,
 
     # the regime being dispatched: flat assignment refuses at this bound
     with pytest.raises(ValueError, match="two-level router"):
-        S.ivf_assignments(spark, sf_dir, centroids=fine)
+        S.ivf_assignments(em, fine)
 
     path = str(tmp_path / "ivf_auto_routed_idx")
     S.write_ivf_index(spark, sf_dir, path, centroids=fine)  # no meta=
 
-    meta = S._index_meta_centroids(spark, path)
+    cents, meta = S._index_centroids(spark, path)
     assert meta is not None, "auto-dispatch did not persist _meta_centroids"
     assert meta.count() == math.ceil(math.sqrt(k_fine))  # production sizing
 
     got = S.ivf_probe_bucketed(spark, sf_dir, path)
     g = got.toPandas().sort_values(["query_id", "rnk"]).reset_index(drop=True)
     e = (
-        S.ann_two_level_topk(spark, sf_dir,
-                             S._index_centroids(spark, path), meta)
+        S.ann_ivf_topk(spark, sf_dir, cents, meta)
         .toPandas()
         .sort_values(["query_id", "rnk"])
         .reset_index(drop=True)
     )
     cols = ["query_id", "neighbor_id", "rnk"]
     assert g[cols].equals(e[cols])
+
+    # the kNN audit on the routed index: every vector accounted for, and
+    # equal to the audit recomputed from the persisted layers with the
+    # candidates assigned in memory instead of read from the index
+    conf = S.ivf_knn_confusion(spark, sf_dir, path).collect()
+    assert sum(r["n"] for r in conf) == em.count()
+    all_q = em.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+    cand = S._ivf_probes(em, cents, meta, queries=all_q).join(
+        S.ivf_assignments(em, cents, meta), "cell_id"
+    )
+    pred = S._knn_vote_predictions(
+        S._score_and_rank_candidates(cand, k=S.KNN_K),
+        em.select(F.col("vec_id").alias("neighbor_id"),
+                  F.col("label").alias("nlabel")),
+    )
+    want = (
+        em.select(F.col("vec_id").alias("query_id"), "label")
+        .join(pred, "query_id", "left")
+        .groupBy("label", "pred_label")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    )
+    assert sorted(conf, key=repr) == sorted(want, key=repr)
 
 
 def test_ivf_index_missing_sidecar_fails_fast(spark, sf_dir, tmp_path):
@@ -1561,7 +1663,7 @@ def test_ivf_index_missing_sidecar_fails_fast(spark, sf_dir, tmp_path):
 
     path = str(tmp_path / "ivf_partial_idx")
     S.write_ivf_index(spark, sf_dir, path)  # stride build writes one too
-    assert S._index_centroids(spark, path).count() > 0
+    assert S._index_centroids(spark, path)[0].count() > 0
 
     shutil.rmtree(path + "/_centroids")  # simulate the partial build
     with pytest.raises(ValueError, match="_centroids sidecar"):
@@ -1863,9 +1965,10 @@ def test_score_and_rank_kernel_matches_fold_formulation(spark, sf_dir):
 
     import mapreduce_framework_simple_spark.operators.similarity as S
 
-    cents = S.scoped_cache(S._stride_centroids(spark, sf_dir))
-    assigned = S.ivf_assignments(spark, sf_dir, centroids=cents)
-    cand = S._ivf_probes(spark, sf_dir, centroids=cents).join(assigned, "cell_id")
+    em = S.load_table(spark, "embeddings", sf_dir)
+    cents = S.scoped_cache(S._stride(em, S.N_CELLS_STRIDE))
+    assigned = S.ivf_assignments(em, cents)
+    cand = S._ivf_probes(em, cents).join(assigned, "cell_id")
     got = sorted(
         tuple(r) for r in S._score_and_rank_candidates(cand).collect()
     )

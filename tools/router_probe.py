@@ -5,10 +5,11 @@ the flat path refuses (K > MAX_BROADCAST_QUERIES = 100k centroids).
 Builds a 100× replica of sf0.1 embeddings (200k × 64-dim vectors), takes
 a 150k-vector subset as the fine-centroid frame — past the flat broadcast
 ceiling — and:
-  1. asserts flat `_nearest_cells` fails loudly at K=150k (the ceiling),
-  2. runs `two_level_probes` end-to-end over the deterministic query
+  1. asserts the flat branch of the IVF dispatch (`_ivf_probes` with no
+     meta layer) fails loudly at K=150k (the ceiling),
+  2. runs the routed branch end-to-end over the deterministic query
      subset with a k-means meta layer at k = ceil(sqrt(K)) ≈ 388,
-     timing the meta build, the fine-route build, and the probe itself.
+     timing the meta build, then the fine-route build and the probe.
 
 Numbers land in docs/SCALE.md §"Two-level IVF routing". Run on a quiet
 box: python tools/router_probe.py
@@ -57,11 +58,8 @@ def main() -> None:
     assert k_fine > S.MAX_BROADCAST_QUERIES
 
     # 1. the flat path must refuse this K loudly
-    queries = em.where(F.col("vec_id") % S.QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
     try:
-        S._nearest_cells(queries, "query_id", "q_emb", fine, top_n=S.N_PROBE)
+        S._ivf_probes(em, fine)
         print("FLAT PATH DID NOT REFUSE — BUG")
         sys.exit(1)
     except ValueError as e:
@@ -78,14 +76,11 @@ def main() -> None:
     print(f"meta k-means k={k_meta}: {t_meta:.1f}s")
 
     t0 = time.perf_counter()
-    out = S.two_level_probes(
-        spark, dst, centroids=fine, meta_centroids=meta, queries=queries
-    )
-    n_out = out.count()
+    n_out = S._ivf_probes(em, fine, meta).count()
     t_probe = time.perf_counter() - t0
-    n_q = queries.count()
+    n_q = S._stride(em, S.QUERY_STRIDE).count()
     print(
-        f"two_level_probes: {n_out} probe rows for {n_q} queries x "
+        f"routed probes: {n_out} probe rows for {n_q} queries x "
         f"K={k_fine} in {t_probe:.1f}s (route_n={S.META_ROUTE_PROBES}, "
         f"broadcasts bounded at {k_meta} meta rows)"
     )
