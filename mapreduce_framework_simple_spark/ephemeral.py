@@ -195,17 +195,23 @@ def _evict(key: tuple) -> None:
 
 
 def _memoized(key: tuple, compute):
-    """``key``'s value, computing and inserting it on a miss. A hit
-    becomes the most recently used entry and re-caches its frames if a
-    ``spark.catalog.clearCache()`` dropped them (a registration only:
-    the data fills again at the next action). Past ``MEMO_MAX`` entries
-    the least recently used goes first."""
+    """``key``'s value, computing and inserting it on a miss. The entry
+    takes the cached frames the value holds out of the scoped registries
+    (``compute`` caches them with ``scoped_cache``), so only eviction
+    unpersists them. A hit becomes the most recently used entry and
+    re-caches its frames if a ``spark.catalog.clearCache()`` dropped
+    them (a registration only: the data fills again at the next
+    action). Past ``MEMO_MAX`` entries the least recently used goes
+    first."""
     ent = _MEMO.pop(key, None)
     if ent is None:
         val = compute()
         items = val if isinstance(val, tuple) else (val,)
-        ent = (val, [v for v in items
-                     if isinstance(v, DataFrame) and v.is_cached])
+        held = [v for v in items if isinstance(v, DataFrame) and v.is_cached]
+        # the entry owns its frames: no query boundary may release them
+        for reg in (_SCOPED, *(s[0] for s in getattr(_TLS, "scopes", ()))):
+            reg[:] = [f for f in reg if all(f is not h for h in held)]
+        ent = (val, held)
     else:
         for h in ent[1]:
             lvl = h.storageLevel

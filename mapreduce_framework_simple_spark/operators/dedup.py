@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import logging
 import os
-from types import EllipsisType
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -661,83 +660,53 @@ def band_signatures_from(docs: DataFrame) -> DataFrame:
 LSH_MAX_BUCKET = 1000
 
 
-def _drop_oversized_buckets(
-    bands: DataFrame, max_bucket_size: int, what: str, cache_fn=None
-) -> DataFrame:
-    """Remove rows of (band, band_sig) buckets holding more than
-    ``max_bucket_size`` docs; log the dropped-bucket count eagerly.
+def cap_hot_buckets(
+    rows: DataFrame, what: str, sizes: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """THE hot-bucket guard: ``(kept, drop)``, where ``drop`` lists the
+    (band, band_sig) buckets whose population ``bucket_n`` in ``sizes``
+    exceeds ``LSH_MAX_BUCKET`` (read at call time) and ``kept`` is
+    ``rows`` without them. ``sizes`` defaults to the group count of
+    ``rows``; the incremental probe passes corpus plus batch
+    populations instead, so a bucket is capped on its union size.
 
-    Scale: the bucket-size aggregate does map-side partial aggregation
-    (16 rows/doc in, ~1 row/bucket out), and the oversized list — at
-    most N/cap rows by construction — broadcasts into a map-side
-    anti-join, so the guard adds no corpus-sized shuffle. The caller
-    must pass CACHED ``bands`` (the guard's eager count doubles as the
-    cache-populating action, so the count + downstream join together
-    cost ONE signature materialization, not three), and the common
-    no-oversized-bucket case returns ``bands`` untouched — zero plan
-    change, just the one small aggregate job over the cache.
-    ``cache_fn`` overrides how the oversized list is cached (default:
-    query-scoped; a memo entry passes its own holder)."""
-    oversized = (cache_fn or scoped_cache)(
-        bands.groupBy("band", "band_sig")
-        .agg(F.count("*").alias("bucket_n"))
-        .where(F.col("bucket_n") > max_bucket_size)
-        .select("band", "band_sig")
+    The drop list is cached and counted eagerly: a capped result must
+    never look complete, so every drop is logged when it is decided.
+    With nothing to drop, ``kept`` is ``rows`` itself and the plan is
+    unchanged. Otherwise ``kept`` is an UNHINTED anti-join: the list is
+    at most ~bands·N/cap rows and sits atop an aggregate, so AQE plans
+    the join from its true size (broadcast while small, shuffled
+    beyond), where a hint would force a broadcast at any size.
+
+    Scale: the bucket count aggregates map-side (4 rows/doc in, ~1
+    row/bucket out), so the guard adds no corpus-sized shuffle. Pass
+    cached ``rows``: the count then fills that cache, and the count and
+    the caller's self-join share one signature pass."""
+    if sizes is None:
+        sizes = rows.groupBy("band", "band_sig").agg(F.count("*").alias("bucket_n"))
+    cap = LSH_MAX_BUCKET
+    drop = scoped_cache(
+        sizes.where(F.col("bucket_n") > cap).select("band", "band_sig").distinct()
     )
-    # eager tiny action: a capped result must never look complete —
-    # surface the drop count at the moment the cap decision is made
-    # (also populates both caches: bands via the agg scan, oversized)
-    n_dropped = oversized.count()
+    n_dropped = drop.count()
     if not n_dropped:
-        return bands
+        return rows, drop
     logger.warning(
-        "%s: dropped %d LSH bucket(s) exceeding %d docs "
+        "%s: dropped %d LSH bucket(s) holding more than %d docs "
         "(boilerplate guard; pairs within them are not emitted)",
-        what, n_dropped, max_bucket_size,
+        what, n_dropped, cap,
     )
-    # UNHINTED anti-join (module hint policy): the oversized list is
-    # worst-case corpus-proportional (~bands·N/cap rows on a
-    # boilerplate-heavy corpus) and it is agg-derived — sitting atop the
-    # groupBy exchange — so AQE plans the join from its TRUE size:
-    # broadcast while small (the common case: a handful of hot buckets),
-    # shuffled anti-join when a pathological corpus grows it. A hint
-    # would force a driver-side hashed relation at any size.
-    return bands.join(oversized, ["band", "band_sig"], "left_anti")
+    return rows.join(drop, ["band", "band_sig"], "left_anti"), drop
 
 
-def lsh_candidate_pairs(
-    bands: DataFrame, max_bucket_size: int | None | EllipsisType = ...
-) -> DataFrame:
+def lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
     """Banded self-join on (band, band_sig): distinct candidate pairs
-    (doc_a < doc_b). The single definition of the LSH candidate rule —
-    q38 and pipeline.curate both call this, so a banding change cannot
-    silently diverge between the oracle-verified query and the pipeline.
-
-    Buckets larger than ``max_bucket_size`` docs are dropped before the
-    join (see ``LSH_MAX_BUCKET``); pass ``None`` when the input is
-    already capped (:func:`capped_corpus_bands`, q38's memoized path) or
-    to genuinely disable the guard (test/ground-truth use only). With
-    the guard on, ``bands`` is cached
-    here so the guard's count and the self-join's two scans share ONE
-    signature materialization (idempotent if the caller already cached
-    the same plan — Spark's CacheManager dedupes by plan).
-
-    NOTE: the guard's drop-count action runs EAGERLY at plan-construction
-    time (deliberate: a capped result must never look complete, and the
-    inputs are immutable parquet, so the decision cannot go stale) — this
-    function, and the q38-composing queries, are therefore not pure plan
-    builders. The DuckDB oracles mirror the cap (``bok``/``kept`` CTEs),
-    so query/oracle hash equality holds even when the cap fires."""
-    # ``...`` default = "the module's current LSH_MAX_BUCKET", read at
-    # CALL time — a def-time default would freeze the value, so a runtime
-    # change (monkeypatch, the curate CLI knob) would silently apply to
-    # capped_corpus_bands (which reads the global) but not to default-arg
-    # callers. None still means "guard disabled".
-    if max_bucket_size is ...:
-        max_bucket_size = LSH_MAX_BUCKET
-    if max_bucket_size is not None:
-        bands = scoped_cache(bands)
-        bands = _drop_oversized_buckets(bands, max_bucket_size, "lsh_candidate_pairs")
+    (doc_a < doc_b). The single definition of the LSH candidate rule:
+    q38, pipeline.curate and the vector LSH of q96 all call it, so a
+    banding change cannot diverge between them. It applies no cap;
+    capping callers pass the ``kept`` frame of :func:`cap_hot_buckets`.
+    The DuckDB oracles mirror that cap (``bok``/``kept`` CTEs), so
+    query/oracle hash equality holds even when the cap fires."""
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -758,31 +727,18 @@ def capped_corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     outlives the per-query ``release_caches()``: q38 and every query
     built on it share one signature pass and one eager drop-count
     aggregate per session and input instead of one per query (35–42
-    Spark jobs per sweep of the six LSH-family queries). The drop count
-    is logged once, when the entry is built. The entry's name carries
-    the deep fingerprint of ``documents.parquet`` and the cap, so a
-    same-path rewrite or a changed ``LSH_MAX_BUCKET`` builds afresh.
-    Bounded: 4 rows/doc of (id, band, 44-byte band_sig), ~0.02 % of the
-    corpus text."""
+    Spark jobs per sweep of the six LSH-family queries). The entry's
+    value holds the cached bands and the guard's drop list, so the memo
+    owns both. The drop count is logged once, when the entry is built.
+    The entry's name carries the deep fingerprint of
+    ``documents.parquet`` and the cap, so a same-path rewrite or a
+    changed ``LSH_MAX_BUCKET`` builds afresh. Bounded: 4 rows/doc of
+    (id, band, 44-byte band_sig), ~0.02 % of the corpus text."""
     docs_path = os.path.join(sf_dir, "documents.parquet")
 
     def build():
-        held: list[DataFrame] = []
-
-        def hold(df: DataFrame) -> DataFrame:
-            held.append(df.cache())
-            return held[-1]
-
-        try:
-            bands = hold(band_signatures_from(load_table(spark, "documents", sf_dir)))
-            return (_drop_oversized_buckets(bands, LSH_MAX_BUCKET,
-                                            "capped_corpus_bands", cache_fn=hold),
-                    *held)
-        except BaseException:
-            # a failed build leaves no pinned frame that nothing tracks
-            for h in held:
-                h.unpersist(blocking=False)
-            raise
+        bands = scoped_cache(band_signatures_from(load_table(spark, "documents", sf_dir)))
+        return (*cap_hot_buckets(bands, "capped_corpus_bands"), bands)
 
     # the declared-schema scan keys the entry without the schema
     # inference job load_table pays, so a hit runs no Spark job
@@ -819,10 +775,7 @@ INCREMENTAL_BROADCAST_BANDS = 2_000_000
 
 
 def incremental_lsh_candidates(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    index_path: str,
-    max_bucket_size: int | None | EllipsisType = ...,
+    spark: SparkSession, new_docs: DataFrame, index_path: str
 ) -> DataFrame:
     """Near-dup candidates between a NEW document batch and an indexed
     corpus: compute band signatures for the batch only, broadcast them
@@ -831,18 +784,15 @@ def incremental_lsh_candidates(
     (band, band_sig). Returns (new_doc_id, corpus_doc_id) distinct
     pairs.
 
-    Fan-out guard — UNION-bucket semantics, exactly mirroring
-    :func:`lsh_candidate_pairs` on the combined corpus: a bucket is
-    dropped when its corpus population (the index's stored ``bucket_n``)
-    PLUS its batch population exceeds ``max_bucket_size``. Capping each
-    side independently would be weaker — 600 indexed + 600 batch docs in
-    one boilerplate bucket pass both per-side checks yet emit 360k cross
+    Fan-out guard — UNION-bucket semantics, exactly mirroring the capped
+    :func:`lsh_candidate_pairs` of q38 on the combined corpus: the
+    populations handed to :func:`cap_hot_buckets` are the index's stored
+    ``bucket_n`` PLUS the batch's own count. Capping each side
+    independently would be weaker — 600 indexed + 600 batch docs in one
+    boilerplate bucket pass both per-side checks yet emit 360k cross
     pairs, while monolithic q38 on the union (bucket size 1200) drops
-    them. Dropped buckets are counted and logged (no silent caps); for
-    indexes written before ``bucket_n`` existed, the corpus populations
-    are derived on the fly with one extra column-pruned index
-    aggregation (warning logged suggesting a rebuild) — the union-bucket
-    cap semantics hold either way.
+    them. An index without ``bucket_n`` raises ``ValueError``; every
+    index :func:`write_lsh_index` writes carries it.
 
     Scale: the guard decision joins the index against the (tiny,
     broadcast) batch bucket list — one column-pruned index metadata
@@ -851,16 +801,11 @@ def incremental_lsh_candidates(
     Equality with the batch-recompute formulation (q38 on the union,
     restricted to cross pairs) is asserted in test_similarity_dedup,
     including a planted case where the cap fires only on the UNION."""
-    if max_bucket_size is ...:  # call-time read of the module global
-        max_bucket_size = LSH_MAX_BUCKET  # (see lsh_candidate_pairs)
-    nb = band_signatures_from(new_docs)
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
+    from pyspark.sql import Window
 
-        nb = nb.withColumn(
-            "nb_n", F.count("*").over(Window.partitionBy("band", "band_sig"))
-        )
-    nb = scoped_cache(nb)
+    nb = scoped_cache(band_signatures_from(new_docs).withColumn(
+        "nb_n", F.count("*").over(Window.partitionBy("band", "band_sig"))
+    ))
     # an explicit hint is UNCONDITIONAL — AQE cannot demote it — so a
     # corpus-scale backfill batch would force an over-threshold broadcast
     # build; beyond the bound every batch-side join runs unhinted. The
@@ -880,51 +825,24 @@ def incremental_lsh_candidates(
                 [], "new_doc_id long, corpus_doc_id long"
             )
         raise
-    if max_bucket_size is not None:
-        if "bucket_n" in idx.columns:
-            guard_src = idx.select("band", "band_sig", "bucket_n")
-        else:
-            # an index written before bucket_n existed: derive the corpus
-            # bucket populations with a one-off groupBy — one column-
-            # pruned (2-key) index scan, paid once per probe call, feeding
-            # ONLY the guard decision (the probe join below still reads
-            # the raw index) — rather than capping on batch-side
-            # population alone, which would readmit exactly the quadratic
-            # boilerplate fan-out the cap exists to prevent
-            logger.warning(
-                "incremental_lsh_candidates: index at %s predates bucket_n; "
-                "deriving bucket populations with an extra index scan — "
-                "rebuild via write_lsh_index to store them", index_path,
-            )
-            guard_src = idx.groupBy("band", "band_sig").agg(
-                F.count("*").alias("bucket_n")
-            )
-        batch_buckets = nb.select("band", "band_sig", "nb_n").distinct()
-        # deliberately a SEPARATE (column-pruned: 2 keys + bucket_n, no
-        # doc ids) index pass, not a residual filter on the probe join:
-        # a post-join predicate would still ENUMERATE every row-pair of
-        # an oversized bucket before discarding it — 2.5e11 predicate
-        # evaluations for one 1M-doc boilerplate bucket — while dropping
-        # the bucket pre-join skips that work entirely
-        drop_buckets = scoped_cache(
-            guard_src.join(hint(batch_buckets), ["band", "band_sig"])
-            .where(F.col("bucket_n") + F.col("nb_n") > max_bucket_size)
-            .select("band", "band_sig")
-            .distinct()
+    if "bucket_n" not in idx.columns:
+        raise ValueError(
+            f"incremental_lsh_candidates: the index at {index_path} has no "
+            "bucket_n column; rebuild it with write_lsh_index"
         )
-        # eager tiny action (bounded by the batch's bucket count): a
-        # capped result must never look complete
-        n_dropped = drop_buckets.count()
-        if n_dropped:
-            logger.warning(
-                "incremental_lsh_candidates: dropped %d bucket(s) whose "
-                "corpus+batch population exceeds %d docs (boilerplate "
-                "guard; cross pairs within them are not emitted)",
-                n_dropped, max_bucket_size,
-            )
-            nb = nb.join(
-                hint(drop_buckets), ["band", "band_sig"], "left_anti"
-            )
+    # a SEPARATE column-pruned (2 keys + bucket_n, no doc ids) index
+    # pass, not a residual filter on the probe join: a post-join
+    # predicate would still ENUMERATE every row-pair of an oversized
+    # bucket before discarding it, while dropping the bucket pre-join
+    # skips that work entirely
+    sizes = (
+        idx.select("band", "band_sig", "bucket_n")
+        .join(hint(nb.select("band", "band_sig", "nb_n").distinct()),
+              ["band", "band_sig"])
+        .select("band", "band_sig",
+                (F.col("bucket_n") + F.col("nb_n")).alias("bucket_n"))
+    )
+    nb, _ = cap_hot_buckets(nb, "incremental_lsh_candidates", sizes)
     return (
         idx.alias("c")
         .join(
@@ -980,8 +898,7 @@ def q38_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`capped_corpus_bands`), so q38 and the queries built on it
     (q79, q89, q107, q112, q126) pay the signature pass and the guard's
     eager drop-count aggregate once per session and input."""
-    return lsh_candidate_pairs(capped_corpus_bands(spark, sf_dir),
-                               max_bucket_size=None)
+    return lsh_candidate_pairs(capped_corpus_bands(spark, sf_dir))
 
 
 SIMHASH_BITS = 16
@@ -1213,7 +1130,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
 
 
 # NB: the `kept` CTE mirrors the Spark-side LSH_MAX_BUCKET hot-bucket
-# guard (lsh_candidate_pairs), so oracle and query stay hash-equal even
+# guard (cap_hot_buckets), so oracle and query stay hash-equal even
 # on corpora where the cap actually fires (boilerplate-heavy buckets).
 _DUCK_LSH_PAIRS = f"""
     sig2 AS (SELECT doc_id, k, min(({_DUCK_A}[k + 1] * (sid % {MINHASH_P}) + {_DUCK_B}[k + 1])
@@ -1743,15 +1660,15 @@ def _pr_compare(truth: DataFrame, cand: DataFrame) -> DataFrame:
 
 
 def _lsh_quality_report(docs: DataFrame) -> DataFrame:
-    """P/R of the LSH candidate rule vs exact Jaccard ≥ t ground truth,
-    over an arbitrary (doc_id, text) frame — the WITHIN-FRAME form: a
-    pair is in the eval iff BOTH endpoints are in the frame (used by
-    the full-corpus referee and the fraction variant; the declared q112
-    uses the anchored form, which keeps truth mass non-vanishing under
-    a fixed-size sample)."""
+    """P/R of the capped LSH candidate rule vs exact Jaccard ≥ t ground
+    truth, over an arbitrary (doc_id, text) frame — the WITHIN-FRAME
+    form: a pair is in the eval iff BOTH endpoints are in the frame
+    (the full-corpus referee; the declared q112 uses the anchored form,
+    which keeps truth mass non-vanishing under a fixed-size sample)."""
     sh = scoped_cache(shingle_id_sets_from(docs))
     truth = _jaccard_truth_pairs(sh).select("doc_a", "doc_b")
-    cand = lsh_candidate_pairs(band_signatures_from(docs)).select(
+    bands = scoped_cache(band_signatures_from(docs))
+    cand = lsh_candidate_pairs(cap_hot_buckets(bands, "lsh_quality")[0]).select(
         F.col("doc_a").alias("cand_a"), F.col("doc_b").alias("cand_b")
     )
     return _pr_compare(truth, cand)
@@ -1819,7 +1736,7 @@ def q112_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate/hit counts and the two ratios (exact integer division,
     bit-stable across engines).
 
-    ANCHORED FIXED-SIZE SAMPLE (round 4): the EVAL_SAMPLE_N = 400
+    ANCHORED FIXED-SIZE SAMPLE: the EVAL_SAMPLE_N = 400
     documents with the smallest md5-rank (:func:`eval_sample_docs`) are
     the eval ANCHORS; the eval covers every pair with AT LEAST ONE
     anchored endpoint — truth pairs come from an anchor-vs-CORPUS exact
@@ -1839,9 +1756,8 @@ def q112_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a map-side probe of the corpus shingle scan (q91's
     decontamination shape), the per-doc count table is one linear
     aggregation, and the candidate filter is two broadcast lookups of
-    the 400-id anchor list. The full-corpus eval remains the test-only
-    referee (`lsh_quality_full`); the mid-scale fraction form survives
-    as :func:`lsh_quality_fraction`."""
+    the 400-id anchor list. The full-corpus eval is the test-only
+    referee (`lsh_quality_full`)."""
     anchors = scoped_cache(
         eval_sample_docs(spark, sf_dir, EVAL_SAMPLE_N).select("doc_id")
     )
@@ -1891,25 +1807,6 @@ def q112_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_a").alias("cand_a"), F.col("doc_b").alias("cand_b"))
     )
     return _pr_compare(truth, cand)
-
-
-def lsh_quality_fraction(
-    spark: SparkSession, sf_dir: str, buckets: int = 4
-) -> DataFrame:
-    """Mid-scale variant of q112: evaluate WITHIN a deterministic
-    md5-bucket FRACTION (1/buckets) of the corpus — q83's hash-sample
-    machinery, pushed to the scan; a pair is in the eval iff both
-    endpoints land in the slice. Useful when the corpus is small enough
-    that a proportional within-slice eval is affordable; the declared
-    q112 uses the ANCHORED fixed-size sample instead, because this
-    form's truth join still scales quadratically with the corpus (at
-    1/b sampling, (N/b)² work)."""
-    from mapreduce_framework_simple_spark.operators.sampling import hash_bucket
-
-    docs = load_table(spark, "documents", sf_dir).where(
-        hash_bucket(F.col("doc_id"), buckets) == 0
-    )
-    return _lsh_quality_report(docs)
 
 
 def lsh_quality_full(spark: SparkSession, sf_dir: str) -> DataFrame:

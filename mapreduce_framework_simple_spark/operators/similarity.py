@@ -991,8 +991,7 @@ def _lsh_band_exprs_sql(vec: str, n_bits: int = LSH_N_BITS,
 def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9,
                          n_bits: int = LSH_N_BITS, n_bands: int = LSH_N_BANDS,
                          id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         max_bucket_size: int | None = None) -> DataFrame:
+                         vec_col: str = "embedding") -> DataFrame:
     """Embedding near-dup via random-hyperplane LSH (SimHash for vectors).
 
     Signature: sign bits of H·v for a fixed seeded hyperplane matrix H
@@ -1015,10 +1014,7 @@ def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9,
     in 185 s (1× = 1.2 s; wall grew 156× while verify-work grew
     ~10⁴× — each vector's 99 copies share every band bucket, so
     intra-bucket pairs go from ~0 to C(100,2) per original).
-    ``max_bucket_size``
-    optionally applies q38's hot-bucket guard (same helper, same
-    logged drop count) for boilerplate-heavy production corpora; the
-    default None keeps the exact uncapped semantics of the q96 oracle.
+    Uncapped, like the q96 oracle: no hot-bucket guard runs here.
     """
     import numpy as np
     import pandas as pd
@@ -1063,26 +1059,16 @@ def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9,
         "vec_id", f"stack({n_bands}, {stack_args}) as (band, band_sig)"
     )
     bands = scoped_cache(bands)
-    if max_bucket_size is not None:
-        from mapreduce_framework_simple_spark.operators.dedup import (
-            _drop_oversized_buckets,
-        )
-
-        bands = _drop_oversized_buckets(
-            bands, max_bucket_size, "hyperplane_lsh_pairs"
-        )
     # the banded candidate self-join is THE single candidate-rule
-    # definition in dedup.lsh_candidate_pairs — reuse it (cap disabled:
-    # already applied above under this function's own log label) so a
-    # future change to the rule cannot silently diverge the vector-LSH
-    # path from the document-LSH path it mirrors
+    # definition in dedup.lsh_candidate_pairs — reuse it so a future
+    # change to the rule cannot silently diverge the vector-LSH path
+    # from the document-LSH path it mirrors
     from mapreduce_framework_simple_spark.operators.dedup import (
         lsh_candidate_pairs,
     )
 
     cand_ids = lsh_candidate_pairs(
         bands.select(F.col("vec_id").alias("doc_id"), "band", "band_sig"),
-        max_bucket_size=None,
     ).select(F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b"))
     emb = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col))
     cand = cand_ids.join(
@@ -1228,33 +1214,36 @@ def write_ivf_index(spark: SparkSession, sf_dir: str, path: str,
     cents = scoped_cache(
         centroids if centroids is not None else _stride(em, N_CELLS_STRIDE)
     )
+    fits = False
+    if meta_centroids is None:
+        fits, fine = size_gate(cents.select("cell_id", "c_emb"),
+                               MAX_BROADCAST_QUERIES, collect=True)
     # Index contract: cell ids are NON-NEGATIVE. Both in-tree centroid
     # sources satisfy it by construction (kmeans enumerates 0..K-1, the
-    # stride stand-in reuses non-negative vec_ids); enforcing it here —
-    # one tiny action on the cached K-row frame of a write-once build —
-    # is what lets ivf_probe_bucketed state `cell_id >= 0` as the
-    # selective predicate Catalyst's dynamic partition pruning
-    # requires, without ever silently dropping a cell.
-    bad = F.col("cell_id").isNull() | (F.col("cell_id") < 0)
-    if cents.where(bad).limit(1).count() > 0:
-        # NULL is as fatal as negative: NULL rows land in the
-        # __HIVE_DEFAULT_PARTITION__ directory, which the probe can
-        # never select (NULL >= 0 filters out) — every vector in that
-        # cell would silently vanish from candidate sets
+    # stride stand-in reuses non-negative vec_ids); enforcing it here is
+    # what lets ivf_probe_bucketed state `cell_id >= 0` as the selective
+    # predicate Catalyst's dynamic partition pruning requires, without
+    # ever silently dropping a cell. NULL is as fatal as negative: NULL
+    # rows land in the __HIVE_DEFAULT_PARTITION__ directory, which the
+    # probe can never select. The collected flat set is checked with no
+    # job; a routed build checks the cached frame with one tiny action.
+    if fits:
+        ids = fine["cell_id"]
+        bad = bool(ids.isna().any() or (ids.dropna() < 0).any())
+    else:
+        fine = cents
+        bad = cents.where(F.col("cell_id").isNull() | (F.col("cell_id") < 0)
+                          ).limit(1).count() > 0
+    if bad:
         raise ValueError(
             "centroid frame carries NULL or negative cell_id values; the "
             "IVF index contract requires non-negative cell ids (probe-"
             "side partition pruning states cell_id >= 0)"
         )
-    fine = cents
-    if meta_centroids is None:
-        fits, fine = size_gate(cents.select("cell_id", "c_emb"),
-                               MAX_BROADCAST_QUERIES, collect=True)
-        if not fits:
-            fine = cents
-            meta_centroids = kmeans_centroid_frame(
-                spark, sf_dir, k=math.ceil(math.sqrt(cents.count()))
-            )
+    if not fits and meta_centroids is None:
+        meta_centroids = kmeans_centroid_frame(
+            spark, sf_dir, k=math.ceil(math.sqrt(cents.count()))
+        )
     ivf_assignments(em, fine, meta_centroids).repartition(
         "cell_id"
     ).write.partitionBy("cell_id").mode("overwrite").parquet(path)

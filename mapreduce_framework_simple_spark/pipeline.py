@@ -32,13 +32,12 @@ the report is a handful of scalar aggregates.
 
 from __future__ import annotations
 
-from types import EllipsisType
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_simple_spark.operators.dedup import (
     band_signatures_from,
+    cap_hot_buckets,
     connected_components,
     contamination,
     exact_dup_groups,
@@ -55,15 +54,12 @@ from mapreduce_framework_simple_spark.sources.io import load_table
 CONTAMINATION_MAX = 0.5  # drop docs with > 50% probe-shingle overlap
 
 
-def curate(spark: SparkSession, sf_dir: str, out_dir: str,
-           lsh_max_bucket: int | None | EllipsisType = ...) -> dict:
+def curate(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     """Run the full curation pass; write survivors to ``out_dir`` and
     return the audit report (python ints — driver-sized by construction).
-
-    ``lsh_max_bucket`` tunes the near-dup stage's hot-bucket boilerplate
-    cap per-corpus (``...`` = the module default ``LSH_MAX_BUCKET``;
-    None disables the guard — ground-truth runs only). Exposed on the
-    CLI as ``tools/curate.py --lsh-max-bucket N``.
+    The near-dup stage drops hot LSH buckets with q38's guard,
+    :func:`~mapreduce_framework_simple_spark.operators.dedup.cap_hot_buckets`,
+    at ``dedup.LSH_MAX_BUCKET``.
 
     Audit-count design: no count is an extra pass over a corpus-sized
     frame. ``n_total`` and ``n_after_quality`` come from one aggregate
@@ -108,8 +104,8 @@ def curate(spark: SparkSession, sf_dir: str, out_dir: str,
         #    the strategy is planned from the frame's actual (cached /
         #    stage-boundary) size: broadcast while it is genuinely tiny,
         #    shuffled anti-join beyond (the q03/q05 policy).
-        pairs = lsh_candidate_pairs(band_signatures_from(exact),
-                                    max_bucket_size=lsh_max_bucket)
+        bands = scoped_cache(band_signatures_from(exact))
+        pairs = lsh_candidate_pairs(cap_hot_buckets(bands, "curate")[0])
         comp = connected_components(pairs)
         drop = scoped_cache(
             comp.where(F.col("doc_id") != F.col("component")).select("doc_id")

@@ -108,11 +108,12 @@ def test_lsh_candidate_pairs_empty_docs(spark):
     an empty corpus: no buckets, no drops, empty pair output."""
     from mapreduce_framework_simple_spark.operators.dedup import (
         band_signatures_from,
+        cap_hot_buckets,
         lsh_candidate_pairs,
     )
 
     bands = band_signatures_from(_empty_docs(spark))
-    out = lsh_candidate_pairs(bands)  # guard's eager count runs here
+    out = lsh_candidate_pairs(cap_hot_buckets(bands, "empty")[0])
     assert out.count() == 0
     assert out.columns == ["doc_a", "doc_b"]
 

@@ -85,14 +85,17 @@ def test_curate_invariants(spark, sf_dir, tmp_path):
     assert over == 0
 
 
-def test_curate_lsh_max_bucket_knob(spark, sf_dir, tmp_path):
-    """The per-corpus hot-bucket cap knob plumbs through to the near-dup
-    stage: at cap=1 every bucket holding >=2 docs is dropped, so no LSH
-    candidate pair can be emitted and the near-dup stage drops nothing —
-    while the default cap drops real near-dups on the same corpus."""
+def test_curate_lsh_max_bucket_knob(spark, sf_dir, tmp_path, monkeypatch):
+    """The hot-bucket cap reaches the near-dup stage: at cap=1 every
+    bucket holding >=2 docs is dropped, so no LSH candidate pair can be
+    emitted and the near-dup stage drops nothing — while the default cap
+    drops real near-dups on the same corpus."""
+    from mapreduce_framework_simple_spark.operators import dedup as D
+
     rep_default = curate(spark, sf_dir, str(tmp_path / "cur_a"))
-    rep_cap1 = curate(spark, sf_dir, str(tmp_path / "cur_b"), lsh_max_bucket=1)
-    assert rep_default["dropped_neardup"] > 0  # the knob has something to tune
+    monkeypatch.setattr(D, "LSH_MAX_BUCKET", 1)
+    rep_cap1 = curate(spark, sf_dir, str(tmp_path / "cur_b"))
+    assert rep_default["dropped_neardup"] > 0  # the cap has something to drop
     assert rep_cap1["dropped_neardup"] == 0
     # all other stages unaffected by the knob
     for k in ("n_total", "n_after_quality", "n_after_exact_dedup",

@@ -690,3 +690,47 @@ def test_no_hand_built_size_probe_outside_size_gate():
         if path != root / "ephemeral.py" and probe.search(path.read_text())
     ]
     assert not offenders, f"hand-built size probes in {offenders}"
+
+
+def test_no_hot_bucket_comparison_outside_the_guard():
+    """``dedup.cap_hot_buckets`` is the one place the engine compares a
+    bucket population with ``LSH_MAX_BUCKET``. Outside it the package
+    may read the cap only in the DuckDB oracles' mirror of that rule
+    (``HAVING count(*) <= {LSH_MAX_BUCKET}``) and in the memo key of
+    ``capped_corpus_bands``, so a second hand-built cap cannot appear."""
+    import ast
+    import pathlib
+
+    import mapreduce_framework_simple_spark as pkg
+
+    def offending_reads(tree):
+        allowed = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "cap_hot_buckets":
+                allowed |= {id(n) for n in ast.walk(node)}
+            elif isinstance(node, ast.FunctionDef) and node.name == "capped_corpus_bands":
+                allowed |= {id(n) for t in ast.walk(node) if isinstance(t, ast.Tuple)
+                            for n in ast.walk(t)}
+            elif isinstance(node, ast.JoinedStr):
+                for prev, part in zip(node.values, node.values[1:]):
+                    if (isinstance(prev, ast.Constant)
+                            and str(prev.value).endswith("count(*) <= ")):
+                        allowed |= {id(n) for n in ast.walk(part)}
+        return [node.lineno for node in ast.walk(tree)
+                if (getattr(node, "id", None) == "LSH_MAX_BUCKET"
+                    or getattr(node, "attr", None) == "LSH_MAX_BUCKET")
+                and isinstance(node.ctx, ast.Load) and id(node) not in allowed]
+
+    for sample in ("x = df.where(F.col('n') > LSH_MAX_BUCKET)",
+                   "cap = D.LSH_MAX_BUCKET",
+                   "q = f'WHERE n > {LSH_MAX_BUCKET}'"):
+        assert offending_reads(ast.parse(sample)), sample
+    assert not offending_reads(ast.parse(
+        "q = f'HAVING count(*) <= {LSH_MAX_BUCKET}'"))
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = {
+        str(path.relative_to(root)): lines
+        for path in sorted(root.rglob("*.py"))
+        if (lines := offending_reads(ast.parse(path.read_text())))
+    }
+    assert not offenders, f"LSH_MAX_BUCKET read outside the guard: {offenders}"

@@ -412,7 +412,7 @@ def _cap10_oracle(query_name: str) -> str:
     return oracle
 
 
-def test_q38_oracle_matches_when_cap_fires(spark, tmp_path):
+def test_q38_oracle_matches_when_cap_fires(spark, tmp_path, monkeypatch):
     """The DuckDB oracle mirrors the Spark-side hot-bucket cap, so query
     and oracle stay hash-equal on the very corpora the guard targets
     (boilerplate buckets above LSH_MAX_BUCKET) — the core contract must
@@ -423,9 +423,11 @@ def test_q38_oracle_matches_when_cap_fires(spark, tmp_path):
     sf, con = _plant_cap_fire_corpus(tmp_path, "planted")
     ddf = con.execute(_cap10_oracle("q38_minhash_lsh_pairs")).fetchdf()
 
-    bands = D.band_signatures_from(D.load_table(spark, "documents", sf))
+    monkeypatch.setattr(D, "LSH_MAX_BUCKET", 10)
+    bands = D.scoped_cache(
+        D.band_signatures_from(D.load_table(spark, "documents", sf)))
     sdf = (
-        D.lsh_candidate_pairs(bands, max_bucket_size=10)
+        D.lsh_candidate_pairs(D.cap_hot_buckets(bands, "q38")[0])
         .toPandas()
         .astype({"doc_a": "int64", "doc_b": "int64"})
     )
@@ -669,17 +671,14 @@ def test_incremental_bands_gate_over_bound_equal(spark, sf_dir, tmp_path,
     assert over == under and len(under) > 0
 
 
-def test_lsh_bucket_cap_bounds_boilerplate(spark, caplog):
+def test_lsh_bucket_cap_bounds_boilerplate(spark, caplog, monkeypatch):
     """A planted boilerplate bucket (many docs sharing one text, i.e. one
     band signature per band) must be dropped by the fan-out cap — pair
     output stays bounded instead of going quadratic — and the drop must
     be logged, never silent. Distinct docs below the cap are unaffected."""
     import logging
 
-    from mapreduce_framework_simple_spark.operators.dedup import (
-        band_signatures_from,
-        lsh_candidate_pairs,
-    )
+    from mapreduce_framework_simple_spark.operators import dedup as D
 
     boiler = [(i, "subscribe to our newsletter terms apply all rights reserved "
                   "contact us privacy policy cookie settings") for i in range(60)]
@@ -688,27 +687,26 @@ def test_lsh_bucket_cap_bounds_boilerplate(spark, caplog):
                  f"{'alpha beta gamma delta epsilon'.split()[i % 5]} {i * i}")
                 for i in range(5)]
     docs = spark.createDataFrame(boiler + distinct, "doc_id long, text string")
-    bands = band_signatures_from(docs)
+    bands = D.scoped_cache(D.band_signatures_from(docs))
 
-    uncapped = lsh_candidate_pairs(bands, max_bucket_size=None).count()
+    uncapped = D.lsh_candidate_pairs(bands).count()
     assert uncapped >= 60 * 59 // 2  # the quadratic blow-up the cap exists for
 
+    monkeypatch.setattr(D, "LSH_MAX_BUCKET", 10)
     with caplog.at_level(logging.WARNING,
                          logger="mapreduce_framework_simple_spark.operators.dedup"):
-        capped = lsh_candidate_pairs(bands, max_bucket_size=10).count()
+        kept, _ = D.cap_hot_buckets(bands, "boilerplate")
+        capped = D.lsh_candidate_pairs(kept).count()
     assert capped == 0  # bounded: the boilerplate bucket's pairs are gone
     assert any("dropped" in r.message and "bucket" in r.message
                for r in caplog.records)  # no silent caps
 
 
-def test_incremental_probe_caps_index_fanout(spark, caplog, tmp_path):
+def test_incremental_probe_caps_index_fanout(spark, tmp_path, monkeypatch):
     """The persisted index stores per-bucket populations; a probe against
     a boilerplate-heavy corpus bucket must skip it map-side (bounded
     candidates) while normal buckets still match."""
-    import logging
-
-    from pyspark.sql import functions as F
-
+    from mapreduce_framework_simple_spark.operators import dedup as D
     from mapreduce_framework_simple_spark.operators.dedup import (
         incremental_lsh_candidates,
         write_lsh_index,
@@ -728,19 +726,22 @@ def test_incremental_probe_caps_index_fanout(spark, caplog, tmp_path):
     batch = spark.createDataFrame(
         [(2000, boiler_text), (2001, normal_text)], "doc_id long, text string"
     )
-    capped = incremental_lsh_candidates(spark, batch, idx, max_bucket_size=10)
+    # under the default cap the 51-doc bucket is kept
+    uncapped = incremental_lsh_candidates(spark, batch, idx)
+    assert uncapped.count() == 51  # 50 boilerplate hits + the normal one
+
+    monkeypatch.setattr(D, "LSH_MAX_BUCKET", 10)
+    capped = incremental_lsh_candidates(spark, batch, idx)
     rows = {(r["new_doc_id"], r["corpus_doc_id"]) for r in capped.collect()}
     assert rows == {(2001, 900)}  # boilerplate fan-out suppressed, exact match kept
 
-    uncapped = incremental_lsh_candidates(spark, batch, idx, max_bucket_size=None)
-    assert uncapped.count() == 51  # 50 boilerplate hits + the normal one
 
-
-def test_incremental_probe_union_bucket_cap(spark, tmp_path):
+def test_incremental_probe_union_bucket_cap(spark, tmp_path, monkeypatch):
     """The probe's fan-out guard uses UNION-bucket semantics: a bucket
     whose corpus+batch population exceeds the cap is dropped even when
     EACH side alone is under it — per-side capping would emit the
     quadratic cross pairs monolithic q38-on-the-union drops."""
+    from mapreduce_framework_simple_spark.operators import dedup as D
     from mapreduce_framework_simple_spark.operators.dedup import (
         incremental_lsh_candidates,
         write_lsh_index,
@@ -758,10 +759,12 @@ def test_incremental_probe_union_bucket_cap(spark, tmp_path):
     )
     # each side is 30 (< 40) but the union bucket is 60 (> 40): dropped,
     # exactly like q38 on the union corpus would drop it
-    capped = incremental_lsh_candidates(spark, batch, idx, max_bucket_size=40)
+    monkeypatch.setattr(D, "LSH_MAX_BUCKET", 40)
+    capped = incremental_lsh_candidates(spark, batch, idx)
     assert capped.count() == 0
     # union 60 <= 100: kept — all 900 cross pairs
-    kept = incremental_lsh_candidates(spark, batch, idx, max_bucket_size=100)
+    monkeypatch.setattr(D, "LSH_MAX_BUCKET", 100)
+    kept = incremental_lsh_candidates(spark, batch, idx)
     assert kept.count() == 900
 
 
@@ -823,51 +826,44 @@ def test_lsh_guard_zero_drop_fast_path_plan(spark, sf_dir):
     reintroducing an unconditional anti-join shape."""
     from mapreduce_framework_simple_spark.operators.dedup import (
         band_signatures_from,
+        cap_hot_buckets,
         load_table,
         lsh_candidate_pairs,
+        scoped_cache,
     )
     from mapreduce_framework_simple_spark.plans.explain import formatted_plan
 
-    bands = band_signatures_from(load_table(spark, "documents", sf_dir))
-    plan = formatted_plan(lsh_candidate_pairs(bands))
+    bands = scoped_cache(
+        band_signatures_from(load_table(spark, "documents", sf_dir)))
+    kept, drop = cap_hot_buckets(bands, "zero-drop")
+    assert kept is bands and drop.count() == 0
+    plan = formatted_plan(lsh_candidate_pairs(kept))
     assert "LeftAnti" not in plan
 
 
-def test_incremental_probe_legacy_index_derives_populations(spark, tmp_path):
-    """An index written WITHOUT the stored bucket_n column (pre-upgrade
-    layout) must still enforce the full union-bucket cap: the probe
-    derives corpus bucket populations with a one-off column-pruned
-    aggregation instead of assuming zero (which would readmit the
-    quadratic boilerplate fan-out for exactly the legacy indexes most
-    likely to contain it)."""
-    from pyspark.sql import functions as F
+def test_incremental_probe_rejects_index_without_bucket_n(spark, tmp_path):
+    """An index without the stored bucket_n column cannot be capped on
+    its union bucket sizes, so the probe refuses it with a ValueError
+    naming the writer that stores them, instead of probing uncapped."""
+    import pytest
 
     from mapreduce_framework_simple_spark.operators.dedup import (
         incremental_lsh_candidates,
         write_lsh_index,
     )
 
-    boiler_text = ("subscribe to our newsletter terms apply all rights "
-                   "reserved contact us privacy policy cookie settings")
-    normal_text = "a perfectly ordinary document about spark partitioning"
     corpus = spark.createDataFrame(
-        [(i, boiler_text) for i in range(50)] + [(900, normal_text)],
-        "doc_id long, text string",
+        [(i, "a perfectly ordinary document about spark partitioning")
+         for i in range(3)], "doc_id long, text string",
     )
     staged = str(tmp_path / "with_bucket_n")
     write_lsh_index(corpus, staged)
-    legacy = str(tmp_path / "legacy_idx")
+    bare = str(tmp_path / "bare_idx")
     spark.read.parquet(staged).drop("bucket_n").write.partitionBy(
         "band"
-    ).parquet(legacy)
-    assert "bucket_n" not in spark.read.parquet(legacy).columns
-
-    batch = spark.createDataFrame(
-        [(2000, boiler_text), (2001, normal_text)], "doc_id long, text string"
-    )
-    capped = incremental_lsh_candidates(spark, batch, legacy, max_bucket_size=10)
-    rows = {(r["new_doc_id"], r["corpus_doc_id"]) for r in capped.collect()}
-    assert rows == {(2001, 900)}  # corpus-side fan-out capped despite no bucket_n
+    ).parquet(bare)
+    with pytest.raises(ValueError, match="write_lsh_index"):
+        incremental_lsh_candidates(spark, corpus, bare)
 
 
 def test_eval_sample_is_fixed_size_and_deterministic(spark, sf_dir):
@@ -932,7 +928,9 @@ def test_memo_rebuilds_after_dataset_rewrite(spark, tmp_path):
     bands: the memo entry's name folds in the deep fingerprint of
     documents.parquet, and the miss first evicts the superseded entry,
     releasing its cached frames (the CacheManager matches cached data by
-    logical plan, so the rebuilt scan would otherwise read them)."""
+    logical plan, so the rebuilt scan would otherwise read them). Until
+    then the entry owns those frames: a query boundary leaves them
+    cached."""
     import pandas as pd
 
     from mapreduce_framework_simple_spark import ephemeral
@@ -963,6 +961,8 @@ def test_memo_rebuilds_after_dataset_rewrite(spark, tmp_path):
         assert first.count() == 3 * 4  # 4 bands per doc
         (old_key, old_held), = bands_entries().items()
         assert old_held and all(h.is_cached for h in old_held)
+        ephemeral.release_caches()  # a query boundary: the entry keeps them
+        assert all(h.storageLevel.useMemory for h in old_held)
         write(5)  # same path, new corpus
         second = D.capped_corpus_bands(spark, str(sf))
         assert second is not first  # fingerprint changed → rebuilt
@@ -1095,20 +1095,23 @@ def test_fingerprint_hadoop_listing_happy_path(spark, tmp_path):
 
 
 def test_lsh_cap_default_reads_global_at_call_time(spark, monkeypatch):
-    """The default-arg cap must honor a RUNTIME change to
-    LSH_MAX_BUCKET (call-time read, not def-time binding) — otherwise a
-    monkeypatched or CLI-tuned cap would apply to the memoized q38 path
-    but silently not to default-arg callers."""
+    """The guard honours a RUNTIME change to LSH_MAX_BUCKET (call-time
+    read, not def-time binding), so a patched cap reaches every caller,
+    the memoized q38 path included."""
     from mapreduce_framework_simple_spark.operators import dedup as D
 
     boiler = [(i, "subscribe to our newsletter terms apply all rights "
                   "reserved contact us privacy policy cookie settings")
               for i in range(40)]
     docs = spark.createDataFrame(boiler, "doc_id long, text string")
-    bands = D.band_signatures_from(docs)
-    assert D.lsh_candidate_pairs(bands).count() == 40 * 39 // 2
+    bands = D.scoped_cache(D.band_signatures_from(docs))
+
+    def capped():
+        return D.lsh_candidate_pairs(D.cap_hot_buckets(bands, "call-time")[0])
+
+    assert capped().count() == 40 * 39 // 2
     monkeypatch.setattr(D, "LSH_MAX_BUCKET", 10)
-    assert D.lsh_candidate_pairs(bands).count() == 0  # cap honored
+    assert capped().count() == 0  # cap honored
 
 
 def test_q36_dispatches_kernels_by_fanout(spark, sf_dir, tmp_path, monkeypatch):
@@ -1672,25 +1675,97 @@ def test_ivf_index_missing_sidecar_fails_fast(spark, sf_dir, tmp_path):
         S.ivf_knn_confusion(spark, sf_dir, path).collect()
 
 
-def test_lsh_quality_fraction_bucket1_equals_full(spark, sf_dir):
-    """The mid-scale fraction-sample eval with buckets=1 keeps every doc,
-    so it must reproduce the full-corpus referee EXACTLY — pinning the
-    fraction path against rot (hash rule or report-kernel drift) with a
-    bit-level equality rather than a statistical bound."""
-    from mapreduce_framework_simple_spark.operators.dedup import (
-        lsh_quality_fraction,
-        lsh_quality_full,
-    )
+def test_write_ivf_index_rejects_bad_cell_ids(spark, sf_dir, tmp_path):
+    """The index contract (non-negative cell ids, so the probe's
+    ``cell_id >= 0`` partition filter selects every cell) holds on both
+    branches of the build: a NULL or negative id in a flat centroid set
+    fails on its collected rows, and a negative id beside an explicit
+    meta layer fails on the cached frame. Nothing is written."""
+    import os
 
-    frac = lsh_quality_fraction(spark, sf_dir, buckets=1).collect()[0].asDict()
-    full = lsh_quality_full(spark, sf_dir).collect()[0].asDict()
-    assert frac == full
-    # a real fraction's TRUTH set is a genuine subset (truth is pure
-    # Jaccard, monotone under slicing). Candidates are deliberately NOT
-    # asserted monotone: the hot-bucket cap can fire on the full corpus
-    # yet not on a slice, legitimately giving the slice MORE candidates.
-    part = lsh_quality_fraction(spark, sf_dir, buckets=4).collect()[0].asDict()
-    assert part["n_truth"] <= full["n_truth"]
+    import pytest
+    from pyspark.sql import functions as F
+
+    import mapreduce_framework_simple_spark.operators.similarity as S
+
+    em = S.load_table(spark, "embeddings", sf_dir)
+    good = S._stride(em, S.N_CELLS_STRIDE)
+    first = good.agg(F.min("cell_id")).first()[0]
+
+    def with_id(bad):
+        return good.withColumn("cell_id", F.when(
+            F.col("cell_id") == first, bad).otherwise(F.col("cell_id")))
+
+    path = str(tmp_path / "bad_ids")
+    for bad in (F.lit(None).cast("long"), F.lit(-1).cast("long")):
+        with pytest.raises(ValueError, match="non-negative cell ids"):
+            S.write_ivf_index(spark, sf_dir, path, centroids=with_id(bad))
+    with pytest.raises(ValueError, match="non-negative cell ids"):
+        S.write_ivf_index(spark, sf_dir, path,
+                          centroids=with_id(F.lit(-1).cast("long")),
+                          meta_centroids=S._stride(em, S.META_STRIDE))
+    assert not os.path.exists(path)
+
+
+def test_write_ivf_index_stride_build_job_count(spark, sf_dir, tmp_path):
+    """A flat stride build runs at most 5 jobs: one embeddings read, the
+    one centroid collect (which also answers the cell-id contract check
+    with no job), two for the index write and one for the sidecar."""
+    import mapreduce_framework_simple_spark.operators.similarity as S
+
+    path = str(tmp_path / "stride_idx")
+    S.write_ivf_index(spark, sf_dir, path)  # cold: codegen
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-stride-build", "stride build")
+    try:
+        S.write_ivf_index(spark, sf_dir, path)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup("ivf-stride-build"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs <= 5, f"stride build ran {jobs} jobs"
+
+
+def test_lsh_guard_job_counts(spark, sf_dir, tmp_path, monkeypatch):
+    """Build plus collect, counted by job group: q38 with the memo
+    cleared runs at most 9 jobs, the incremental probe at most 12, and
+    the capped pairs of the loaded planted cap-fire corpus at cap 10 at
+    most 10. Each extra guard action or re-read shows here first."""
+    from mapreduce_framework_simple_spark import ephemeral as E
+    from mapreduce_framework_simple_spark.operators import dedup as D
+
+    docs = D.load_table(spark, "documents", sf_dir)
+    idx = str(tmp_path / "lsh_idx")
+    D.write_lsh_index(docs.where("doc_id % 10 != 0"), idx)
+    batch = docs.where("doc_id % 10 = 0")
+
+    def cold_q38():
+        E.clear_memo()
+        return D.q38_minhash_lsh_pairs(spark, sf_dir)
+
+    planted = D.load_table(
+        spark, "documents", _plant_cap_fire_corpus(tmp_path, "planted_jobs")[0])
+
+    def planted_pairs():
+        bands = D.scoped_cache(D.band_signatures_from(planted))
+        return D.lsh_candidate_pairs(D.cap_hot_buckets(bands, "planted")[0])
+
+    try:
+        for name, build, bound in (
+            ("q38-cold", cold_q38, 9),
+            ("incremental", lambda: D.incremental_lsh_candidates(
+                spark, batch, idx), 12),
+        ):
+            _, total = _jobs_before_and_total(spark, name, build)
+            E.release_caches()
+            assert total <= bound, f"{name} ran {total} jobs"
+        monkeypatch.setattr(D, "LSH_MAX_BUCKET", 10)
+        _, total = _jobs_before_and_total(spark, "planted-cap10", planted_pairs)
+        assert total <= 10, f"planted cap-fire pairs ran {total} jobs"
+    finally:
+        E.release_caches()
+        E.clear_memo()
 
 
 def test_triangle_degree_order_random_graphs(spark):

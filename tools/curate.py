@@ -1,10 +1,9 @@
 #!/usr/bin/env python
 """Run the end-to-end curation pipeline from the command line.
 
-Usage: python tools/curate.py [sf_dir] [out_dir] [--lsh-max-bucket N]
+Usage: python tools/curate.py [sf_dir] [out_dir]
 
-``--lsh-max-bucket`` tunes the near-dup stage's hot-bucket boilerplate
-cap per-corpus without editing source (default: dedup.LSH_MAX_BUCKET).
+The near-dup stage caps hot LSH buckets at ``dedup.LSH_MAX_BUCKET``.
 Prints the audit report as one JSON line (same shape the pipeline test
 asserts invariants over).
 """
@@ -36,24 +35,14 @@ def main(argv: list[str] | None = None) -> None:
         "out_dir", nargs="?", default="/tmp/mfss_curated",
         help="output directory for the curated corpus",
     )
-    ap.add_argument(
-        "--lsh-max-bucket",
-        type=int,
-        default=None,
-        metavar="N",
-        help="hot-bucket boilerplate cap for the near-dup stage "
-        "(default: dedup.LSH_MAX_BUCKET)",
-    )
     ns = ap.parse_args(argv)
-    # pipeline sentinel: ... keeps the module-default cap
-    cap = ns.lsh_max_bucket if ns.lsh_max_bucket is not None else ...
 
     from mapreduce_framework_simple_spark.pipeline import curate
     from mapreduce_framework_simple_spark.session import get_session
 
     spark = get_session("mfss-curate")
     spark.sparkContext.setLogLevel("ERROR")
-    report = curate(spark, ns.sf_dir, ns.out_dir, lsh_max_bucket=cap)
+    report = curate(spark, ns.sf_dir, ns.out_dir)
     report["out_dir"] = ns.out_dir
     print(json.dumps(report))
 
